@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.core._
 import graft.core.route.Extract
 
@@ -13,13 +14,23 @@ import graft.core.route.Extract
   * write extracted spans + lineage + per-partition checkpoint manifests.
   *
   * Scale design (the 100 TB story):
-  *  - ONE shuffle in the whole job (the salted repartition), moving only
-  *    rows that still need processing: the resume anti-join runs first,
-  *    against the narrow terminal-id projection of the lineage table;
+  *  - ONE data-sized shuffle (the salted repartition), moving only rows that
+  *    still need processing: the resume anti-join runs first, against the
+  *    narrow terminal-id projection of the lineage table. With
+  *    `shuffleInput = false` extraction runs in the scan stage and this
+  *    shuffle is gone;
   *  - ONE extraction pass: doc rows and lineage rows are emitted together
   *    from the same mapPartitions and written once as a combined table
   *    (two nullable structs); `extracted/` and `lineage/` are then cheap
   *    columnar re-projections (on Iceberg they would simply be views);
+  *  - the commit tail adds two small shuffles: the checkpoint aggregate over
+  *    this run's lineage (one row per partition out) and the totals scan,
+  *    which is O(history) rows but reads only the `doc.doc_id` and
+  *    `lineage.doc_id` columns of the committed run dirs. A run's jobs are:
+  *    one manifest read (none on a first run), the extraction write, the
+  *    checkpoint aggregate and its one-file write, the manifest row, the
+  *    totals. Every read of a run dir or the manifest uses a declared
+  *    schema, so no job goes to parquet schema inference;
   *  - skew: a 10-GB-span document can't be split by Spark, so rows are
   *    salted by a cheap size estimate — oversized docs spread across the
   *    salt domain, the reference's PST folder fan-out
@@ -106,6 +117,11 @@ object ExtractJob {
       .drop("_sz", "_salt").as[DocIn]
   }
 
+  /** Span-parallel row type flowing from the parse stage into reassembly. */
+  private type SpanRow = (Long, String, String, String, Int, Int, String, String, String, String, Long)
+  // fields: (doc_id, kind, extractedText, media_ref, offset, idx(-1=sentinel),
+  //          rawMedia, reason, failStatus, failMsg, bytesIn)
+
   /** Span-parallel extraction — the real skew answer for a GIANT document
     * (SURVEY §7.4 hard part 4: one 10-GB-spans row cannot be split by
     * Spark's row-level parallelism). The document's SPANS are exploded to
@@ -115,13 +131,8 @@ object ExtractJob {
     * restored from offsets. Output is byte-identical to [[Extract.explode]]
     * (asserted in tests); cost is one extra shuffle, so it is the path for
     * the oversized tail, not the default.
-    */
-  /** Span-parallel row type flowing from the parse stage into reassembly. */
-  private type SpanRow = (Long, String, String, String, Int, Int, String, String, String, String, Long)
-  // fields: (doc_id, kind, extractedText, media_ref, offset, idx(-1=sentinel),
-  //          rawMedia, reason, failStatus, failMsg, bytesIn)
-
-  /** As the batch path, a failing span yields a CLASSIFIED lineage row for
+    *
+    * As the batch path, a failing span yields a CLASSIFIED lineage row for
     * its document, never a task failure — for non-timeout failures the
     * batch path aborts a doc at its first failing span in (offset, index)
     * order, and reassembly picks exactly that span's classification, so
@@ -328,24 +339,76 @@ object ExtractJob {
   //     and only retried non-terminal docs ever recur); lineage keeps every
   //     attempt (it is a log — retries are part of the record);
   //  4. checkpoint manifests carry (run_id, partition_id) so each run's
-  //     committed partitions are provable — appended, never rewritten.
+  //     committed partitions are provable — appended, never rewritten;
+  //  5. every read of the manifest, a run dir or the checkpoints uses the
+  //     declared schema below, never parquet schema inference (one Spark job
+  //     per read); a test pins each against what Spark infers.
+
+  /** Schema of the manifest: one row per committed run. */
+  val ManifestSchema: StructType = StructType(Seq(
+    StructField("run_id", StringType), StructField("seq", LongType),
+    StructField("committed", BooleanType)))
+
+  /** Schema of a `combined/run-*` dir: the `(Option[DocOut], Option[LineageRow])`
+    * encoder with its fields named `doc` and `lineage`, all nullable as
+    * parquet reads them back.
+    */
+  val CombinedSchema: StructType = {
+    val enc = Encoders.product[(Option[DocOut], Option[LineageRow])].schema
+    StructType(enc.fields.zip(Seq("doc", "lineage")).map { case (f, n) =>
+      StructField(n, nullable(f.dataType))
+    })
+  }
+
+  /** Schema of the checkpoint rows: one per (run, partition). */
+  val CheckpointSchema: StructType = StructType(Seq(
+    StructField("partition_id", IntegerType), StructField("n_docs", LongType),
+    StructField("n_spans", LongType), StructField("run_id", StringType),
+    StructField("committed", BooleanType)))
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => StructField(f.name, nullable(f.dataType))))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case other => other
+  }
 
   /** Run ids recorded as committed, oldest-first. The manifest is one row
-    * per run — driver-side materialization stays trivial at any data scale.
+    * per run, so its rows are deduped and sorted on the driver.
     */
   def committedRuns(spark: SparkSession, outDir: String): Seq[String] = {
     val p = new java.io.File(s"$outDir/manifest")
     if (!p.exists()) Seq.empty
-    else spark.read.parquet(p.getPath)
-      .filter(col("committed"))
-      .select("run_id", "seq").distinct()
-      .collect().sortBy(_.getLong(1)).map(_.getString(0)).toSeq
+    else spark.read.schema(ManifestSchema).parquet(p.getPath)
+      .filter(col("committed")).select("run_id", "seq")
+      .collect().map(r => (r.getLong(1), r.getString(0)))
+      .distinct.sorted.map(_._2).toSeq
+  }
+
+  private def runDir(outDir: String, runId: String): String = s"$outDir/combined/run-$runId"
+
+  /** The combined (doc, lineage) union over the given runs. */
+  private def readRuns(spark: SparkSession, outDir: String, runs: Seq[String]): DataFrame =
+    spark.read.schema(CombinedSchema).parquet(runs.map(runDir(outDir, _)): _*)
+
+  private def lineageOf(combined: DataFrame): DataFrame =
+    combined.filter(col("lineage").isNotNull).select("lineage.*")
+
+  /** (docs in the extracted view, lineage rows) of a combined table, from
+    * one scan that reads only the `doc.doc_id` and `lineage.doc_id` columns.
+    * Equal to the counts of [[readExtracted]] and [[readLineage]]: doc ids
+    * are never null, so the distinct count matches dedup-on-read, and the
+    * lineage doc id is a primitive long, set exactly when the lineage struct
+    * is.
+    */
+  private def totals(combined: DataFrame): (Long, Long) = {
+    val r = combined.agg(count_distinct(col("doc.doc_id")), count(col("lineage.doc_id"))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** The combined (doc, lineage) union over committed runs only. */
   def readCombined(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val dirs = committedRuns(spark, outDir).map(r => s"$outDir/combined/run-$r")
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    val runs = committedRuns(spark, outDir)
+    Option.when(runs.nonEmpty)(readRuns(spark, outDir, runs))
   }
 
   /** `extracted` as a read-time view: committed docs, dedup-on-read. */
@@ -355,8 +418,7 @@ object ExtractJob {
 
   /** `lineage` as a read-time view: the full attempt log. */
   def readLineage(spark: SparkSession, outDir: String): Option[DataFrame] =
-    readCombined(spark, outDir).map(
-      _.filter(col("lineage").isNotNull).select("lineage.*"))
+    readCombined(spark, outDir).map(lineageOf)
 
   /** Per-partition checkpoint rows of COMMITTED runs only: orphan-run
     * checkpoint rows (a crash window, or rows from a racing writer) are
@@ -368,7 +430,7 @@ object ExtractJob {
     if (!p.exists()) None
     else {
       val committed = committedRuns(spark, outDir)
-      Some(spark.read.parquet(p.getPath)
+      Some(spark.read.schema(CheckpointSchema).parquet(p.getPath)
         .filter(col("run_id").isin(committed: _*)))
     }
   }
@@ -377,43 +439,62 @@ object ExtractJob {
     * `lineagePrev` when given, else against the output's own lineage view —
     * the Reporter.skip semantics (`Reporter.java:120-135`). Returns (total
     * docs in the extracted view, total lineage rows) across ALL runs.
+    *
+    * The manifest is read once, up front; that run list serves the resume
+    * view, the new run's sequence number and the totals. Each step's Spark
+    * jobs carry the description `ExtractJob.run/<step>` (resume, extract,
+    * checkpoints, manifest, totals); the caller's description is restored on
+    * return and its job group is left alone.
     */
   def run(spark: SparkSession, input: Dataset[DocIn], lineagePrev: Option[DataFrame],
           outDir: String, cfg: JobConfig = JobConfig()): (Long, Long) = {
-    val lineageView = lineagePrev.orElse(readLineage(spark, outDir))
-    val pending = lineageView.map(resume(input, _)).getOrElse(input)
-    val parted = prepare(pending, cfg)
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    def step[T](name: String)(body: => T): T = {
+      sc.setJobDescription(s"ExtractJob.run/$name")
+      body
+    }
+    try {
+      val prior = step("resume")(committedRuns(spark, outDir))
+      val lineageView =
+        lineagePrev.orElse(Option.when(prior.nonEmpty)(lineageOf(readRuns(spark, outDir, prior))))
+      val pending = lineageView.map(resume(input, _)).getOrElse(input)
 
-    val prior = committedRuns(spark, outDir)
-    val runId = java.util.UUID.randomUUID.toString.take(8)
-    val runDir = s"$outDir/combined/run-$runId"
-    extractPartitions(parted, cfg).toDF("doc", "lineage")
-      .write.mode(SaveMode.Overwrite).parquet(runDir)
+      val runId = java.util.UUID.randomUUID.toString.take(8)
+      step("extract") {
+        extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
+          .write.mode(SaveMode.Overwrite).parquet(runDir(outDir, runId))
+      }
 
-    // per-partition checkpoint rows for THIS run only (O(run), appended) —
-    // written BEFORE the manifest: a crash between the two leaves orphan
-    // checkpoint rows for an uncommitted run, which readCheckpoints filters
-    // against the manifest exactly like orphan run dirs. (Writing them
-    // after the manifest instead would make the asymmetric failure
-    // PERMANENT: a committed, visible run forever missing its checkpoint
-    // proof, with no read-side repair possible.)
-    spark.read.parquet(runDir)
-      .filter(col("lineage").isNotNull).select("lineage.*")
-      .groupBy(col("partition_id"))
-      .agg(count(lit(1)).as("n_docs"), sum("n_spans_out").as("n_spans"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("committed", lit(true))
-      .write.mode(SaveMode.Append).parquet(s"$outDir/checkpoints")
+      // per-partition checkpoint rows for THIS run only (O(run), appended),
+      // derived from the lineage that landed in the run dir (never from
+      // in-task counters: the rows must prove what committed) — written
+      // BEFORE the manifest: a crash between the two leaves orphan
+      // checkpoint rows for an uncommitted run, which readCheckpoints filters
+      // against the manifest exactly like orphan run dirs. (Writing them
+      // after the manifest instead would make the asymmetric failure
+      // PERMANENT: a committed, visible run forever missing its checkpoint
+      // proof, with no read-side repair possible.) The aggregate is one row
+      // per partition, so it is written as one small file.
+      step("checkpoints") {
+        lineageOf(readRuns(spark, outDir, Seq(runId)))
+          .groupBy(col("partition_id"))
+          .agg(count(lit(1)).as("n_docs"), sum("n_spans_out").as("n_spans"))
+          .withColumn("run_id", lit(runId))
+          .withColumn("committed", lit(true))
+          .coalesce(1)
+          .write.mode(SaveMode.Append).parquet(s"$outDir/checkpoints")
+      }
 
-    // the commit point: one manifest row makes the run visible to readers
-    import spark.implicits._
-    Seq((runId, prior.size.toLong, true)).toDF("run_id", "seq", "committed")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$outDir/manifest")
+      // the commit point: one manifest row makes the run visible to readers
+      step("manifest") {
+        spark.createDataFrame(java.util.List.of(Row(runId, prior.size.toLong, true)), ManifestSchema)
+          .coalesce(1)
+          .write.mode(SaveMode.Append).parquet(s"$outDir/manifest")
+      }
 
-    val nd = readExtracted(spark, outDir).map(_.count()).getOrElse(0L)
-    val nl = readLineage(spark, outDir).map(_.count()).getOrElse(0L)
-    (nd, nl)
+      step("totals")(totals(readRuns(spark, outDir, prior :+ runId)))
+    } finally sc.setJobDescription(callerDescription)
   }
 
   /** [[run]] variant writing through the snapshot-table layer
@@ -429,14 +510,11 @@ object ExtractJob {
     import graft.catalog.SnapshotTable
     val lineagePrev =
       if (SnapshotTable.snapshots(table).isEmpty) None
-      else Some(SnapshotTable.read(spark, table)
-        .filter(col("lineage").isNotNull).select("lineage.*"))
+      else Some(lineageOf(SnapshotTable.read(spark, table)))
     val pending = lineagePrev.map(resume(input, _)).getOrElse(input)
     val combined = extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
     SnapshotTable.append(spark, table, combined)
-    val all = SnapshotTable.read(spark, table)
-    (all.filter(col("doc").isNotNull).select("doc.*").dropDuplicates("doc_id").count(),
-      all.filter(col("lineage").isNotNull).count())
+    totals(SnapshotTable.read(spark, table))
   }
 
   /** Throughput-only variant for the bench harness: same plan shape, no

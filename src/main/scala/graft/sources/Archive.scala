@@ -440,11 +440,14 @@ object Archive {
 
   /** Decode a .Z stream (LZW, LSB-first codes, the compress(1) 8-code
     * group alignment quirk) via commons-compress on the Spark classpath.
+    * The header's max code width (5 bits, up to 31) sizes the decoder's
+    * tables at 6 bytes per code; compress(1) never writes more than 16, so
+    * tables past 16 bits (384 KB) are refused as corrupt, not allocated.
     */
   def uncompressZ(bytes: Array[Byte], maxBytes: Int): (String, Option[Array[Byte]]) =
     try {
       val zis = new org.apache.commons.compress.compressors.z.ZCompressorInputStream(
-        new ByteArrayInputStream(bytes))
+        new ByteArrayInputStream(bytes), ((1 << 16) * 6) >> 10)
       try ("", readCapped(zis, maxBytes))
       finally zis.close()
     } catch {

@@ -382,6 +382,9 @@ class ArchiveSpec extends AnyFunSuite {
     assert(Archive.uncompressZ(Archive.compressZBytes(Array.fill[Byte](5000)('x')), 100)._2.isEmpty)
     intercept[graft.core.ParseFailure](
       Archive.uncompressZ(Array[Byte](0x1f, 0x9d.toByte, 0x05), 1 << 20)) // maxBits 5: invalid
+    // maxBits 30 would size 6 GB of decoder tables: refused, not allocated
+    intercept[graft.core.ParseFailure](
+      Archive.uncompressZ(Array[Byte](0x1f, 0x9d.toByte, 0x9e.toByte, 0x01, 0x02), 1 << 20))
   }
 
   test("codec kinds sniff and explode through the container machinery") {

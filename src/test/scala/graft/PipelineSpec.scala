@@ -93,6 +93,88 @@ class PipelineSpec extends AnyFunSuite {
     assert(ExtractJob.readLineage(spark, out).get.count() == 5)
   }
 
+  test("run's totals equal the view counts, orphans and recurring docs included") {
+    import spark.implicits._
+    val out = tmpDir()
+    def views = (ExtractJob.readExtracted(spark, out).get.count(),
+      ExtractJob.readLineage(spark, out).get.count())
+    // a first run whose input holds duplicated doc_ids
+    val first = ExtractJob.run(spark, corpus(10).union(corpus(3)), None, out)
+    assert(first == views && first._2 == 13)
+    // an external lineage with no terminal rows: the SUCCESS docs 0..9 are
+    // extracted again and recur across runs
+    val noTerminal = Seq((0L, Status.NotParsed)).toDF("doc_id", "status")
+    val recur = ExtractJob.run(spark, corpus(12), Some(noTerminal), out)
+    assert(recur == views && recur._2 == 25)
+    // nothing pending
+    val idle = ExtractJob.run(spark, corpus(12), None, out)
+    assert(idle == views && idle == recur)
+    // a crash-orphaned run dir with no manifest row is not counted
+    ExtractJob.extractPartitions(corpus(30), ExtractJob.JobConfig())
+      .toDF("doc", "lineage")
+      .write.mode("overwrite").parquet(s"$out/combined/run-orphan99")
+    val after = ExtractJob.run(spark, corpus(14), None, out)
+    assert(after == views && after._2 == 27)
+  }
+
+  test("declared schemas equal the inferred ones; checkpoints sum to each run's lineage") {
+    val out = tmpDir()
+    ExtractJob.run(spark, corpus(10), None, out)
+    ExtractJob.run(spark, corpus(16), None, out)
+    val runs = ExtractJob.committedRuns(spark, out)
+    assert(spark.read.parquet(s"$out/manifest").schema == ExtractJob.ManifestSchema)
+    assert(spark.read.parquet(s"$out/checkpoints").schema == ExtractJob.CheckpointSchema)
+    val lineageRows = runs.map { r =>
+      val dir = spark.read.parquet(s"$out/combined/run-$r")
+      assert(dir.schema == ExtractJob.CombinedSchema)
+      r -> dir.filter(col("lineage").isNotNull).count()
+    }.toMap
+    assert(lineageRows == Map(runs(0) -> 10L, runs(1) -> 6L))
+    val ckpt = ExtractJob.readCheckpoints(spark, out).get
+      .groupBy("run_id").agg(sum("n_docs")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ckpt == lineageRows)
+  }
+
+  test("run tags each step's jobs and keeps the caller's job group and description") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"caller-${java.util.UUID.randomUUID}"
+    val sentinel = s"sentinel-$group"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
+          val d = props.map(_.getProperty("spark.job.description")).orNull
+          if (d == sentinel) sentinelSeen.countDown() else seen.add(String.valueOf(d))
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = tmpDir()
+      sc.setJobGroup(group, "caller work", interruptOnCancel = false)
+      ExtractJob.run(spark, corpus(10), None, out)
+      ExtractJob.run(spark, corpus(12), None, out)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == group)
+      assert(sc.getLocalProperty("spark.job.description") == "caller work")
+      // listener events arrive in order: once the sentinel job is seen, so
+      // are all of run's jobs
+      sc.setJobDescription(sentinel)
+      sc.parallelize(1 to 2).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val steps = Seq("resume", "extract", "checkpoints", "manifest", "totals")
+        .map("ExtractJob.run/" + _)
+      assert(seen.asScala.toSet == steps.toSet)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("resume skips terminal statuses and retries the rest") {
     import spark.implicits._
     val input = corpus(20)
