@@ -2369,7 +2369,7 @@ object Queries {
     * (every member's cum_end >= boff there, so no row can qualify) —
     * for a small budget that drops almost the entire corpus from the
     * sort. One count() action feeds the width, the same cost model as
-    * [[packSequences]]' bucket derivation (memoized per sf dir).
+    * [[packSequences]]' bucket derivation.
     */
   /** 16^w buckets ~ sqrt(n): w = 2 up to ~65k docs (256 buckets), 5 at a
     * trillion (1M buckets of ~1M docs) — both window levels stay ~sqrt(n).
@@ -2379,7 +2379,7 @@ object Queries {
 
   def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
     val B = 12000L
-    val n = docCountMemo.computeIfAbsent(dir, _ => docs(spark, dir).count())
+    val n = docs(spark, dir).count()
     val w = tokenBudgetPrefixWidth(n)
     val d = docs(spark, dir).selectExpr("doc_id",
       "size(split(text, ' ')) AS n_tokens",
@@ -2618,30 +2618,14 @@ object Queries {
     * component step that actual dedup requires beyond pairwise output.
     */
   def dedupCluster(spark: SparkSession, dir: String): DataFrame =
-    minhashClusters(spark, dir)
-
-  /** The MinHash cluster table is the shared upstream of [[dedupCluster]]
-    * and [[clusterRep]]: computed ONCE per (session, dir) — the CC labels
-    * are localCheckpoint-backed, so the memoized frame reads materialized
-    * blocks — mirroring the real pipeline, where the policy step consumes
-    * the PERSISTED cluster table rather than re-running pair generation +
-    * connected components.
-    */
-  private val clustersMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def minhashClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersMemo.computeIfAbsent(
-      System.identityHashCode(spark).toString + "|" + dir,
-      _ => Dedup.connectedComponents(
-        Dedup.minhashPairs(spark, Dedup.withInjectedDups(docs(spark, dir)))))
+    Dedup.connectedComponents(
+      Dedup.minhashPairs(spark, Dedup.withInjectedDups(docs(spark, dir))))
 
   /** Cluster-representative selection — the dedup POLICY step real
     * pipelines run after clustering: per duplicate cluster keep the
     * highest-quality member (ties broken by lowest id). See
-    * [[clusterRepFrom]] for the operator proper; the query feeds it the
-    * shared (persisted) cluster table, so its benchmarked cost is the
-    * policy step itself, not a cluster recompute.
+    * [[clusterRepFrom]] for the operator proper; the query computes the
+    * cluster table first, so its cost includes clustering.
     */
   def clusterRep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -2649,7 +2633,7 @@ object Queries {
     val scores = injected.select("doc_id", "text").as[(Long, String)]
       .map { case (id, t) => (id, TextStats.quality(t).score.toLong) }
       .toDF("doc_id", "score")
-    clusterRepFrom(minhashClusters(spark, dir), scores)
+    clusterRepFrom(dedupCluster(spark, dir), scores)
   }
 
   /** The policy operator proper — consumes ANY clusters frame
@@ -2691,13 +2675,10 @@ object Queries {
     * constant; on the fixture corpus (30-word vocabulary, natural df ~ N/15)
     * only a fraction-of-corpus cap separates hot from natural.
     */
-  // the df-cap needs |documents|; memoized per sf dir so the two jaccard
-  // queries don't each re-run a count() action per invocation
-  private val docCountMemo = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
+  // the df-cap needs |documents|: one count() action per call
   private def jaccardInput(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val base = docsPar(spark, dir)
-    val n = docCountMemo.computeIfAbsent(dir, _ => base.count())
+    val n = base.count()
     val injected = base.withColumn("text", concat(col("text"), lit(" ubiq bigram")))
     (injected, n / 10)
   }

@@ -144,17 +144,15 @@ object Extract {
     }
 
   /** Span kinds that spawn embedded children in [[explodeCounted]] /
-    * [[spawnContainers]] (and whose raw payload therefore rides through the
-    * span-parallel path for reassembly).
+    * [[spawnContainers]].
     */
-  val ContainerKinds: Set[String] =
+  private val ContainerKinds: Set[String] =
     Set("media", "zip", "gzip", "tar", "eml", "emlx", "mhtml", "cfb", "zstd", "bzip2", "xz", "lz4", "snappy", "compress", "lzma", "warc", "jsonl", "7z", "rar", "pst", "tnef", "mbox", "parquet", "avro", "sqlite", "ar", "cpio", "rpm", "plist", "iso", "chm", "cab", "one", "applesingle", "pdf_bytes")
 
   /** Null spans (a row written with spans=NULL) are treated as an empty
-    * span array — reason=empty-file, never a failure — in BOTH the batch and
-    * span-parallel paths (the two must stay byte-identical).
+    * span array — reason=empty-file, never a failure.
     */
-  def spansOrEmpty(doc: DocIn): Array[SpanIn] =
+  private def spansOrEmpty(doc: DocIn): Array[SpanIn] =
     if (doc.spans == null) Array.empty[SpanIn] else doc.spans
 
   /** Cooperative per-document deadline check (the reference's parse-timeout
@@ -171,8 +169,7 @@ object Extract {
 
   /** Extract one document: spans routed in offset order, `order` densely
     * re-indexed (the positional-order invariant). Ties on offset keep input
-    * array order (stable sort) — the determinism contract the span-parallel
-    * path reproduces via an explicit secondary key.
+    * array order (stable sort), so the output is deterministic.
     */
   def extractDoc(doc: DocIn, cfg: Config = DefaultConfig,
                  deadlineNanos: Long = Long.MaxValue): DocOut = {
@@ -294,8 +291,7 @@ object Extract {
     spawnContainers(mediaContents.map(("media", _)), rootId, cfg, deadlineNanos)
 
   /** Spawn embedded child documents from the parent's container spans (in
-    * offset order) — shared by [[explodeCounted]] and the span-parallel
-    * reassembly path so both produce byte-identical trees.
+    * offset order) — the child half of [[explodeCounted]].
     *
     * Container kinds:
     *  - `media`: the synthetic chain model (`chain:a>b` nests) — ids from

@@ -117,147 +117,6 @@ object ExtractJob {
       .drop("_sz", "_salt").as[DocIn]
   }
 
-  /** Span-parallel row type flowing from the parse stage into reassembly. */
-  private type SpanRow = (Long, String, String, String, Int, Int, String, String, String, String, Long)
-  // fields: (doc_id, kind, extractedText, media_ref, offset, idx(-1=sentinel),
-  //          rawMedia, reason, failStatus, failMsg, bytesIn)
-
-  /** Span-parallel extraction — the real skew answer for a GIANT document
-    * (SURVEY §7.4 hard part 4: one 10-GB-spans row cannot be split by
-    * Spark's row-level parallelism). The document's SPANS are exploded to
-    * individual rows, spread across partitions by (doc_id, offset) — this
-    * is the salted repartitioning that actually distributes one document's
-    * work — extracted span-locally, and reassembled per doc_id with order
-    * restored from offsets. Output is byte-identical to [[Extract.explode]]
-    * (asserted in tests); cost is one extra shuffle, so it is the path for
-    * the oversized tail, not the default.
-    *
-    * As the batch path, a failing span yields a CLASSIFIED lineage row for
-    * its document, never a task failure — for non-timeout failures the
-    * batch path aborts a doc at its first failing span in (offset, index)
-    * order, and reassembly picks exactly that span's classification, so
-    * the two paths agree on status. TIMEOUT semantics necessarily differ:
-    * a document's spans run on different executors, so no per-doc wall
-    * clock exists — here each SPAN gets the doc budget (checked after its
-    * parse), which still bounds any single runaway parse but can time out
-    * docs the batch path would pass and vice versa.
-    * Returns the combined (doc, lineage) rows like [[extractPartitions]];
-    * lineage throughput rates are 0 in this path (rates are per-partition
-    * wall-clock figures, meaningless after the reassembly shuffle).
-    */
-  def extractSpanParallel(input: Dataset[DocIn], cfg: JobConfig)
-  : Dataset[(Option[DocOut], Option[LineageRow])] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    input
-      .flatMap { d =>
-        val spans = Extract.spansOrEmpty(d)
-        if (spans.isEmpty)
-          // sentinel keeps span-less docs visible to the reassembly;
-          // idx = -1 can never collide with a real span (array positions
-          // are >= 0 — an offset-based sentinel could collide with data)
-          Iterator.single((d.doc_id, "", "", "", 0, -1))
-        else Iterator.tabulate(spans.length) { idx =>
-          // idx = position in the input span array: the secondary sort key
-          // that makes reassembly deterministic under duplicate offsets
-          // (extractDoc's STABLE sortBy ties break on array order)
-          val s = spans(idx)
-          (d.doc_id, s.kind, s.text, if (s.media_ref == null) "" else s.media_ref, s.offset, idx)
-        }
-      }
-      .repartition(cfg.partitions, col("_1"), col("_5"))
-      .as[(Long, String, String, String, Int, Int)]
-      .map[SpanRow] { case (id, kind, text, ref, off, idx) =>
-        if (idx < 0) { // sentinel: no parse work, reassembly drops it anyway
-          (id, kind, "", ref, off, idx, "", "", "", "", 0L)
-        } else {
-        val bytesIn = if (text == null) 0L else text.length.toLong
-        val deadline =
-          if (cfg.docTimeoutMillis > 0) System.nanoTime() + cfg.docTimeoutMillis * 1000000L
-          else Long.MaxValue
-        val (txt, why, failStatus, failMsg) =
-          try {
-            val r = Extract.extractSpan(kind, text, cfg.extract)
-            // cooperative deadline, checked at the span boundary
-            if (deadline != Long.MaxValue && System.nanoTime() > deadline)
-              throw new graft.core.ExtractTimeout("span deadline exceeded")
-            (r._1, r._2, "", "")
-          } catch {
-            case e: VirtualMachineError => throw e
-            case e: Exception => ("", "", classify(e), String.valueOf(e.getMessage))
-          }
-        // raw container content (media/zip/gzip) rides along: children need
-        // it for ids/spawning at reassembly
-        val raw = if (Extract.ContainerKinds(kind)) { if (text == null) "" else text } else ""
-        (id, kind, txt, ref, off, idx, raw, why, failStatus, failMsg, bytesIn)
-        }
-      }
-      .groupByKey(_._1)
-      .flatMapGroups { (id: Long, it: Iterator[SpanRow]) =>
-        // total order (offset, input index) == extractDoc's stable offset sort
-        val all = it.toArray.filter(_._6 >= 0).sortBy(r => (r._5, r._6))
-        val bytesIn = all.iterator.map(_._11).sum
-        val rows = all.take(cfg.extract.maxSpans)
-        // batch parity: the FIRST failing span among the CAPPED rows (in
-        // sorted order) classifies the whole document — extractDoc likewise
-        // loops over sortBy(_.offset).take(maxSpans), so a failing span
-        // beyond the cap is invisible to both paths
-        val firstFail = rows.iterator.find(_._9.nonEmpty)
-        firstFail match {
-          case Some(f) =>
-            val lrow = LineageRow(id, -1, f._9, f._10, all.length, 0, bytesIn, 0.0, 0.0)
-            Iterator.single((Option.empty[DocOut], Option(lrow)))
-          case None =>
-            var anyContent = false
-            var anyEncrypted = false
-            val spans = new Array[SpanOut](rows.length)
-            var i = 0
-            while (i < rows.length) {
-              val row = rows(i)
-              if (row._3.nonEmpty) anyContent = true
-              if (row._8 == Reason.Encrypted) anyEncrypted = true
-              spans(i) = SpanOut(row._2, row._3, row._4, i)
-              i += 1
-            }
-            val reason =
-              if (!anyContent && anyEncrypted) Reason.Encrypted
-              else if (rows.isEmpty || !anyContent) Reason.Empty
-              else ""
-            val rid = graft.core.Ids.rootId(id)
-            val root = DocOut(rid, "", rid, 0, spans, reason)
-            // media children spawn from ALL media spans (pre-cap), matching
-            // explodeCounted, which derives mediaContents from the full array.
-            // Same never-a-task-failure contract as the per-span parse stage:
-            // an exception while spawning embeds classifies the DOCUMENT
-            // (the batch path wraps the whole explodeCounted the same way).
-            val containerContents = all.iterator
-              .filter(r => Extract.ContainerKinds(r._2)).map(r => (r._2, r._7)).toSeq
-            val spawned =
-              try Right(Extract.spawnContainers(containerContents, rid, cfg.extract))
-              catch {
-                case e: VirtualMachineError => throw e
-                case e: Exception => Left(e)
-              }
-            spawned match {
-              case Left(e) =>
-                val lrow = LineageRow(id, -1, classify(e),
-                  String.valueOf(e.getMessage), all.length, 0, bytesIn, 0.0, 0.0)
-                Iterator.single((Option.empty[DocOut], Option(lrow)))
-              case Right((children, skipped)) =>
-                val status = if (reason == Reason.Encrypted) Status.NotDecrypted else Status.Success
-                val nOut = spans.length + children.iterator.map(_.spans.length).sum
-                val err = if (skipped > 0) s"embeds_skipped=$skipped" else ""
-                val lrow = LineageRow(id, -1, status, err, all.length, nOut, bytesIn, 0.0, 0.0)
-                val docRows =
-                  if (status == Status.Success)
-                    (Iterator.single(root) ++ children.iterator).map(o => (Option(o), Option.empty[LineageRow]))
-                  else Iterator.empty
-                docRows ++ Iterator.single((Option.empty[DocOut], Option(lrow)))
-            }
-        }
-      }
-  }
-
   /** The core typed transformation, ONE pass: per-partition batched
     * extraction emitting doc rows (Some(doc), None) and one lineage row
     * (None, Some(lineage)) per input document. A poison row yields a

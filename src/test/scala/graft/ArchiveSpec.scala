@@ -8,8 +8,8 @@ import graft.sources.Archive
 
 /** REAL archive/container explosion (reference `EmbedSpawner.java:429-515`;
   * fixture `embedded_with_duplicate.tgz`): zip entries become embedded
-  * children, nested zips recurse, guards refuse with counts, corruption
-  * classifies, and the span-parallel path stays byte-identical.
+  * children, nested zips recurse, guards refuse with counts, and corruption
+  * classifies.
   */
 class ArchiveSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -161,25 +161,6 @@ class ArchiveSpec extends AnyFunSuite {
       (Ids.embedId("same", tid, 1, resourceName = "x_copy.txt"), tid, 2)))
     // duplicate contents, distinct ids (per-parent ordinal)
     assert(out(2).doc_id != out(3).doc_id)
-  }
-
-  test("span-parallel reassembly is byte-identical to batch explode on archives") {
-    import spark.implicits._
-    val docs = Seq(
-      zipDoc(20, Seq(("a.txt", "aa".getBytes(UTF_8)), ("n.zip",
-        Archive.zipBytes(Seq(("c.txt", "cc".getBytes(UTF_8))))))),
-      DocIn(21, Array(
-        SpanIn("text", "plain", "", 0),
-        SpanIn("zip", new String(Archive.zipBytes(Seq(("z.txt", "zz".getBytes(UTF_8)))), ISO_8859_1), "", 1),
-        SpanIn("media", "ocr 21", "m", 2))))
-    val cfg = graft.pipeline.ExtractJob.JobConfig(partitions = 4)
-    def norm(d: DocOut) = (d.doc_id, d.parent_id, d.root_id, d.level,
-      d.spans.toSeq, d.no_content_reason)
-    val batch = docs.flatMap(d => Extract.explode(d)).map(norm).toSet
-    val par = graft.pipeline.ExtractJob
-      .extractSpanParallel(spark.createDataset(docs), cfg)
-      .collect().flatMap(_._1).map(norm).toSet
-    assert(par == batch)
   }
 
   test("zstd and bzip2 members round-trip and explode as children") {

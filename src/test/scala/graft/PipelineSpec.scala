@@ -200,21 +200,28 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val poisoned = spark.createDataset(Seq(
       DocIn(1, Array(SpanIn("text", "fine", "", 0))),
-      DocIn(2, null), // null spans == empty doc: SUCCESS/empty-file, both paths
+      DocIn(2, null), // null spans == empty doc: SUCCESS/empty-file
       DocIn(3, Array(SpanIn("pdf", "ENCRYPTED:blob", "", 0))),
       DocIn(4, Array(SpanIn("html", "POISON:tagsoup", "", 0))),
       DocIn(5, Array(SpanIn("media", "MISSING:blobref", "", 0))),
-      DocIn(6, Array(SpanIn("pdf", "UNREADABLE:truncated", "", 0)))
+      DocIn(6, Array(SpanIn("pdf", "UNREADABLE:truncated", "", 0))),
+      // a good span before the failing one: the doc still fails as a whole
+      DocIn(7, Array(SpanIn("text", "ok", "", 0), SpanIn("html", "POISON:x", "", 1)))
     ))
     val res = ExtractJob.extractPartitions(poisoned, ExtractJob.JobConfig()).collect()
     val lineages = res.flatMap(_._2)
+    assert(lineages.length == 7) // one lineage row per input doc
     def st(id: Long) = lineages.find(_.doc_id == id).get.status
     assert(st(1) == Status.Success)
-    assert(st(2) == Status.Success) // graceful empty, aligned with span-parallel
+    assert(st(2) == Status.Success) // graceful empty, not a failure
     assert(st(3) == Status.NotDecrypted)
     assert(st(4) == Status.NotParsed)
     assert(st(5) == Status.NotFound)
     assert(st(6) == Status.Unreadable)
+    assert(st(7) == Status.NotParsed)
+    // failed docs emit no doc rows
+    val docIds = res.flatMap(_._1).map(_.doc_id).toSet
+    assert((4L to 7L).forall(id => !docIds.contains(graft.core.Ids.rootId(id))))
     // NOT_DECRYPTED is non-terminal: a resume retries it
     assert(!Status.terminal.contains(Status.NotDecrypted))
     // the empty doc still emitted a (reason-stamped) doc row, not a failure
@@ -253,50 +260,6 @@ class PipelineSpec extends AnyFunSuite {
     val parted = ExtractJob.saltedRepartition(docs, cfg)
     assert(parted.count() == 51)
     assert(parted.rdd.getNumPartitions == 8)
-  }
-
-  test("span-parallel extraction equals the per-doc path exactly (giant-doc skew)") {
-    import spark.implicits._
-    // mixed corpus incl. chain containers, content-less media, bin junk,
-    // encrypted spans
-    val docs = (0 until 60).map(i =>
-      Corpus.synthesizeOne(i.toLong, "a b c d e f g h i j k l m n")) :+
-      DocIn(900, Array(SpanIn("pdf", "ENCRYPTED:x", "", 0))) :+
-      DocIn(901, Array.empty[SpanIn])
-    val ds = spark.createDataset(docs)
-    def norm(d: DocOut) = (d.doc_id, d.parent_id, d.root_id, d.level,
-      d.spans.toSeq, d.no_content_reason)
-    val res = ExtractJob.extractSpanParallel(ds, ExtractJob.JobConfig(partitions = 6)).collect()
-    val viaSpans = res.flatMap(_._1).map(norm).toSet
-    // batch parity for DOC rows: only SUCCESS docs emit rows, so the
-    // encrypted doc 900 (NOT_DECRYPTED) contributes lineage only
-    val viaDocs = docs.filter(_.doc_id != 900)
-      .flatMap(d => graft.core.route.Extract.explode(d)).map(norm).toSet
-    assert(viaSpans == viaDocs)
-    val lineages = res.flatMap(_._2)
-    assert(lineages.length == docs.length) // one lineage row per input doc
-    assert(lineages.find(_.doc_id == 900).get.status == Status.NotDecrypted)
-    assert(lineages.find(_.doc_id == 901).get.status == Status.Success)
-  }
-
-  test("span-parallel path classifies failing spans instead of failing the job") {
-    import spark.implicits._
-    val docs = Seq(
-      DocIn(1, Array(SpanIn("text", "fine", "", 0))),
-      DocIn(2, Array(SpanIn("text", "ok", "", 0), SpanIn("html", "POISON:x", "", 1))),
-      DocIn(3, Array(SpanIn("media", "MISSING:ref", "", 0))),
-      // SLOW span overruns its 20ms budget -> per-span deadline -> TIMEOUT
-      DocIn(4, Array(SpanIn("text", "SLOW:100", "", 0))))
-    val cfg = ExtractJob.JobConfig(partitions = 4, docTimeoutMillis = 20)
-    val res = ExtractJob.extractSpanParallel(spark.createDataset(docs), cfg).collect()
-    val st = res.flatMap(_._2).map(l => l.doc_id -> l.status).toMap
-    assert(st(1L) == Status.Success)
-    assert(st(2L) == Status.NotParsed)
-    assert(st(3L) == Status.NotFound)
-    assert(st(4L) == Status.Timeout)
-    // failed docs emit no doc rows (batch parity)
-    val docIds = res.flatMap(_._1).map(_.doc_id).toSet
-    assert(docIds == Set(graft.core.Ids.rootId(1L)))
   }
 
   test("extraction output equals the direct per-doc computation (plan-independent)") {
