@@ -54,14 +54,20 @@ object SnapshotTable {
     content.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
   }
 
+  /** Paths of the data dirs visible at `version`, oldest first. The list is
+    * immutable — concurrent commits cannot change it — so a reader that
+    * knows the data's schema can declare it instead of inferring one.
+    */
+  def dataDirs(table: String, version: Long): Seq[String] =
+    readManifest(table, version).map(n => dataDir(table).resolve(n).toString)
+
   /** Read the table at a snapshot (default: latest). The resolved dir list
     * is immutable — concurrent commits cannot tear this read.
     */
   def read(spark: SparkSession, table: String, snapshot: Option[Long] = None): DataFrame = {
     val v = snapshot.orElse(currentVersion(table))
       .getOrElse(throw new IllegalStateException(s"no snapshots in $table"))
-    val dirs = readManifest(table, v).map(n => dataDir(table).resolve(n).toString)
-    spark.read.parquet(dirs: _*)
+    spark.read.parquet(dataDirs(table, v): _*)
   }
 
   /** Atomically publish `dirs` as the snapshot AFTER `expectedVersion` —

@@ -44,6 +44,11 @@ object Probe {
     new String(b, p, n, ISO_8859_1)
   private def need(ok: Boolean, what: String): Unit =
     if (!ok) throw new ParseFailure(what)
+  /** `[p, p + n)` lies inside `[lo, end)`. Compared in Long: offsets and
+    * sizes read from the file reach Int.MaxValue, where `p + n` wraps.
+    */
+  private def within(p: Int, n: Int, lo: Int, end: Int): Boolean =
+    p >= lo && n >= 0 && p.toLong + n <= end
 
   // ---------------------------------------------------------------- PNG ----
 
@@ -183,8 +188,8 @@ object Probe {
     val head = ascii(b, off, 2)
     val le = head == "II"
     need(le || head == "MM", "EXIF TIFF byte order")
-    def r16(p: Int): Int = { need(p >= off && p + 2 <= end, "EXIF read past segment"); if (le) le16(b, p) else be16(b, p) }
-    def r32(p: Int): Int = { need(p >= off && p + 4 <= end, "EXIF read past segment"); if (le) le32(b, p) else be32(b, p) }
+    def r16(p: Int): Int = { need(within(p, 2, off, end), "EXIF read past segment"); if (le) le16(b, p) else be16(b, p) }
+    def r32(p: Int): Int = { need(within(p, 4, off, end), "EXIF read past segment"); if (le) le32(b, p) else be32(b, p) }
     need(r16(off + 2) == 42, "EXIF TIFF magic")
     val ifdOff = r32(off + 4)
     need(ifdOff >= 8 && ifdOff <= end - off - 2, "EXIF IFD0 offset out of segment")
@@ -194,10 +199,10 @@ object Probe {
     var orient = 0; var make = ""; var model = ""
     def asciiValue(e: Int, cnt: Int): String = {
       val raw =
-        if (cnt <= 4) { need(e + 8 + cnt <= end, "EXIF inline value past segment"); ascii(b, e + 8, cnt) }
+        if (cnt <= 4) { need(within(e + 8, cnt, off, end), "EXIF inline value past segment"); ascii(b, e + 8, cnt) }
         else {
           val vo = off + r32(e + 8)
-          need(vo >= off && vo + cnt <= end, "EXIF value offset out of segment")
+          need(within(vo, cnt, off, end), "EXIF value offset out of segment")
           ascii(b, vo, cnt)
         }
       raw.takeWhile(_ != '\u0000') // ASCII values are NUL-terminated
@@ -686,10 +691,10 @@ object Probe {
   def probeTiff(b: Array[Byte]): TiffInfo = {
     need(isTiff(b), "not a TIFF")
     val le = b(0) == 'I'
-    def r16(p: Int): Int = { need(p >= 0 && p + 2 <= b.length, "TIFF read past file"); if (le) le16(b, p) else be16(b, p) }
-    def r32(p: Int): Int = { need(p >= 0 && p + 4 <= b.length, "TIFF read past file"); if (le) le32(b, p) else be32(b, p) }
+    def r16(p: Int): Int = { need(within(p, 2, 0, b.length), "TIFF read past file"); if (le) le16(b, p) else be16(b, p) }
+    def r32(p: Int): Int = { need(within(p, 4, 0, b.length), "TIFF read past file"); if (le) le32(b, p) else be32(b, p) }
     val ifd = r32(4)
-    need(ifd >= 8 && ifd + 2 <= b.length, "TIFF IFD0 offset out of file")
+    need(within(ifd, 2, 8, b.length), "TIFF IFD0 offset out of file")
     val n = r16(ifd)
     need(n > 0 && n <= 512, "TIFF IFD entry count out of range")
     var w = 0; var h = 0; var bps = 0; var orient = 0; var make = ""; var model = ""
@@ -697,10 +702,10 @@ object Probe {
       if (typ == 3) r16(e + 8) else r32(e + 8) // SHORT inline vs LONG inline
     def asciiValue(e: Int, cnt: Int): String = {
       val raw =
-        if (cnt <= 4) { need(e + 8 + cnt <= b.length, "TIFF inline value past file"); ascii(b, e + 8, cnt) }
+        if (cnt <= 4) { need(within(e + 8, cnt, 0, b.length), "TIFF inline value past file"); ascii(b, e + 8, cnt) }
         else {
           val vo = r32(e + 8)
-          need(vo >= 0 && vo + cnt <= b.length, "TIFF value offset out of file")
+          need(within(vo, cnt, 0, b.length), "TIFF value offset out of file")
           ascii(b, vo, cnt)
         }
       raw.takeWhile(_ != '\u0000')
@@ -852,7 +857,7 @@ object Probe {
       guard += 1; need(guard <= 1024, "WebP chunk cap")
       val id = ascii(b, pos, 4)
       val size = le32(b, pos + 4)
-      need(size >= 0 && pos + 8 + size <= b.length, "WebP chunk past file")
+      need(within(pos + 8, size, 0, b.length), "WebP chunk past file")
       val p = pos + 8
       id match {
         case "VP8X" =>

@@ -283,13 +283,6 @@ object Extract {
     (sb.toString, failed)
   }
 
-  /** Back-compat wrapper: media-only container spawning (the original
-    * surface; tests and callers with media-only corpora use this).
-    */
-  def spawnEmbeds(mediaContents: Seq[String], rootId: String, cfg: Config,
-                  deadlineNanos: Long = Long.MaxValue): (Vector[DocOut], Int) =
-    spawnContainers(mediaContents.map(("media", _)), rootId, cfg, deadlineNanos)
-
   /** Spawn embedded child documents from the parent's container spans (in
     * offset order) — the child half of [[explodeCounted]].
     *

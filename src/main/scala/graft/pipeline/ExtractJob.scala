@@ -1,9 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.catalog.SnapshotTable
 import graft.core._
 import graft.core.route.Extract
 
@@ -11,7 +12,7 @@ import graft.core.route.Extract
   *
   * read spans table -> anti-join lineage (exact resume) -> salted
   * repartition on doc_id (skew handling) -> mapPartitions(extract) ->
-  * write extracted spans + lineage + per-partition checkpoint manifests.
+  * append extracted spans + lineage to a snapshot table as one commit.
   *
   * Scale design (the 100 TB story):
   *  - ONE data-sized shuffle (the salted repartition), moving only rows that
@@ -21,25 +22,24 @@ import graft.core.route.Extract
   *    shuffle is gone;
   *  - ONE extraction pass: doc rows and lineage rows are emitted together
   *    from the same mapPartitions and written once as a combined table
-  *    (two nullable structs); `extracted/` and `lineage/` are then cheap
-  *    columnar re-projections (on Iceberg they would simply be views);
-  *  - the commit tail adds two small shuffles: the checkpoint aggregate over
-  *    this run's lineage (one row per partition out) and the totals scan,
-  *    which is O(history) rows but reads only the `doc.doc_id` and
-  *    `lineage.doc_id` columns of the committed run dirs. A run's jobs are:
-  *    one manifest read (none on a first run), the extraction write, the
-  *    checkpoint aggregate and its one-file write, the manifest row, the
-  *    totals. Every read of a run dir or the manifest uses a declared
-  *    schema, so no job goes to parquet schema inference;
+  *    (two nullable structs); `extracted`, `lineage` and the per-partition
+  *    checkpoints are then cheap columnar views over it (on Iceberg they
+  *    would simply be views);
+  *  - the commit itself launches no job: it publishes a snapshot file on the
+  *    driver. A run's jobs are the extraction write (which also runs the
+  *    resume anti-join on a re-run) and the totals scan, which is
+  *    O(history) rows but reads only the `doc.doc_id` and `lineage.doc_id`
+  *    columns of the committed data dirs. Every read of a data dir uses a
+  *    declared schema, so no job goes to parquet schema inference;
   *  - skew: a 10-GB-span document can't be split by Spark, so rows are
   *    salted by a cheap size estimate — oversized docs spread across the
   *    salt domain, the reference's PST folder fan-out
   *    (`Extractor.java:142-146`) lifted to partition level;
   *  - lineage rows carry per-partition docs/sec and bytes/sec (north rule)
   *    from monotonic nanoTime deltas inside the partition;
-  *  - checkpoint manifests: one row per partition derived from the lineage
-  *    that actually landed (read back after commit), so a re-run can prove
-  *    which partitions committed — Iceberg snapshot-commit analog;
+  *  - checkpoints: one row per (run, partition), derived at read time from
+  *    the lineage that actually landed in a committed data dir, so they
+  *    prove which partitions committed;
   *  - resume is idempotent: re-running after a partial failure re-extracts
   *    only docs without terminal lineage (Reporter.skip semantics,
   *    `Reporter.java:120-135`).
@@ -183,32 +183,29 @@ object ExtractJob {
 
   // ------------------------------------------------ incremental commit ----
   //
-  // The commit protocol is INCREMENTAL (Iceberg-snapshot analog on plain
-  // parquet): run N+1 writes O(run N+1) bytes, never a rewrite of history.
+  // Each run is ONE append to the snapshot table `$outDir/combined`
+  // ([[graft.catalog.SnapshotTable]], the Iceberg stand-in), so run N+1
+  // writes O(run N+1) bytes, never a rewrite of history:
   //
-  //  1. extraction writes ONE combined table into a run-scoped directory —
-  //     the atomic unit (parquet job commit); run dirs are append-only and
-  //     are the source of truth;
-  //  2. a one-row-per-run MANIFEST is appended AFTER the run dir commits —
-  //     the snapshot pointer. Readers resolve only manifested runs, so a
-  //     crash mid-run leaves an invisible orphan dir, never a torn read;
-  //  3. `extracted` and `lineage` are READ-TIME VIEWS over the manifested
-  //     run dirs (on Iceberg: actual views / MERGE): extracted dedupes on
-  //     doc_id at read (re-extracted rows are bit-identical by determinism,
-  //     and only retried non-terminal docs ever recur); lineage keeps every
-  //     attempt (it is a log — retries are part of the record);
-  //  4. checkpoint manifests carry (run_id, partition_id) so each run's
-  //     committed partitions are provable — appended, never rewritten;
-  //  5. every read of the manifest, a run dir or the checkpoints uses the
-  //     declared schema below, never parquet schema inference (one Spark job
-  //     per read); a test pins each against what Spark infers.
+  //  1. extraction writes ONE combined table into a fresh, immutable data
+  //     dir — the run;
+  //  2. publishing snapshot `v<N+1>` (the dirs of `v<N>` plus the new one,
+  //     compare-and-set) is the commit point. Readers resolve only the dirs
+  //     of a snapshot, so a crash mid-run leaves an invisible orphan dir,
+  //     never a torn read, and a racing writer retries on top of the winner
+  //     instead of interleaving;
+  //  3. `extracted`, `lineage` and the checkpoints are READ-TIME VIEWS over
+  //     the current snapshot's dirs (on Iceberg: actual views / MERGE):
+  //     extracted dedupes on doc_id at read (re-extracted rows are
+  //     bit-identical by determinism, and only retried non-terminal docs ever
+  //     recur); lineage keeps every attempt (it is a log — retries are part
+  //     of the record); checkpoints aggregate that lineage per (run,
+  //     partition);
+  //  4. every read of a data dir uses the declared schema below, never
+  //     parquet schema inference (which costs one Spark job per read); a
+  //     test pins it against what Spark infers.
 
-  /** Schema of the manifest: one row per committed run. */
-  val ManifestSchema: StructType = StructType(Seq(
-    StructField("run_id", StringType), StructField("seq", LongType),
-    StructField("committed", BooleanType)))
-
-  /** Schema of a `combined/run-*` dir: the `(Option[DocOut], Option[LineageRow])`
+  /** Schema of a `combined` data dir: the `(Option[DocOut], Option[LineageRow])`
     * encoder with its fields named `doc` and `lineage`, all nullable as
     * parquet reads them back.
     */
@@ -219,35 +216,17 @@ object ExtractJob {
     })
   }
 
-  /** Schema of the checkpoint rows: one per (run, partition). */
-  val CheckpointSchema: StructType = StructType(Seq(
-    StructField("partition_id", IntegerType), StructField("n_docs", LongType),
-    StructField("n_spans", LongType), StructField("run_id", StringType),
-    StructField("committed", BooleanType)))
-
   private def nullable(t: DataType): DataType = t match {
     case s: StructType => StructType(s.fields.map(f => StructField(f.name, nullable(f.dataType))))
     case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
     case other => other
   }
 
-  /** Run ids recorded as committed, oldest-first. The manifest is one row
-    * per run, so its rows are deduped and sorted on the driver.
-    */
-  def committedRuns(spark: SparkSession, outDir: String): Seq[String] = {
-    val p = new java.io.File(s"$outDir/manifest")
-    if (!p.exists()) Seq.empty
-    else spark.read.schema(ManifestSchema).parquet(p.getPath)
-      .filter(col("committed")).select("run_id", "seq")
-      .collect().map(r => (r.getLong(1), r.getString(0)))
-      .distinct.sorted.map(_._2).toSeq
-  }
+  private def tableOf(outDir: String): String = s"$outDir/combined"
 
-  private def runDir(outDir: String, runId: String): String = s"$outDir/combined/run-$runId"
-
-  /** The combined (doc, lineage) union over the given runs. */
-  private def readRuns(spark: SparkSession, outDir: String, runs: Seq[String]): DataFrame =
-    spark.read.schema(CombinedSchema).parquet(runs.map(runDir(outDir, _)): _*)
+  /** The combined (doc, lineage) union over the data dirs of one snapshot. */
+  private def readVersion(spark: SparkSession, outDir: String, version: Long): DataFrame =
+    spark.read.schema(CombinedSchema).parquet(SnapshotTable.dataDirs(tableOf(outDir), version): _*)
 
   private def lineageOf(combined: DataFrame): DataFrame =
     combined.filter(col("lineage").isNotNull).select("lineage.*")
@@ -264,11 +243,9 @@ object ExtractJob {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** The combined (doc, lineage) union over committed runs only. */
-  def readCombined(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val runs = committedRuns(spark, outDir)
-    Option.when(runs.nonEmpty)(readRuns(spark, outDir, runs))
-  }
+  /** The combined (doc, lineage) union over the current snapshot. */
+  def readCombined(spark: SparkSession, outDir: String): Option[DataFrame] =
+    SnapshotTable.currentVersion(tableOf(outDir)).map(readVersion(spark, outDir, _))
 
   /** `extracted` as a read-time view: committed docs, dedup-on-read. */
   def readExtracted(spark: SparkSession, outDir: String): Option[DataFrame] =
@@ -279,31 +256,31 @@ object ExtractJob {
   def readLineage(spark: SparkSession, outDir: String): Option[DataFrame] =
     readCombined(spark, outDir).map(lineageOf)
 
-  /** Per-partition checkpoint rows of COMMITTED runs only: orphan-run
-    * checkpoint rows (a crash window, or rows from a racing writer) are
-    * filtered against the manifest exactly like orphan run dirs — the
-    * "provable committed partitions" surface never overstates.
+  /** Per-partition checkpoint rows of the current snapshot, as a read-time
+    * view: its lineage grouped by (data dir, `partition_id`), with `run_id`
+    * the data dir's name. The rows count what landed in committed dirs, so
+    * they never overstate: an uncommitted dir has no rows.
     */
-  def readCheckpoints(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val p = new java.io.File(s"$outDir/checkpoints")
-    if (!p.exists()) None
-    else {
-      val committed = committedRuns(spark, outDir)
-      Some(spark.read.schema(CheckpointSchema).parquet(p.getPath)
-        .filter(col("run_id").isin(committed: _*)))
-    }
-  }
+  def readCheckpoints(spark: SparkSession, outDir: String): Option[DataFrame] =
+    readCombined(spark, outDir).map(_
+      .select(regexp_extract(col("_metadata.file_path"), "([^/]+)/[^/]+$", 1).as("run_id"),
+        col("lineage"))
+      .filter(col("lineage").isNotNull)
+      .groupBy(col("lineage.partition_id").as("partition_id"), col("run_id"))
+      .agg(count(lit(1)).as("n_docs"), sum("lineage.n_spans_out").as("n_spans"))
+      .select(col("partition_id"), col("n_docs"), col("n_spans"), col("run_id"),
+        lit(true).as("committed")))
 
   /** End-to-end incremental run (commit protocol above). Resumes against
     * `lineagePrev` when given, else against the output's own lineage view —
     * the Reporter.skip semantics (`Reporter.java:120-135`). Returns (total
-    * docs in the extracted view, total lineage rows) across ALL runs.
+    * docs in the extracted view, total lineage rows) at the snapshot this
+    * run committed: every earlier commit, a racing writer's included, plus
+    * this run.
     *
-    * The manifest is read once, up front; that run list serves the resume
-    * view, the new run's sequence number and the totals. Each step's Spark
-    * jobs carry the description `ExtractJob.run/<step>` (resume, extract,
-    * checkpoints, manifest, totals); the caller's description is restored on
-    * return and its job group is left alone.
+    * Each step's Spark jobs carry the description `ExtractJob.run/<step>`
+    * (extract, totals); the caller's description is restored on return and
+    * its job group is left alone.
     */
   def run(spark: SparkSession, input: Dataset[DocIn], lineagePrev: Option[DataFrame],
           outDir: String, cfg: JobConfig = JobConfig()): (Long, Long) = {
@@ -314,66 +291,14 @@ object ExtractJob {
       body
     }
     try {
-      val prior = step("resume")(committedRuns(spark, outDir))
-      val lineageView =
-        lineagePrev.orElse(Option.when(prior.nonEmpty)(lineageOf(readRuns(spark, outDir, prior))))
-      val pending = lineageView.map(resume(input, _)).getOrElse(input)
-
-      val runId = java.util.UUID.randomUUID.toString.take(8)
-      step("extract") {
-        extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
-          .write.mode(SaveMode.Overwrite).parquet(runDir(outDir, runId))
+      val pending = lineagePrev.orElse(readLineage(spark, outDir))
+        .map(resume(input, _)).getOrElse(input)
+      val version = step("extract") {
+        SnapshotTable.append(spark, tableOf(outDir),
+          extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage"))
       }
-
-      // per-partition checkpoint rows for THIS run only (O(run), appended),
-      // derived from the lineage that landed in the run dir (never from
-      // in-task counters: the rows must prove what committed) — written
-      // BEFORE the manifest: a crash between the two leaves orphan
-      // checkpoint rows for an uncommitted run, which readCheckpoints filters
-      // against the manifest exactly like orphan run dirs. (Writing them
-      // after the manifest instead would make the asymmetric failure
-      // PERMANENT: a committed, visible run forever missing its checkpoint
-      // proof, with no read-side repair possible.) The aggregate is one row
-      // per partition, so it is written as one small file.
-      step("checkpoints") {
-        lineageOf(readRuns(spark, outDir, Seq(runId)))
-          .groupBy(col("partition_id"))
-          .agg(count(lit(1)).as("n_docs"), sum("n_spans_out").as("n_spans"))
-          .withColumn("run_id", lit(runId))
-          .withColumn("committed", lit(true))
-          .coalesce(1)
-          .write.mode(SaveMode.Append).parquet(s"$outDir/checkpoints")
-      }
-
-      // the commit point: one manifest row makes the run visible to readers
-      step("manifest") {
-        spark.createDataFrame(java.util.List.of(Row(runId, prior.size.toLong, true)), ManifestSchema)
-          .coalesce(1)
-          .write.mode(SaveMode.Append).parquet(s"$outDir/manifest")
-      }
-
-      step("totals")(totals(readRuns(spark, outDir, prior :+ runId)))
+      step("totals")(totals(readVersion(spark, outDir, version)))
     } finally sc.setJobDescription(callerDescription)
-  }
-
-  /** [[run]] variant writing through the snapshot-table layer
-    * ([[graft.catalog.SnapshotTable]] — the Iceberg stand-in): each run
-    * appends ONE immutable data dir and publishes one snapshot; resume
-    * reads the current snapshot's lineage view. Same O(run N+1) write cost;
-    * the commit point is the table layer's optimistic snapshot publish, so
-    * racing writers are detected instead of silently interleaving (the
-    * plain-dir protocol in [[run]] assumes a single writer).
-    */
-  def runSnapshot(spark: SparkSession, input: Dataset[DocIn], table: String,
-                  cfg: JobConfig = JobConfig()): (Long, Long) = {
-    import graft.catalog.SnapshotTable
-    val lineagePrev =
-      if (SnapshotTable.snapshots(table).isEmpty) None
-      else Some(lineageOf(SnapshotTable.read(spark, table)))
-    val pending = lineagePrev.map(resume(input, _)).getOrElse(input)
-    val combined = extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
-    SnapshotTable.append(spark, table, combined)
-    totals(SnapshotTable.read(spark, table))
   }
 
   /** Throughput-only variant for the bench harness: same plan shape, no

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotTable
 import graft.core._
 import graft.pipeline.ExtractJob
 
@@ -28,31 +29,31 @@ class PipelineSpec extends AnyFunSuite {
     val lineage = ExtractJob.readLineage(spark, out).get
     assert(lineage.filter(col("status") === Status.Success).count() == 30)
     assert(lineage.filter(col("docs_per_sec") > 0).count() == 30)
-    val ckpt = spark.read.parquet(s"$out/checkpoints")
+    val ckpt = ExtractJob.readCheckpoints(spark, out).get
     assert(ckpt.filter(col("committed")).count() > 0)
     assert(ckpt.agg(sum("n_docs")).first().getLong(0) == 30)
   }
 
   test("incremental commit: run N+1 writes O(run N+1), never rewrites history") {
     val out = tmpDir()
-    ExtractJob.run(spark, corpus(10), None, out)
-    val run1 = ExtractJob.committedRuns(spark, out)
+    val table = s"$out/combined"
+    val (_, nl1) = ExtractJob.run(spark, corpus(10), None, out)
+    assert(nl1 == 10)
+    val run1 = SnapshotTable.dataDirs(table, 1)
     assert(run1.size == 1)
-    def snapshot(runId: String): Map[String, Long] = {
-      val d = new java.io.File(s"$out/combined/run-$runId")
-      d.listFiles().map(f => f.getName -> f.lastModified()).toMap
-    }
+    def snapshot(dir: String): Map[String, Long] =
+      new java.io.File(dir).listFiles().map(f => f.getName -> f.lastModified()).toMap
     val before = snapshot(run1.head)
 
     // run 2 over a superset: auto-resume keeps only the 10 new docs
     val (nd2, nl2) = ExtractJob.run(spark, corpus(20), None, out)
-    val runs2 = ExtractJob.committedRuns(spark, out)
+    assert(SnapshotTable.snapshots(table) == Seq(1L, 2L))
+    val runs2 = SnapshotTable.dataDirs(table, 2)
     assert(runs2.size == 2 && runs2.head == run1.head)
     // history untouched: same files, same mtimes in run 1's dir
     assert(snapshot(run1.head) == before)
     // run 2's own dir holds exactly the 10 new docs' lineage
-    val run2Dir = s"$out/combined/run-${runs2(1)}"
-    val run2Lineage = spark.read.parquet(run2Dir)
+    val run2Lineage = spark.read.parquet(runs2(1))
       .filter(col("lineage").isNotNull).select("lineage.*")
     assert(run2Lineage.count() == 10)
     assert(run2Lineage.agg(min("doc_id")).first().getLong(0) == 10L)
@@ -60,37 +61,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(nl2 == 20)
     assert(ExtractJob.readExtracted(spark, out).get
       .filter(col("level") === 0).count() == 20)
+    // time travel: snapshot 1 still shows only the first 10 docs' lineage
+    assert(SnapshotTable.read(spark, table, Some(1))
+      .filter(col("lineage").isNotNull).count() == 10)
 
     // run 3 over the same input: nothing pending, still O(nothing)
     val (nd3, nl3) = ExtractJob.run(spark, corpus(20), None, out)
     assert(nl3 == 20 && nd3 == nd2)
   }
 
-  test("snapshot-table runs: incremental appends, resume from the snapshot view") {
-    val table = tmpDir() + "/tbl"
-    val (nd1, nl1) = ExtractJob.runSnapshot(spark, corpus(10), table)
-    assert(nl1 == 10)
-    val (nd2, nl2) = ExtractJob.runSnapshot(spark, corpus(20), table)
-    assert(nl2 == 20) // only the 10 new docs extracted on run 2
-    assert(graft.catalog.SnapshotTable.snapshots(table) == Seq(1L, 2L))
-    // time travel: run 1's view still shows only the first 10 docs' lineage
-    val v1 = graft.catalog.SnapshotTable.read(spark, table, Some(1))
-    assert(v1.filter(col("lineage").isNotNull).count() == 10)
-    // idempotent third run over the same input
-    val (_, nl3) = ExtractJob.runSnapshot(spark, corpus(20), table)
-    assert(nl3 == 20)
-  }
+  /** Writes `corpus(n)`'s extraction as a data dir of `out`'s table that no
+    * snapshot lists: what a crash between the data write and the snapshot
+    * publish leaves behind.
+    */
+  private def writeOrphan(out: String, n: Int): Unit =
+    ExtractJob.extractPartitions(corpus(n), ExtractJob.JobConfig())
+      .toDF("doc", "lineage")
+      .write.mode("overwrite").parquet(s"$out/combined/data/orphan99")
 
-  test("crash-orphaned run dir (no manifest row) is invisible to readers") {
+  test("crash-orphaned data dir (in no snapshot) is invisible to readers") {
     val out = tmpDir()
     ExtractJob.run(spark, corpus(5), None, out)
-    // simulate a crash after the run-dir write but before the manifest
-    // append: a bare run dir with no manifest row
-    ExtractJob.extractPartitions(corpus(8), ExtractJob.JobConfig())
-      .toDF("doc", "lineage")
-      .write.mode("overwrite").parquet(s"$out/combined/run-orphan99")
-    assert(ExtractJob.committedRuns(spark, out).size == 1)
+    writeOrphan(out, 8)
+    assert(SnapshotTable.snapshots(s"$out/combined") == Seq(1L))
+    assert(SnapshotTable.dataDirs(s"$out/combined", 1).size == 1)
     assert(ExtractJob.readLineage(spark, out).get.count() == 5)
+    assert(ExtractJob.readCheckpoints(spark, out).get
+      .agg(sum("n_docs")).first().getLong(0) == 5)
   }
 
   test("run's totals equal the view counts, orphans and recurring docs included") {
@@ -109,31 +106,63 @@ class PipelineSpec extends AnyFunSuite {
     // nothing pending
     val idle = ExtractJob.run(spark, corpus(12), None, out)
     assert(idle == views && idle == recur)
-    // a crash-orphaned run dir with no manifest row is not counted
-    ExtractJob.extractPartitions(corpus(30), ExtractJob.JobConfig())
-      .toDF("doc", "lineage")
-      .write.mode("overwrite").parquet(s"$out/combined/run-orphan99")
+    // a crash-orphaned data dir in no snapshot is not counted
+    writeOrphan(out, 30)
     val after = ExtractJob.run(spark, corpus(14), None, out)
     assert(after == views && after._2 == 27)
+  }
+
+  test("concurrent runs into one output both commit; the last commit's totals count both") {
+    import spark.implicits._
+    val out = tmpDir()
+    def docs(ids: Range) = spark.createDataset(ids.map { i =>
+      Corpus.synthesizeOne(i.toLong, s"alpha bravo charlie delta echo unit$i")
+    })
+    val inputs = Seq(docs(0 until 12), docs(100 until 130))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val totals =
+      try inputs.map(in => pool.submit(new java.util.concurrent.Callable[(Long, Long)] {
+        def call(): (Long, Long) = ExtractJob.run(spark, in, None, out)
+      })).map(_.get())
+      finally pool.shutdown()
+    val table = s"$out/combined"
+    assert(SnapshotTable.snapshots(table) == Seq(1L, 2L))
+    assert(SnapshotTable.dataDirs(table, 2).size == 2)
+    val lineage = ExtractJob.readLineage(spark, out).get
+    assert(lineage.select("doc_id").as[Long].collect().sorted.toSeq ==
+      ((0 until 12) ++ (100 until 130)).map(_.toLong))
+    // whichever run published v1 counts only its own rows; the one that
+    // published v2 counts both, which are the view counts
+    val views = (ExtractJob.readExtracted(spark, out).get.count(), lineage.count())
+    val v1 = SnapshotTable.read(spark, table, Some(1))
+    val (firstCommit, lastCommit) = (totals.minBy(_._2), totals.maxBy(_._2))
+    assert(firstCommit._2 == v1.filter(col("lineage").isNotNull).count())
+    assert(firstCommit._1 == v1.filter(col("doc").isNotNull).select("doc.doc_id").distinct().count())
+    assert(lastCommit == views && lastCommit._2 == 42)
   }
 
   test("declared schemas equal the inferred ones; checkpoints sum to each run's lineage") {
     val out = tmpDir()
     ExtractJob.run(spark, corpus(10), None, out)
     ExtractJob.run(spark, corpus(16), None, out)
-    val runs = ExtractJob.committedRuns(spark, out)
-    assert(spark.read.parquet(s"$out/manifest").schema == ExtractJob.ManifestSchema)
-    assert(spark.read.parquet(s"$out/checkpoints").schema == ExtractJob.CheckpointSchema)
-    val lineageRows = runs.map { r =>
-      val dir = spark.read.parquet(s"$out/combined/run-$r")
-      assert(dir.schema == ExtractJob.CombinedSchema)
-      r -> dir.filter(col("lineage").isNotNull).count()
-    }.toMap
-    assert(lineageRows == Map(runs(0) -> 10L, runs(1) -> 6L))
+    val table = s"$out/combined"
+    val runs = SnapshotTable.dataDirs(table, SnapshotTable.currentVersion(table).get)
+    // per data dir: (partition_id, lineage rows, sum(n_spans_out)) of its lineage
+    val lineageAgg = runs.map { dir =>
+      val df = spark.read.parquet(dir)
+      assert(df.schema == ExtractJob.CombinedSchema)
+      new java.io.File(dir).getName -> df.filter(col("lineage").isNotNull).select("lineage.*")
+        .groupBy("partition_id").agg(count(lit(1)), sum("n_spans_out")).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    }
+    assert(lineageAgg.map(_._2.toSeq.map(_._2).sum) == Seq(10L, 6L))
     val ckpt = ExtractJob.readCheckpoints(spark, out).get
-      .groupBy("run_id").agg(sum("n_docs")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(ckpt == lineageRows)
+    assert(ckpt.columns.toSeq == Seq("partition_id", "n_docs", "n_spans", "run_id", "committed"))
+    val ckptByRun = ckpt.collect().groupBy(_.getAs[String]("run_id")).map { case (r, rows) =>
+      r -> rows.map(x => (x.getAs[Int]("partition_id"), x.getAs[Long]("n_docs"),
+        x.getAs[Long]("n_spans"))).toSet
+    }
+    assert(ckptByRun == lineageAgg.toMap)
   }
 
   test("run tags each step's jobs and keeps the caller's job group and description") {
@@ -166,7 +195,7 @@ class PipelineSpec extends AnyFunSuite {
       sc.setJobDescription(sentinel)
       sc.parallelize(1 to 2).count()
       assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      val steps = Seq("resume", "extract", "checkpoints", "manifest", "totals")
+      val steps = Seq("extract", "totals")
         .map("ExtractJob.run/" + _)
       assert(seen.asScala.toSet == steps.toSet)
     } finally {

@@ -84,6 +84,15 @@ class ProbeSpec extends AnyFunSuite {
     // offset field is at TIFF+4, little-endian
     evil2(12 + 4) = 0xff.toByte; evil2(12 + 5) = 0xff.toByte
     intercept[ParseFailure](Probe.probeJpeg(evil2))
+    // a value offset near Int.MaxValue, where offset + count wraps: the
+    // 8-byte make value is stored behind an offset
+    val cam = Probe.jpegWithExif(Media.encodeSolid(4, 4, 0, "jpg"), 1, "CamCorp", "M1")
+    def le(p: Int, n: Int): Int = (0 until n).map(i => (cam(p + i) & 0xff) << (8 * i)).sum
+    val ifd = 12 + le(12 + 4, 4)
+    val make = (0 until le(ifd, 2)).map(ifd + 2 + 12 * _).find(le(_, 2) == 0x010f).get
+    val evil3 = cam.clone()
+    Array(0xf0, 0xff, 0xff, 0x7f).map(_.toByte).copyToArray(evil3, make + 8)
+    intercept[ParseFailure](Probe.probeJpeg(evil3))
     intercept[ParseFailure](Probe.probeJpeg(Array[Byte](0xff.toByte, 0xd8.toByte)))
   }
 
@@ -230,6 +239,11 @@ class ProbeSpec extends AnyFunSuite {
     val evil2 = tif.clone()
     evil2(8) = 0xff.toByte; evil2(9) = 0x7f.toByte // 32k entries → past file
     intercept[ParseFailure](Probe.probeTiff(evil2))
+    // IFD0 offset 0x7fffffff, where offset + 2 wraps: big- and little-endian
+    intercept[ParseFailure](Probe.probeTiff(
+      Array(0x4d, 0x4d, 0x00, 0x2a, 0x7f, 0xff, 0xff, 0xff).map(_.toByte)))
+    intercept[ParseFailure](Probe.probeTiff(
+      Array(0x49, 0x49, 0x2a, 0x00, 0xff, 0xff, 0xff, 0x7f).map(_.toByte)))
     intercept[ParseFailure](Probe.probeTiff(tif.take(10)))
   }
 
@@ -276,6 +290,9 @@ class ProbeSpec extends AnyFunSuite {
     val evil = wp.clone()
     evil(16) = 0x7f.toByte; evil(17) = 0x7f.toByte // VP8L size past file
     intercept[ParseFailure](Probe.probeWebp(evil))
+    // VP8X size 0x7ffffff8, where position + size wraps
+    intercept[ParseFailure](Probe.probeWebp("RIFFxxxxWEBPVP8X".getBytes("ISO-8859-1") ++
+      Array(0xf8, 0xff, 0xff, 0x7f).map(_.toByte)))
     intercept[ParseFailure](Probe.probeWebp("RIFF   WEBP".getBytes("ISO-8859-1")))
   }
 
