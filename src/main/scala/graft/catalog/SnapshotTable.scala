@@ -1,6 +1,9 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path, Paths}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Minimal snapshot-table layer — the Iceberg-semantics stand-in (no
@@ -140,6 +143,36 @@ object SnapshotTable {
              beforePublish: () => Unit = () => ()): Long = {
     val name = writeData(spark, table, df)
     commit(table, dirs => dirs :+ name, beforePublish = beforePublish)
+  }
+
+  /** [[append]] that publishes nothing when `df` has no rows: the fresh
+    * data dir is deleted and None returned, so an idle writer adds neither
+    * a snapshot nor a dir that every later read must list. Emptiness comes
+    * from the parquet footers of the files just written, on the driver —
+    * no Spark job.
+    */
+  def appendNonEmpty(spark: SparkSession, table: String, df: DataFrame): Option[Long] = {
+    val name = writeData(spark, table, df)
+    val dir = dataDir(table).resolve(name)
+    if (hasRows(spark, dir)) Some(commit(table, dirs => dirs :+ name))
+    else { deleteRecursively(dir); None }
+  }
+
+  /** Whether a parquet file in `dir` holds a row: footers are read until
+    * the first non-empty file (a write of rows rarely needs more than two),
+    * with the session's Hadoop configuration — building a fresh one per
+    * file costs milliseconds each.
+    */
+  private def hasRows(spark: SparkSession, dir: Path): Boolean = {
+    val options = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
+    val s = Files.list(dir)
+    try s.iterator().asScala
+      .filter { f => val n = f.getFileName.toString; n.endsWith(".parquet") && !n.startsWith(".") }
+      .exists { f =>
+        val r = new ParquetFileReader(new LocalInputFile(f), options)
+        try r.getRecordCount > 0 finally r.close()
+      }
+    finally s.close()
   }
 
   /** Overwrite: snapshot = just the new dir (old data stays readable via

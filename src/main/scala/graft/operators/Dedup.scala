@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.core.{HashParams, Ids}
 
@@ -15,9 +17,10 @@ import graft.core.{HashParams, Ids}
   * Scale notes (100 TB target):
   *  - exact dedup is a single hash-shuffle on the content hash — the hash is
   *    computed BEFORE the shuffle so only (hash, id) moves, never the text;
-  *  - MinHash+LSH shuffles (bucket_key, doc_id) pairs only: candidate
-  *    generation is a self-equi-join on the bucket key, which AQE
-  *    skew-splits if a bucket is hot;
+  *  - MinHash+LSH shuffles (48-byte signature key, doc_id) rows, then
+  *    (bucket_key, representative id) rows only: candidate generation is
+  *    a self-equi-join on the bucket key, which AQE skew-splits if a
+  *    bucket is hot;
   *  - SimHash emits one 64-bit signature per doc (map-only), pairs via a
   *    banded equi-join, never an all-pairs product;
   *  - n-gram Jaccard is the only quadratic-ish op and is gated on an
@@ -82,6 +85,27 @@ object Dedup {
     }
   }
 
+  /** Exact fixed-width key of a signature: its values packed big-endian,
+    * 4 bytes each (48 bytes for 12 values). Every value is below
+    * `HashParams.P` < 2^31, so the packing is injective — equal keys are
+    * equal signatures, with no hash that could merge two of them.
+    */
+  private def sigKey(sig: Array[Long]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 * sig.length)
+    sig.foreach(v => bb.putInt(v.toInt))
+    bb.array()
+  }
+
+  /** The band keys of a [[sigKey]] column as native expressions: band `b`
+    * is the byte `b` followed by the band's `4 * BandSize` key bytes. The
+    * same bucket equality as [[bandKeys]], without a string per band.
+    */
+  private def sigKeyBands(sig: Column): Column = {
+    val w = 4 * HashParams.BandSize
+    array((0 until HashParams.NumMinHash / HashParams.BandSize).map(b =>
+      concat(lit(Array(b.toByte)), substring(sig, b * w + 1, w))): _*)
+  }
+
   /** MinHash+LSH near-duplicate candidate pairs (a<b, distinct), with a
     * deterministic candidate cap: near-empty/templated documents share
     * entire signatures, and an uncapped hot band bucket goes quadratic
@@ -109,22 +133,29 @@ object Dedup {
     * expansion at C(cap,2)) and representatives per band bucket (bounding
     * the bucket join). When no group and no bucket reaches the cap this
     * is exactly the old per-bucket-members semantics.
+    *
+    * The corpus is read and signed ONCE per call: the signature groups are
+    * one aggregate keyed by the exact 48-byte [[sigKey]], materialized by
+    * a lazy `localCheckpoint`, and the within-group pairs, the band
+    * buckets and the member expansion all read that one materialization.
+    * Without it each consumer's column pruning plans its own aggregate —
+    * three input scans, three runs of the signature map, three shuffles on
+    * the key. Band keys are re-derived from the key after the shuffle, so
+    * only (key, doc_id) is shuffled and the aggregate stays a hash
+    * aggregate.
     */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
                    bucketCap: Int = 10000): DataFrame = {
     import spark.implicits._
-    // one row per doc: full signature + its band keys, computed ONCE
-    // map-side (everything downstream reuses this stage's one exchange)
     val sigDocs = docs.select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) =>
-        val sig = minhashSig(t)
-        (sig.mkString(","), bandKeys(sig), id)
-      }.toDF("sig", "bands", "doc_id")
+      .map { case (id, t) => (sigKey(minhashSig(t)), id) }
+      .toDF("sig", "doc_id")
     // distinct signatures: min-id representative + capped sorted membership
     val groups = sigDocs.groupBy("sig").agg(
       min("doc_id").as("rep"),
-      graft.functions.BoundedMinIds.minIds(bucketCap)(col("doc_id")).as("kept"),
-      first("bands").as("bands")) // bands are a pure function of sig
+      graft.functions.BoundedMinIds.minIds(bucketCap)(col("doc_id")).as("kept"))
+      .select(col("rep"), col("kept"), sigKeyBands(col("sig")).as("bands"))
+      .localCheckpoint(false)
     // within-group pairs: all pairs among the (ascending) kept members
     val within = groups.filter(size(col("kept")) >= 2)
       .select(explode(expr(
@@ -163,15 +194,21 @@ object Dedup {
     * levenshtein (Spark 3.5+ 3-arg form) that abandons the DP as soon as
     * the running minimum exceeds maxDist — both return the exact distance
     * for every surviving pair, so the stage stays oracle-checkable.
+    *
+    * The DP runs ONCE per pair that passes the length filter: the
+    * `dist >= 0` test (the thresholded form returns -1 past maxDist) is a
+    * typed filter over the projected `(a, b, dist)` rows. A column filter
+    * there would be pushed below the projection and into the join
+    * condition with `dist` inlined, and the plan would evaluate the DP
+    * twice per pair — once in the join, once in the projection.
     */
   def editVerify(docs: DataFrame, candidates: DataFrame, maxDist: Int): DataFrame =
     docs.select(col("doc_id").as("a"), col("text").as("ta"))
       .join(candidates, "a")
       .join(docs.select(col("doc_id").as("b"), col("text").as("tb")), "b")
       .filter(abs(length(col("ta")) - length(col("tb"))) <= maxDist)
-      .withColumn("dist", levenshtein(col("ta"), col("tb"), maxDist))
-      .filter(col("dist") >= 0) // thresholded form returns -1 past maxDist
-      .select("a", "b", "dist")
+      .select(col("a"), col("b"), levenshtein(col("ta"), col("tb"), maxDist).as("dist"))
+      .filter((r: Row) => !r.isNullAt(2) && r.getInt(2) >= 0)
 
   /** (bucket, doc_id) band-bucket membership rows. */
   def minhashBuckets(spark: SparkSession, docs: DataFrame): DataFrame = {
@@ -440,24 +477,41 @@ object Dedup {
     *
     * All checkpoints are LAZY (round 6, guide §1.2): an eager
     * localCheckpoint is its own Spark job, so a round previously paid two
-    * jobs (materialize, then the convergence count) and the edges/labels
-    * seeds two more up front. Lazily, the round's convergence count is
-    * the action that materializes that round's checkpoint — one job per
-    * round, half the per-round scheduling constant, identical blocks.
+    * actions (materialize, then the convergence count) and the
+    * edges/labels seeds two more up front. Lazily, the round's convergence
+    * count is the action that materializes that round's checkpoint. Each
+    * adaptive shuffle stage is still its own job: on the 5,150-doc
+    * benchmark corpus's 276 candidate pairs forced onto this path, round 1
+    * (with the seeding) launched 10 jobs and round 2 launched 9.
     *
     * Small-graph fast path (round 6, guide §3.1's broadcast analogy
-    * applied to iterative CC): the pair frame is checkpointed and counted
-    * ONCE (the count doubles as the materializing action, so neither path
-    * recomputes the upstream pair generation), and when the edge count is
-    * within `localEdgeMax` (default 2^20 — 16 MB of (long,long) rows, the
-    * same bounded-driver-collect class as the IVF seed quantizer and the
-    * Bloom bitmap literal) the components come from a driver-side
+    * applied to iterative CC): when the graph has at most `localEdgeMax`
+    * edges (default 2^20) the components come from a driver-side
     * union-find instead of 2+ label-propagation rounds of ~6 tiny
-    * exchanges each. Identical min-label output by construction; the
-    * distributed loop is unchanged above the bound, and with the round-6
-    * rep-collapse upstream the graph CC sees is distinct-signature-sized,
-    * not member-sized. Pass localEdgeMax = 0 to force the distributed
-    * path (tests do).
+    * exchanges each. The gate is ONE Spark job over the lazily
+    * checkpointed pair frame: each task counts its edges and returns them
+    * as primitive longs while it holds at most its share
+    * (`localEdgeMax / partitions + 1`), so the job both decides the path
+    * and collects the edges; it also materializes the checkpoint, so the
+    * distributed loop never recomputes the upstream pair generation. Only
+    * when the graph is under the bound but one partition held more than
+    * its share does a second job fetch those partitions. Driver heap on
+    * this path, for E <= localEdgeMax edges: the collected edges as long
+    * arrays (16 B per edge; task results total at most 16 B x
+    * (localEdgeMax + partitions)), the sorted endpoint copy (16 B per
+    * edge) and the union-find over the distinct endpoints (12 B per node,
+    * at most 2E nodes) — at most 56 B per edge, 56 MiB at the default
+    * bound — plus the returned local (doc_id, component) rows, one per
+    * node. Identical min-label output by construction; the distributed
+    * loop is unchanged above the bound, and with the round-6 rep-collapse
+    * upstream the graph CC sees is distinct-signature-sized, not
+    * member-sized. Pass localEdgeMax = 0 to force the distributed path
+    * (tests do).
+    *
+    * Jobs carry the description `Dedup.connectedComponents/<step>`: `gate`
+    * for the pair checkpoint and the edge collect, `round-N` for the
+    * label seeding (round 1) and each propagation round. The caller's
+    * description is restored on return and its job group is left alone.
     *
     * Input: pair columns (a, b). Output: (doc_id, component) for every
     * endpoint, component = smallest doc_id reachable.
@@ -465,29 +519,90 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
                           localEdgeMax: Long = 1L << 20): DataFrame = {
     val spark = pairs.sparkSession
-    val p = pairs.select(col("a"), col("b")).localCheckpoint(false)
-    if (p.count() <= localEdgeMax) {
-      import spark.implicits._
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    def tag(step: String): Unit = sc.setJobDescription(s"Dedup.connectedComponents/$step")
+    try {
+      tag("gate")
+      val p = pairs.select(col("a"), col("b")).localCheckpoint(false)
+      localEdges(p, localEdgeMax) match {
+        case Some(edges) =>
+          import spark.implicits._
+          localComponents(edges).toDF("doc_id", "component")
+        case None => propagate(p, maxIters, i => tag(s"round-$i"))
       }
-      p.collect().foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+    } finally sc.setJobDescription(callerDescription)
+  }
+
+  /** The edges of `p` (long columns a, b) on the driver, one interleaved
+    * (a, b, a, b, ...) long array per partition, or None when there are
+    * more than `max`: one job (see [[connectedComponents]]), and a second
+    * one only for the partitions that held more than their share.
+    */
+  private def localEdges(p: DataFrame, max: Long): Option[Seq[Array[Long]]] = {
+    val sc = p.sparkSession.sparkContext
+    val rows = p.queryExecution.toRdd
+    val parts = rows.getNumPartitions
+    val share = math.min(max / math.max(1, parts) + 1, Int.MaxValue / 4L)
+    // (edges seen, counted up to max + 1; the edges, or null past `limit`)
+    def fetch(limit: Long)(it: Iterator[InternalRow]): (Long, Array[Long]) = {
+      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0L
+      while (it.hasNext && n <= max) {
+        val r = it.next()
+        if (n < limit) { buf += r.getLong(0); buf += r.getLong(1) }
+        n += 1
       }
-      // union by min keeps every root the smallest id of its set, so the
-      // root IS the component label
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      parent.keySet.forEach(id => out += ((id.toLong, find(id))))
-      return out.toSeq.toDF("doc_id", "component")
+      (n, if (n <= limit) buf.result() else null)
     }
+    val counts = new Array[Long](parts)
+    val got = new Array[Array[Long]](parts)
+    val keep = (i: Int, r: (Long, Array[Long])) => { counts(i) = r._1; got(i) = r._2 }
+    sc.runJob(rows, fetch(share) _, keep)
+    if (counts.sum > max) return None
+    val over = got.indices.filter(got(_) == null)
+    if (over.nonEmpty)
+      sc.runJob(rows, (_: TaskContext, it: Iterator[InternalRow]) => fetch(max)(it), over, keep)
+    Some(got.toSeq)
+  }
+
+  /** Min-label components of interleaved edge arrays on the driver:
+    * union-find over the sorted distinct endpoints with parents as
+    * indices, so the root of a set is its smallest id. Returns
+    * (id, component) per endpoint.
+    */
+  private def localComponents(edges: Seq[Array[Long]]): Seq[(Long, Long)] = {
+    val all = new Array[Long](edges.iterator.map(_.length).sum)
+    var k = 0
+    edges.foreach { a => System.arraycopy(a, 0, all, k, a.length); k += a.length }
+    java.util.Arrays.sort(all)
+    k = 0
+    all.indices.foreach(i => if (k == 0 || all(i) != all(k - 1)) { all(k) = all(i); k += 1 })
+    val ids = java.util.Arrays.copyOf(all, k)
+    val parent = Array.tabulate(k)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) } // path halving
+      r
+    }
+    edges.foreach { a =>
+      var i = 0
+      while (i < a.length) {
+        val ra = find(java.util.Arrays.binarySearch(ids, a(i)))
+        val rb = find(java.util.Arrays.binarySearch(ids, a(i + 1)))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        i += 2
+      }
+    }
+    ids.indices.map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Distributed min-label propagation with pointer jumping over the
+    * checkpointed pair frame `p`; `round(n)` runs before round n's jobs
+    * (round 1 includes the edge and label seeding).
+    */
+  private def propagate(p: DataFrame, maxIters: Int, round: Int => Unit): DataFrame = {
+    round(1)
     val edges = p.select(col("a").as("s"), col("b").as("d"))
       .union(p.select(col("b").as("s"), col("a").as("d")))
       .localCheckpoint(false)
@@ -497,6 +612,7 @@ object Dedup {
     var iter = 0
     var converged = false
     while (iter < maxIters && !converged) {
+      round(iter + 1)
       val candidate = edges.join(labels, edges("s") === labels("id"))
         .select(col("d").as("cid"), col("label").as("nlabel"))
         .groupBy("cid").agg(min("nlabel").as("nlabel"))

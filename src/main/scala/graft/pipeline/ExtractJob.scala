@@ -188,7 +188,8 @@ object ExtractJob {
   // writes O(run N+1) bytes, never a rewrite of history:
   //
   //  1. extraction writes ONE combined table into a fresh, immutable data
-  //     dir — the run;
+  //     dir — the run; a run that wrote no rows deletes the dir and stops
+  //     here (its parquet footers say so, no extra job);
   //  2. publishing snapshot `v<N+1>` (the dirs of `v<N>` plus the new one,
   //     compare-and-set) is the commit point. Readers resolve only the dirs
   //     of a snapshot, so a crash mid-run leaves an invisible orphan dir,
@@ -276,7 +277,9 @@ object ExtractJob {
     * the Reporter.skip semantics (`Reporter.java:120-135`). Returns (total
     * docs in the extracted view, total lineage rows) at the snapshot this
     * run committed: every earlier commit, a racing writer's included, plus
-    * this run.
+    * this run. A run that lands no rows deletes its empty data dir and
+    * publishes no snapshot; it returns the totals at the current snapshot
+    * ((0, 0) for a table with none).
     *
     * Each step's Spark jobs carry the description `ExtractJob.run/<step>`
     * (extract, totals); the caller's description is restored on return and
@@ -293,11 +296,12 @@ object ExtractJob {
     try {
       val pending = lineagePrev.orElse(readLineage(spark, outDir))
         .map(resume(input, _)).getOrElse(input)
+      // a run that lands no rows (nothing pending) commits nothing
       val version = step("extract") {
-        SnapshotTable.append(spark, tableOf(outDir),
+        SnapshotTable.appendNonEmpty(spark, tableOf(outDir),
           extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage"))
-      }
-      step("totals")(totals(readVersion(spark, outDir, version)))
+      }.orElse(SnapshotTable.currentVersion(tableOf(outDir)))
+      version.fold((0L, 0L))(v => step("totals")(totals(readVersion(spark, outDir, v))))
     } finally sc.setJobDescription(callerDescription)
   }
 

@@ -65,10 +65,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, table, Some(1))
       .filter(col("lineage").isNotNull).count() == 10)
 
-    // run 3 over the same input: nothing pending, still O(nothing)
+    // run 3 over the same input: nothing pending, still O(nothing) — no
+    // snapshot and no data dir
+    val dirs = dataDirs(out)
     val (nd3, nl3) = ExtractJob.run(spark, corpus(20), None, out)
     assert(nl3 == 20 && nd3 == nd2)
+    assert(SnapshotTable.snapshots(table) == Seq(1L, 2L))
+    assert(dataDirs(out) == dirs && dirs.size == 2)
   }
+
+  /** Names of the data dirs on disk under `out`'s table, committed or not. */
+  private def dataDirs(out: String): Seq[String] =
+    new java.io.File(s"$out/combined/data").list().toSeq.sorted
 
   /** Writes `corpus(n)`'s extraction as a data dir of `out`'s table that no
     * snapshot lists: what a crash between the data write and the snapshot
@@ -103,9 +111,11 @@ class PipelineSpec extends AnyFunSuite {
     val noTerminal = Seq((0L, Status.NotParsed)).toDF("doc_id", "status")
     val recur = ExtractJob.run(spark, corpus(12), Some(noTerminal), out)
     assert(recur == views && recur._2 == 25)
-    // nothing pending
+    // nothing pending: no snapshot and no data dir
+    val (snaps, dirs) = (SnapshotTable.snapshots(s"$out/combined"), dataDirs(out))
     val idle = ExtractJob.run(spark, corpus(12), None, out)
     assert(idle == views && idle == recur)
+    assert(SnapshotTable.snapshots(s"$out/combined") == snaps && dataDirs(out) == dirs)
     // a crash-orphaned data dir in no snapshot is not counted
     writeOrphan(out, 30)
     val after = ExtractJob.run(spark, corpus(14), None, out)

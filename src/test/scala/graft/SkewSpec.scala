@@ -162,4 +162,81 @@ class SkewSpec extends AnyFunSuite {
       assert(local.forall { case (_, l) => local(l) == l })
     }
   }
+
+  /** Descriptions of the jobs `body` launches under a fresh job group whose
+    * caller description is "caller work"; checks that both survive `body`.
+    */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"caller-${java.util.UUID.randomUUID}"
+    val sentinel = s"sentinel-$group"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
+          val d = props.map(_.getProperty("spark.job.description")).orNull
+          if (d == sentinel) sentinelSeen.countDown() else seen.add(String.valueOf(d))
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller work", interruptOnCancel = false)
+      body
+      assert(sc.getLocalProperty("spark.jobGroup.id") == group)
+      assert(sc.getLocalProperty("spark.job.description") == "caller work")
+      // listener events arrive in order: once the sentinel job is seen, so
+      // are all of body's jobs
+      sc.setJobDescription(sentinel)
+      sc.parallelize(1 to 2).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      seen.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("CC small-graph path is one Spark job, tagged gate; caller's group and description kept") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("a", "b")
+    var cc = Map.empty[Long, Long]
+    val jobs = jobDescriptions {
+      cc = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    }
+    assert(jobs == Seq("Dedup.connectedComponents/gate"))
+    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
+  }
+
+  test("CC tags the distributed rounds; a partition past its share costs one more gate job") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val chain = (1L until 12L).map(i => (i, i + 1))
+    var dist = Map.empty[Long, Long]
+    val distJobs = jobDescriptions {
+      dist = Dedup.connectedComponents(chain.toDF("a", "b"), localEdgeMax = 0)
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(dist == (1L to 12L).map(_ -> 1L).toMap)
+    // gate, then rounds 1..N in order, then the caller's own collect
+    val tagged = distJobs.filter(_.startsWith("Dedup.connectedComponents/"))
+    assert(tagged.head == "Dedup.connectedComponents/gate")
+    val rounds = tagged.dropWhile(_.endsWith("/gate")).map(_.stripPrefix("Dedup.connectedComponents/round-").toInt)
+    assert(rounds.nonEmpty && rounds.distinct == (1 to rounds.max) && rounds == rounds.sorted)
+    assert(distJobs.forall(d => d.startsWith("Dedup.connectedComponents/") || d == "caller work"))
+    // all 11 edges in one of 3 partitions: under the bound (12), past the
+    // partition's share (12 / 3 + 1 = 5), so a second gate job fetches it
+    val skewed = spark.sparkContext.parallelize(Seq(chain, Nil, Nil), 3).flatMap(identity).toDF("a", "b")
+    var local = Map.empty[Long, Long]
+    val skewedJobs = jobDescriptions {
+      local = Dedup.connectedComponents(skewed, localEdgeMax = 12).as[(Long, Long)].collect().toMap
+    }
+    assert(skewedJobs == Seq.fill(2)("Dedup.connectedComponents/gate"))
+    assert(local == dist)
+  }
 }

@@ -25,6 +25,21 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, t).collect().map(_.getInt(0)).toSeq == Seq(9))
   }
 
+  test("appendNonEmpty publishes rows like append and an empty frame not at all") {
+    import spark.implicits._
+    val t = tmp()
+    val dataDirs = () => Option(new java.io.File(s"$t/data").list()).map(_.toSeq.sorted)
+    assert(SnapshotTable.appendNonEmpty(spark, t, Seq.empty[Int].toDF("x")).isEmpty)
+    assert(SnapshotTable.snapshots(t).isEmpty && dataDirs().forall(_.isEmpty))
+    assert(SnapshotTable.appendNonEmpty(spark, t, Seq(1, 2).toDF("x")) == Some(1L))
+    val dirs = dataDirs()
+    // several empty write tasks, still no rows
+    assert(SnapshotTable.appendNonEmpty(spark, t,
+      spark.range(0, 100, 1, 4).filter(col("id") < 0).toDF("x")).isEmpty)
+    assert(SnapshotTable.snapshots(t) == Seq(1L) && dataDirs() == dirs)
+    assert(SnapshotTable.read(spark, t).count() == 2)
+  }
+
   test("time travel: every historical snapshot stays readable, bit-stable") {
     import spark.implicits._
     val t = tmp()
