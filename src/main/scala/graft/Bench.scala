@@ -80,7 +80,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     // 400x (2M docs at sf0.1): large enough that per-job fixed overhead
     // (~0.4s scheduler/scan setup) stays <20% of the measured pass
     val factor = sys.env.getOrElse("SPARK_GRAFT_REPL", "400").toInt
@@ -150,62 +150,6 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-  }
-}
-
-/** Deser-ceiling measurement: the SAME routing work (stable offset sort +
-  * per-kind extraction of every span) through (a) the typed Dataset path —
-  * full DocIn deserialization, Extract.extractDoc, result reduced to a
-  * count — and (b) the native expression path (graft_extract_spans) that
-  * reads ArrayData/UTF8String directly with no object graph either way.
-  * Both compute the total extracted-span count (cross-checked equal).
-  * The paths run in alternating pairs, each pair with the other path
-  * first, since run order alone moves the ratio. Prints one JSON line
-  * with each path's best time and us/doc, and the median per-pair ratio.
-  */
-object DeserBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_REPL", "40").toInt
-    val pairs = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "4").toInt
-    val spark = Bench.session(cpus)
-    import spark.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    import org.apache.spark.sql.functions._
-    val path = Bench.corpusPath(spark, sfDir, factor, cpus.toInt * 4)
-
-    def typedRun(): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = spark.read.parquet(path).as[graft.core.DocIn]
-        .map(d => graft.core.route.Extract.extractDoc(d).spans.length.toLong)
-        .reduce(_ + _)
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
-    def exprRun(): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = spark.read.parquet(path)
-        .select(sum(size(call_function("graft_extract_spans", col("spans")))))
-        .first().getLong(0)
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
-    val nDocs = spark.read.parquet(path).count()
-    typedRun(); exprRun() // full-size JIT warmup for both paths
-    val runs = (1 to pairs).map { i =>
-      if (i % 2 == 1) { val t = typedRun(); (t, exprRun()) }
-      else { val e = exprRun(); (typedRun(), e) }
-    }
-    val typed = runs.map(_._1).minBy(_._2)
-    val expr = runs.map(_._2).minBy(_._2)
-    val ratios = runs.map { case (t, e) => t._2 / e._2 }.sorted
-    val pairMedian =
-      if (ratios.size % 2 == 1) ratios(ratios.size / 2)
-      else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2
-    require(typed._1 == expr._1, s"span counts diverge: ${typed._1} vs ${expr._1}")
-    val usT = typed._2 * 1e6 / nDocs
-    val usE = expr._2 * 1e6 / nDocs
-    println(s"""{"metric":"deser_paths","unit":"sec","n_docs":$nDocs,"n_spans":${typed._1},"typed_sec":${typed._2},"expr_sec":${expr._2},"typed_us_per_doc":$usT,"expr_us_per_doc":$usE,"speedup":${typed._2 / expr._2},"speedup_pair_median":$pairMedian,"pairs":$pairs,"cpus":$cpus,"sf":"$sfDir","replication":$factor}""")
     spark.stop()
   }
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the engine's 32-bit content code:
@@ -17,13 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * SQL-reproducible (the oracle contract): conv(substr(md5(x),1,8),16,10).
   */
-case class Code32(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_code32 requires STRING input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = LongType
+case class Code32(child: Expression) extends StringToLongExpr {
   override def prettyName: String = "graft_code32"
 
   override protected def nullSafeEval(input: Any): Any =
@@ -47,28 +38,21 @@ object Code32Impl {
   }
 }
 
-/** Session extensions wiring (spark.sql.extensions=graft.functions.GraftExtensions). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.code32Descriptor)
-    TextFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectFunction(ExtractSpansExpr.descriptor)
-  }
-}
-
+/** The one registry of the engine's native functions. */
 object GraftFunctions {
-  val code32Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_code32"),
-    new ExpressionInfo(classOf[Code32].getName, "graft_code32"),
-    (children: Seq[Expression]) => Code32(children.head)
-  )
+  private def unary(name: String, cls: Class[_], build: Expression => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), cs => build(cs.head))
 
-  /** Imperative registration for sessions built without the extensions
-    * config (idempotent).
-    */
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    unary("graft_code32", classOf[Code32], Code32),
+    unary("graft_simhash32", classOf[Simhash32], Simhash32),
+    unary("graft_fingerprint", classOf[Fingerprint], Fingerprint),
+    unary("graft_nfc", classOf[Nfc], Nfc))
+
+  /** Registers every native function on `spark`'s session (idempotent). */
   def ensureRegistered(spark: SparkSession): Unit =
-    (code32Descriptor +: ExtractSpansExpr.descriptor +: TextFunctions.descriptors)
-      .foreach { case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-      }
+    descriptors.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

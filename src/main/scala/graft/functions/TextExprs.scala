@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -91,18 +90,4 @@ object TextExprImpl {
         java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
     }
   }
-}
-
-object TextFunctions {
-  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_simhash32"),
-      new ExpressionInfo(classOf[Simhash32].getName, "graft_simhash32"),
-      (cs: Seq[Expression]) => Simhash32(cs.head)),
-    (FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[Fingerprint].getName, "graft_fingerprint"),
-      (cs: Seq[Expression]) => Fingerprint(cs.head)),
-    (FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[Nfc].getName, "graft_nfc"),
-      (cs: Seq[Expression]) => Nfc(cs.head))
-  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import graft.core.{HashParams, Ids}
+import graft.core.{HashParams, Ids, JobTags}
 
 /** Deduplication operators for the training-data pipeline.
   *
@@ -146,16 +146,7 @@ object Dedup {
     */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
                    bucketCap: Int = 10000): DataFrame = {
-    import spark.implicits._
-    val sigDocs = docs.select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) => (sigKey(minhashSig(t)), id) }
-      .toDF("sig", "doc_id")
-    // distinct signatures: min-id representative + capped sorted membership
-    val groups = sigDocs.groupBy("sig").agg(
-      min("doc_id").as("rep"),
-      graft.functions.BoundedMinIds.minIds(bucketCap)(col("doc_id")).as("kept"))
-      .select(col("rep"), col("kept"), sigKeyBands(col("sig")).as("bands"))
-      .localCheckpoint(false)
+    val groups = signatureGroups(spark, docs, bucketCap).localCheckpoint(false)
     // within-group pairs: all pairs among the (ascending) kept members
     val within = groups.filter(size(col("kept")) >= 2)
       .select(explode(expr(
@@ -179,6 +170,24 @@ object Dedup {
       .select(least(col("ma"), col("mb")).as("a"),
         greatest(col("ma"), col("mb")).as("b"))
     within.unionByName(cross)
+  }
+
+  /** The distinct signatures of `docs`, the unit [[minhashPairs]] caps
+    * in: one row per signature with its min-id representative `rep`, its
+    * `bucketCap` lowest member ids `kept` (ascending) and its band keys
+    * `bands`, plus the `extra` aggregates over its members.
+    */
+  private def signatureGroups(spark: SparkSession, docs: DataFrame, bucketCap: Int,
+                              extra: Column*): DataFrame = {
+    import spark.implicits._
+    val aggs = min("doc_id").as("rep") +:
+      graft.functions.BoundedMinIds.minIds(bucketCap)(col("doc_id")).as("kept") +: extra
+    docs.select("doc_id", "text").as[(Long, String)]
+      .map { case (id, t) => (sigKey(minhashSig(t)), id) }
+      .toDF("sig", "doc_id")
+      .groupBy("sig").agg(aggs.head, aggs.tail: _*)
+      .withColumn("bands", sigKeyBands(col("sig")))
+      .drop("sig")
   }
 
   /** Candidate-verification stage of the dedup pipeline: LSH candidates are
@@ -242,11 +251,29 @@ object Dedup {
       .groupBy("doc_id").agg(min("eid").as("dup_of"))
   }
 
-  /** Band-bucket occupancy vs the cap — the no-silent-caps record. */
-  def hotBuckets(spark: SparkSession, docs: DataFrame, bucketCap: Int): DataFrame =
-    minhashBuckets(spark, docs)
+  /** What [[minhashPairs]] drops at `bucketCap` — the no-silent-caps
+    * record. One row per capped unit, (unit, key, n_members, n_kept):
+    *  - `bucket`: a band bucket (key: its hex band key) holding more
+    *    DISTINCT signatures than the cap — the representatives past the
+    *    cap lose their cross-group candidate pairs in that bucket;
+    *  - `signature`: a signature group (key: its representative doc_id)
+    *    with more members than the cap — the members past the cap get no
+    *    pairs at all.
+    * Empty when the cap drops nothing. Both units come from the same
+    * signature groups [[minhashPairs]] builds.
+    */
+  def hotBuckets(spark: SparkSession, docs: DataFrame, bucketCap: Int): DataFrame = {
+    val groups = signatureGroups(spark, docs, bucketCap, count(lit(1)).as("n_members"))
+    val buckets = groups.select(explode(col("bands")).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_members"))
-      .withColumn("n_kept", least(col("n_members"), lit(bucketCap.toLong)))
+      .select(lit("bucket").as("unit"), hex(col("bucket")).as("key"), col("n_members"))
+    val sigs = groups.select(lit("signature").as("unit"), col("rep").cast("string").as("key"),
+      col("n_members"))
+    val cap = lit(bucketCap.toLong)
+    buckets.unionByName(sigs)
+      .filter(col("n_members") > cap)
+      .withColumn("n_kept", least(col("n_members"), cap))
+  }
 
   /** SimHash signatures (map-only; one row per doc). */
   def simhash(spark: SparkSession, docs: DataFrame): DataFrame = {
@@ -278,6 +305,10 @@ object Dedup {
     * ubiquitous shingle ("of the") makes its join-key fan-out
     * |probes_with_it| x |docs_with_it|, near-cartesian at corpus scale.
     * Dropped shingles are REPORTED by [[hotShingles]] (no silent caps).
+    *
+    * `probe` is a doc-level predicate over the columns of `docs` (the
+    * default samples every 50th doc_id): it selects the probe documents
+    * before they are shingled, so it cannot refer to a shingle.
     *
     * Emits (a=probe, b, inter, uni) where 5*inter >= uni (Jaccard >= 0.2)
     * over the rare-shingle profile, a != b. Integer-only output.
@@ -519,10 +550,7 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
                           localEdgeMax: Long = 1L << 20): DataFrame = {
     val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    def tag(step: String): Unit = sc.setJobDescription(s"Dedup.connectedComponents/$step")
-    try {
+    JobTags.tagged(spark.sparkContext, "Dedup.connectedComponents") { tag =>
       tag("gate")
       val p = pairs.select(col("a"), col("b")).localCheckpoint(false)
       localEdges(p, localEdgeMax) match {
@@ -531,7 +559,7 @@ object Dedup {
           localComponents(edges).toDF("doc_id", "component")
         case None => propagate(p, maxIters, i => tag(s"round-$i"))
       }
-    } finally sc.setJobDescription(callerDescription)
+    }
   }
 
   /** The edges of `p` (long columns a, b) on the driver, one interleaved

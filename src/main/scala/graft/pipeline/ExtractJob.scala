@@ -286,24 +286,17 @@ object ExtractJob {
     * its job group is left alone.
     */
   def run(spark: SparkSession, input: Dataset[DocIn], lineagePrev: Option[DataFrame],
-          outDir: String, cfg: JobConfig = JobConfig()): (Long, Long) = {
-    val sc = spark.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    def step[T](name: String)(body: => T): T = {
-      sc.setJobDescription(s"ExtractJob.run/$name")
-      body
-    }
-    try {
+          outDir: String, cfg: JobConfig = JobConfig()): (Long, Long) =
+    JobTags.tagged(spark.sparkContext, "ExtractJob.run") { tag =>
       val pending = lineagePrev.orElse(readLineage(spark, outDir))
         .map(resume(input, _)).getOrElse(input)
+      tag("extract")
       // a run that lands no rows (nothing pending) commits nothing
-      val version = step("extract") {
-        SnapshotTable.appendNonEmpty(spark, tableOf(outDir),
-          extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage"))
-      }.orElse(SnapshotTable.currentVersion(tableOf(outDir)))
-      version.fold((0L, 0L))(v => step("totals")(totals(readVersion(spark, outDir, v))))
-    } finally sc.setJobDescription(callerDescription)
-  }
+      val rows = extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
+      val version = SnapshotTable.appendNonEmpty(spark, tableOf(outDir), rows)
+        .orElse(SnapshotTable.currentVersion(tableOf(outDir)))
+      version.fold((0L, 0L)) { v => tag("totals"); totals(readVersion(spark, outDir, v)) }
+    }
 
   /** Throughput-only variant for the bench harness: same plan shape, no
     * intermediate writes — extraction forced by a count over the combined

@@ -176,42 +176,14 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("run tags each step's jobs and keeps the caller's job group and description") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"caller-${java.util.UUID.randomUUID}"
-    val sentinel = s"sentinel-$group"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
-          val d = props.map(_.getProperty("spark.job.description")).orNull
-          if (d == sentinel) sentinelSeen.countDown() else seen.add(String.valueOf(d))
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
+    val seen = SparkTestBase.jobDescriptions {
       val out = tmpDir()
-      sc.setJobGroup(group, "caller work", interruptOnCancel = false)
       ExtractJob.run(spark, corpus(10), None, out)
       ExtractJob.run(spark, corpus(12), None, out)
-      assert(sc.getLocalProperty("spark.jobGroup.id") == group)
-      assert(sc.getLocalProperty("spark.job.description") == "caller work")
-      // listener events arrive in order: once the sentinel job is seen, so
-      // are all of run's jobs
-      sc.setJobDescription(sentinel)
-      sc.parallelize(1 to 2).count()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      val steps = Seq("extract", "totals")
-        .map("ExtractJob.run/" + _)
-      assert(seen.asScala.toSet == steps.toSet)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    val steps = Seq("extract", "totals")
+      .map("ExtractJob.run/" + _)
+    assert(seen.toSet == steps.toSet)
   }
 
   test("resume skips terminal statuses and retries the rest") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class SkewSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
+  import SparkTestBase.jobDescriptions
 
   test("AQE splits a skewed sort-merge join at runtime") {
     import spark.implicits._
@@ -55,6 +56,23 @@ class SkewSpec extends AnyFunSuite {
     assert(pairs.filter(col("a") < 300 && col("b") < 300).count() == 190)
     val hot = graft.operators.Dedup.hotBuckets(spark, docs, cap)
     assert(hot.filter(col("n_members") > col("n_kept")).count() > 0)
+    // the loss is the templated signature group: 300 members, 20 kept
+    assert(hot.filter(col("unit") === "signature").select("n_members", "n_kept")
+      .as[(Long, Long)].collect().toSeq == Seq((300L, 20L)))
+
+    // 60 docs over 3 near-dup signatures sharing a band bucket: the bucket
+    // holds 60 members but only 3 distinct signatures and no group passes
+    // the cap, so minhashPairs keeps every pair and nothing is reported
+    val base = "alpha beta gamma delta epsilon zeta eta theta"
+    val texts = Seq("", " upsilon", " phi").map(base + _)
+    val sigs = texts.map(t => graft.operators.Dedup.minhashSig(t).toSeq)
+    assert(sigs.distinct.size == 3 &&
+      sigs.map(s => graft.operators.Dedup.bandKeys(s.toArray).toSet).reduce(_ intersect _).nonEmpty,
+      "fixture: three distinct signatures sharing a band bucket")
+    val spread = (0 until 60).map(i => (i.toLong, texts(i % 3))).toDF("doc_id", "text")
+    val spreadPairs = graft.operators.Dedup.minhashPairs(spark, spread, cap)
+    assert(spreadPairs.count() == 60 * 59 / 2)
+    assert(graft.operators.Dedup.hotBuckets(spark, spread, cap).count() == 0)
   }
 
   test("minhashPairs signature-collapsed banding emits the identical pair set (uncapped)") {
@@ -160,44 +178,6 @@ class SkewSpec extends AnyFunSuite {
       assert(local == dist, s"trial $trial: paths diverge")
       // labels are component minima: every label labels itself
       assert(local.forall { case (_, l) => local(l) == l })
-    }
-  }
-
-  /** Descriptions of the jobs `body` launches under a fresh job group whose
-    * caller description is "caller work"; checks that both survive `body`.
-    */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"caller-${java.util.UUID.randomUUID}"
-    val sentinel = s"sentinel-$group"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
-          val d = props.map(_.getProperty("spark.job.description")).orNull
-          if (d == sentinel) sentinelSeen.countDown() else seen.add(String.valueOf(d))
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "caller work", interruptOnCancel = false)
-      body
-      assert(sc.getLocalProperty("spark.jobGroup.id") == group)
-      assert(sc.getLocalProperty("spark.job.description") == "caller work")
-      // listener events arrive in order: once the sentinel job is seen, so
-      // are all of body's jobs
-      sc.setJobDescription(sentinel)
-      sc.parallelize(1 to 2).count()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      seen.asScala.toSeq
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Assertions._
 
 /** Shared local session for Spark-backed specs (one JVM per forked test
   * run; getOrCreate dedupes across suites).
@@ -19,5 +20,43 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Descriptions of the jobs `body` launches under a fresh job group whose
+    * caller description is "caller work"; checks that both survive `body`.
+    */
+  def jobDescriptions(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"caller-${java.util.UUID.randomUUID}"
+    val sentinel = s"sentinel-$group"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
+          val d = props.map(_.getProperty("spark.job.description")).orNull
+          if (d == sentinel) sentinelSeen.countDown() else seen.add(String.valueOf(d))
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller work", interruptOnCancel = false)
+      body
+      assert(sc.getLocalProperty("spark.jobGroup.id") == group)
+      assert(sc.getLocalProperty("spark.job.description") == "caller work")
+      // listener events arrive in order: once the sentinel job is seen, so
+      // are all of body's jobs
+      sc.setJobDescription(sentinel)
+      sc.parallelize(1 to 2).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      seen.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
