@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core._
@@ -44,6 +45,95 @@ object Queries {
   private def emb(s: SparkSession, dir: String) = Corpus.embeddings(s, dir)
   private def events(s: SparkSession, dir: String) = Corpus.events(s, dir)
   private def tbl(s: SparkSession, dir: String, n: String) = Corpus.table(s, dir, n)
+
+  // -------------------------------------------------------- fixture leaves
+  //
+  // A format leaf builds one fixture document per kept doc id, routes it
+  // through the engine and projects the result in one of three shapes.
+  // Its input is `ids(...)` when the fixture derives from the id alone (the
+  // scan then reads only `doc_id`) or `texts(...)` when it typesets the
+  // document's words. `keep` is a column predicate on `doc_id`, so the
+  // dropped docs are never deserialized and, behind `docsPar`, never
+  // shuffled; `build` gets (id, text) and returns the fixture's
+  // (kind, payload) span(s).
+
+  /** A leaf's input reading `doc_id` alone; the text is null. */
+  private def ids(df: DataFrame): Dataset[(Long, String)] = {
+    import df.sparkSession.implicits._
+    df.select(col("doc_id"), lit(null).cast("string")).as[(Long, String)]
+  }
+  /** A leaf's input reading `doc_id` and `text`. */
+  private def texts(df: DataFrame): Dataset[(Long, String)] = {
+    import df.sparkSession.implicits._
+    df.select("doc_id", "text").as[(Long, String)]
+  }
+  /** The doc predicate keeping every `n`th doc id. */
+  private def nth(n: Int): Column = col("doc_id") % n === 0
+  /** The doc predicate of a leaf that keeps every document. */
+  private def everyDoc: Column = lit(true)
+
+  /** Tree leaf: the fixture's spans (at offsets 0, 1, ...) exploded, one
+    * (doc_id, node_id, parent_id, level, txt, reason) row per node.
+    */
+  private def treeLeaf(in: Dataset[(Long, String)], keep: Column)(
+      build: (Long, String) => Seq[(String, String)]): DataFrame = {
+    import in.sparkSession.implicits._
+    in.filter(keep)
+      .flatMap { case (id, t) =>
+        val spans = build(id, t).zipWithIndex.map { case ((k, p), i) => SpanIn(k, p, "", i) }
+        Extract.explode(DocIn(id, spans.toArray)).map(o =>
+          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
+      }
+      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+  }
+
+  /** Text leaf: the fixture's one span routed, one (doc_id, txt, reason)
+    * row per doc; a wrong-password decrypt reads as the encrypted reason.
+    */
+  private def textLeaf(in: Dataset[(Long, String)], keep: Column)(
+      build: (Long, String) => (String, String)): DataFrame = {
+    import in.sparkSession.implicits._
+    in.filter(keep)
+      .map { case (id, t) =>
+        val (kind, payload) = build(id, t)
+        val (txt, why) =
+          try Extract.extractSpan(kind, payload)
+          catch { case _: DecryptFailure => ("", Reason.Encrypted) }
+        (id, txt, why)
+      }
+      .toDF("doc_id", "txt", "reason")
+  }
+
+  /** Doc leaf: [[textLeaf]] without the reason, one (doc_id, txt) row per
+    * doc. The text of a one-span document is its span's text, so this is
+    * also what `Extract.extractDoc` yields for it.
+    */
+  private def docLeaf(in: Dataset[(Long, String)], keep: Column)(
+      build: (Long, String) => (String, String)): DataFrame =
+    textLeaf(in, keep)(build).drop("reason")
+
+  /** Fixture bytes as the engine's Latin-1 span payload (one char per byte). */
+  private def latin1(b: Array[Byte]): String = new String(b, ISO_8859_1)
+
+  /** A document's words, 5 per line (the typeset fixtures' line shape). */
+  private def lines5(t: String): Seq[String] =
+    t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
+
+  /** The spreadsheet fixtures' cells: the words two per row as strings,
+    * then a `total` row with the doc id as a numeric cell.
+    */
+  private def sheetRows(id: Long, t: String): Seq[Seq[(String, Boolean)]] =
+    t.split(" ", -1).grouped(2).map(_.toSeq.map(w => (w, false))).toSeq ++
+      Seq(Seq(("total", false), (id.toString, true)))
+
+  /** A one-object PDF 1.4 file holding content stream `stream` under the
+    * given `/Filter` (none when empty), closed by `trailer`.
+    */
+  private def pdf14(stream: String, filter: String = "",
+                    trailer: String = "trailer\n%%EOF"): String = {
+    val f = if (filter.isEmpty) "" else s" /Filter $filter"
+    s"%PDF-1.4\n1 0 obj << /Length ${stream.length}$f >>\nstream\n$stream\nendstream\nendobj\n$trailer"
+  }
 
   // ------------------------------------------------------------ extraction
 
@@ -146,6 +236,17 @@ object Queries {
         lit(">sub "), col("doc_id").cast("string")))
       .otherwise(concat(lit("ocr "), col("doc_id").cast("string")))
 
+  /** Content stream typesetting a document's words, 5/line (shared by the
+    * raw and Flate-compressed PDF round-trip queries).
+    */
+  private def pdfContentStream(t: String): String = {
+    val content = new StringBuilder("BT /F1 12 Tf ")
+    lines5(t).zipWithIndex.foreach { case (line, li) =>
+      content.append(s"1 0 0 1 72 ${720 - li * 14} Tm ($line) Tj ")
+    }
+    content.append("ET").toString
+  }
+
   /** §2.1+§2.3 REAL byte-stream path: each doc's words typeset into an
     * actual uncompressed PDF 1.4 byte stream (Tm-positioned Tj operators,
     * 5 words/line), parsed back by the real-format parser
@@ -153,33 +254,8 @@ object Queries {
     * The oracle recomputes the expected text from `documents` alone, so
     * the whole build-bytes -> parse-bytes loop is correctness-gated.
     */
-  /** Content stream typesetting a document's words, 5/line (shared by the
-    * raw and Flate-compressed PDF round-trip queries).
-    */
-  private def pdfContentStream(t: String): String = {
-    val w = t.split(" ", -1)
-    val content = new StringBuilder("BT /F1 12 Tf ")
-    var li = 0
-    while (li * 5 < w.length) {
-      val line = w.slice(li * 5, math.min(w.length, li * 5 + 5)).mkString(" ")
-      content.append(s"1 0 0 1 72 ${720 - li * 14} Tm ($line) Tj ")
-      li += 1
-    }
-    content.append("ET")
-    content.toString
-  }
-
-  def pdfBytes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) =>
-        val content = pdfContentStream(t)
-        val pdf = s"%PDF-1.4\n1 0 obj << /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\ntrailer\n%%EOF"
-        val (txt, _) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def pdfBytes(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docsPar(spark, dir)), everyDoc)((_, t) => "pdf_bytes" -> pdf14(pdfContentStream(t)))
 
   /** §2.3 REAL compressed-PDF path: the same typeset content stream,
     * DEFLATE-compressed with `/Filter /FlateDecode` (how virtually every
@@ -189,21 +265,11 @@ object Queries {
     * text from `documents` alone — the whole deflate->inflate->parse loop
     * is correctness-gated.
     */
-  def pdfFlate(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) =>
-        val content = pdfContentStream(t)
-        val comp = new String(
-          graft.core.pdf.PdfMini.deflate(
-            content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)),
-          java.nio.charset.StandardCharsets.ISO_8859_1)
-        val pdf = s"%PDF-1.4\n1 0 obj << /Length ${comp.length} /Filter /FlateDecode >>\nstream\n$comp\nendstream\nendobj\ntrailer\n%%EOF"
-        val (txt, _) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def pdfFlate(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docsPar(spark, dir)), everyDoc) { (_, t) =>
+      val comp = latin1(graft.core.pdf.PdfMini.deflate(pdfContentStream(t).getBytes(ISO_8859_1)))
+      "pdf_bytes" -> pdf14(comp, "/FlateDecode")
+    }
 
   /** §2.3 the full PDF 7.4 text-stream filter set (PDFBox decodes all of
     * these behind the reference's PDFParser): each doc's content stream is
@@ -213,27 +279,19 @@ object Queries {
     * reproduce exactly the raw-PDF text (oracle shared with q_pdf_bytes).
     */
   def pdfFilters(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.core.pdf.PdfMini
-    docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) =>
-        val content = pdfContentStream(t).getBytes(ISO_8859_1)
-        val (fspec, enc) = (id % 5) match {
-          case 0 => ("/ASCIIHexDecode", PdfMini.asciiHexEncode(content))
-          case 1 => ("/ASCII85Decode", PdfMini.ascii85Encode(content))
-          case 2 => ("/RunLengthDecode", PdfMini.runLengthEncode(content))
-          case 3 => ("/LZWDecode", PdfMini.lzwEncode(content))
-          case _ => ("[ /ASCII85Decode /FlateDecode ]",
-            PdfMini.ascii85Encode(PdfMini.deflate(content)))
-        }
-        val payload = new String(enc, ISO_8859_1)
-        val pdf = s"%PDF-1.4\n1 0 obj << /Length ${payload.length} /Filter $fspec >>\n" +
-          s"stream\n$payload\nendstream\nendobj\ntrailer\n%%EOF"
-        val (txt, _) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt)
+    docLeaf(texts(docsPar(spark, dir)), everyDoc) { (id, t) =>
+      val content = pdfContentStream(t).getBytes(ISO_8859_1)
+      val (fspec, enc) = (id % 5) match {
+        case 0 => ("/ASCIIHexDecode", PdfMini.asciiHexEncode(content))
+        case 1 => ("/ASCII85Decode", PdfMini.ascii85Encode(content))
+        case 2 => ("/RunLengthDecode", PdfMini.runLengthEncode(content))
+        case 3 => ("/LZWDecode", PdfMini.lzwEncode(content))
+        case _ => ("[ /ASCII85Decode /FlateDecode ]",
+          PdfMini.ascii85Encode(PdfMini.deflate(content)))
       }
-      .toDF("doc_id", "txt")
+      "pdf_bytes" -> pdf14(latin1(enc), fspec)
+    }
   }
 
   /** §2.3 standard-security-handler DECRYPTION (what PDFBox does silently
@@ -246,27 +304,17 @@ object Queries {
     * %58 docs carry a REAL user password: those must still classify
     * encrypted, never emit garbage.
     */
-  def pdfDecrypt(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.core.pdf.PdfCrypt
-    docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 29 == 0)
-      .map { case (id, t) =>
-        val content = pdfContentStream(t)
-        val body = s"%PDF-1.4\n1 0 obj << /Length ${content.length} >>\n" +
-          s"stream\n$content\nendstream\nendobj\n"
-        // cycle the handler revisions: V5/AES-256 (%203), V4/AES-128
-        // (%145), R2/RC4-40 (%87), R3/RC4-128 otherwise — the oracle
-        // text is identical for all
-        val r = if (id % 203 == 0) 6 else if (id % 145 == 0) 4
-          else if (id % 87 == 0) 2 else 3
-        val userPw = if (id % 58 == 0) s"user-$id" else ""
-        val pdf = PdfCrypt.encrypt(body, s"owner-$id", userPw, r, 128, s"id-$id")
-        val (txt, why) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def pdfDecrypt(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docsPar(spark, dir)), nth(29)) { (id, t) =>
+      // cycle the handler revisions: V5/AES-256 (%203), V4/AES-128
+      // (%145), R2/RC4-40 (%87), R3/RC4-128 otherwise — the oracle
+      // text is identical for all
+      val r = if (id % 203 == 0) 6 else if (id % 145 == 0) 4
+        else if (id % 87 == 0) 2 else 3
+      val userPw = if (id % 58 == 0) s"user-$id" else ""
+      "pdf_bytes" -> graft.core.pdf.PdfCrypt.encrypt(
+        pdf14(pdfContentStream(t), trailer = ""), s"owner-$id", userPw, r, 128, s"id-$id")
+    }
 
   /** §2.3 REAL encrypted-PDF classification (the reference's
     * `pdf/encrypted.pdf` fixture -> EncryptedDocumentException ->
@@ -276,20 +324,12 @@ object Queries {
     * are plain PDFs whose text extracts normally — both branches through
     * the one pdf_bytes route.
     */
-  def pdfEncrypted(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 19 == 0)
-      .map { case (id, t) =>
-        val content = pdfContentStream(t)
-        val trailer =
-          if (id % 38 == 0) "trailer << /Root 1 0 R /Encrypt 5 0 R >>" else "trailer << /Root 1 0 R >>"
-        val pdf = s"%PDF-1.4\n1 0 obj << /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n$trailer\n%%EOF"
-        val (txt, why) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def pdfEncrypted(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docs(spark, dir)), nth(19)) { (id, t) =>
+      val trailer =
+        if (id % 38 == 0) "trailer << /Root 1 0 R /Encrypt 5 0 R >>" else "trailer << /Root 1 0 R >>"
+      "pdf_bytes" -> pdf14(pdfContentStream(t), trailer = s"$trailer\n%%EOF")
+    }
 
   /** §2.4+§2.6 REAL archive explosion (`EmbedSpawner.java:429-515`; fixture
     * `embedded_with_duplicate.tgz`): each %4 doc becomes an actual ZIP
@@ -302,24 +342,16 @@ object Queries {
     * `documents` arithmetic alone.
     */
   def zipExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Archive
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 4 == 0)
-      .flatMap { id =>
-        val entries = Seq(
-          ("a.txt", s"alpha $id".getBytes(UTF_8)),
-          ("b.txt", s"beta $id".getBytes(UTF_8))) ++
-          (if (id % 8 == 0) Seq(("dup.txt", s"alpha $id".getBytes(UTF_8))) else Nil) ++
-          (if (id % 16 == 0) Seq(("nested.zip",
-            Archive.zipBytes(Seq(("c.txt", s"gamma $id".getBytes(UTF_8)))))) else Nil)
-        val zip = Archive.zipBytes(entries)
-        val d = DocIn(id, Array(SpanIn("zip", new String(zip, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docs(spark, dir)), nth(4)) { (id, _) =>
+      val entries = Seq(
+        ("a.txt", s"alpha $id".getBytes(UTF_8)),
+        ("b.txt", s"beta $id".getBytes(UTF_8))) ++
+        (if (id % 8 == 0) Seq(("dup.txt", s"alpha $id".getBytes(UTF_8))) else Nil) ++
+        (if (id % 16 == 0) Seq(("nested.zip",
+          Archive.zipBytes(Seq(("c.txt", s"gamma $id".getBytes(UTF_8)))))) else Nil)
+      Seq("zip" -> latin1(Archive.zipBytes(entries)))
+    }
   }
 
   /** §2.3+§2.4 REAL OOXML route (`recursive_embedded.docx` fixture): each
@@ -329,99 +361,49 @@ object Queries {
     * unzip, parse word/document.xml, and recover the exact text — the
     * oracle recomputes everything from `documents` arithmetic.
     */
-  def docxExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 6 == 0)
-      .flatMap { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val media =
-          if (id % 12 == 0) Seq(("word/media/img1.bin", s"img $id".getBytes(UTF_8)))
-          else Nil
-        val bytes = graft.core.office.Docx.buildMinimal(paras, media)
-        val d = DocIn(id, Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def docxExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(6)) { (id, t) =>
+      val media =
+        if (id % 12 == 0) Seq(("word/media/img1.bin", s"img $id".getBytes(UTF_8)))
+        else Nil
+      Seq("zip" -> latin1(graft.core.office.Docx.buildMinimal(lines5(t), media)))
+    }
 
   /** §2.3 REAL SpreadsheetML (xlsx) route: two-word rows as SHARED-STRING
     * cells plus a final row with a string label and a NUMERIC cell — the
     * engine must resolve the shared-string indirection and read numeric
     * values verbatim; the oracle recomputes everything from documents.
     */
-  def xlsxTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 7 == 0)
-      .map { case (id, t) =>
-        val rows = t.split(" ", -1).grouped(2)
-          .map(_.toSeq.map(w => (w, false))).toSeq ++
-          Seq(Seq(("total", false), (id.toString, true)))
-        val bytes = graft.core.office.Xlsx.buildMinimal(rows)
-        val d = DocIn(id, Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0)))
-        val out = Extract.extractDoc(d)
-        (id, out.spans.map(_.text).mkString(""))
-      }
-      .toDF("doc_id", "txt")
-  }
+  def xlsxTable(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(7))((id, t) =>
+      "zip" -> latin1(graft.core.office.Xlsx.buildMinimal(sheetRows(id, t))))
 
   /** §2.3 OneNote section route (Tika OneNoteParser, [MS-ONESTORE]): the
     * document's 5-word lines as RichEditTextUnicode properties behind the
     * root -> object-space -> revision list chain.
     */
-  def oneText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 107 == 0)
-      .map { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val one = graft.core.office.OneNote.build(paras)
-        val (txt, why) = Extract.extractSpan("one", new String(one, ISO_8859_1))
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def oneText(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docs(spark, dir)), nth(107))((_, t) =>
+      "one" -> latin1(graft.core.office.OneNote.build(lines5(t))))
 
   /** §2.3 Microsoft Publisher route (Tika/POI HPBF PublisherTextExtractor):
     * the document's 5-word lines as CR-marked paragraphs in one Quill TEXT
     * bit behind the `Quill/QuillSub/CONTENTS` chunk index.
     */
-  def pubText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 109 == 0)
-      .map { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val pub = graft.core.office.Pub.build(paras)
-        val (txt, why) = Extract.extractSpan("cfb", new String(pub, ISO_8859_1))
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def pubText(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docs(spark, dir)), nth(109))((_, t) =>
+      "cfb" -> latin1(graft.core.office.Pub.build(lines5(t))))
 
   /** §2.6 RTF-only Outlook mail (MS-OXRTFCP): the document's text as a
     * PR_RTF_COMPRESSED body (LZFu dictionary compression, no PR_BODY) —
     * the body must come back verbatim through decompress + RTF render.
     */
   def msgRtf(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.core.office.Msg
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 111 == 0)
-      .map { case (id, t) =>
-        val body = t.split(" ", -1).grouped(5).map(_.mkString(" ")).mkString("\n")
-        val m = Msg.MsgDoc(s"subject $id", s"sender $id", body, Vector.empty)
-        val (txt, why) = Extract.extractSpan("cfb", new String(Msg.buildRtfBody(m), ISO_8859_1))
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
+    textLeaf(texts(docs(spark, dir)), nth(111)) { (id, t) =>
+      val m = Msg.MsgDoc(s"subject $id", s"sender $id", lines5(t).mkString("\n"), Vector.empty)
+      "cfb" -> latin1(Msg.buildRtfBody(m))
+    }
   }
 
   /** §2.4 OneNote embedded files (FileDataStoreObject, [MS-ONESTORE]
@@ -429,75 +411,41 @@ object Queries {
     * GUID-framed embedded text file — the root keeps the prose, the
     * payload spawns as a sniffed child.
     */
-  def oneFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 117 == 0)
-      .flatMap { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val one = graft.core.office.OneNote.build(paras,
-          files = Seq(s"embedded note $id".getBytes(UTF_8)))
-        val d = DocIn(id, Array(SpanIn("one", new String(one, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o => (id, o.level, o.spans.map(_.text).mkString("")))
-      }
-      .toDF("doc_id", "level", "txt")
-  }
+  def oneFiles(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(117)) { (id, t) =>
+      Seq("one" -> latin1(graft.core.office.OneNote.build(lines5(t),
+        files = Seq(s"embedded note $id".getBytes(UTF_8)))))
+    }.select("doc_id", "level", "txt")
 
   /** §2.3 Visio .vsdx route (Tika XDGFParser): the document's 5-word
     * lines as shape `<Text>` elements across two drawing pages — prose
     * harvested out of the attribute-heavy page XML in page order.
     */
-  def vsdxText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 119 == 0)
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val (a, b) = lines.splitAt((lines.length + 1) / 2)
-        val vsdx = graft.core.office.Vsdx.buildMinimal(Seq(a, b).filter(_.nonEmpty))
-        val (txt, why) = Extract.extractSpan("zip", new String(vsdx, ISO_8859_1))
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def vsdxText(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docs(spark, dir)), nth(119)) { (_, t) =>
+      val lines = lines5(t)
+      val (a, b) = lines.splitAt((lines.length + 1) / 2)
+      "zip" -> latin1(graft.core.office.Vsdx.buildMinimal(Seq(a, b).filter(_.nonEmpty)))
+    }
 
   /** §2.1 AppleSingle route (RFC 1740, Tika AppleSingleFileParser): the
     * document's text as the DATA FORK of an envelope whose real-name
     * entry names it — the envelope node is pure transport (empty), the
     * fork re-sniffs and carries the text at level 1.
     */
-  def appleText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 121 == 0)
-      .flatMap { case (id, t) =>
-        val env = graft.sources.Apple.build(s"note_$id.txt", t.getBytes(UTF_8))
-        val d = DocIn(id, Array(SpanIn("applesingle", new String(env, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o => (id, o.level, o.spans.map(_.text).mkString("")))
-      }
-      .toDF("doc_id", "level", "txt")
-  }
+  def appleText(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(121))((id, t) =>
+      Seq("applesingle" -> latin1(graft.sources.Apple.build(s"note_$id.txt", t.getBytes(UTF_8)))))
+      .select("doc_id", "level", "txt")
 
   /** §2.7 CID/subset-font PDF route (ToUnicode CMaps, PDF 9.10.3 — the
     * modern Word/LaTeX shape): the document's 5-word lines as 2-byte
     * glyph codes whose meaning lives only in the font's CMap; extraction
     * must recover the text through the map, never emit raw code units.
     */
-  def pdfCid(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 123 == 0)
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val pdf = graft.core.pdf.PdfMini.buildCid(lines)
-        val (txt, why) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def pdfCid(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docs(spark, dir)), nth(123))((_, t) =>
+      "pdf_bytes" -> graft.core.pdf.PdfMini.buildCid(lines5(t)))
 
   /** §2.7 PDF AcroForm route (ISO 32000 §12.7; Tika's PDFBox surface
     * prints field values): each %71 doc becomes a real interactive form —
@@ -505,18 +453,10 @@ object Queries {
     * exercising the dotted fully-qualified naming — whose values append
     * to the body text as `name: value` lines in document order.
     */
-  def pdfForm(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(_ % 71 == 0)
-      .map { id =>
-        val pdf = graft.core.pdf.PdfMini.buildForm(Seq(s"form doc $id"),
-          ("applicant", s"name $id"), ("agree", "Yes"), ("grp", "sub", s"deep $id"))
-        val (txt, why) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def pdfForm(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(ids(docs(spark, dir)), nth(71))((id, _) =>
+      "pdf_bytes" -> graft.core.pdf.PdfMini.buildForm(Seq(s"form doc $id"),
+        ("applicant", s"name $id"), ("agree", "Yes"), ("grp", "sub", s"deep $id")))
 
   /** The SAME form surface in the MODERN file layout (PDF 1.5+): fields
     * inside a FlateDecode object stream, /Root on an xref-stream dict —
@@ -524,142 +464,78 @@ object Queries {
     * as a layout-visibility check would produce: the ObjStm expansion
     * must make the two layouts indistinguishable in output.
     */
-  def pdfObjStm(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(_ % 127 == 0)
-      .map { id =>
-        val pdf = graft.core.pdf.PdfMini.buildFormObjStm(Seq(s"modern doc $id"),
-          ("applicant", s"name $id"), ("agree", "Yes"), ("grp", "sub", s"deep $id"))
-        val (txt, why) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def pdfObjStm(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(ids(docs(spark, dir)), nth(127))((id, _) =>
+      "pdf_bytes" -> graft.core.pdf.PdfMini.buildFormObjStm(Seq(s"modern doc $id"),
+        ("applicant", s"name $id"), ("agree", "Yes"), ("grp", "sub", s"deep $id")))
 
   /** XFA forms (the XML Forms Architecture half of the PDF form surface;
     * PDFBox exposes the packet XML): the datasets packet's filled values
     * surface as body text through the shared XML machinery.
     */
-  def pdfXfa(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(_ % 131 == 0)
-      .map { id =>
-        val pdf = graft.core.pdf.PdfMini.buildXfa(Seq(s"xfa doc $id"),
-          Seq(("applicant", s"name $id"), ("city", s"town $id")))
-        val (txt, why) = Extract.extractSpan("pdf_bytes", pdf)
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def pdfXfa(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(ids(docs(spark, dir)), nth(131))((id, _) =>
+      "pdf_bytes" -> graft.core.pdf.PdfMini.buildXfa(Seq(s"xfa doc $id"),
+        Seq(("applicant", s"name $id"), ("city", s"town $id"))))
 
   /** §2.3 HWP 5.x route (Tika HwpV5Parser): the document's 5-word lines
     * as paragraph-break-terminated PARA_TEXT records in a deflated
     * BodyText section (each paragraph renders with its trailing break).
     */
-  def hwpText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 113 == 0)
-      .map { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val hwp = graft.core.office.Hwp.build(paras)
-        val (txt, why) = Extract.extractSpan("cfb", new String(hwp, ISO_8859_1))
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def hwpText(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docs(spark, dir)), nth(113))((_, t) =>
+      "cfb" -> latin1(graft.core.office.Hwp.build(lines5(t))))
 
   /** §2.3 legacy iWork route (Tika IWorkPackageParser): the document's
     * 5-word lines as `<sf:p>` paragraphs (styled-run split exercised) in
     * a gzipped index.xml inside a .pages zip.
     */
-  def iworkText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 103 == 0)
-      .map { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        // BOTH eras, alternating: legacy XML bundles (gzipped index.xml,
-        // sf:p paragraphs) and 2013-era IWA bundles (snappy-chunked
-        // protobuf text runs) must yield the same logical text
-        val bytes =
-          if ((id / 103) % 2 == 0) graft.core.office.Iwork.buildPages(paras)
-          else graft.core.office.Iwa.buildPages13(paras)
-        val d = DocIn(id, Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0)))
-        val out = Extract.extractDoc(d)
-        (id, out.spans.map(_.text).mkString(""))
-      }
-      .toDF("doc_id", "txt")
-  }
+  def iworkText(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(103)) { (id, t) =>
+      val paras = lines5(t)
+      // BOTH eras, alternating: legacy XML bundles (gzipped index.xml,
+      // sf:p paragraphs) and 2013-era IWA bundles (snappy-chunked
+      // protobuf text runs) must yield the same logical text
+      val bytes =
+        if ((id / 103) % 2 == 0) graft.core.office.Iwork.buildPages(paras)
+        else graft.core.office.Iwa.buildPages13(paras)
+      "zip" -> latin1(bytes)
+    }
 
   /** §2.3 BINARY Excel (.xlsb, [MS-XLSB]) route: the xlsx construction
     * as BIFF12 record parts — shared-string cells plus an RK-int total
     * row the reader must decode from the packed representation.
     */
-  def xlsbTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 101 == 0)
-      .map { case (id, t) =>
-        val rows = t.split(" ", -1).grouped(2)
-          .map(_.toSeq.map(w => (w, false))).toSeq ++
-          Seq(Seq(("total", false), (id.toString, true)))
-        val bytes = graft.core.office.Xlsb.buildMinimal(rows)
-        val d = DocIn(id, Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0)))
-        val out = Extract.extractDoc(d)
-        (id, out.spans.map(_.text).mkString(""))
-      }
-      .toDF("doc_id", "txt")
-  }
+  def xlsbTable(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(101))((id, t) =>
+      "zip" -> latin1(graft.core.office.Xlsb.buildMinimal(sheetRows(id, t))))
 
   /** §2.3 REAL PresentationML (pptx) route: the document's 5-word lines
     * split round-robin over two slides (even-indexed lines on slide 1, odd
     * on slide 2); extraction must order slides numerically and paragraphs
     * within — the oracle reorders the same lines arithmetically.
     */
-  def pptxSlides(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 11 == 0)
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toVector
-        val slide1 = lines.indices.filter(_ % 2 == 0).map(lines)
-        val slide2 = lines.indices.filter(_ % 2 == 1).map(lines)
-        val bytes = graft.core.office.Pptx.buildMinimal(
-          Seq(slide1) ++ (if (slide2.nonEmpty) Seq(slide2) else Nil))
-        val d = DocIn(id, Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0)))
-        val out = Extract.extractDoc(d)
-        (id, out.spans.map(_.text).mkString(""))
-      }
-      .toDF("doc_id", "txt")
-  }
+  def pptxSlides(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(11)) { (_, t) =>
+      val lines = lines5(t).toVector
+      val slide1 = lines.indices.filter(_ % 2 == 0).map(lines)
+      val slide2 = lines.indices.filter(_ % 2 == 1).map(lines)
+      "zip" -> latin1(graft.core.office.Pptx.buildMinimal(
+        Seq(slide1) ++ (if (slide2.nonEmpty) Seq(slide2) else Nil)))
+    }
 
   /** §2.4 TGZ (gzip-of-tar — the reference's `embedded_with_duplicate.tgz`
     * shape): gzip member (FNAME names it) -> tar container child -> file
     * entries at level 2, all REAL bytes built and re-parsed by the engine.
     */
   def tgzExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Archive
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 9 == 0)
-      .flatMap { id =>
-        val tar = Archive.tarBytes(Seq(
-          ("x.txt", s"xray $id".getBytes(UTF_8)),
-          ("y.txt", s"yank $id".getBytes(UTF_8))))
-        val tgz = Archive.gzipBytes(tar, "bundle.tar")
-        val d = DocIn(id, Array(SpanIn("gzip", new String(tgz, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docs(spark, dir)), nth(9)) { (id, _) =>
+      val tar = Archive.tarBytes(Seq(
+        ("x.txt", s"xray $id".getBytes(UTF_8)),
+        ("y.txt", s"yank $id".getBytes(UTF_8))))
+      Seq("gzip" -> latin1(Archive.gzipBytes(tar, "bundle.tar")))
+    }
   }
 
   /** Deterministic RFC-822/MIME fixture per doc: multipart/mixed with a
@@ -669,7 +545,7 @@ object Queries {
     */
   private def emlRaw(id: Long): String = {
     val b64 = java.util.Base64.getEncoder.encodeToString(
-      s"payload $id".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      s"payload $id".getBytes(UTF_8))
     val bodyPart =
       if (id % 10 == 0)
         s"Content-Type: text/plain\nContent-Transfer-Encoding: quoted-printable\n\nbody=20words=20$id"
@@ -706,38 +582,20 @@ object Queries {
     * attachment an embedded child with filename as resource name. The
     * oracle recomputes every node id and text from documents arithmetic.
     */
-  def emlExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 5 == 0)
-      .flatMap { id =>
-        val d = DocIn(id, Array(SpanIn("eml", emlRaw(id), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def emlExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(5))((id, _) => Seq("eml" -> emlRaw(id)))
 
   /** §2.4 Apple Mail `.emlx` route: the same message fixture as
     * q_eml_explode behind the length-count framing plus an XML-plist
     * flags trailer — the body and attachments must come out identical to
     * a bare .eml, with the trailer never leaking into the text.
     */
-  def emlxExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 85 == 0)
-      .flatMap { id =>
-        val msg = emlRaw(id)
-        val emlx = s"${msg.getBytes(java.nio.charset.StandardCharsets.UTF_8).length}\n" +
-          msg +
-          "<?xml version=\"1.0\"?><plist><dict><key>flags</key><integer>1</integer></dict></plist>\n"
-        val d = DocIn(id, Array(SpanIn("emlx", emlx, "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def emlxExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(85)) { (id, _) =>
+      val msg = emlRaw(id)
+      Seq("emlx" -> (s"${msg.getBytes(UTF_8).length}\n" + msg +
+        "<?xml version=\"1.0\"?><plist><dict><key>flags</key><integer>1</integer></dict></plist>\n"))
+    }
 
   /** §2.4 MHTML page-save route (RFC 2557, Tika's mhtml detection →
     * HtmlParser): each %49 doc becomes an actual `.mht` multipart/related
@@ -748,27 +606,19 @@ object Queries {
     * The oracle recomputes every node id and text from documents
     * arithmetic (the same length-prefixed embedId algebra as eml).
     */
-  def mhtmlExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 49 == 0)
-      .flatMap { id =>
-        val mht = graft.core.mail.Mhtml.build(
-          s"https://example.org/pages/doc$id.html",
-          graft.core.Corpus.htmlWrap(id, s"saved page $id"),
-          Seq(
-            s"https://example.org/assets/style$id.css" ->
-              s"body font $id".getBytes(UTF_8),
-            // query string must strip from the resource name
-            s"https://example.org/img/pix$id.dat?v=2" ->
-              s"pixel data $id".getBytes(UTF_8)))
-        val d = DocIn(id, Array(SpanIn("mhtml", new String(mht, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def mhtmlExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(49)) { (id, _) =>
+      val mht = graft.core.mail.Mhtml.build(
+        s"https://example.org/pages/doc$id.html",
+        graft.core.Corpus.htmlWrap(id, s"saved page $id"),
+        Seq(
+          s"https://example.org/assets/style$id.css" ->
+            s"body font $id".getBytes(UTF_8),
+          // query string must strip from the resource name
+          s"https://example.org/img/pix$id.dat?v=2" ->
+            s"pixel data $id".getBytes(UTF_8)))
+      Seq("mhtml" -> latin1(mht))
+    }
 
   /** §2.6 REAL Outlook-message route (the reference's
     * `3rd-level-bug-732.msg` / `outlook-message.msg` fixtures): each %9 doc
@@ -781,22 +631,14 @@ object Queries {
     * over the message's logical canonical fields ([[graft.core.office.Msg.canonical]]).
     */
   def msgExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.core.office.Msg
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 9 == 0)
-      .flatMap { case (id, t) =>
-        val atts = Vector.newBuilder[Msg.Attachment]
-        if (id % 18 == 0) atts += Msg.FileAtt(s"att_$id.txt", s"att $id".getBytes(UTF_8))
-        if (id % 27 == 0)
-          atts += Msg.MsgAtt(Msg.MsgDoc(s"re $id", s"nested $id", s"nested body $id", Vector.empty))
-        val m = Msg.MsgDoc(s"subject $id", s"sender $id", t, atts.result())
-        val d = DocIn(id, Array(SpanIn("cfb", new String(Msg.build(m), ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(texts(docs(spark, dir)), nth(9)) { (id, t) =>
+      val atts = Vector.newBuilder[Msg.Attachment]
+      if (id % 18 == 0) atts += Msg.FileAtt(s"att_$id.txt", s"att $id".getBytes(UTF_8))
+      if (id % 27 == 0)
+        atts += Msg.MsgAtt(Msg.MsgDoc(s"re $id", s"nested $id", s"nested body $id", Vector.empty))
+      Seq("cfb" -> latin1(Msg.build(Msg.MsgDoc(s"subject $id", s"sender $id", t, atts.result()))))
+    }
   }
 
   /** The deterministic PST fixture both pst queries share (and both
@@ -806,7 +648,6 @@ object Queries {
     * folder holding a CORRUPT message (per-message isolation).
     */
   private def pstFixture(id: Long, t: String, crypt: Int = 0, ansi: Boolean = false): Array[Byte] = {
-    import java.nio.charset.StandardCharsets.UTF_8
     import graft.core.office.Pst
     val boxMsgs = Seq(
       Pst.BuildMsg(s"m $id", t),
@@ -853,19 +694,9 @@ object Queries {
     * exactly "same pipeline, different fixture flags", so the pipeline
     * exists once.
     */
-  private def pstVariant(spark: SparkSession, dir: String, crypt: Int, ansi: Boolean): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 33 == 0)
-      .flatMap { case (id, t) =>
-        val d = DocIn(id, Array(SpanIn("pst",
-          new String(pstFixture(id, t, crypt, ansi), ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  private def pstVariant(spark: SparkSession, dir: String, crypt: Int, ansi: Boolean): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(33))((id, t) =>
+      Seq("pst" -> latin1(pstFixture(id, t, crypt, ansi))))
 
   /** The 4K-OST fixture: the SAME logical tree as [[pstFixture]] plus a
     * "big" message whose multi-block attachment rides an XBLOCK with the
@@ -875,7 +706,6 @@ object Queries {
     * permute-encrypted: compression and crypt compose.
     */
   private def ostFixture(id: Long, t: String): Array[Byte] = {
-    import java.nio.charset.StandardCharsets.UTF_8
     import graft.core.office.Pst
     val bigText = s"ost big $id " * 2000 // ~24 KB: three leaves, mixed compression
     val boxMsgs = Seq(
@@ -905,19 +735,9 @@ object Queries {
     * id parity with the .msg/.pst routes holds because ids derive from
     * logical content, never the container format.
     */
-  def ostExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 33 == 0)
-      .flatMap { case (id, t) =>
-        val d = DocIn(id, Array(SpanIn("pst",
-          new String(ostFixture(id, t), ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def ostExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docsPar(spark, dir)), nth(33))((id, t) =>
+      Seq("pst" -> latin1(ostFixture(id, t))))
 
   /** OST reconciliation counters: [[pstReconcile]]'s bookkeeping plus the
     * truncated-attachment stub count (the reference's
@@ -952,62 +772,33 @@ object Queries {
     * per-message RFC-822 parse, and the base64 attachment explosion are
     * all oracle-recomputed (ids hash the raw message chunks).
     */
-  def mboxExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(_ % 41 == 0)
-      .flatMap { id =>
-        val b64 = java.util.Base64.getEncoder.encodeToString(
-          s"matt $id".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val mbox =
-          s"From a@x Mon Jan  1 00:00:00 2024\nSubject: s1\n\nmb one $id\n" +
-            s"From b@y Tue Jan  2 00:00:00 2024\nSubject: s2\nMIME-Version: 1.0\n" +
-            s"Content-Type: multipart/mixed; boundary=BB\n\n--BB\nContent-Type: text/plain\n\nmb two $id\n" +
-            "--BB\nContent-Type: application/octet-stream\nContent-Transfer-Encoding: base64\n" +
-            "Content-Disposition: attachment; filename=\"m.txt\"\n\n" + b64 + "\n--BB--\n"
-        val d = DocIn(id, Array(SpanIn("mbox", mbox, "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def mboxExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(41)) { (id, _) =>
+      val b64 = java.util.Base64.getEncoder.encodeToString(s"matt $id".getBytes(UTF_8))
+      Seq("mbox" ->
+        (s"From a@x Mon Jan  1 00:00:00 2024\nSubject: s1\n\nmb one $id\n" +
+          s"From b@y Tue Jan  2 00:00:00 2024\nSubject: s2\nMIME-Version: 1.0\n" +
+          s"Content-Type: multipart/mixed; boundary=BB\n\n--BB\nContent-Type: text/plain\n\nmb two $id\n" +
+          "--BB\nContent-Type: application/octet-stream\nContent-Transfer-Encoding: base64\n" +
+          "Content-Disposition: attachment; filename=\"m.txt\"\n\n" + b64 + "\n--BB--\n"))
+    }
 
   /** Parquet corpus-dump route: each %47 doc becomes a real parquet
     * file (parquet-java writer, deterministic) whose rows explode as
     * children — the columnar twin of the JSONL dump route, including the
     * NULL-row-is-an-empty-child convention.
     */
-  def parquetExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docsPar(spark, dir).select("doc_id").as[Long]
-      .filter(_ % 47 == 0)
-      .flatMap { id =>
-        val pq = graft.sources.ParquetDump.build(Seq(s"pr one $id", null, s"pr two $id"))
-        val d = DocIn(id, Array(SpanIn("parquet", new String(pq, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def parquetExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docsPar(spark, dir)), nth(47))((id, _) =>
+      Seq("parquet" -> latin1(graft.sources.ParquetDump.build(Seq(s"pr one $id", null, s"pr two $id")))))
 
   /** Avro corpus-dump route (the third dump shape next to JSONL and
     * parquet): each %53 doc becomes a real Avro object container file
     * whose rows explode as children, NULL rows as empty children.
     */
-  def avroExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docsPar(spark, dir).select("doc_id").as[Long]
-      .filter(_ % 53 == 0)
-      .flatMap { id =>
-        val av = graft.sources.AvroDump.build(Seq(s"av one $id", null, s"av two $id"))
-        val d = DocIn(id, Array(SpanIn("avro", new String(av, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def avroExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docsPar(spark, dir)), nth(53))((id, _) =>
+      Seq("avro" -> latin1(graft.sources.AvroDump.build(Seq(s"av one $id", null, s"av two $id")))))
 
   /** TNEF winmail.dat route (MS-OXTNEF; the reference reads these via
     * Tika's TNEFParser): each %29 doc becomes a real TNEF stream whose
@@ -1015,21 +806,10 @@ object Queries {
     * a sniffed child — checksummed attributes, MAPI sender decode, and
     * the same child-id arithmetic as eml attachments.
     */
-  def tnefExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    import graft.core.mail.Tnef
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 29 == 0)
-      .flatMap { case (id, t) =>
-        val bytes = Tnef.build(s"tn $id", s"sender $id", t,
-          Seq((s"w$id.txt", s"watt $id".getBytes(UTF_8))))
-        val d = DocIn(id, Array(SpanIn("tnef", new String(bytes, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def tnefExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(29))((id, t) =>
+      Seq("tnef" -> latin1(graft.core.mail.Tnef.build(s"tn $id", s"sender $id", t,
+        Seq((s"w$id.txt", s"watt $id".getBytes(UTF_8)))))))
 
   /** vCard + iCalendar text route (RFC 6350 / RFC 5545; Tika parses both
     * in the reference): each %31 doc yields a folded, escape-carrying
@@ -1087,24 +867,16 @@ object Queries {
     * uppercase) pins the ordinals the oracle recomputes.
     */
   def cfbExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    import graft.core.office.Cfb
     import graft.sources.Archive
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 13 == 0)
-      .flatMap { id =>
-        val streams = Seq(
-          ("a.txt", s"alpha $id".getBytes(UTF_8)),
-          ("bb.txt", s"beta $id".getBytes(UTF_8))) ++
-          (if (id % 26 == 0)
-            Seq(("ccc.zip", Archive.zipBytes(Seq(("c.txt", s"gamma $id".getBytes(UTF_8))))))
-          else Nil)
-        val d = DocIn(id, Array(SpanIn("cfb", new String(Cfb.build(streams), ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docs(spark, dir)), nth(13)) { (id, _) =>
+      val streams = Seq(
+        ("a.txt", s"alpha $id".getBytes(UTF_8)),
+        ("bb.txt", s"beta $id".getBytes(UTF_8))) ++
+        (if (id % 26 == 0)
+          Seq(("ccc.zip", Archive.zipBytes(Seq(("c.txt", s"gamma $id".getBytes(UTF_8))))))
+        else Nil)
+      Seq("cfb" -> latin1(graft.core.office.Cfb.build(streams)))
+    }
   }
 
   /** §2.5 REAL media inside an Office package — the reference's
@@ -1118,7 +890,6 @@ object Queries {
     */
   def docxMedia(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.sources.Archive
     docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
       .filter(_._1 % 12 == 0)
@@ -1127,13 +898,12 @@ object Queries {
         val h = 3 + (id % 2).toInt
         val rgb = ((id % 250) * 1000 + 7).toInt
         val png = Media.encodePng(w, h, rgb)
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val docx = graft.core.office.Docx.buildMinimal(paras, Seq(("word/media/img1.png", png)))
+        val docx = graft.core.office.Docx.buildMinimal(lines5(t), Seq(("word/media/img1.png", png)))
         // real round trip: walk the package for the media part, decode it
         val part = Archive.unzipWanted(docx, _ == "word/media/img1.png", 16 << 20)
           .collectFirst { case (_, Some(b)) => b }.get
         val (dw, dh, pix) = Media.decodeImage(part)
-        val d = DocIn(id, Array(SpanIn("zip", new String(docx, ISO_8859_1), "", 0)))
+        val d = DocIn(id, Array(SpanIn("zip", latin1(docx), "", 0)))
         val nChildren = Extract.explode(d).count(_.level == 1).toLong
         (id, dw.toLong, dh.toLong, pix.toLong, nChildren)
       }
@@ -1147,23 +917,13 @@ object Queries {
     * codec -> archive recursion. Every node id oracle-recomputed.
     */
   def zstdExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Archive
-    docsPar(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 33 == 0)
-      .flatMap { id =>
-        val base = Array(SpanIn("zstd",
-          new String(Archive.zstdBytes(s"zst $id".getBytes(UTF_8)), ISO_8859_1), "", 0))
-        val extra =
-          if (id % 66 == 0) Array(SpanIn("bzip2",
-            new String(Archive.bzip2Bytes(
-              Archive.zipBytes(Seq(("z.txt", s"inner $id".getBytes(UTF_8))))), ISO_8859_1), "", 1))
-          else Array.empty[SpanIn]
-        Extract.explode(DocIn(id, base ++ extra)).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docsPar(spark, dir)), nth(33)) { (id, _) =>
+      Seq("zstd" -> latin1(Archive.zstdBytes(s"zst $id".getBytes(UTF_8)))) ++
+        (if (id % 66 == 0) Seq("bzip2" -> latin1(Archive.bzip2Bytes(
+          Archive.zipBytes(Seq(("z.txt", s"inner $id".getBytes(UTF_8)))))))
+        else Nil)
+    }
   }
 
   /** xz / lz4 / snappy codec containers (the remaining dump-era frame
@@ -1172,26 +932,17 @@ object Queries {
     * wrapping a zip that recurses through the archive machinery.
     */
   def codecExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Archive
-    docsPar(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 43 == 0)
-      .flatMap { id =>
-        val base = Array(
-          SpanIn("xz", new String(Archive.xzBytes(s"xzp $id".getBytes(UTF_8)), ISO_8859_1), "", 0),
-          SpanIn("lz4", new String(Archive.lz4Bytes(s"lzf $id".getBytes(UTF_8)), ISO_8859_1), "", 1),
-          SpanIn("compress", new String(Archive.compressZBytes(s"unz $id".getBytes(UTF_8)), ISO_8859_1), "", 2),
-          SpanIn("lzma", new String(Archive.lzmaBytes(s"lzm $id".getBytes(UTF_8)), ISO_8859_1), "", 3))
-        val extra =
-          if (id % 86 == 0) Array(SpanIn("snappy",
-            new String(Archive.snappyBytes(
-              Archive.zipBytes(Seq(("s.txt", s"sinner $id".getBytes(UTF_8))))), ISO_8859_1), "", 4))
-          else Array.empty[SpanIn]
-        Extract.explode(DocIn(id, base ++ extra)).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docsPar(spark, dir)), nth(43)) { (id, _) =>
+      Seq(
+        "xz" -> latin1(Archive.xzBytes(s"xzp $id".getBytes(UTF_8))),
+        "lz4" -> latin1(Archive.lz4Bytes(s"lzf $id".getBytes(UTF_8))),
+        "compress" -> latin1(Archive.compressZBytes(s"unz $id".getBytes(UTF_8))),
+        "lzma" -> latin1(Archive.lzmaBytes(s"lzm $id".getBytes(UTF_8)))) ++
+        (if (id % 86 == 0) Seq("snappy" -> latin1(Archive.snappyBytes(
+          Archive.zipBytes(Seq(("s.txt", s"sinner $id".getBytes(UTF_8)))))))
+        else Nil)
+    }
   }
 
   /** §2.4 RAR archive explosion (Tika RarParser surface): each %59 doc
@@ -1202,24 +953,17 @@ object Queries {
     * without disturbing sibling ordinals — per-entry isolation.
     */
   def rarExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Rar
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(_ % 59 == 0)
-      .flatMap { id =>
-        val files = Seq(
-          ("r.txt", s"rrr $id".getBytes(UTF_8)),
-          ("blob.bin", s"opaque $id".getBytes(UTF_8)), // written as compressed
-          ("s.txt", s"sss $id".getBytes(UTF_8)))
-        val rar =
-          if (id % 118 == 0) Rar.buildRar5(files, compressed = Set("blob.bin"))
-          else Rar.buildRar4(files, compressed = Set("blob.bin"))
-        val d = DocIn(id, Array(SpanIn("rar", new String(rar, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docs(spark, dir)), nth(59)) { (id, _) =>
+      val files = Seq(
+        ("r.txt", s"rrr $id".getBytes(UTF_8)),
+        ("blob.bin", s"opaque $id".getBytes(UTF_8)), // written as compressed
+        ("s.txt", s"sss $id".getBytes(UTF_8)))
+      val rar =
+        if (id % 118 == 0) Rar.buildRar5(files, compressed = Set("blob.bin"))
+        else Rar.buildRar4(files, compressed = Set("blob.bin"))
+      Seq("rar" -> latin1(rar))
+    }
   }
 
   /** §2.1+§2.4 WARC web-archive ingestion (ISO 28500 — the format
@@ -1231,28 +975,18 @@ object Queries {
     * stripper — the oracle recomputes every node id including the sha256
     * of the full page bytes.
     */
-  def warcExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    import graft.sources.Warc
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 35 == 0)
-      .flatMap { case (id, t) =>
-        val a = (Seq("warc", "body") ++
-          t.split(" ", -1).take(5).filter(_.nonEmpty)).mkString(" ")
-        val page = graft.core.Corpus.htmlWrap(id, a)
-        val entries = Seq(
-          ("response", s"http://ex.com/$id", "text/html", page.getBytes(UTF_8))) ++
-          (if (id % 70 == 0)
-            Seq(("resource", s"http://ex.com/$id/t", "text/plain", s"payload $id".getBytes(UTF_8)))
-          else Nil)
-        val warc = Warc.build(entries)
-        val d = DocIn(id, Array(SpanIn("warc", new String(warc, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def warcExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(35)) { (id, t) =>
+      val a = (Seq("warc", "body") ++
+        t.split(" ", -1).take(5).filter(_.nonEmpty)).mkString(" ")
+      val page = graft.core.Corpus.htmlWrap(id, a)
+      val entries = Seq(
+        ("response", s"http://ex.com/$id", "text/html", page.getBytes(UTF_8))) ++
+        (if (id % 70 == 0)
+          Seq(("resource", s"http://ex.com/$id/t", "text/plain", s"payload $id".getBytes(UTF_8)))
+        else Nil)
+      Seq("warc" -> latin1(graft.sources.Warc.build(entries)))
+    }
 
   /** JSONL corpus-dump ingestion (the `{"text": ...}` interchange format
     * C4/Pile-style dumps ship): %39 docs carry three lines — a record
@@ -1262,28 +996,15 @@ object Queries {
     * lines — the engine's CRLF/indent-insensitive identity (a dump
     * re-serialized with different line endings keeps its ids).
     */
-  def jsonlExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 39 == 0)
-      .flatMap { id =>
-        val lines = Seq(
-          s"""{"text": "line one $id", "meta": {"text": "decoy"}}""",
-          "{\"text\": \"escaped \\\"quote\\\" " + id + "\"}",
-          """{"id": 7}""")
-        val d = DocIn(id, Array(SpanIn("jsonl", lines.mkString("\n"), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def jsonlExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(39)) { (id, _) =>
+      val lines = Seq(
+        s"""{"text": "line one $id", "meta": {"text": "decoy"}}""",
+        "{\"text\": \"escaped \\\"quote\\\" " + id + "\"}",
+        """{"id": 7}""")
+      Seq("jsonl" -> lines.mkString("\n"))
+    }
 
-  /** §2.4 REAL 7z archive route (commons-compress SevenZFile, COPY
-    * method): each %45 doc becomes an actual 7-Zip container whose
-    * entries spawn as sniffed children — %90 adds a nested zip that
-    * recurses through the archive machinery. Oracle recomputes every
-    * node id.
-    */
   /** Unix ar / .deb outer-container explosion (Tika's commons-compress
     * `ar` surface; dpkg's actual package framing): member files in
     * archive order, with a %126 nested gzip member becoming a container
@@ -1292,45 +1013,26 @@ object Queries {
     * ar→gzip→tar→text chain is ArchiveSpec's golden).
     */
   def arExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Archive
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 63 == 0)
-      .flatMap { id =>
-        val entries = Seq(
-          ("debian-binary", "2.0\n".getBytes(UTF_8)),
-          ("readme.txt", s"ar note $id".getBytes(UTF_8))) ++
-          (if (id % 126 == 0)
-            Seq(("inner.gz", Archive.gzipBytes(s"inner $id".getBytes(UTF_8), "inner.txt")))
-          else Nil)
-        val ar = Archive.arBytes(entries)
-        val d = DocIn(id, Array(SpanIn("ar", new String(ar, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docs(spark, dir)), nth(63)) { (id, _) =>
+      val entries = Seq(
+        ("debian-binary", "2.0\n".getBytes(UTF_8)),
+        ("readme.txt", s"ar note $id".getBytes(UTF_8))) ++
+        (if (id % 126 == 0)
+          Seq(("inner.gz", Archive.gzipBytes(s"inner $id".getBytes(UTF_8), "inner.txt")))
+        else Nil)
+      Seq("ar" -> latin1(Archive.arBytes(entries)))
+    }
   }
 
   /** newc cpio explosion (the initramfs / rpm-payload record stream):
     * regular-file records in stream order, path names preserved.
     */
-  def cpioExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    import graft.sources.Archive
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 77 == 0)
-      .flatMap { id =>
-        val cp = Archive.cpioBytes(Seq(
-          ("etc/motd", s"motd $id".getBytes(UTF_8)),
-          ("usr/share/doc", s"doc $id".getBytes(UTF_8))))
-        val d = DocIn(id, Array(SpanIn("cpio", new String(cp, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def cpioExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(77))((id, _) =>
+      Seq("cpio" -> latin1(graft.sources.Archive.cpioBytes(Seq(
+        ("etc/motd", s"motd $id".getBytes(UTF_8)),
+        ("usr/share/doc", s"doc $id".getBytes(UTF_8)))))))
 
   /** RPM package explosion (Tika `RpmParser` semantics): lead + two
     * header sections walked, the gzip-compressed cpio payload flattened
@@ -1338,41 +1040,30 @@ object Queries {
     * transport, never a node.
     */
   def rpmExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Archive
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 85 == 0)
-      .flatMap { id =>
-        val rpm = Archive.rpmBytes(Archive.gzipBytes(Archive.cpioBytes(Seq(
-          ("bin/tool", s"tool $id".getBytes(UTF_8)),
-          ("etc/conf", s"conf $id".getBytes(UTF_8))))))
-        val d = DocIn(id, Array(SpanIn("rpm", new String(rpm, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docs(spark, dir)), nth(85))((id, _) =>
+      Seq("rpm" -> latin1(Archive.rpmBytes(Archive.gzipBytes(Archive.cpioBytes(Seq(
+        ("bin/tool", s"tool $id".getBytes(UTF_8)),
+        ("etc/conf", s"conf $id".getBytes(UTF_8)))))))))
   }
 
+  /** §2.4 REAL 7z archive route (commons-compress SevenZFile, COPY
+    * method): each %45 doc becomes an actual 7-Zip container whose
+    * entries spawn as sniffed children — %90 adds a nested zip that
+    * recurses through the archive machinery. Oracle recomputes every
+    * node id.
+    */
   def sevenZExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.sources.Archive
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 45 == 0)
-      .flatMap { id =>
-        val entries = Seq(
-          ("a.txt", s"alpha $id".getBytes(UTF_8)),
-          ("bb.txt", s"beta $id".getBytes(UTF_8))) ++
-          (if (id % 90 == 0)
-            Seq(("ccc.zip", Archive.zipBytes(Seq(("c.txt", s"gamma $id".getBytes(UTF_8))))))
-          else Nil)
-        val sz = Archive.sevenZBytes(entries)
-        val d = DocIn(id, Array(SpanIn("7z", new String(sz, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
+    treeLeaf(ids(docs(spark, dir)), nth(45)) { (id, _) =>
+      val entries = Seq(
+        ("a.txt", s"alpha $id".getBytes(UTF_8)),
+        ("bb.txt", s"beta $id".getBytes(UTF_8))) ++
+        (if (id % 90 == 0)
+          Seq(("ccc.zip", Archive.zipBytes(Seq(("c.txt", s"gamma $id".getBytes(UTF_8))))))
+        else Nil)
+      Seq("7z" -> latin1(Archive.sevenZBytes(entries)))
+    }
   }
 
   /** §2.8 on REAL header data: parsed RFC-822 headers (unfolded, repeated
@@ -1396,18 +1087,10 @@ object Queries {
     * table destination + \par-separated lines), parsed back by the
     * from-scratch RTF reader. Oracle recomputes the text from documents.
     */
-  def rtfBytes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val rtf = """{\rtf1\ansi{\fonttbl{\f0 Times New Roman;}}\f0 """ +
-          lines.mkString("""\par """) + "}"
-        val (txt, _) = Extract.extractSpan("rtf", rtf)
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def rtfBytes(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), everyDoc)((_, t) =>
+      "rtf" -> ("""{\rtf1\ansi{\fonttbl{\f0 Times New Roman;}}\f0 """ +
+        lines5(t).mkString("""\par """) + "}"))
 
   /** §2.3 REAL legacy Word binary route (the reference's POI WordExtractor
     * .doc fixtures): document words typeset into an actual MS-DOC compound
@@ -1415,18 +1098,9 @@ object Queries {
     * CR paragraph marks), extracted back through the CFB walk + piece-table
     * reader. Oracle recomputes the 5-word lines from documents.
     */
-  def docBytes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val doc = graft.core.office.WordDoc.build(lines.mkString("\n"))
-        val (txt, _) = Extract.extractSpan("cfb", new String(doc, ISO_8859_1))
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def docBytes(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docsPar(spark, dir)), everyDoc)((_, t) =>
+      "cfb" -> latin1(graft.core.office.WordDoc.build(lines5(t).mkString("\n"))))
 
   /** §2.1+§2.3 declared-charset HTML ingestion (Tika's
     * HtmlEncodingDetector): %23 docs become REAL windows-1252 bytes of the
@@ -1435,23 +1109,16 @@ object Queries {
     * declared charset (a UTF-8 decode would mangle the accents), and the
     * boilerplate stripper must still recover exactly title+content.
     */
-  def htmlCharsetQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 23 == 0)
-      .map { case (id, t) =>
-        val a = (Seq("café", "déjà", "vu") ++
-          t.split(" ", -1).take(5).filter(_.nonEmpty)).mkString(" ")
-        val page = graft.core.Corpus.htmlWrap(id, a)
-          .replace("<head>", "<head><meta charset=\"windows-1252\">")
-        val bytes = page.getBytes(java.nio.charset.Charset.forName("windows-1252"))
-        val kind = graft.sources.Ingest.sniffKind(bytes)
-        val payload = graft.sources.Ingest.decodePayload(kind, bytes)
-        val (txt, _) = Extract.extractSpan(kind, payload)
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def htmlCharsetQ(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(23)) { (id, t) =>
+      val a = (Seq("café", "déjà", "vu") ++
+        t.split(" ", -1).take(5).filter(_.nonEmpty)).mkString(" ")
+      val page = graft.core.Corpus.htmlWrap(id, a)
+        .replace("<head>", "<head><meta charset=\"windows-1252\">")
+      val bytes = page.getBytes(java.nio.charset.Charset.forName("windows-1252"))
+      val kind = graft.sources.Ingest.sniffKind(bytes)
+      kind -> graft.sources.Ingest.decodePayload(kind, bytes)
+    }
 
   /** §2.8 MAPI property promotion (the reference's OutlookExtractor
     * metadata: subject/from land in the Tika metadata multimap): the .msg
@@ -1479,22 +1146,12 @@ object Queries {
     * content.xml with text:p paragraphs — whose body round-trips through
     * the package walk; %86 adds a Pictures/ part that spawns as a child.
     */
-  def odtExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 43 == 0)
-      .flatMap { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val pics =
-          if (id % 86 == 0) Seq(("img1.bin", s"pic $id".getBytes(UTF_8))) else Nil
-        val bytes = graft.core.office.Odf.buildMinimal(paras, pics)
-        val d = DocIn(id, Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def odtExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(43)) { (id, t) =>
+      val pics =
+        if (id % 86 == 0) Seq(("img1.bin", s"pic $id".getBytes(UTF_8))) else Nil
+      Seq("zip" -> latin1(graft.core.office.Odf.buildMinimal(lines5(t), pics)))
+    }
 
   /** §2.3 OpenDocument SPREADSHEET route (Tika OpenDocumentParser over
     * .ods): each %46 doc becomes a mimetype-verified ods package whose
@@ -1502,19 +1159,10 @@ object Queries {
     * walk table rows/cells (not the flat paragraph scan) to reproduce the
     * tab-joined lines.
     */
-  def odsTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 46 == 0)
-      .map { case (id, t) =>
-        val rows = t.split(" ", -1).grouped(2).map(_.toSeq).toSeq
-        val bytes = graft.core.office.Odf.buildSpreadsheet(rows)
-        val (txt, _) = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def odsTable(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(46))((_, t) =>
+      "zip" -> latin1(graft.core.office.Odf.buildSpreadsheet(
+        t.split(" ", -1).grouped(2).map(_.toSeq).toSeq)))
 
   /** §2.3 OpenDocument PRESENTATION route (.odp): each %62 doc becomes a
     * mimetype-verified odp package — slides of draw:frame/draw:text-box
@@ -1522,20 +1170,11 @@ object Queries {
     * order must reproduce the 3-word lines (the same flattening Tika's
     * OpenDocumentContentParser performs).
     */
-  def odpSlides(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 62 == 0)
-      .map { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(3).map(_.mkString(" ")).toSeq
-        val slides = paras.grouped(2).map(_.toSeq).toSeq
-        val bytes = graft.core.office.Odf.buildPresentation(slides)
-        val (txt, _) = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def odpSlides(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(62)) { (_, t) =>
+      val paras = t.split(" ", -1).grouped(3).map(_.mkString(" ")).toSeq
+      "zip" -> latin1(graft.core.office.Odf.buildPresentation(paras.grouped(2).map(_.toSeq).toSeq))
+    }
 
   /** §2.3 XPS fixed-document route (ECMA-388, the Tika XPS surface): each
     * %79 doc becomes an OPC package whose fpage parts carry 4-word Glyphs
@@ -1543,20 +1182,11 @@ object Queries {
     * archive in reverse — only numeric part ordering reproduces the
     * document text.
     */
-  def xpsText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 79 == 0)
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(4).map(_.mkString(" ")).toSeq
-        val pages = lines.grouped(2).map(_.toSeq).toSeq
-        val xps = graft.core.office.Xps.build(pages)
-        val (txt, _) = Extract.extractSpan("zip", new String(xps, ISO_8859_1))
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def xpsText(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(79)) { (_, t) =>
+      val lines = t.split(" ", -1).grouped(4).map(_.mkString(" ")).toSeq
+      "zip" -> latin1(graft.core.office.Xps.build(lines.grouped(2).map(_.toSeq).toSeq))
+    }
 
   /** §2.3/§2.4 EPUB e-book route (Tika EpubParser analog): each %41 doc
     * becomes a real OCF/OPF package whose SPINE deliberately reverses the
@@ -1568,7 +1198,6 @@ object Queries {
     */
   def epubExplode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.core.office.Epub
     docs(spark, dir).select("doc_id").as[Long]
       .filter(_ % 41 == 0)
@@ -1578,7 +1207,7 @@ object Queries {
           ("ch1.xhtml", s"<html><body><p>part one $id</p></body></html>")),
           images = Seq(("img/cover.png",
             Media.encodePng(2 + (id % 3).toInt, 2 + (id % 2).toInt, (id % 255).toInt))))
-        val d = DocIn(id, Array(SpanIn("zip", new String(epub, ISO_8859_1), "", 0)))
+        val d = DocIn(id, Array(SpanIn("zip", latin1(epub), "", 0)))
         val out = Extract.explode(d)
         val root = out.find(_.level == 0).get
         val kids = out.filter(_.level == 1)
@@ -1598,7 +1227,6 @@ object Queries {
     */
   def sqliteExplode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.core.db.Sqlite
     import graft.core.db.Sqlite.{BlobCell, IntCell, TextCell}
     docs(spark, dir).select("doc_id").as[Long]
@@ -1612,7 +1240,7 @@ object Queries {
               TextCell(s"item $i of $id")))),
           ("tags", Seq("tag"), Seq(Seq(TextCell(s"tag-$id")))),
           ("bin", Seq("payload"), Seq(Seq(BlobCell(Array.fill(blobLen)(0x07.toByte)))))))
-        val d = DocIn(id, Array(SpanIn("sqlite", new String(db, ISO_8859_1), "", 0)))
+        val d = DocIn(id, Array(SpanIn("sqlite", latin1(db), "", 0)))
         val out = Extract.explode(d)
         val kids = out.filter(_.level == 1)
         val blobs = out.filter(_.level == 2)
@@ -1634,7 +1262,6 @@ object Queries {
     */
   def plistExplode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     import graft.core.db.Plist
     import graft.core.db.Plist._
     docs(spark, dir).select("doc_id").as[Long]
@@ -1650,7 +1277,7 @@ object Queries {
           "memo" -> PData(s"inline payload $id".getBytes(UTF_8)),
           "inner" -> PData(nested)))
         val d = DocIn(id, Array(SpanIn("plist",
-          new String(Plist.build(top), ISO_8859_1), "state.plist", 0)))
+          latin1(Plist.build(top)), "state.plist", 0)))
         val out = Extract.explode(d)
         val root = out.find(_.level == 0).get
         val kids = out.filter(_.level == 1)
@@ -1670,7 +1297,6 @@ object Queries {
     */
   def xmlText(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.UTF_8
     docs(spark, dir).select("doc_id").as[Long]
       .filter(_ % 53 == 0)
       .map { id =>
@@ -1695,7 +1321,6 @@ object Queries {
     */
   def dbfTable(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     docs(spark, dir).select("doc_id", "text").as[(Long, String)]
       .filter(_._1 % 33 == 0)
       .map { case (id, t) =>
@@ -1708,7 +1333,7 @@ object Queries {
           bytes(headerSize) = 0x2a
         }
         val kind = graft.sources.Ingest.sniffKind(bytes, "table.dbf")
-        val (txt, _) = Extract.extractSpan(kind, new String(bytes, ISO_8859_1))
+        val (txt, _) = Extract.extractSpan(kind, latin1(bytes))
         (id, txt, kind)
       }
       .toDF("doc_id", "txt", "kind")
@@ -1722,7 +1347,6 @@ object Queries {
     */
   def lnkText(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     docs(spark, dir).select("doc_id", "text").as[(Long, String)]
       .filter(_._1 % 47 == 0)
       .map { case (id, t) =>
@@ -1730,7 +1354,7 @@ object Queries {
         val bytes = graft.core.office.Lnk.build(
           target = s"C:\\docs\\$w.doc", name = s"opened $id", fileSize = id + 7)
         val kind = graft.sources.Ingest.sniffKind(bytes, "recent.lnk")
-        val (txt, _) = Extract.extractSpan(kind, new String(bytes, ISO_8859_1))
+        val (txt, _) = Extract.extractSpan(kind, latin1(bytes))
         (id, txt, kind)
       }
       .toDF("doc_id", "txt", "kind")
@@ -1743,21 +1367,9 @@ object Queries {
     * through the CFB walk + record parser. Oracle recomputes from
     * documents.
     */
-  def xlsTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 15 == 0)
-      .map { case (id, t) =>
-        val rows = t.split(" ", -1).grouped(2)
-          .map(_.toSeq.map(w => (w, false))).toSeq ++
-          Seq(Seq(("total", false), (id.toString, true)))
-        val bytes = graft.core.office.Xls.build(rows)
-        val (txt, _) = Extract.extractSpan("cfb", new String(bytes, ISO_8859_1))
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def xlsTable(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(15))((id, t) =>
+      "cfb" -> latin1(graft.core.office.Xls.build(sheetRows(id, t))))
 
   /** §2.3 FilePass-encrypted legacy Excel (the POI silent-open path the
     * reference rides through Tika, parity with q_pdf_decrypt): each %23
@@ -1769,28 +1381,16 @@ object Queries {
     * encrypted, never emit garbage.
     */
   def xlsDecrypt(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.core.office.{Cfb, Xls, XlsCrypt}
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 23 == 0)
-      .map { case (id, t) =>
-        val rows = t.split(" ", -1).grouped(2)
-          .map(_.toSeq.map(w => (w, false))).toSeq ++
-          Seq(Seq(("total", false), (id.toString, true)))
-        val pw = if (id % 115 == 0) s"secret-$id" else "VelvetSweatshop"
-        val cryptoApi = id % 69 != 0
-        val keyBits = if (cryptoApi && id % 92 == 0) 40 else 128
-        val streams = Xls.buildStreams(rows).map { case (nm, b) =>
-          (nm, XlsCrypt.encrypt(b, pw, s"doc-$id", cryptoApi, keyBits))
-        }
-        val latin1 = new String(Cfb.build(streams), ISO_8859_1)
-        val (txt, why) =
-          try Extract.extractSpan("cfb", latin1)
-          catch { case _: graft.core.DecryptFailure => ("", graft.core.Reason.Encrypted) }
-        (id, txt, why)
+    textLeaf(texts(docs(spark, dir)), nth(23)) { (id, t) =>
+      val pw = if (id % 115 == 0) s"secret-$id" else "VelvetSweatshop"
+      val cryptoApi = id % 69 != 0
+      val keyBits = if (cryptoApi && id % 92 == 0) 40 else 128
+      val streams = Xls.buildStreams(sheetRows(id, t)).map { case (nm, b) =>
+        (nm, XlsCrypt.encrypt(b, pw, s"doc-$id", cryptoApi, keyBits))
       }
-      .toDF("doc_id", "txt", "reason")
+      "cfb" -> latin1(Cfb.build(streams))
+    }
   }
 
   /** §2.3 ECMA-376 STANDARD-encrypted OOXML (the [MS-OFFCRYPTO] silent
@@ -1799,45 +1399,25 @@ object Queries {
     * body; real-password ones (%178) classify encrypted, never leaking
     * ciphertext.
     */
-  def ooxmlDecrypt(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docsPar(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 89 == 0)
-      .map { case (id, t) =>
-        val paras = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val docx = graft.core.office.Docx.buildMinimal(paras)
-        val pw = if (id % 178 == 0) s"secret-$id" else "VelvetSweatshop"
-        // %3 docs take the AGILE (2010+) cipher, the rest STANDARD (2007)
-        // — same silent-open/refuse contract either way
-        val enc =
-          if (id % 3 == 0) graft.core.office.OoxmlCrypt.buildAgileEncrypted(docx, pw)
-          else graft.core.office.OoxmlCrypt.buildEncrypted(docx, pw)
-        val (txt, why) =
-          try Extract.extractSpan("cfb", new String(enc, ISO_8859_1))
-          catch { case _: graft.core.DecryptFailure => ("", graft.core.Reason.Encrypted) }
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def ooxmlDecrypt(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docsPar(spark, dir)), nth(89)) { (id, t) =>
+      val docx = graft.core.office.Docx.buildMinimal(lines5(t))
+      val pw = if (id % 178 == 0) s"secret-$id" else "VelvetSweatshop"
+      // %3 docs take the AGILE (2010+) cipher, the rest STANDARD (2007)
+      // — same silent-open/refuse contract either way
+      val enc =
+        if (id % 3 == 0) graft.core.office.OoxmlCrypt.buildAgileEncrypted(docx, pw)
+        else graft.core.office.OoxmlCrypt.buildEncrypted(docx, pw)
+      "cfb" -> latin1(enc)
+    }
 
   /** §2.3 REAL legacy PowerPoint binary route (POI PowerPointExtractor
     * fixtures): 5-word lines as alternating TextBytesAtom/TextCharsAtom
     * records inside a container, walked back out in document order.
     */
-  def pptText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 17 == 0)
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val bytes = graft.core.office.Ppt.build(lines)
-        val (txt, _) = Extract.extractSpan("cfb", new String(bytes, ISO_8859_1))
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def pptText(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), nth(17))((_, t) =>
+      "cfb" -> latin1(graft.core.office.Ppt.build(lines5(t))))
 
   /** §2.4 ISO 9660 disk-image explosion (ECMA-119; the evidence-image
     * shape investigations drop whole as `.iso`): each %51 doc becomes a
@@ -1846,22 +1426,12 @@ object Queries {
     * master the SAME hierarchy through a Joliet supplementary descriptor
     * (UTF-16BE names), which must yield identical children.
     */
-  def isoExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 51 == 0)
-      .flatMap { id =>
-        val iso = graft.sources.Iso.build(Seq(
-          ("README.TXT", s"iso note $id".getBytes(UTF_8)),
-          ("DOCS/DEEP.TXT", s"deep $id".getBytes(UTF_8))),
-          joliet = id % 102 == 0)
-        val d = DocIn(id, Array(SpanIn("iso", new String(iso, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def isoExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(51))((id, _) =>
+      Seq("iso" -> latin1(graft.sources.Iso.build(Seq(
+        ("README.TXT", s"iso note $id".getBytes(UTF_8)),
+        ("DOCS/DEEP.TXT", s"deep $id".getBytes(UTF_8))),
+        joliet = id % 102 == 0))))
 
   /** §2.3 WordPerfect route (the legal-archive era format Tika parses):
     * each %39 doc becomes a real WP5 document — 5-word lines joined by
@@ -1870,22 +1440,12 @@ object Queries {
     * back through the document-area byte grammar. Encrypted docs
     * classify, never emit garbage.
     */
-  def wpdText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 39 == 0)
-      .map { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val bytes = graft.core.office.Wpd.build(lines)
-        if (id % 78 == 0) bytes(10) = 0x42 // non-zero encryption key
-        val (txt, why) =
-          try Extract.extractSpan("wpd", new String(bytes, ISO_8859_1))
-          catch { case _: graft.core.DecryptFailure => ("", graft.core.Reason.Encrypted) }
-        (id, txt, why)
-      }
-      .toDF("doc_id", "txt", "reason")
-  }
+  def wpdText(spark: SparkSession, dir: String): DataFrame =
+    textLeaf(texts(docs(spark, dir)), nth(39)) { (id, t) =>
+      val bytes = graft.core.office.Wpd.build(lines5(t))
+      if (id % 78 == 0) bytes(10) = 0x42 // non-zero encryption key
+      "wpd" -> latin1(bytes)
+    }
 
   /** §2.4 CHM help-file explosion (Tika ChmParser surface, LZX and all):
     * each %61 doc becomes a real compiled-help container whose topic
@@ -1893,82 +1453,44 @@ object Queries {
     * ITSS directory, decode the reset segments, and slice the entries
     * back out as path-named children.
     */
-  def chmExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 61 == 0)
-      .flatMap { id =>
-        val chm = graft.sources.Chm.build(Seq(
-          ("intro.txt", s"chm note $id".getBytes(UTF_8)),
-          ("topic/deep.txt", s"deep $id".getBytes(UTF_8))),
-          compress = true)
-        val d = DocIn(id, Array(SpanIn("chm", new String(chm, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def chmExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(61))((id, _) =>
+      Seq("chm" -> latin1(graft.sources.Chm.build(Seq(
+        ("intro.txt", s"chm note $id".getBytes(UTF_8)),
+        ("topic/deep.txt", s"deep $id".getBytes(UTF_8))),
+        compress = true))))
 
   /** §2.4 CAB cabinet explosion (the Windows installer/driver-package
     * shape): each %83 doc becomes a real MSZIP-compressed cabinet —
     * extraction must walk the CFFOLDER/CFFILE tables, inflate the folder
     * stream with cross-block history, and slice the files back out.
     */
-  def cabExplode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id").as[Long]
-      .filter(id => id % 83 == 0)
-      .flatMap { id =>
-        val cab = graft.sources.Cab.build(Seq(
-          ("readme.txt", s"cab note $id".getBytes(UTF_8)),
-          ("sub/payload.txt", s"deep $id".getBytes(UTF_8))),
-          compress = true)
-        val d = DocIn(id, Array(SpanIn("cab", new String(cab, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def cabExplode(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(ids(docs(spark, dir)), nth(83))((id, _) =>
+      Seq("cab" -> latin1(graft.sources.Cab.build(Seq(
+        ("readme.txt", s"cab note $id".getBytes(UTF_8)),
+        ("sub/payload.txt", s"deep $id".getBytes(UTF_8))),
+        compress = true))))
 
   /** §2.4 embedded OLE objects in a legacy .doc (POI's ObjectPool walk):
     * %21 docs build a real .doc whose ObjectPool carries a text object;
     * extraction yields the body on the root and the object as a sniffed
     * level-1 child. Oracle recomputes both node ids from documents.
     */
-  def docObjects(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .filter(_._1 % 21 == 0)
-      .flatMap { case (id, t) =>
-        val lines = t.split(" ", -1).grouped(5).map(_.mkString(" ")).toSeq
-        val doc = graft.core.office.WordDoc.build(lines.mkString("\n"),
-          objects = Seq(("obj1.txt", s"obj $id".getBytes(UTF_8))))
-        val d = DocIn(id, Array(SpanIn("cfb", new String(doc, ISO_8859_1), "", 0)))
-        Extract.explode(d).map(o =>
-          (id, o.doc_id, o.parent_id, o.level, o.spans.map(_.text).mkString(""), o.no_content_reason))
-      }
-      .toDF("doc_id", "node_id", "parent_id", "level", "txt", "reason")
-  }
+  def docObjects(spark: SparkSession, dir: String): DataFrame =
+    treeLeaf(texts(docs(spark, dir)), nth(21))((id, t) =>
+      Seq("cfb" -> latin1(graft.core.office.WordDoc.build(lines5(t).mkString("\n"),
+        objects = Seq(("obj1.txt", s"obj $id".getBytes(UTF_8)))))))
 
   /** §2.3 delimited-table route (reference csv fixture): two-word rows plus
     * a final QUOTED field exercising embedded commas and "" escapes; the
     * parser renders tab-joined cells per row.
     */
-  def csvTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir).select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) =>
-        val w = t.split(" ", -1)
-        val rows = w.grouped(2).map(_.mkString(",")).toSeq
-        val csv = rows.mkString("\n") + "\n\"x,\"\"y\"\" " + id + "\",tail"
-        val (txt, _) = Extract.extractSpan("csv", csv)
-        (id, txt)
-      }
-      .toDF("doc_id", "txt")
-  }
+  def csvTable(spark: SparkSession, dir: String): DataFrame =
+    docLeaf(texts(docs(spark, dir)), everyDoc) { (id, t) =>
+      val rows = t.split(" ", -1).grouped(2).map(_.mkString(",")).toSeq
+      "csv" -> (rows.mkString("\n") + "\n\"x,\"\"y\"\" " + id + "\",tail")
+    }
 
   /** §2.6: per-root reconciliation counters (PST parity analog). */
   def reconcile(spark: SparkSession, dir: String): DataFrame = {
@@ -2296,20 +1818,6 @@ object Queries {
       .toDF("doc_id", "n_lines", "n_kept", "page_kept")
   }
 
-  /** C4's OTHER dedup rule — exact three-sentence-span deduplication
-    * across the whole corpus (keep the first occurrence): documents
-    * explode into 15-word spans at sentence (5-word) stride, the first
-    * owner per span is a map-side-combinable min over (doc_id, span idx),
-    * and every later occurrence counts as a duplicate. The only shuffles
-    * key on sha2(span) — narrow fixed-width keys; no window (a hot span
-    * would sort its whole
-    * membership on one reducer), no broadcast hint (AQE picks the join;
-    * the min-owner side is O(distinct spans) and must be allowed to
-    * shuffle at scale). The span explode feeds both sides and is
-    * recomputed rather than persisted — map-side work is the cheap term
-    * next to the two shuffles, and caching an O(corpus) explode is
-    * exactly what a 100 TB run cannot do.
-    */
   /** Exact-substring dedup (Lee et al. 2021, the ExactSubstr operator) as
     * its scalable relational reformulation: fixed-length token-window
     * anchors (15 words, stride 1) replace the suffix array — any window
@@ -2357,6 +1865,12 @@ object Queries {
       .selectExpr("doc_id", "n_dup_windows", "m.k AS n_ranges", "m.c AS dup_tokens")
   }
 
+  /** 16^w buckets ~ sqrt(n): w = 2 up to ~65k docs (256 buckets), 5 at a
+    * trillion (1M buckets of ~1M docs) — both window levels stay ~sqrt(n).
+    */
+  def tokenBudgetPrefixWidth(n: Long): Int = math.max(2, math.ceil(
+    math.log(math.sqrt(n.toDouble.max(1.0))) / math.log(16.0)).toInt)
+
   /** Token-budget corpus sampling: take whole documents in DETERMINISTIC
     * shuffled order (sha2 of the doc id — the training-prep corpus
     * shuffle) until a token budget fills. The global cumulative sum is
@@ -2371,12 +1885,6 @@ object Queries {
     * sort. One count() action feeds the width, the same cost model as
     * [[packSequences]]' bucket derivation.
     */
-  /** 16^w buckets ~ sqrt(n): w = 2 up to ~65k docs (256 buckets), 5 at a
-    * trillion (1M buckets of ~1M docs) — both window levels stay ~sqrt(n).
-    */
-  def tokenBudgetPrefixWidth(n: Long): Int = math.max(2, math.ceil(
-    math.log(math.sqrt(n.toDouble.max(1.0))) / math.log(16.0)).toInt)
-
   def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
     val B = 12000L
     val n = docs(spark, dir).count()
@@ -2429,6 +1937,20 @@ object Queries {
           s"NOT exists(ps, p -> i >= p AND i < p + $L)), ' ') AS txt")
   }
 
+  /** C4's OTHER dedup rule — exact three-sentence-span deduplication
+    * across the whole corpus (keep the first occurrence): documents
+    * explode into 15-word spans at sentence (5-word) stride, the first
+    * owner per span is a map-side-combinable min over (doc_id, span idx),
+    * and every later occurrence counts as a duplicate. The only shuffles
+    * key on sha2(span) — narrow fixed-width keys; no window (a hot span
+    * would sort its whole
+    * membership on one reducer), no broadcast hint (AQE picks the join;
+    * the min-owner side is O(distinct spans) and must be allowed to
+    * shuffle at scale). The span explode feeds both sides and is
+    * recomputed rather than persisted — map-side work is the cheap term
+    * next to the two shuffles, and caching an O(corpus) explode is
+    * exactly what a 100 TB run cannot do.
+    */
   def c4SpanDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // both shuffles key on xxhash64(span) — an 8-byte integer key instead
@@ -2651,9 +2173,6 @@ object Queries {
         expr("min_by(doc_id, -score * 10000000000L + doc_id)").as("rep_id"))
       .select("component", "rep_id", "n_members", "rep_score")
 
-  /** SimHash via the native codegen'd expression (Scala twin:
-    * Dedup.simhash / TextStats.simhash32).
-    */
   /** LSH-candidates -> edit-distance verification (the two-stage dedup
     * pipeline): MinHash proposes, levenshtein confirms exact/near copies.
     */
@@ -2663,6 +2182,9 @@ object Queries {
     Dedup.editVerify(injected, candidates, maxDist = 20)
   }
 
+  /** SimHash via the native codegen'd expression (Scala twin:
+    * Dedup.simhash / TextStats.simhash32).
+    */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     docs(spark, dir).select(col("doc_id"),
@@ -3176,7 +2698,6 @@ object Queries {
     */
   def webFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
     // (content relies on the documented corpus precondition — single-
     // spaced [a-z]+ words, Corpus.scala — like every typeset fixture)
     def pageify(src: org.apache.spark.sql.Dataset[(Long, String)]): DataFrame = src
@@ -3186,7 +2707,7 @@ object Queries {
         val page = graft.core.Corpus.htmlWrap(id, a)
         val warc = graft.sources.Warc.build(
           Seq(("response", crawlUrlOf(id), "text/html", page.getBytes(UTF_8))))
-        val d = DocIn(id, Array(SpanIn("warc", new String(warc, ISO_8859_1), "", 0)))
+        val d = DocIn(id, Array(SpanIn("warc", latin1(warc), "", 0)))
         val txt = Extract.explode(d).find(_.level == 1).get.spans.map(_.text).mkString
         (id, crawlUrlOf(id), txt.substring(txt.indexOf('\n') + 1)) // content = page sans title
       }

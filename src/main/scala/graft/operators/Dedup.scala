@@ -283,19 +283,23 @@ object Dedup {
       .toDF("doc_id", "simhash")
   }
 
+  /** A document's distinct 2-word shingles, string_split semantics. */
+  private def shingleSet(t: String): scala.collection.mutable.HashSet[String] = {
+    val w = t.split(" ", -1) // string_split semantics
+    val set = scala.collection.mutable.HashSet.empty[String]
+    var i = 0
+    while (i < w.length - 1) { set += (w(i) + " " + w(i + 1)); i += 1 }
+    set
+  }
+
   /** Distinct (doc_id, shingle) pairs — 2-word shingles, string_split
     * semantics.
     */
   def shingled(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     docs.select("doc_id", "text").as[(Long, String)]
-      .flatMap { case (id, t) =>
-        val w = t.split(" ", -1) // string_split semantics
-        val set = scala.collection.mutable.HashSet.empty[String]
-        var i = 0
-        while (i < w.length - 1) { set += (w(i) + " " + w(i + 1)); i += 1 }
-        set.iterator.map(s => (id, s))
-      }.toDF("doc_id", "shingle")
+      .flatMap { case (id, t) => shingleSet(t).iterator.map(s => (id, s)) }
+      .toDF("doc_id", "shingle")
   }
 
   /** n-gram (2-word shingle) Jaccard similarity, probe-gated and
@@ -425,11 +429,7 @@ object Dedup {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, t) =>
-          val w = t.split(" ", -1) // string_split semantics
-          val set = scala.collection.mutable.HashSet.empty[String]
-          var i = 0
-          while (i < w.length - 1) { set += (w(i) + " " + w(i + 1)); i += 1 }
-          set.iterator.map { s =>
+          shingleSet(t).iterator.map { s =>
             val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
             val v1 = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
               ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)

@@ -278,4 +278,19 @@ class OpsPlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"),
       s"chunking must not shuffle:\n${plan.take(1500)}")
   }
+
+  test("fixture leaves scan only the columns they read; docsPar leaves keep their repartition") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def readSchemas(df: DataFrame): Seq[Seq[String]] = df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq
+    }
+    assert(readSchemas(Queries.zipExplode(spark, sf)) == Seq(Seq("doc_id")))
+    assert(readSchemas(Queries.docxExplode(spark, sf)) == Seq(Seq("doc_id", "text")))
+    val flate = Queries.pdfFlate(spark, sf)
+    assert(readSchemas(flate) == Seq(Seq("doc_id", "text")))
+    val exchanges = flate.queryExecution.sparkPlan.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.nonEmpty, s"expected the docsPar repartition:\n${flate.queryExecution.sparkPlan}")
+  }
 }
