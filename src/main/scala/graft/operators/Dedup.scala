@@ -24,7 +24,10 @@ import graft.core.{HashParams, Ids, JobTags}
   *  - SimHash emits one 64-bit signature per doc (map-only), pairs via a
   *    banded equi-join, never an all-pairs product;
   *  - n-gram Jaccard is the only quadratic-ish op and is gated on an
-  *    explicit probe set (sampled ids), keeping the join |probes| x |docs|.
+  *    explicit probe set (sampled ids), keeping the join |probes| x |docs|:
+  *    only the probe documents' rare-shingle profiles are broadcast, and
+  *    the corpus profiles stream past them in one pass, with no
+  *    per-document aggregate.
   */
 object Dedup {
 
@@ -304,15 +307,34 @@ object Dedup {
 
   /** n-gram (2-word shingle) Jaccard similarity, probe-gated and
     * DOCUMENT-FREQUENCY-CAPPED: shingles appearing in more than `dfCap`
-    * documents are dropped from the profile (sizes AND intersection) before
-    * the candidate join — the standard hot-key guard. Without it, one
-    * ubiquitous shingle ("of the") makes its join-key fan-out
+    * documents are dropped from every profile (sizes AND intersection)
+    * before the candidate join — the standard hot-key guard. Without it,
+    * one ubiquitous shingle ("of the") makes its join-key fan-out
     * |probes_with_it| x |docs_with_it|, near-cartesian at corpus scale.
-    * Dropped shingles are REPORTED by [[hotShingles]] (no silent caps).
+    * Dropped shingles are REPORTED by [[hotShingles]] (no silent caps),
+    * from the same [[shingleDf]] aggregate.
     *
     * `probe` is a doc-level predicate over the columns of `docs` (the
     * default samples every 50th doc_id): it selects the probe documents
-    * before they are shingled, so it cannot refer to a shingle.
+    * before they are shingled, so it cannot refer to a shingle. `doc_id`
+    * must be unique per row: each row's shingle set is its document's
+    * profile, so two rows with one id would be two documents.
+    *
+    * Shape: a hot pass plus one streamed profile pass.
+    *  - Hot pass: the df aggregate, then ONE driver collect of the hot
+    *    shingles (tagged `Dedup.ngramJaccard/hot`). The set is captured in
+    *    the profile map's closure; it holds at most (shingle occurrences) /
+    *    (dfCap + 1) strings — the bound the hot set always had.
+    *  - Profile pass: one typed map per document emits (id, sz, its rare
+    *    shingles), with `sz` the rare-shingle count. The probe documents'
+    *    profiles explode into the probe index — |probes| x profile rows,
+    *    the small side, which AQE broadcasts while it fits. The corpus
+    *    profiles explode and stream past it inside whole-stage codegen;
+    *    matches are counted per (a, b, sza, szb), so `uni` needs no
+    *    per-document sizes aggregate and nothing O(corpus) is broadcast
+    *    or joined twice.
+    * On the 5,150-doc perfbench `dedup` corpus one call launches 5 Spark
+    * jobs (the hot pass 2, the profile pass 3).
     *
     * Emits (a=probe, b, inter, uni) where 5*inter >= uni (Jaccard >= 0.2)
     * over the rare-shingle profile, a != b. Integer-only output.
@@ -320,38 +342,38 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, docs: DataFrame,
                    dfCap: Long = Long.MaxValue,
                    probe: org.apache.spark.sql.Column = col("doc_id") % 50 === 0): DataFrame = {
-    val all = shingled(spark, docs)
-    // the HOT set (df > cap) is tiny by definition — a handful of ubiquitous
-    // shingles — so the drop is a broadcast anti-join: the big side never
-    // shuffles on the hot key at all. df itself is a partial-agg groupBy.
-    val hot = all.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select("shingle")
-    val rare = all.join(broadcast(hot), Seq("shingle"), "left_anti")
-    val sizes = rare.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    // the probe side shingles only the PROBE DOCUMENTS (round 6): the
-    // probe predicate is doc-level and shingle sets are doc-local, so
-    // filtering docs BEFORE the explode is row-identical to filtering the
-    // exploded stream after — and skips re-evaluating the corpus-wide
-    // shingle map (an opaque typed flatMap Catalyst cannot push the
-    // filter below) just to discard ~98% of it.
-    val probes = shingled(spark, docs.filter(probe))
-      .join(broadcast(hot), Seq("shingle"), "left_anti")
-      .withColumnRenamed("doc_id", "a")
-    val inter = probes.join(rare.withColumnRenamed("doc_id", "b"), "shingle")
+    import spark.implicits._
+    val hot = JobTags.tagged(spark.sparkContext, "Dedup.ngramJaccard") { tag =>
+      tag("hot")
+      shingleDf(spark, docs).filter(col("df") > dfCap).select("shingle").as[String].collect().toSet
+    }
+    profiles(spark, docs, hot, "b", "szb")
+      .join(profiles(spark, docs.filter(probe), hot, "a", "sza"), "shingle")
       .filter(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-    // sizes is one row per DOCUMENT — O(corpus), the side that must never
-    // carry a broadcast hint (unbroadcastable at 1e12 docs). The bounded
-    // side here is `inter` (|probes| x neighbors); no hint is needed at
-    // all: AQE broadcasts the small side while it fits and falls back to a
-    // shuffle join when it doesn't.
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sza"), "a")
-      .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "szb"), "b")
+      .groupBy("a", "b", "sza", "szb").agg(count(lit(1)).as("inter"))
       .withColumn("uni", col("sza") + col("szb") - col("inter"))
       .filter(col("inter") * 5 >= col("uni"))
       .select("a", "b", "inter", "uni")
   }
+
+  /** The rare-shingle profiles of `docs`, exploded: one typed map gives
+    * each row its [[shingleSet]] minus `hot` and the size of what remains,
+    * then one (`id` = doc_id, `sz` = that size, shingle) row per shingle.
+    */
+  private def profiles(spark: SparkSession, docs: DataFrame, hot: Set[String],
+                       id: String, sz: String): DataFrame = {
+    import spark.implicits._
+    docs.select("doc_id", "text").as[(Long, String)]
+      .map { case (d, t) =>
+        val s = shingleSet(t).filterInPlace(!hot(_))
+        (d, s.size.toLong, s.toArray)
+      }
+      .select(col("_1").as(id), col("_2").as(sz), explode(col("_3")).as("shingle"))
+  }
+
+  /** (shingle, df): the number of `docs` rows holding each shingle. */
+  private def shingleDf(spark: SparkSession, docs: DataFrame): DataFrame =
+    shingled(spark, docs).groupBy("shingle").agg(count(lit(1)).as("df"))
 
   /** Benchmark decontamination (standard training-data hygiene, GPT-3-style
     * n-gram overlap): flag corpus docs sharing at least `minShared` distinct
@@ -482,8 +504,7 @@ object Dedup {
     * record: (n_dropped distinct shingles, max document frequency seen).
     */
   def hotShingles(spark: SparkSession, docs: DataFrame, dfCap: Long): DataFrame =
-    shingled(spark, docs)
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
+    shingleDf(spark, docs)
       .agg(
         sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("n_dropped"),
         max("df").as("max_df"))

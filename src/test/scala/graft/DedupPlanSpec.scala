@@ -6,14 +6,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Levenshtein
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Dedup
 
-/** Plan shape and exactness of the MinHash dedup operators: one
-  * `minhashPairs` call reads and signs its input once, and `editVerify`
-  * runs one thresholded Levenshtein DP per candidate pair.
+/** Plan shape and exactness of the dedup operators: one `minhashPairs`
+  * call reads and signs its input once, `editVerify` runs one thresholded
+  * Levenshtein DP per candidate pair, and `ngramJaccard` streams the corpus
+  * profiles past a probe index with no per-document aggregate.
   */
 class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestBase.spark
@@ -130,5 +132,93 @@ class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       p.expressions.map(_.collect { case l: Levenshtein => l }.size).sum
     }.sum
     assert(evaluations == 1, ev.queryExecution.executedPlan.toString)
+  }
+
+  /** Jaccard inputs: with dfCap 2, "hot x", "s1 s2" and "s3 s4" (df 3) are
+    * dropped and "s2 s3", "s4 s5" (df 2) kept; probes 1 and 2 (kind "p")
+    * are each other's neighbours at exactly Jaccard 0.2; probe 4 is one
+    * word and doc 7 empty, so neither has a shingle.
+    */
+  private val jaccardDocs = Seq(
+    (1L, "s1 s2 s3 s4 s5 hot x", "p"),
+    (2L, "s1 s2 s3 s4 t5 hot x", "p"),
+    (3L, "hot x u1 u2", "n"),
+    (4L, "solo", "p"),
+    (5L, "s1 s2 v1 v2 v3", "n"),
+    (6L, "s3 s4 s5 w1", "n"),
+    (7L, "", "n"))
+
+  private def jaccardFrame = {
+    import spark.implicits._
+    jaccardDocs.toDF("doc_id", "text", "kind")
+  }
+
+  private def shingles(t: String): Set[String] = {
+    val w = t.split(" ", -1)
+    (0 until w.length - 1).map(i => w(i) + " " + w(i + 1)).toSet
+  }
+
+  private def docFreq: Map[String, Int] =
+    jaccardDocs.flatMap(d => shingles(d._2)).groupBy(identity).map { case (s, n) => s -> n.size }
+
+  /** (a, b, inter, uni) for every probe `a` and document `b != a` sharing a
+    * shingle outside the df > cap set, kept at 5 * inter >= uni.
+    */
+  private def jaccardReference(cap: Long, isProbe: ((Long, String, String)) => Boolean) = {
+    val hot = docFreq.collect { case (s, n) if n > cap => s }.toSet
+    val rare = jaccardDocs.map(d => d._1 -> (shingles(d._2) -- hot)).toMap
+    for {
+      a <- jaccardDocs.filter(isProbe).map(_._1)
+      b <- jaccardDocs.map(_._1) if a != b
+      inter = (rare(a) intersect rare(b)).size.toLong
+      uni = rare(a).size + rare(b).size - inter
+      if inter > 0 && 5 * inter >= uni
+    } yield (a, b, inter, uni)
+  }
+
+  private def jaccardRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sorted
+
+  test("ngramJaccard equals a plain reference: df above and at the cap, default cap, probe columns") {
+    assert(docFreq.values.toSet == Set(1, 2, 3))
+    val byKind = Dedup.ngramJaccard(spark, jaccardFrame, 2, col("kind") === "p")
+    assert(byKind.columns.toSeq == Seq("a", "b", "inter", "uni"))
+    val want = jaccardReference(2, _._3 == "p")
+    assert(want.sorted == Seq((1L, 2L, 1L, 5L), (1L, 6L, 1L, 4L), (2L, 1L, 1L, 5L)))
+    assert(jaccardRows(byKind) == want.sorted)
+    // nothing is dropped at the default cap; the default probe (doc_id % 50 == 0) selects none of these
+    val all = Dedup.ngramJaccard(spark, jaccardFrame, probe = lit(true))
+    val wantAll = jaccardReference(Long.MaxValue, _ => true)
+    assert(wantAll.contains((1L, 2L, 4L, 8L)) && wantAll.contains((6L, 1L, 2L, 7L)))
+    assert(jaccardRows(all) == wantAll.sorted)
+    assert(Dedup.ngramJaccard(spark, jaccardFrame).collect().isEmpty)
+  }
+
+  test("ngramJaccard tags its hot-set collect; caller's group and description kept") {
+    var rows = Seq.empty[(Long, Long, Long, Long)]
+    val jobs = SparkTestBase.jobDescriptions {
+      rows = jaccardRows(Dedup.ngramJaccard(spark, jaccardFrame, 2, col("kind") === "p"))
+    }
+    assert(rows.size == 3)
+    val (hot, rest) = jobs.span(_ == "Dedup.ngramJaccard/hot")
+    assert(hot.nonEmpty && rest.nonEmpty && rest.forall(_ == "caller work"), jobs)
+  }
+
+  test("ngramJaccard scans the corpus twice, broadcasts no corpus side, no per-document aggregate") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jaccard").resolve("docs").toString
+    jaccardFrame.write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    var rows = Seq.empty[(Long, Long, Long, Long)]
+    val plans = executedPlans {
+      rows = jaccardRows(Dedup.ngramJaccard(spark, docs, 2, col("kind") === "p"))
+    }
+    assert(rows == jaccardReference(2, _._3 == "p").sorted)
+    // the probe predicate reaches its scan as a data filter; corpus scans have none
+    def corpusScans(p: SparkPlan) = collect(p) { case s: FileSourceScanExec if s.dataFilters.isEmpty => s }
+    assert(count(plans) { case s: FileSourceScanExec if s.dataFilters.nonEmpty => 1 } == 1)
+    assert(plans.map(corpusScans(_).size).sum == 2)
+    assert(count(plans) { case b: BroadcastExchangeExec if corpusScans(b).nonEmpty => 1 } == 0)
+    val perDocKeys = Seq(Seq("doc_id"), Seq("a"), Seq("b"))
+    assert(count(plans) { case agg: BaseAggregateExec if perDocKeys.contains(agg.groupingExpressions.map(_.name)) => 1 } == 0)
   }
 }
