@@ -222,7 +222,8 @@ object SnapshotTable {
     throw new IllegalStateException(s"commit contention: $maxRetries retries exhausted")
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  /** Delete a file or a directory tree (no-op when absent). */
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val s = Files.list(p)
       try s.iterator().asScala.foreach(deleteRecursively) finally s.close()

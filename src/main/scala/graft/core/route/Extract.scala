@@ -1,8 +1,10 @@
 package graft.core.route
 
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import graft.core._
 import graft.core.html.HtmlExtractor
 import graft.core.pdf.PdfLayout
+import graft.sources.{Apple, Archive, Cab, Chm, Iso, Rar, Warc}
 
 /** The extraction operator proper: per-document span routing.
   *
@@ -111,43 +113,232 @@ object Extract {
       // and an empty body — text would need OCR/transcription, so the
       // document classifies empty-file, NOT unsupported
       case "image" | "av" => ("", "")
-      // zip: an OOXML PACKAGE (docx/xlsx/pptx) yields its body text;
-      // a plain archive has none
-      case "zip"       => (graft.core.office.Ooxml.packageText(t, cfg.maxSpanChars), "")
-      case "gzip" | "tar" | "zstd" | "bzip2" | "xz" | "lz4" | "snappy" | "compress" | "lzma" | "warc" | "jsonl" | "7z" | "rar" | "pst" | "mbox" | "parquet" | "avro" | "sqlite" | "ar" | "cpio" | "rpm" | "iso" | "chm" | "cab" | "applesingle" => ("", "") // container: no own text, entries explode to children
+      case "pst"       => ("", "") // mailbox: no own text, the folder tree explodes to children
       // cfb: an Outlook MESSAGE yields its body text; a generic compound
       // file is a pure container (streams explode to children)
       case "cfb"       => (graft.core.office.Msg.cfbText(t, cfg.maxSpanChars), "")
-      case "eml"       => (graft.core.mail.Eml.parse(t).body, "") // RFC-822: body text; attachments explode
-      case "emlx"      => (graft.core.mail.Eml.parseEmlx(t).body, "") // Apple Mail length-framed message
-      case "mhtml"     => // RFC 2557 page save: root part through the HTML
-        // extractor (Tika routes mhtml to HtmlParser); resources explode
-        (HtmlExtractor.mainText(graft.core.mail.Mhtml.parse(t).html), "")
-      case "tnef"      => (graft.core.mail.Tnef.parseLatin1(t).body, "") // winmail.dat: body text; attachments explode
       case "rtf"       => (graft.core.text.Rtf.text(t), "")  // real RTF bytes (reference rtf fixture)
       case "csv"       => (graft.core.text.Csv.text(t), "")  // delimited table text (reference csv fixture)
       case "dbf"       => // dBase table: header + active rows, tab-joined
-        (graft.core.db.Dbf.text(t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)), "")
-      case "one"       => // OneNote section: RichEditTextUnicode paragraphs
-        (graft.core.office.OneNote.parseLatin1(t)._1, "")
+        (graft.core.db.Dbf.text(t.getBytes(ISO_8859_1)), "")
       case "wpd"       => // WordPerfect: document-area byte-stream decode
-        (graft.core.office.Wpd.text(t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)), "")
+        (graft.core.office.Wpd.text(t.getBytes(ISO_8859_1)), "")
       case "lnk"       => // Windows shortcut: target/string-data metadata text
-        (graft.core.office.Lnk.text(t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)), "")
+        (graft.core.office.Lnk.text(t.getBytes(ISO_8859_1)), "")
       case "vcard"     => (graft.core.text.Contact.vcardText(t), "") // RFC 6350 contact card
       case "ics"       => (graft.core.text.Contact.icsText(t), "")   // RFC 5545 calendar
       case "xml"       => (graft.core.text.Xml.text(t), "") // standalone XML: markup stripped (Tika XMLParser)
-      case "plist"     => // Apple binary plist: flat path:value rendering; data blobs explode
-        (graft.core.db.Plist.text(graft.core.db.Plist.parse(
-          t.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))), "")
-      case _           => ("", Reason.Unsupported)
+      // a container row's own text: a package or message body, or none —
+      // its entries explode to children
+      case _ => ContainerByKind.get(kind) match {
+        case Some(c) => (c.ownText(t, cfg), "")
+        case None    => ("", Reason.Unsupported)
+      }
     }
 
+  // ----------------------------------------------------- container table
+
+  private type Entries = Vector[Archive.UnzippedEntry]
+
+  /** Spawns a container's children with a [[Spawner]] below a parent id,
+    * ordinals from a first ordinal, at a level; returns the next ordinal.
+    */
+  private type Kids = (Spawner, String, Int, Int) => Int
+
+  /** One row of [[Containers]]: a span kind whose payload unpacks into
+    * embedded children. The same row serves a top-level span of the kind
+    * and a nested entry its `detect` recognises, so a format unpacks the
+    * same way at the root and inside another container (the reference's
+    * single `EmbedSpawner.parseEmbedded` dispatch).
+    */
+  private sealed trait Container {
+    def kind: String
+    /** Whether a nested entry's bytes are this format; `sniffed` is the
+      * entry's file-walk kind, computed at most once per entry.
+      */
+    def detect(data: Array[Byte], sniffed: => String): Boolean
+    /** What a top-level span of this kind reads as its own text. */
+    def ownText(t: String, cfg: Config): String
+  }
+
+  /** An archive or codec: the payload bytes unpack into named entries
+    * (`None` = refused by the size guard), each spawned like a file; a
+    * nested entry is recognised by its magic bytes. `pkg`: the format may
+    * carry an OOXML/ODF/EPUB package, so a top-level span reads the package
+    * body as its own text and spawns only the package's embedded parts.
+    */
+  private final case class Unpacks(kind: String, magic: Array[Byte] => Boolean,
+                                   unpack: (Array[Byte], Int) => Entries,
+                                   pkg: Boolean = false) extends Container {
+    def detect(data: Array[Byte], sniffed: => String): Boolean = magic(data)
+    def ownText(t: String, cfg: Config): String =
+      if (pkg) graft.core.office.Ooxml.packageText(t, cfg.maxSpanChars) else ""
+  }
+
+  /** A parsed format: the payload text parses into the node's own body and
+    * its children; a nested entry is recognised by the file-walk sniff
+    * ([[graft.sources.Ingest.sniffKind]]). A `document` row's body is also a
+    * top-level span's own text (mail, page saves, sections, plists); the
+    * others are pure containers (mailboxes, dumps, databases) with an empty
+    * body, never parsed for text. `parse` runs before the node's first
+    * emission, so a payload it rejects yields exactly one failure node; the
+    * returned [[Kids]] run after it.
+    */
+  private final case class Parses(kind: String, document: Boolean,
+                                  parse: (Payload, Config) => (String, Kids))
+    extends Container {
+    def detect(data: Array[Byte], sniffed: => String): Boolean = sniffed == kind
+    def ownText(t: String, cfg: Config): String =
+      if (document) parse(new Payload(t, null), cfg)._1 else ""
+  }
+
+  /** A parsed format's payload: its text (a span's text, or a nested
+    * entry's [[graft.sources.Ingest.decodePayload]]) and its raw bytes,
+    * taken from the byte-transparent text on first use when none came
+    * with it.
+    */
+  private final class Payload(val text: String, raw: Array[Byte]) {
+    lazy val bytes: Array[Byte] = if (raw != null) raw else text.getBytes(ISO_8859_1)
+  }
+
+  private def member(f: (Array[Byte], Int) => Archive.UnzippedEntry)
+  : (Array[Byte], Int) => Entries = (b, max) => Vector(f(b, max))
+
+  private def files(es: Seq[(String, Array[Byte])]): Kids =
+    (sp, pid, ord, lvl) => sp.entries(es.map { case (n, b) => (n, Some(b)) }, pid, ord, lvl)
+
+  // columnar dumps: one child per ROW (the jsonl contract); rows past the
+  // breadth cap are read with headroom, then refused counted
+  private def dumpRowCap(cfg: Config): Int = // overflow-safe headroom over the breadth guard
+    if (cfg.maxSpans > Int.MaxValue - 64) Int.MaxValue else cfg.maxSpans + 64
+  private def dump(rows: (Vector[String], Long)): (String, Kids) =
+    ("", (sp, pid, ord, lvl) => sp.dumpRows(rows._1, rows._2, pid, ord, lvl))
+
+  private val Zip = Unpacks("zip", Archive.isZip, Archive.unzip(_, _), pkg = true)
+
+  /** Every container format, in nested detection order: the magic-byte
+    * rows first, then the sniffed ones. Adding a format takes one row here
+    * plus its [[graft.sources.Ingest.sniffKind]] arm.
+    */
+  private val Containers: Vector[Container] = Vector(
+    Zip,
+    Unpacks("tar", Archive.isTar, Archive.untar(_, _)),
+    Unpacks("7z", Archive.is7z, Archive.un7z(_, _)),
+    // stored members spawn; compressed ones are counted refusals
+    Unpacks("rar", Rar.isRar, Rar.entries(_, _)),
+    // unix archive (.deb): control.tar.gz/data.tar.xz chain through the
+    // codec rows below
+    Unpacks("ar", Archive.isAr, Archive.unar(_, _)),
+    Unpacks("cpio", Archive.isCpio, Archive.uncpio(_, _)),
+    // the package's FILES are its entries (rpm2cpio | cpio): the compressed
+    // payload is transport framing, never a node — the same flattening
+    // Tika's RpmParser applies
+    Unpacks("rpm", Archive.isRpm, Archive.rpmEntries(_, _)),
+    // disk image: its files are path-named entries (Joliet names when the
+    // supplementary descriptor announces them)
+    Unpacks("iso", Iso.isIso, Iso.entries(_, _)),
+    // compiled help: topic files are path-named entries; the compressed
+    // section LZX-decodes once for all of them
+    Unpacks("chm", Chm.isChm, Chm.entries(_, _)),
+    // cabinet: each MSZIP folder inflates once for all of its files
+    // (history carried across blocks)
+    Unpacks("cab", Cab.isCab, Cab.entries(_, _)),
+    // single-member codecs: one entry (gzip names it from FNAME); a tar
+    // payload then recurses below
+    Unpacks("gzip", Archive.isGzip, member(Archive.gunzip)),
+    Unpacks("zstd", Archive.isZstd, member(Archive.unzstd)),
+    Unpacks("bzip2", Archive.isBzip2, member(Archive.unbzip2)),
+    Unpacks("xz", Archive.isXz, member(Archive.unxz)),
+    Unpacks("compress", Archive.isCompressZ, member(Archive.uncompressZ)),
+    Unpacks("lzma", Archive.isLzma, member(Archive.unlzma)),
+    Unpacks("lz4", Archive.isLz4, member(Archive.unlz4)),
+    Unpacks("snappy", Archive.isSnappy, member(Archive.unsnappy)),
+    // the envelope is transport: the data fork IS the file, one entry under
+    // the envelope's real name (RFC 1740 entry 3)
+    Unpacks("applesingle", Apple.isAppleSingle, member(Apple.unwrap)),
+    // each content-bearing web-archive record (response/resource) is an
+    // entry: target URI as resource name, body sniffed like any ingested
+    // file (html flows through the charset decode and boilerplate stripper)
+    Unpacks("warc", Warc.isWarc, (b, max) =>
+      Warc.records(new String(b, ISO_8859_1), max).map(r => (r.targetUri, r.body))),
+    // one JSON object per line = one logical document per line
+    Parses("jsonl", document = false, (t, _) =>
+      ("", (sp, pid, ord, lvl) => sp.jsonlLines(t.text, pid, ord, lvl))),
+    // RFC-822: body text; attachments are entries of the message
+    // (RFC822Parser semantics), filename as resource name
+    Parses("eml", document = true, (t, _) => {
+      val m = graft.core.mail.Eml.parse(t.text)
+      (m.body, files(m.attachments))
+    }),
+    Parses("parquet", document = false, (t, cfg) => dump(graft.sources.ParquetDump.textRows(
+      t.bytes, dumpRowCap(cfg), cfg.maxSpanChars))),
+    Parses("avro", document = false, (t, cfg) => dump(graft.sources.AvroDump.textRows(
+      t.bytes, dumpRowCap(cfg), cfg.maxSpanChars))),
+    // the database: one tabular child per user table, blob cells sniffed
+    // and recursing below
+    Parses("sqlite", document = false, (t, cfg) => {
+      val tabs = graft.core.db.Sqlite.tables(t.bytes, maxCells = dumpRowCap(cfg))
+      ("", (sp, pid, ord, lvl) => sp.sqliteTables(tabs, pid, ord, lvl))
+    }),
+    // Apple binary plist: flat path:value rendering; NSData payloads
+    // spawn as sniffed children, their dotted paths the resource names
+    Parses("plist", document = true, (t, _) => {
+      val v = graft.core.db.Plist.parse(t.bytes)
+      (graft.core.db.Plist.text(v), (sp, pid, ord, lvl) =>
+        files(graft.core.db.Plist.dataBlobs(v))(sp, pid, ord, lvl))
+    }),
+    // each mailbox message is a document child carrying its parsed
+    // RFC-822 body, attachments recursing; ids hash the raw message chunk
+    Parses("mbox", document = false, (t, _) =>
+      ("", (sp, pid, ord, lvl) =>
+        sp.each(graft.core.mail.Mbox.split(t.text), ord)(sp.mboxMessage(_, pid, _, lvl)))),
+    // Apple Mail length-framed message: same shape as eml
+    Parses("emlx", document = true, (t, _) => {
+      val m = graft.core.mail.Eml.parseEmlx(t.text)
+      (m.body, files(m.attachments))
+    }),
+    // RFC 2557 page save: root part through the HTML extractor (Tika
+    // routes mhtml to HtmlParser); saved resources (images, stylesheets,
+    // scripts) are its entries, named by their Content-Location's last
+    // segment
+    Parses("mhtml", document = true, (t, _) => {
+      val m = graft.core.mail.Mhtml.parse(t.text)
+      (HtmlExtractor.mainText(m.html), files(m.parts))
+    }),
+    // OneNote section: RichEditTextUnicode paragraphs; embedded
+    // FileDataStoreObject payloads spawn as sniffed children named by
+    // their ordinal
+    Parses("one", document = true, (t, _) => {
+      val (txt, fs) = graft.core.office.OneNote.parseLatin1(t.text)
+      (txt, (sp, pid, ord, lvl) =>
+        sp.each(fs, ord)((b, o) => sp.spawnEntry(s"fileData_$o", Some(b), pid, o, lvl)))
+    }),
+    // winmail.dat: body text; attachments spawn like a message's
+    Parses("tnef", document = true, (t, _) => {
+      val m = graft.core.mail.Tnef.parseLatin1(t.text)
+      (m.body, (sp, pid, ord, lvl) => sp.each(m.attachments, ord)(sp.spawnAtt(_, pid, _, lvl)))
+    })
+  )
+
+  private val ContainerByKind: Map[String, Container] =
+    Containers.iterator.map(c => c.kind -> c).toMap
+
+  /** An OOXML/ODF/EPUB package's embedded parts — the entries that spawn
+    * as children of the package document (EPUB: its OPF manifest's
+    * image-typed items, not fixed path prefixes); None for a plain archive.
+    */
+  private def packageParts(entries: Entries): Option[Entries] =
+    if (!graft.core.office.Ooxml.isPackageEntries(entries)) None
+    else if (graft.core.office.Epub.isEpub(entries)) {
+      val imgs = graft.core.office.Epub.imageSet(entries)
+      Some(entries.filter(e => imgs(e._1)))
+    } else Some(entries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1)))
+
   /** Span kinds that spawn embedded children in [[explodeCounted]] /
-    * [[spawnContainers]].
+    * [[spawnContainers]]: the table's rows plus the top-level-only arms.
     */
   private val ContainerKinds: Set[String] =
-    Set("media", "zip", "gzip", "tar", "eml", "emlx", "mhtml", "cfb", "zstd", "bzip2", "xz", "lz4", "snappy", "compress", "lzma", "warc", "jsonl", "7z", "rar", "pst", "tnef", "mbox", "parquet", "avro", "sqlite", "ar", "cpio", "rpm", "plist", "iso", "chm", "cab", "one", "applesingle", "pdf_bytes")
+    ContainerByKind.keySet ++ Set("media", "pdf_bytes", "cfb", "pst")
 
   /** Null spans (a row written with spans=NULL) are treated as an empty
     * span array — reason=empty-file, never a failure.
@@ -236,15 +427,6 @@ object Extract {
     (root +: children, skipped)
   }
 
-  /** CONCATENATE embed mode (`EmbedParser.java:57-76`): embedded documents
-    * are not spawned as rows — each is parsed INLINE and wrapped in a
-    * package-entry division inside the parent's output
-    * (`<div class="package-entry"><h1>name</h1>…`), nameless entries named
-    * untitled_<ordinal>. A per-entry failure (encrypted, unparseable,
-    * parser crash) is captured IN the entry (`<p class="error">reason</p>`)
-    * and counted — the reference records it in the entry's metadata rather
-    * than failing the parent. Returns (concatenated html, n failed entries).
-    */
   /** XML-escape for entry names/text interpolated into the package markup —
     * the reference writes entries through an escaping XHTML content handler,
     * so entry CONTENT can never forge or break package-entry structure.
@@ -264,6 +446,15 @@ object Extract {
     sb.toString
   }
 
+  /** CONCATENATE embed mode (`EmbedParser.java:57-76`): embedded documents
+    * are not spawned as rows — each is parsed INLINE and wrapped in a
+    * package-entry division inside the parent's output
+    * (`<div class="package-entry"><h1>name</h1>…`), nameless entries named
+    * untitled_<ordinal>. A per-entry failure (encrypted, unparseable,
+    * parser crash) is captured IN the entry (`<p class="error">reason</p>`)
+    * and counted — the reference records it in the entry's metadata rather
+    * than failing the parent. Returns (concatenated html, n failed entries).
+    */
   def concatEmbeds(entries: Seq[(String, String)], cfg: Config = DefaultConfig)
   : (String, Int) = {
     var failed = 0
@@ -286,16 +477,15 @@ object Extract {
   /** Spawn embedded child documents from the parent's container spans (in
     * offset order) — the child half of [[explodeCounted]].
     *
-    * Container kinds:
-    *  - `media`: the synthetic chain model (`chain:a>b` nests) — ids from
-    *    the raw content;
-    *  - `zip`: REAL archive bytes (`java.util.zip`) — one child per entry
-    *    with resourceName = entry name (`EmbedSpawner.java:429-515`
-    *    semantics); an entry that is itself a zip becomes a container child
-    *    (id over its canonical entries, [[Ids.canonicalEntries]]) whose own
-    *    entries recurse depth-first, exactly like the reference's
-    *    tikaDocumentStack;
-    *  - `gzip`: single-member container, FNAME as the resource name.
+    * Every kind of the [[Containers]] table unpacks through its row: the
+    * children hang under the root at level 1, ordinals running across the
+    * spans. An entry that is itself a container becomes a container node
+    * (archives: id over its canonical entries, [[Ids.canonicalEntries]];
+    * parsed formats: id over the raw bytes) whose own children recurse
+    * depth-first through the same table, exactly like the reference's
+    * tikaDocumentStack. Four kinds keep a top-level arm of their own:
+    * `media` (the synthetic chain model, `chain:a>b` nests, ids from the
+    * raw content), `pdf_bytes` (page image XObjects), `cfb` and `pst`.
     *
     * Guards refuse BEFORE recursion (`EmbedSpawner.java:389-402`): depth,
     * declared/actual decompressed size, and breadth — refusals are counted,
@@ -305,16 +495,100 @@ object Extract {
   def spawnContainers(containers: Seq[(String, String)], rootId: String, cfg: Config,
                       deadlineNanos: Long = Long.MaxValue)
   : (Vector[DocOut], Int) = {
+    val sp = new Spawner(rootId, cfg, deadlineNanos)
+    var ord = 0
+    containers.foreach { case (kind, content) =>
+      ord = ContainerByKind.get(kind) match {
+        case Some(u: Unpacks) =>
+          // the archive IS the parent document: entries are its children
+          val entries = u.unpack(content.getBytes(ISO_8859_1), cfg.maxSpanChars)
+          sp.entries(if (u.pkg) packageParts(entries).getOrElse(entries) else entries,
+            rootId, ord, 1)
+        case Some(p: Parses) => p.parse(new Payload(content, null), cfg)._2(sp, rootId, ord, 1)
+        case None => kind match {
+          case "media" =>
+            sp.chain(content, rootId, ord, 1); ord + 1
+          case "cfb" =>
+            // the compound file IS the parent document: a message's
+            // attachments (file or nested message) become its children; a
+            // generic compound file spawns each stream sniffed like an
+            // archive entry
+            val entries = graft.core.office.Cfb.streamEntriesOf(content, cfg.maxSpanChars)
+            if (graft.core.office.Msg.isEncryptedOffice(entries)) {
+              // the silent-open defaults may open it as an ordinary OOXML
+              // package (body text already flowed via cfbText): spawn only
+              // its embedded parts, like the zip route; a real password
+              // throws DecryptFailure — never explode ciphertext children
+              val zip = graft.core.office.OoxmlCrypt.decryptDefault(entries)
+              val zipEntries = Zip.unpack(zip, cfg.maxSpanChars)
+              val spawnable =
+                if (graft.core.office.Ooxml.isPackageEntries(zipEntries))
+                  zipEntries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1))
+                else zipEntries
+              sp.entries(spawnable, rootId, ord, 1)
+            }
+            else if (graft.core.office.Msg.isMsg(entries))
+              sp.each(graft.core.office.Msg.parse(entries).attachments, ord)(
+                sp.spawnAtt(_, rootId, _, 1))
+            else if (graft.core.office.Msg.isLegacyDoc(entries))
+              // legacy Office document: body text via routeKind; only
+              // embedded OLE objects (ObjectPool) spawn as children
+              sp.entries(entries.filter(_._1.startsWith("ObjectPool/")), rootId, ord, 1)
+            else sp.entries(entries, rootId, ord, 1)
+          case "pdf_bytes" =>
+            // body text is the extractSpan route's; the page images (image
+            // XObjects) spawn as media children — the reference's
+            // `embedded:imageN` HTML children. Encrypted files spawn from
+            // the silently-opened cleartext; password-protected ones
+            // already classified and spawn nothing.
+            val clear =
+              if (graft.core.pdf.PdfMini.isEncryptedLatin1(content))
+                graft.core.pdf.PdfCrypt.decryptEmptyUser(content)
+              else Some(content)
+            clear.fold(ord)(c => files(graft.core.pdf.PdfMini.imageXObjects(c))(sp, rootId, ord, 1))
+          case "pst" =>
+            // the mailbox IS the parent document: folders, messages,
+            // attachments, recovered and failed entries hang below it.
+            // Top-level structural breakage (bad CRCs, truncation,
+            // encryption) classifies through the job layer like any other
+            // top-level parser failure
+            sp.pstNodes(graft.core.office.Pst.parse(content.getBytes(ISO_8859_1),
+              graft.core.office.Pst.byteBudget(cfg.maxSpanChars)), rootId, 1)
+            ord
+          case _ => ord // non-container kinds never reach here
+        }
+      }
+    }
+    (sp.out.result(), sp.skipped)
+  }
+
+  /** The embed-spawning state of one document: the emitted nodes, the
+    * refusal count and the breadth counter its guards read.
+    */
+  private final class Spawner(rootId: String, cfg: Config, deadlineNanos: Long) {
     val out = Vector.newBuilder[DocOut]
     var skipped = 0
-    var spawned = 0
+    private var spawned = 0
 
-    def guardsRefuse(level: Int, contentLen: Int): Boolean =
+    private def guardsRefuse(level: Int, contentLen: Int): Boolean =
       level > cfg.maxEmbedDepth || contentLen > cfg.maxSpanChars ||
         spawned >= cfg.maxSpans
 
+    /** Apply `f` to each item with its ordinal, from `ord`; returns the
+      * next ordinal.
+      */
+    def each[A](xs: IterableOnce[A], ord: Int)(f: (A, Int) => Unit): Int = {
+      var o = ord
+      xs.iterator.foreach { x => f(x, o); o += 1 }
+      o
+    }
+
+    /** Spawn each (name, bytes) entry sniffed like a file. */
+    def entries(es: Seq[Archive.UnzippedEntry], parentId: String, ord: Int, level: Int): Int =
+      each(es, ord)((e, o) => spawnEntry(e._1, e._2, parentId, o, level))
+
     // synthetic media chain (the original model)
-    def spawn(content: String, parentId: String, ord: Int, level: Int): Unit = {
+    def chain(content: String, parentId: String, ord: Int, level: Int): Unit = {
       checkDeadline(deadlineNanos)
       if (guardsRefuse(level, content.length)) { skipped += 1; return }
       spawned += 1
@@ -330,18 +604,19 @@ object Extract {
         else Array(SpanOut("text", own, "", 0))
       out += DocOut(cid, parentId, rootId, level,
         spans, if (own.isEmpty) Reason.Empty else "")
-      nested.foreach(n => spawn("chain:" + n, cid, 0, level + 1))
+      nested.foreach(n => chain("chain:" + n, cid, 0, level + 1))
     }
 
-    def canonicalOf(entries: Vector[graft.sources.Archive.UnzippedEntry]): String =
+    private def canonicalOf(entries: Entries): String =
       Ids.canonicalEntries(entries.map { case (n, b) =>
-        (n, b.map(x => new String(x, java.nio.charset.StandardCharsets.ISO_8859_1)).getOrElse(""))
+        (n, b.map(x => new String(x, ISO_8859_1)).getOrElse(""))
       })
 
     // emit one DOCUMENT node: the body as its single text span,
     // empty-file reason when bodyless — the shared emission shape for
-    // msg / legacy-Office / nested-mail / jsonl-line children
-    def emitDoc(cid: String, parentId: String, level: Int, body: String): Unit = {
+    // msg / legacy-Office / nested-mail / jsonl-line children and for
+    // container nodes (empty body)
+    private def emitDoc(cid: String, parentId: String, level: Int, body: String): Unit = {
       val spans =
         if (body.isEmpty) Array.empty[SpanOut] else Array(SpanOut("text", body, "", 0))
       out += DocOut(cid, parentId, rootId, level, spans,
@@ -353,12 +628,8 @@ object Extract {
     // resilience), never a parent failure. Identity hashes the TRIMMED
     // line — deliberately CRLF- and indent-insensitive, so the same
     // logical record gets the same id from an LF and a CRLF dump.
-    // Shared by the top-level jsonl span and nested jsonl entries
-    // (.jsonl.gz / jsonl-in-zip) so the two can never diverge.
-    def spawnJsonlLines(content: String, parentId: String, startOrd: Int,
-                        level: Int): Int = {
-      var o = startOrd
-      content.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
+    def jsonlLines(content: String, parentId: String, startOrd: Int, level: Int): Int =
+      each(content.split('\n').iterator.map(_.trim).filter(_.nonEmpty), startOrd) { (line, o) =>
         checkDeadline(deadlineNanos)
         if (guardsRefuse(level, line.length)) skipped += 1
         else {
@@ -366,30 +637,18 @@ object Extract {
           val txt = graft.core.text.Jsonl.textField(line).getOrElse("")
           emitDoc(Ids.embedId(line, parentId, o), parentId, level, txt)
         }
-        o += 1
       }
-      o
-    }
 
-    // one parquet corpus dump -> one child per ROW (the jsonl contract
-    // for columnar dumps): identity hashes the row's text value; NULL
-    // rows are empty children; EVERY row past the breadth cap refuses
+    // one dump row -> one child: identity hashes the row's text value;
+    // NULL rows are empty children; EVERY row past the breadth cap refuses
     // COUNTED — the ones read then guarded, and the declared remainder
     // the reader never materialized (footer row count is metadata)
-    def dumpRowCap: Int = // overflow-safe headroom over the breadth guard
-      if (cfg.maxSpans > Int.MaxValue - 64) Int.MaxValue else cfg.maxSpans + 64
-    def readParquetRows(data: Array[Byte]): (Vector[String], Long) =
-      graft.sources.ParquetDump.textRows(data, dumpRowCap, cfg.maxSpanChars)
-    def readAvroRows(data: Array[Byte]): (Vector[String], Long) =
-      graft.sources.AvroDump.textRows(data, dumpRowCap, cfg.maxSpanChars)
-    def emitDumpRows(rows: Vector[String], declaredTotal: Long,
-                     parentId: String, startOrd: Int, level: Int): Int = {
-      var o = startOrd
-      rows.foreach { txt =>
+    def dumpRows(rows: Vector[String], declaredTotal: Long,
+                 parentId: String, startOrd: Int, level: Int): Int = {
+      val o = each(rows, startOrd) { (txt, o) =>
         checkDeadline(deadlineNanos)
         if (guardsRefuse(level, txt.length)) skipped += 1
         else { spawned += 1; emitDoc(Ids.embedId(txt, parentId, o), parentId, level, txt) }
-        o += 1
       }
       if (declaredTotal > rows.length) // clamp: a forged huge row count must not wrap the counter
         skipped += math.min(declaredTotal - rows.length, (Int.MaxValue - skipped).toLong).toInt
@@ -400,11 +659,9 @@ object Extract {
     // (header + tab-joined rows, the csv/xls text shape); BLOB cells spawn
     // as sniffed embedded children below their table — Tika's
     // SQLite3Parser shape (tables as embedded documents, blobs nested).
-    // Shared by the top-level sqlite span and nested sqlite entries.
-    def spawnSqliteTables(tabs: Vector[graft.core.db.Sqlite.Table],
-                          parentId: String, startOrd: Int, level: Int): Int = {
-      var o = startOrd
-      tabs.foreach { tab =>
+    def sqliteTables(tabs: Vector[graft.core.db.Sqlite.Table],
+                     parentId: String, startOrd: Int, level: Int): Int =
+      each(tabs, startOrd) { (tab, o) =>
         checkDeadline(deadlineNanos)
         val txt = graft.core.db.Sqlite.tableText(tab)
         if (guardsRefuse(level, txt.length)) skipped += 1
@@ -422,15 +679,11 @@ object Extract {
             }
           }
         }
-        o += 1
       }
-      o
-    }
 
     // one raw mbox message chunk -> an eml-shaped document child (body +
-    // recursing attachments); shared by the top-level mbox span and
-    // nested mbox entries so the two routes cannot diverge
-    def spawnMboxMessage(raw: String, parentId: String, ord: Int, level: Int): Unit = {
+    // recursing attachments)
+    def mboxMessage(raw: String, parentId: String, ord: Int, level: Int): Unit = {
       checkDeadline(deadlineNanos)
       if (guardsRefuse(level, raw.length)) { skipped += 1; return }
       spawned += 1
@@ -462,8 +715,8 @@ object Extract {
     // `3rd-level-bug-732.msg` shape) recurses as another message child.
     // Identity hashes the message's LOGICAL canonical fields
     // (Msg.canonical), so property-stream encoding never changes ids.
-    def spawnMsg(m: graft.core.office.Msg.MsgDoc, resourceName: String,
-                 parentId: String, ord: Int, level: Int): Unit = {
+    private def spawnMsg(m: graft.core.office.Msg.MsgDoc, resourceName: String,
+                         parentId: String, ord: Int, level: Int): Unit = {
       checkDeadline(deadlineNanos)
       val canon = graft.core.office.Msg.canonical(m)
       if (guardsRefuse(level, canon.length)) { skipped += 1; return }
@@ -501,8 +754,7 @@ object Extract {
     // every contents table land under a [recovered] node — the
     // reference's ResilientOutlookPSTParser semantics
     // (`ResilientOutlookPSTParser.java:71-320`).
-    def spawnPstNodes(pst: graft.core.office.Pst.PstFile, parentId: String,
-                      level: Int): Unit = {
+    def pstNodes(pst: graft.core.office.Pst.PstFile, parentId: String, level: Int): Unit = {
       checkDeadline(deadlineNanos)
       val Root = graft.core.office.Pst.RootFolderNid
       // tree keyed by NID, never by display-name paths: folder names may
@@ -570,11 +822,11 @@ object Extract {
       }
     }
 
-    // one REAL archive entry -> one child document: plain archives
-    // (zip/tar/gzip) become container nodes whose entries recurse; an OOXML
-    // package (docx) becomes a DOCUMENT child (body text + its embedded
-    // parts); anything else SNIFFS its kind and extracts like a top-level
-    // file (rtf/pdf/html/text/bin)
+    // one REAL archive entry -> one child document: a container format
+    // (a row of the Containers table) becomes a container or document node
+    // whose children recurse; an OOXML package (docx) becomes a DOCUMENT
+    // child (body text + its embedded parts); anything else SNIFFS its
+    // kind and extracts like a top-level file (rtf/pdf/html/text/bin)
     def spawnEntry(name: String, bytes: Option[Array[Byte]], parentId: String,
                    ord: Int, level: Int): Unit = {
       checkDeadline(deadlineNanos)
@@ -610,7 +862,7 @@ object Extract {
         // never fail the parent. Parse happens BEFORE any emission so a
         // failure can never leave a duplicate/partial node behind; an
         // encrypted pst classifies encrypted, a broken one parse-failure
-        val latin1 = new String(data, java.nio.charset.StandardCharsets.ISO_8859_1)
+        val latin1 = new String(data, ISO_8859_1)
         val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
         val parsed =
           try Right(graft.core.office.Pst.parse(data,
@@ -622,7 +874,7 @@ object Extract {
         parsed match {
           case Right(pst) =>
             emitDoc(cid, parentId, level, "")
-            spawnPstNodes(pst, cid, level + 1)
+            pstNodes(pst, cid, level + 1)
           case Left(reason) =>
             out += DocOut(cid, parentId, rootId, level, Array.empty, reason)
         }
@@ -636,8 +888,7 @@ object Extract {
       // at the child's own frame). Deadline/VM errors still propagate.
       def entryFailure(reason: String): Unit =
         out += DocOut(
-          Ids.embedId(new String(data, java.nio.charset.StandardCharsets.ISO_8859_1),
-            parentId, ord, resourceName = name),
+          Ids.embedId(new String(data, ISO_8859_1), parentId, ord, resourceName = name),
           parentId, rootId, level, Array.empty, reason)
       if (graft.core.office.Cfb.isCfb(data)) {
         try {
@@ -667,15 +918,11 @@ object Extract {
             // archive entry
             val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
             emitDoc(cid, parentId, level, body)
-            entries.filter(_._1.startsWith("ObjectPool/")).zipWithIndex.foreach {
-              case ((n, b), i) => spawnEntry(n, b, cid, i, level + 1)
-            }
+            this.entries(entries.filter(_._1.startsWith("ObjectPool/")), cid, 0, level + 1): Unit
           case None =>
             val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
             emitDoc(cid, parentId, level, "") // empty container node
-            entries.zipWithIndex.foreach { case ((n, b), i) =>
-              spawnEntry(n, b, cid, i, level + 1)
-            }
+            this.entries(entries, cid, 0, level + 1): Unit
         }
         } catch {
           case _: graft.core.DecryptFailure => entryFailure(Reason.Encrypted)
@@ -684,468 +931,59 @@ object Extract {
         return
       }
       try {
-      val containerEntries: Option[Vector[graft.sources.Archive.UnzippedEntry]] =
-        if (graft.sources.Archive.isZip(data))
-          Some(graft.sources.Archive.unzip(data, cfg.maxSpanChars))
-        else if (graft.sources.Archive.isTar(data))
-          Some(graft.sources.Archive.untar(data, cfg.maxSpanChars))
-        else if (graft.sources.Archive.is7z(data))
-          Some(graft.sources.Archive.un7z(data, cfg.maxSpanChars))
-        else if (graft.sources.Rar.isRar(data))
-          // nested rar (the email-attachment shape): stored members
-          // recurse, compressed ones stay counted refusals
-          Some(graft.sources.Rar.entries(data, cfg.maxSpanChars))
-        else if (graft.sources.Archive.isAr(data))
-          // nested unix archive (.deb attachment): members recurse —
-          // control.tar.gz/data.tar.xz chain through the codec branches
-          Some(graft.sources.Archive.unar(data, cfg.maxSpanChars))
-        else if (graft.sources.Archive.isCpio(data))
-          Some(graft.sources.Archive.uncpio(data, cfg.maxSpanChars))
-        else if (graft.sources.Archive.isRpm(data))
-          // nested rpm: payload framing flattened, files are the entries
-          Some(graft.sources.Archive.rpmEntries(data, cfg.maxSpanChars))
-        else if (graft.sources.Iso.isIso(data))
-          // nested disk image (iso-in-zip, the evidence-drop shape):
-          // files recurse as path-named entries
-          Some(graft.sources.Iso.entries(data, cfg.maxSpanChars))
-        else if (graft.sources.Chm.isChm(data))
-          // nested compiled help: topic files recurse as entries
-          Some(graft.sources.Chm.entries(data, cfg.maxSpanChars))
-        else if (graft.sources.Cab.isCab(data))
-          // nested cabinet (cab-in-zip, the driver-package shape)
-          Some(graft.sources.Cab.entries(data, cfg.maxSpanChars))
-        else if (graft.sources.Archive.isGzip(data))
-          // a nested gzip member (e.g. a .tgz mail attachment) is a
-          // single-entry container; a tar payload then recurses below
-          Some(Vector(graft.sources.Archive.gunzip(data, cfg.maxSpanChars)))
-        else if (graft.sources.Archive.isZstd(data))
-          Some(Vector(graft.sources.Archive.unzstd(data, cfg.maxSpanChars)))
-        else if (graft.sources.Archive.isBzip2(data))
-          Some(Vector(graft.sources.Archive.unbzip2(data, cfg.maxSpanChars)))
-        else if (graft.sources.Archive.isXz(data))
-          Some(Vector(graft.sources.Archive.unxz(data, cfg.maxSpanChars)))
-        else if (graft.sources.Archive.isCompressZ(data))
-          Some(Vector(graft.sources.Archive.uncompressZ(data, cfg.maxSpanChars)))
-        else if (graft.sources.Archive.isLzma(data))
-          Some(Vector(graft.sources.Archive.unlzma(data, cfg.maxSpanChars)))
-        else if (graft.sources.Archive.isLz4(data))
-          Some(Vector(graft.sources.Archive.unlz4(data, cfg.maxSpanChars)))
-        else if (graft.sources.Archive.isSnappy(data))
-          Some(Vector(graft.sources.Archive.unsnappy(data, cfg.maxSpanChars)))
-        else if (graft.sources.Apple.isAppleSingle(data))
-          // nested AppleSingle (Mac tarball shape): one transport entry —
-          // the data fork under the real name, re-sniffed below
-          Some(Vector(graft.sources.Apple.unwrap(data, cfg.maxSpanChars)))
-        else if (graft.sources.Warc.isWarc(data))
-          // nested web archive (the .warc.gz shape): records are its
-          // entries, target URIs their resource names
-          Some(graft.sources.Warc.records(
-            new String(data, java.nio.charset.StandardCharsets.ISO_8859_1),
-            cfg.maxSpanChars).map(r => (r.targetUri, r.body)))
-        else None
-      containerEntries match {
-        case Some(entries) if graft.core.office.Ooxml.isPackageEntries(entries) =>
-          // embedded Office document (docx/xlsx/pptx/odt/epub): body text
-          // on the child, embedded media/object parts recurse — EPUB's
-          // embedded parts come from its OPF manifest (image-typed items),
-          // not from fixed path prefixes
-          val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
-          emitDoc(cid, parentId, level, graft.core.office.Ooxml.textFromEntries(entries))
-          val embedded =
-            if (graft.core.office.Epub.isEpub(entries)) {
-              val imgs = graft.core.office.Epub.imageSet(entries)
-              entries.filter(e => imgs(e._1))
-            } else entries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1))
-          embedded.zipWithIndex.foreach { case ((n, b), i) => spawnEntry(n, b, cid, i, level + 1) }
-        case Some(entries) =>
-          val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
-          // container node: no own text; its content lives in its children
-          emitDoc(cid, parentId, level, "") // empty container node
-          entries.zipWithIndex.foreach { case ((n, b), i) =>
-            spawnEntry(n, b, cid, i, level + 1)
-          }
-        case None =>
-          // content IDENTITY hashes the raw bytes (byte-transparent
-          // ISO-8859-1 mapping); a lossy UTF-8 id would collide two
-          // distinct binary payloads onto one replacement-char string.
-          // The entry's KIND is sniffed like a top-level file (magic
-          // bytes), so an rtf/pdf/html nested in an archive extracts the
-          // same clean text it would standalone instead of leaking markup
-          val latin1 = new String(data, java.nio.charset.StandardCharsets.ISO_8859_1)
-          // entry NAME rides into the sniff as the same tiebreaker the
-          // real file walk uses (a data.csv zip entry routes as csv)
-          val kind = graft.sources.Ingest.sniffKind(data, name)
-          if (kind == "jsonl") {
-            // nested corpus dump (.jsonl.gz, jsonl-in-zip): a container
-            // child whose per-line documents hang below it — WITHOUT this
-            // branch the lines would silently collapse into one empty child
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, "") // empty container node
-            spawnJsonlLines(graft.sources.Ingest.decodePayload(kind, data), cid, 0, level + 1)
-          } else if (kind == "eml") {
-            // nested mail (eml-in-zip/tgz): a document child carrying the
-            // body, its attachments recursing below — mail-in-archive is
-            // reference bread-and-butter (RFC822Parser inside EmbedSpawner)
-            val m = graft.core.mail.Eml.parse(latin1)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, m.body)
-            m.attachments.zipWithIndex.foreach { case ((n, b), i) =>
-              spawnEntry(n, Some(b), cid, i, level + 1)
+        // the entry NAME rides into the sniff as the same tiebreaker the
+        // real file walk uses (a data.csv zip entry routes as csv)
+        lazy val sniffed = graft.sources.Ingest.sniffKind(data, name)
+        Containers.find(_.detect(data, sniffed)) match {
+          case Some(u: Unpacks) =>
+            // a nested archive (tar/7z/rar/... in a zip, a .tgz mail
+            // attachment): its id is computed over its canonical entries
+            val entries = u.unpack(data, cfg.maxSpanChars)
+            val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
+            packageParts(entries) match {
+              case Some(parts) =>
+                // embedded Office document (docx/xlsx/pptx/odt/epub): body
+                // text on the child, embedded media/object parts recurse
+                emitDoc(cid, parentId, level, graft.core.office.Ooxml.textFromEntries(entries))
+                this.entries(parts, cid, 0, level + 1): Unit
+              case None =>
+                // container node: no own text; its content lives in its children
+                emitDoc(cid, parentId, level, "")
+                this.entries(entries, cid, 0, level + 1): Unit
             }
-          } else if (kind == "parquet") {
-            // nested columnar dump (parquet-in-zip/tar): a container child
-            // whose per-row documents hang below it. Parse BEFORE the
-            // first emission — a corrupt nested dump must yield exactly
-            // one failure node, never a duplicate-id container + failure
-            val (rows, total) = readParquetRows(data)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, "") // pure container node
-            emitDumpRows(rows, total, cid, 0, level + 1): Unit
-          } else if (kind == "avro") {
-            // nested avro dump: same shape as nested parquet — parse
-            // before the first emission
-            val (rows, total) = readAvroRows(data)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, "") // pure container node
-            emitDumpRows(rows, total, cid, 0, level + 1): Unit
-          } else if (kind == "sqlite") {
-            // nested database (db-in-zip, the phone-backup shape): a
-            // container child whose per-table documents hang below it —
-            // parse before the first emission so a corrupt nested db
-            // yields exactly one failure node
-            val tabs = graft.core.db.Sqlite.tables(data, maxCells = dumpRowCap)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, "") // pure container node
-            spawnSqliteTables(tabs, cid, 0, level + 1): Unit
-          } else if (kind == "plist") {
-            // nested binary plist (plist-in-zip, the app-artifact shape):
-            // a document child carrying the rendered text, its NSData
-            // payloads recursing below — parse before the first emission
-            val parsed = graft.core.db.Plist.parse(data)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, graft.core.db.Plist.text(parsed))
-            graft.core.db.Plist.dataBlobs(parsed).zipWithIndex.foreach {
-              case ((path, b), i) => spawnEntry(path, Some(b), cid, i, level + 1)
-            }
-          } else if (kind == "mbox") {
-            // nested mailbox (mbox.gz, mbox-in-zip): a container child
-            // whose messages hang below it
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, "") // pure container node
-            // latin1 IS the byte-transparent payload decodePayload would
-            // produce for mbox — reuse it instead of re-decoding
-            graft.core.mail.Mbox.split(latin1).zipWithIndex.foreach {
-              case (raw, i) => spawnMboxMessage(raw, cid, i, level + 1)
-            }
-          } else if (kind == "emlx") {
-            // nested Apple Mail store file (the Mail-folder-tarball
-            // shape): a document child carrying the framed message's
-            // body, attachments recursing
-            val m = graft.core.mail.Eml.parseEmlx(latin1)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, m.body)
-            m.attachments.zipWithIndex.foreach { case ((n, b), i) =>
-              spawnEntry(n, Some(b), cid, i, level + 1)
-            }
-          } else if (kind == "mhtml") {
-            // nested page save (mht-in-zip, mht mail attachment): a
-            // document child carrying the page's extracted main text,
-            // its saved resources recursing below
-            val m = graft.core.mail.Mhtml.parse(latin1)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, HtmlExtractor.mainText(m.html))
-            m.parts.zipWithIndex.foreach { case ((n, b), i) =>
-              spawnEntry(n, Some(b), cid, i, level + 1)
-            }
-          } else if (kind == "one") {
-            // nested OneNote section (.one inside a notebook zip): a
-            // document child carrying its paragraphs, embedded
-            // FileDataStoreObject payloads recursing as sniffed children
-            val (txt1, fs) = graft.core.office.OneNote.parse(data)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, txt1)
-            fs.zipWithIndex.foreach { case (fb, i) =>
-              spawnEntry(s"fileData_$i", Some(fb), cid, i, level + 1)
-            }
-          } else if (kind == "tnef") {
-            // nested winmail.dat (the REAL shape: a TNEF attachment inside
-            // an eml): a document child carrying the body, attachments
-            // recursing — id hashes the raw bytes like nested eml
-            val m = graft.core.mail.Tnef.parseLatin1(latin1)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, m.body)
-            m.attachments.zipWithIndex.foreach { case (a, i) => spawnAtt(a, cid, i, level + 1) }
-          } else {
+          case Some(p: Parses) =>
+            // a nested parsed format (eml-in-zip, mbox.gz, db-in-zip):
+            // parse BEFORE the first emission, then a document node (its
+            // body) or a pure container node, children one level down.
+            // Identity hashes the raw bytes like any other nested file
+            val (body, kids) =
+              p.parse(new Payload(graft.sources.Ingest.decodePayload(p.kind, data), data), cfg)
+            val cid = Ids.embedId(new String(data, ISO_8859_1), parentId, ord, resourceName = name)
+            emitDoc(cid, parentId, level, body)
+            kids(this, cid, 0, level + 1): Unit
+          case None =>
+            // content IDENTITY hashes the raw bytes (byte-transparent
+            // ISO-8859-1 mapping); a lossy UTF-8 id would collide two
+            // distinct binary payloads onto one replacement-char string.
+            // The entry's KIND is sniffed like a top-level file (magic
+            // bytes), so an rtf/pdf/html nested in an archive extracts the
+            // same clean text it would standalone instead of leaking markup
+            val kind = sniffed
             val payload = graft.sources.Ingest.decodePayload(kind, data)
             // markers=false: failure-injection markers are a top-level-span
             // contract; untrusted entry BYTES must never fail/hang the parent
             val (txt, why) = extractSpan(kind, payload, cfg, markers = false)
-            val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
+            val cid = Ids.embedId(new String(data, ISO_8859_1), parentId, ord, resourceName = name)
             val spans =
               if (txt.isEmpty) Array.empty[SpanOut]
               else Array(SpanOut(kind, txt, "", 0))
             out += DocOut(cid, parentId, rootId, level, spans,
               if (txt.nonEmpty) "" else if (why.nonEmpty) why else Reason.Empty)
-          }
-      }
+        }
       } catch {
         case _: graft.core.DecryptFailure => entryFailure(Reason.Encrypted)
         case _: graft.core.ParseFailure => entryFailure(Reason.ParseFailed)
       }
     }
-
-    var ord = 0
-    containers.foreach { case (kind, content) =>
-      kind match {
-        case "media" =>
-          spawn(content, rootId, ord, 1); ord += 1
-        case "zip" =>
-          // the archive IS the parent document: entries are its children.
-          // An OOXML PACKAGE (docx/xlsx/pptx) instead contributes body text
-          // to the parent (extractSpan's zip route) and spawns only its
-          // embedded media/object parts.
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val entries = graft.sources.Archive.unzip(bytes, cfg.maxSpanChars)
-          val spawnable =
-            if (graft.core.office.Epub.isEpub(entries)) {
-              // EPUB package: embedded parts are its OPF manifest's
-              // image-typed items, not fixed path prefixes
-              val imgs = graft.core.office.Epub.imageSet(entries)
-              entries.filter(e => imgs(e._1))
-            } else if (graft.core.office.Ooxml.isPackageEntries(entries))
-              entries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1))
-            else entries
-          spawnable.foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "tar" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Archive.untar(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "7z" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Archive.un7z(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "rar" =>
-          // stored members spawn; compressed members are counted refusals
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Rar.entries(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "ar" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Archive.unar(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "cpio" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Archive.uncpio(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "iso" =>
-          // disk image: its files are path-named children (Joliet names
-          // when the supplementary descriptor announces them)
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Iso.entries(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "chm" =>
-          // compiled help: topic files are path-named children; the
-          // compressed section LZX-decodes once for all of them
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Chm.entries(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "cab" =>
-          // cabinet: files are children; each MSZIP folder inflates once
-          // for all of its files (history carried across blocks)
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Cab.entries(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "rpm" =>
-          // the package's FILES are its children (rpm2cpio | cpio): the
-          // compressed payload is transport framing, never a node — the
-          // same flattening Tika's RpmParser applies
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.sources.Archive.rpmEntries(bytes, cfg.maxSpanChars).foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "gzip" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.gunzip(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "zstd" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.unzstd(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "bzip2" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.unbzip2(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "xz" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.unxz(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "compress" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.uncompressZ(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "lzma" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.unlzma(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "lz4" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.unlz4(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "snappy" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (n, b) = graft.sources.Archive.unsnappy(bytes, cfg.maxSpanChars)
-          spawnEntry(n, b, rootId, ord, 1); ord += 1
-        case "warc" =>
-          // each content-bearing web-archive record (response/resource)
-          // becomes a child: target URI as resource name, body sniffed
-          // like any ingested file (html flows through the charset decode
-          // and boilerplate stripper)
-          graft.sources.Warc.records(content, cfg.maxSpanChars).foreach { r =>
-            spawnEntry(r.targetUri, r.body, rootId, ord, 1); ord += 1
-          }
-        case "jsonl" =>
-          // one JSON object per line = one logical document per line
-          // (shared with the NESTED route via spawnJsonlLines)
-          ord = spawnJsonlLines(content, rootId, ord, 1)
-        case "cfb" =>
-          // the compound file IS the parent document: a message's
-          // attachments (file or nested message) become its children; a
-          // generic compound file spawns each stream sniffed like an
-          // archive entry
-          val entries = graft.core.office.Cfb.streamEntriesOf(content, cfg.maxSpanChars)
-          if (graft.core.office.Msg.isEncryptedOffice(entries)) {
-            // the silent-open defaults may open it as an ordinary OOXML
-            // package (body text already flowed via cfbText): spawn only
-            // its embedded parts, like the zip route; a real password
-            // throws DecryptFailure — never explode ciphertext children
-            val zip = graft.core.office.OoxmlCrypt.decryptDefault(entries)
-            val zipEntries = graft.sources.Archive.unzip(zip, cfg.maxSpanChars)
-            val spawnable =
-              if (graft.core.office.Ooxml.isPackageEntries(zipEntries))
-                zipEntries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1))
-              else zipEntries
-            spawnable.foreach { case (n, b) =>
-              spawnEntry(n, b, rootId, ord, 1); ord += 1
-            }
-          }
-          else if (graft.core.office.Msg.isMsg(entries))
-            graft.core.office.Msg.parse(entries).attachments.foreach { a =>
-              spawnAtt(a, rootId, ord, 1); ord += 1
-            }
-          else if (graft.core.office.Msg.isLegacyDoc(entries))
-            // legacy Office document: body text via routeKind; only
-            // embedded OLE objects (ObjectPool) spawn as children
-            entries.filter(_._1.startsWith("ObjectPool/")).foreach { case (n, b) =>
-              spawnEntry(n, b, rootId, ord, 1); ord += 1
-            }
-          else entries.foreach { case (n, b) =>
-            spawnEntry(n, b, rootId, ord, 1); ord += 1
-          }
-        case "eml" =>
-          // mail attachments are entries of the message (RFC822Parser
-          // semantics): filename as resource name; a zipped attachment
-          // re-enters the archive recursion via spawnEntry's sniff
-          graft.core.mail.Eml.parse(content).attachments.foreach { case (n, b) =>
-            spawnEntry(n, Some(b), rootId, ord, 1); ord += 1
-          }
-        case "emlx" =>
-          // same attachment explosion as eml, behind the length framing
-          graft.core.mail.Eml.parseEmlx(content).attachments.foreach { case (n, b) =>
-            spawnEntry(n, Some(b), rootId, ord, 1); ord += 1
-          }
-        case "mhtml" =>
-          // page-save resources (images, stylesheets, scripts) are the
-          // archive's entries, named by their Content-Location URL's last
-          // segment; each is sniffed like any embedded file
-          graft.core.mail.Mhtml.parse(content).parts.foreach { case (n, b) =>
-            spawnEntry(n, Some(b), rootId, ord, 1); ord += 1
-          }
-        case "parquet" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (rows, total) = readParquetRows(bytes)
-          ord = emitDumpRows(rows, total, rootId, ord, 1)
-        case "avro" =>
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (rows, total) = readAvroRows(bytes)
-          ord = emitDumpRows(rows, total, rootId, ord, 1)
-        case "sqlite" =>
-          // the database IS the parent document: one tabular child per
-          // user table, blob cells sniffed and recursing below
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          ord = spawnSqliteTables(graft.core.db.Sqlite.tables(bytes,
-            maxCells = dumpRowCap), rootId, ord, 1)
-        case "plist" =>
-          // the rendered path:value text is the parent's span (extractSpan
-          // route); embedded NSData payloads spawn as sniffed children,
-          // their dotted paths the resource names
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          graft.core.db.Plist.dataBlobs(graft.core.db.Plist.parse(bytes))
-            .foreach { case (path, b) =>
-              spawnEntry(path, Some(b), rootId, ord, 1); ord += 1
-            }
-        case "mbox" =>
-          // each mailbox message is a document child carrying its parsed
-          // RFC-822 body, attachments recursing — same shape as nested
-          // eml; ids hash the raw message chunk
-          graft.core.mail.Mbox.split(content).foreach { raw =>
-            spawnMboxMessage(raw, rootId, ord, 1); ord += 1
-          }
-        case "tnef" =>
-          // winmail.dat IS the message: body text on the root (routeKind),
-          // attachments as sniffed children — same shape as eml
-          graft.core.mail.Tnef.parseLatin1(content).attachments.foreach { a =>
-            spawnAtt(a, rootId, ord, 1); ord += 1
-          }
-        case "applesingle" =>
-          // the envelope is transport: the data fork IS the file, spawned
-          // sniffed under the envelope's real name (RFC 1740 entry 3)
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          val (aname, fork) = graft.sources.Apple.unwrap(bytes, cfg.maxSpanChars)
-          spawnEntry(aname, fork, rootId, ord, 1); ord += 1
-        case "one" =>
-          // the section's paragraphs are the parent's span (extractSpan
-          // route); embedded FileDataStoreObject payloads spawn as
-          // sniffed children with ordinal resource names
-          graft.core.office.OneNote.parseLatin1(content)._2.foreach { b =>
-            spawnEntry(s"fileData_$ord", Some(b), rootId, ord, 1); ord += 1
-          }
-        case "pdf_bytes" =>
-          // body text is the extractSpan route's; the page images (image
-          // XObjects) spawn as media children — the reference's
-          // `embedded:imageN` HTML children. Encrypted files spawn from
-          // the silently-opened cleartext; password-protected ones
-          // already classified and spawn nothing.
-          val clear =
-            if (graft.core.pdf.PdfMini.isEncryptedLatin1(content))
-              graft.core.pdf.PdfCrypt.decryptEmptyUser(content)
-            else Some(content)
-          clear.foreach { c =>
-            graft.core.pdf.PdfMini.imageXObjects(c).foreach { case (n, b) =>
-              spawnEntry(n, Some(b), rootId, ord, 1); ord += 1
-            }
-          }
-        case "pst" =>
-          // the mailbox IS the parent document: folders, messages,
-          // attachments, recovered and failed entries hang below it.
-          // Top-level structural breakage (bad CRCs, truncation,
-          // encryption) classifies through the job layer like any other
-          // top-level parser failure
-          val bytes = content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          spawnPstNodes(graft.core.office.Pst.parse(bytes,
-            graft.core.office.Pst.byteBudget(cfg.maxSpanChars)), rootId, 1)
-        case _ => () // non-container kinds never reach here
-      }
-    }
-    (out.result(), skipped)
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.catalog.SnapshotTable.deleteRecursively
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -189,13 +190,5 @@ object Sink {
     if (Files.exists(dest)) Files.move(dest, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
     if (Files.exists(old)) deleteRecursively(old)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(c => deleteRecursively(c)) finally s.close()
-    }
-    Files.deleteIfExists(p)
   }
 }

@@ -16,11 +16,6 @@ import graft.core.{DocIn, SpanIn}
   */
 object Ingest {
 
-  /** Magic-byte MIME sniff (public magic numbers): %PDF -> pdf_bytes,
-    * <!doctype/<html -> html, PK\x03\x04 -> zip container (exploded to
-    * children by Extract.spawnContainers), 1f 8b -> gzip,
-    * mostly-printable -> text, else bin.
-    */
   /** Leading STRONG mail-header line — the content-based RFC-822
     * detection Tika applies to extensionless mail, restricted to headers
     * prose essentially never opens with ("To: whoever" starts plenty of
@@ -32,13 +27,13 @@ object Ingest {
   // structural check (multipart/related for mhtml), never mail-routing alone
   private val HeaderLineRe = "(?i)^[a-z][a-z0-9-]*:".r
 
+  /** Magic-byte MIME sniff (public magic numbers): %PDF -> pdf_bytes,
+    * <!doctype/<html -> html, PK\x03\x04 -> zip container (exploded to
+    * children by Extract.spawnContainers), 1f 8b -> gzip,
+    * mostly-printable -> text, else bin.
+    */
   def sniffKind(bytes: Array[Byte]): String = sniffKind(bytes, "")
 
-  /** As [[sniffKind]], with the file/entry NAME as a tiebreaker for
-    * text-like formats magic bytes cannot distinguish (.csv tables, .eml
-    * mail) — the reference's Tika detection combines magic and filename
-    * the same way (`Extractor.java:937`).
-    */
   /** CMS/PKCS#7 DER sniff (smime.p7m bodies): an ASN.1 SEQUENCE whose
     * pkcs7 content-type OID arc (1.2.840.113549.1.7.x) appears in the
     * head. 2 = EnvelopedData (x=3, key-gated ciphertext) or the S/MIME
@@ -63,6 +58,11 @@ object Ingest {
     0
   }
 
+  /** As [[sniffKind]], with the file/entry NAME as a tiebreaker for
+    * text-like formats magic bytes cannot distinguish (.csv tables, .eml
+    * mail) — the reference's Tika detection combines magic and filename
+    * the same way (`Extractor.java:937`).
+    */
   def sniffKind(bytes: Array[Byte], name: String): String = {
     // a UTF-8 BOM blinds every head magic (a BOM'd HTML file would read
     // as plain text): detection runs on the BOM-less view, exactly as

@@ -582,4 +582,65 @@ class ArchiveSpec extends AnyFunSuite {
       Array(graft.core.SpanIn("lzma", new String(tl, ISO_8859_1), "", 0))))
     assert(out.filter(_.level == 2).flatMap(_.spans).map(_.text) == Seq("tar in lzma"))
   }
+
+  // Cross-route parity: every archive/codec row of Extract's container
+  // table unpacks the same way at the root and as an entry of a zip. One
+  // fixture per kind (the repo's own writers) with the (resource name,
+  // text) entries it must unpack to; codec members carry no name.
+  private def parityFixtures: Seq[(String, Array[Byte], Seq[(String, String)])] = {
+    import graft.sources.{Apple, Cab, Chm, Iso, Rar, Warc}
+    val pair = Seq(("A.TXT", "alpha parity text"), ("B.TXT", "beta parity text"))
+    val pairBytes = pair.map { case (n, t) => (n, t.getBytes(UTF_8)) }
+    val text = "single member parity text"
+    val member = text.getBytes(UTF_8)
+    Seq(
+      ("zip", Archive.zipBytes(pairBytes), pair),
+      ("tar", Archive.tarBytes(pairBytes), pair),
+      ("7z", Archive.sevenZBytes(pairBytes), pair),
+      ("rar", Rar.buildRar4(pairBytes), pair),
+      ("ar", Archive.arBytes(pairBytes), pair),
+      ("cpio", Archive.cpioBytes(pairBytes), pair),
+      ("rpm", Archive.rpmBytes(Archive.gzipBytes(Archive.cpioBytes(pairBytes))), pair),
+      ("iso", Iso.build(pairBytes), pair),
+      ("chm", Chm.build(pairBytes), pair),
+      ("cab", Cab.build(pairBytes), pair),
+      ("gzip", Archive.gzipBytes(member, "MEMO.TXT"), Seq(("MEMO.TXT", text))),
+      ("zstd", Archive.zstdBytes(member), Seq(("", text))),
+      ("bzip2", Archive.bzip2Bytes(member), Seq(("", text))),
+      ("xz", Archive.xzBytes(member), Seq(("", text))),
+      ("compress", Archive.compressZBytes(member), Seq(("", text))),
+      ("lzma", Archive.lzmaBytes(member), Seq(("", text))),
+      ("lz4", Archive.lz4Bytes(member), Seq(("", text))),
+      ("snappy", Archive.snappyBytes(member), Seq(("", text))),
+      ("applesingle", Apple.build("MEMO.TXT", member), Seq(("MEMO.TXT", text))),
+      ("warc", Warc.build(pairBytes.map { case (n, b) =>
+        ("resource", s"http://a.example/$n", "text/plain", b) }),
+        pair.map { case (n, t) => (s"http://a.example/$n", t) }))
+  }
+
+  parityFixtures.foreach { case (kind, bytes, expected) =>
+    test(s"cross-route parity: $kind unpacks the same at the root and nested in a zip") {
+      val top = Extract.explode(DocIn(90L, Array(SpanIn(kind, new String(bytes, ISO_8859_1), "", 0))))
+      val inner = s"inner.$kind"
+      val nested = Extract.explode(DocIn(91L, Array(SpanIn("zip",
+        new String(Archive.zipBytes(Seq((inner, bytes))), ISO_8859_1), "", 0))))
+      val (rt, rn) = (Ids.rootId(90L), Ids.rootId(91L))
+      // the nested copy sits under one container node: no own text, id
+      // over its canonical entries
+      val cid = Ids.embedId(Ids.canonicalEntries(expected), rn, 0, resourceName = inner)
+      assert(nested.take(2).map(d => (d.doc_id, d.parent_id, d.level)) ==
+        Seq((rn, "", 0), (cid, rn, 1)))
+      assert(nested(1).spans.isEmpty && nested(1).no_content_reason == Reason.Empty)
+      // the same children on both routes, the nested ones one level deeper;
+      // their ids pin resource name, content and ordinal
+      def children(out: Seq[DocOut], parent: String, level: Int) =
+        out.drop(1).filter(_.parent_id == parent).map(d =>
+          (d.doc_id, d.level - level, d.spans.map(_.text).mkString, d.no_content_reason))
+      def want(parent: String) = expected.zipWithIndex.map { case ((n, t), i) =>
+        (Ids.embedId(t, parent, i, resourceName = n), 0, t, "") }
+      assert(children(top, rt, 1) == want(rt))
+      assert(children(nested, cid, 2) == want(cid))
+      assert(top.length == 1 + expected.length && nested.length == 2 + expected.length)
+    }
+  }
 }
