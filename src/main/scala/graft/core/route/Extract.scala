@@ -288,10 +288,13 @@ object Extract {
         files(graft.core.db.Plist.dataBlobs(v))(sp, pid, ord, lvl))
     }),
     // each mailbox message is a document child carrying its parsed
-    // RFC-822 body, attachments recursing; ids hash the raw message chunk
-    Parses("mbox", document = false, (t, _) =>
-      ("", (sp, pid, ord, lvl) =>
-        sp.each(graft.core.mail.Mbox.split(t.text), ord)(sp.mboxMessage(_, pid, _, lvl)))),
+    // RFC-822 body, attachments recursing; ids hash the raw message chunk.
+    // The split reads the BOM-less view the sniff detected the mailbox on
+    // (a UTF-8 BOM read as ISO-8859-1)
+    Parses("mbox", document = false, (t, _) => {
+      val messages = graft.core.mail.Mbox.split(t.text.stripPrefix("\u00ef\u00bb\u00bf"))
+      ("", (sp, pid, ord, lvl) => sp.each(messages, ord)(sp.mboxMessage(_, pid, _, lvl)))
+    }),
     // Apple Mail length-framed message: same shape as eml
     Parses("emlx", document = true, (t, _) => {
       val m = graft.core.mail.Eml.parseEmlx(t.text)
@@ -553,8 +556,7 @@ object Extract {
             // encryption) classifies through the job layer like any other
             // top-level parser failure
             sp.pstNodes(graft.core.office.Pst.parse(content.getBytes(ISO_8859_1),
-              graft.core.office.Pst.byteBudget(cfg.maxSpanChars)), rootId, 1)
-            ord
+              graft.core.office.Pst.byteBudget(cfg.maxSpanChars)), rootId, ord, 1)
           case _ => ord // non-container kinds never reach here
         }
       }
@@ -753,8 +755,9 @@ object Extract {
     // failures isolate as parse-failure children; messages unlinked from
     // every contents table land under a [recovered] node — the
     // reference's ResilientOutlookPSTParser semantics
-    // (`ResilientOutlookPSTParser.java:71-320`).
-    def pstNodes(pst: graft.core.office.Pst.PstFile, parentId: String, level: Int): Unit = {
+    // (`ResilientOutlookPSTParser.java:71-320`). The top-level nodes take
+    // ordinals from `ord` on; returns the next one.
+    def pstNodes(pst: graft.core.office.Pst.PstFile, parentId: String, ord: Int, level: Int): Int = {
       checkDeadline(deadlineNanos)
       val Root = graft.core.office.Pst.RootFolderNid
       // tree keyed by NID, never by display-name paths: folder names may
@@ -789,8 +792,8 @@ object Extract {
         (msgsOf.getOrElse(fnid, Vector.empty).map(m => (m.nid, Left(m))) ++
           failsOf.getOrElse(fnid, Vector.empty).map(f => (f.nid, Right(f))))
           .sortBy(_._1).map(_._2)
-      def walkFolder(fnid: Long, pid: String, lvl: Int): Int = {
-        var ord = 0
+      def walkFolder(fnid: Long, pid: String, lvl: Int, first: Int): Int = {
+        var ord = first
         subsOf.getOrElse(fnid, Vector.empty).foreach { f =>
           checkDeadline(deadlineNanos)
           if (guardsRefuse(lvl, f.name.length)) skipped += 1
@@ -798,14 +801,14 @@ object Extract {
             spawned += 1
             val cid = Ids.embedId(f.name, pid, ord, resourceName = f.name)
             emitDoc(cid, pid, lvl, "")
-            walkFolder(f.nid, cid, lvl + 1): Unit
+            walkFolder(f.nid, cid, lvl + 1, 0): Unit
           }
           ord += 1
         }
         items(fnid).foreach { it => emitMsgOrFail(it, pid, ord, lvl); ord += 1 }
         ord
       }
-      val rootOrd = walkFolder(Root, parentId, level)
+      val rootOrd = walkFolder(Root, parentId, level, ord)
       val recovered =
         pst.messages.filter(_.recovered).map(m => (m.nid, Left(m))) ++
           pst.failures.filter(_.recovered).map(f => (f.nid, Right(f)))
@@ -820,6 +823,7 @@ object Extract {
           }
         }
       }
+      if (recovered.nonEmpty) rootOrd + 1 else rootOrd
     }
 
     // one REAL archive entry -> one child document: a container format
@@ -874,7 +878,7 @@ object Extract {
         parsed match {
           case Right(pst) =>
             emitDoc(cid, parentId, level, "")
-            pstNodes(pst, cid, level + 1)
+            pstNodes(pst, cid, 0, level + 1): Unit
           case Left(reason) =>
             out += DocOut(cid, parentId, rootId, level, Array.empty, reason)
         }

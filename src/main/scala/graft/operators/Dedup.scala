@@ -24,10 +24,10 @@ import graft.core.{HashParams, Ids, JobTags}
   *  - SimHash emits one 64-bit signature per doc (map-only), pairs via a
   *    banded equi-join, never an all-pairs product;
   *  - n-gram Jaccard is the only quadratic-ish op and is gated on an
-  *    explicit probe set (sampled ids), keeping the join |probes| x |docs|:
-  *    only the probe documents' rare-shingle profiles are broadcast, and
-  *    the corpus profiles stream past them in one pass, with no
-  *    per-document aggregate.
+  *    explicit probe set (sampled ids), keeping the work |probes| x |docs|:
+  *    only a table of the probe documents' rare shingles is broadcast
+  *    (batched under a byte budget), and the corpus streams past it in one
+  *    map-only pass, with no explode, join or aggregate.
   */
 object Dedup {
 
@@ -308,9 +308,9 @@ object Dedup {
   /** n-gram (2-word shingle) Jaccard similarity, probe-gated and
     * DOCUMENT-FREQUENCY-CAPPED: shingles appearing in more than `dfCap`
     * documents are dropped from every profile (sizes AND intersection)
-    * before the candidate join — the standard hot-key guard. Without it,
-    * one ubiquitous shingle ("of the") makes its join-key fan-out
-    * |probes_with_it| x |docs_with_it|, near-cartesian at corpus scale.
+    * before any probe is matched — the standard hot-key guard. Without it,
+    * one ubiquitous shingle ("of the") would touch |probes_with_it| probes
+    * for each of |docs_with_it| documents, near-cartesian at corpus scale.
     * Dropped shingles are REPORTED by [[hotShingles]] (no silent caps),
     * from the same [[shingleDf]] aggregate.
     *
@@ -320,55 +320,137 @@ object Dedup {
     * must be unique per row: each row's shingle set is its document's
     * profile, so two rows with one id would be two documents.
     *
-    * Shape: a hot pass plus one streamed profile pass.
+    * Shape: a hot pass, a probe collect and one map-only corpus pass.
     *  - Hot pass: the df aggregate, then ONE driver collect of the hot
-    *    shingles (tagged `Dedup.ngramJaccard/hot`). The set is captured in
-    *    the profile map's closure; it holds at most (shingle occurrences) /
-    *    (dfCap + 1) strings — the bound the hot set always had.
-    *  - Profile pass: one typed map per document emits (id, sz, its rare
-    *    shingles), with `sz` the rare-shingle count. The probe documents'
-    *    profiles explode into the probe index — |probes| x profile rows,
-    *    the small side, which AQE broadcasts while it fits. The corpus
-    *    profiles explode and stream past it inside whole-stage codegen;
-    *    matches are counted per (a, b, sza, szb), so `uni` needs no
-    *    per-document sizes aggregate and nothing O(corpus) is broadcast
-    *    or joined twice.
-    * On the 5,150-doc perfbench `dedup` corpus one call launches 5 Spark
-    * jobs (the hot pass 2, the profile pass 3).
+    *    shingles (tagged `Dedup.ngramJaccard/hot`). It holds at most
+    *    (shingle occurrences) / (dfCap + 1) strings.
+    *  - Probe collect: ONE collect of the probe documents (tagged
+    *    `Dedup.ngramJaccard/probes`). The driver builds a [[ProbeTable]]
+    *    from their rare shingles ([[shingleSet]] minus the hot set): each
+    *    shingle string maps to the indices of the probes holding it, so a
+    *    match is exact, never "up to hash collisions".
+    *  - Corpus pass: the table is broadcast once and one typed
+    *    `mapPartitions` streams the corpus past it. Each document counts
+    *    `inter` per probe it touches in a counter array reused by the task
+    *    and emits its pairs then and there: all matches of one document
+    *    meet in its own task, so the pass has no explode, join, exchange
+    *    or aggregate.
+    * A table is bounded by a byte budget (64 MB, an upper-bound estimate
+    * per probe, hot set included). Past it, the probes are cut into
+    * consecutive batches that each fit, with one corpus pass per batch,
+    * and the passes are unioned; there is no join fallback. On the
+    * 5,150-doc perfbench `dedup` corpus one call launches 4 Spark jobs
+    * (the hot pass 2, the probe collect 1, the corpus pass 1).
     *
     * Emits (a=probe, b, inter, uni) where 5*inter >= uni (Jaccard >= 0.2)
     * over the rare-shingle profile, a != b. Integer-only output.
     */
   def ngramJaccard(spark: SparkSession, docs: DataFrame,
                    dfCap: Long = Long.MaxValue,
-                   probe: org.apache.spark.sql.Column = col("doc_id") % 50 === 0): DataFrame = {
+                   probe: org.apache.spark.sql.Column = col("doc_id") % 50 === 0): DataFrame =
+    ngramJaccard(spark, docs, dfCap, probe, ProbeTableBytes)
+
+  /** [[ngramJaccard]] with the probe-table budget `tableBytes`. */
+  private[graft] def ngramJaccard(spark: SparkSession, docs: DataFrame, dfCap: Long,
+                                  probe: Column, tableBytes: Long): DataFrame = {
     import spark.implicits._
-    val hot = JobTags.tagged(spark.sparkContext, "Dedup.ngramJaccard") { tag =>
+    val (hot, probes) = JobTags.tagged(spark.sparkContext, "Dedup.ngramJaccard") { tag =>
       tag("hot")
-      shingleDf(spark, docs).filter(col("df") > dfCap).select("shingle").as[String].collect().toSet
+      val hot = shingleDf(spark, docs).filter(col("df") > dfCap).select("shingle").as[String]
+        .collect().toSet
+      tag("probes")
+      (hot, docs.filter(probe).select("doc_id", "text").as[(Long, String)].collect())
     }
-    profiles(spark, docs, hot, "b", "szb")
-      .join(profiles(spark, docs.filter(probe), hot, "a", "sza"), "shingle")
-      .filter(col("a") =!= col("b"))
-      .groupBy("a", "b", "sza", "szb").agg(count(lit(1)).as("inter"))
-      .withColumn("uni", col("sza") + col("szb") - col("inter"))
-      .filter(col("inter") * 5 >= col("uni"))
-      .select("a", "b", "inter", "uni")
+    val profiles = probes.map { case (id, t) => (id, shingleSet(t).filterInPlace(!hot(_)).toArray) }
+    val corpus = docs.select("doc_id", "text").as[(Long, String)]
+    probeBatches(profiles, hot.iterator.map(entryBytes).sum, tableBytes)
+      .map { batch =>
+        val table = spark.sparkContext.broadcast(ProbeTable(hot, batch))
+        corpus.mapPartitions(rows => table.value.matches(rows))
+      }
+      .reduceOption(_ union _)
+      .getOrElse(spark.emptyDataset[(Long, Long, Long, Long)])
+      .toDF("a", "b", "inter", "uni")
   }
 
-  /** The rare-shingle profiles of `docs`, exploded: one typed map gives
-    * each row its [[shingleSet]] minus `hot` and the size of what remains,
-    * then one (`id` = doc_id, `sz` = that size, shingle) row per shingle.
+  /** The byte budget of one [[ProbeTable]]. */
+  private val ProbeTableBytes = 64L << 20
+
+  /** An upper bound on what one shingle adds to a table: the string (two
+    * bytes a char), its map entry, its posting array and one posting.
     */
-  private def profiles(spark: SparkSession, docs: DataFrame, hot: Set[String],
-                       id: String, sz: String): DataFrame = {
-    import spark.implicits._
-    docs.select("doc_id", "text").as[(Long, String)]
-      .map { case (d, t) =>
-        val s = shingleSet(t).filterInPlace(!hot(_))
-        (d, s.size.toLong, s.toArray)
+  private def entryBytes(s: String): Long = 100L + 2L * s.length
+
+  /** `profiles` cut into consecutive batches whose tables each stay within
+    * `budget` bytes, `fixed` of them taken by every table; a probe over the
+    * budget on its own is a batch of one. Each probe's shingles are counted
+    * as if no other probe shared them, so the estimate is an upper bound.
+    */
+  private def probeBatches(profiles: Array[(Long, Array[String])], fixed: Long,
+                           budget: Long): Seq[Array[(Long, Array[String])]] = {
+    val batches = Vector.newBuilder[Array[(Long, Array[String])]]
+    var start = 0
+    var bytes = fixed
+    profiles.indices.foreach { i =>
+      val b = 12L + profiles(i)._2.iterator.map(entryBytes).sum
+      if (i > start && bytes + b > budget) { batches += profiles.slice(start, i); start = i; bytes = fixed }
+      bytes += b
+    }
+    if (start < profiles.length) batches += profiles.drop(start)
+    batches.result()
+  }
+
+  /** The broadcast side of [[ngramJaccard]]: the hot set, and for each rare
+    * shingle of the probes the indices of the probes holding it, with each
+    * probe's id and rare-shingle count.
+    */
+  private final class ProbeTable(hot: Set[String], ids: Array[Long], sizes: Array[Int],
+                                 postings: java.util.HashMap[String, Array[Int]])
+    extends Serializable {
+
+    /** (a, b, inter, uni) for each probe `a` that shares a rare shingle
+      * with row `b`, kept at a != b and 5*inter >= uni.
+      */
+    def matches(rows: Iterator[(Long, String)]): Iterator[(Long, Long, Long, Long)] = {
+      val inter = new Array[Int](ids.length)
+      val touched = new Array[Int](ids.length)
+      rows.flatMap { case (b, t) =>
+        var szb = 0
+        var n = 0
+        shingleSet(t).foreach { s =>
+          if (!hot(s)) {
+            szb += 1
+            val ps = postings.get(s)
+            if (ps != null) ps.foreach { p =>
+              if (inter(p) == 0) { touched(n) = p; n += 1 }
+              inter(p) += 1
+            }
+          }
+        }
+        val out = new Array[(Long, Long, Long, Long)](n)
+        var kept = 0
+        var k = 0
+        while (k < n) {
+          val p = touched(k)
+          val uni = sizes(p) + szb - inter(p)
+          if (ids(p) != b && 5L * inter(p) >= uni) {
+            out(kept) = (ids(p), b, inter(p).toLong, uni.toLong); kept += 1
+          }
+          inter(p) = 0
+          k += 1
+        }
+        out.iterator.take(kept)
       }
-      .select(col("_1").as(id), col("_2").as(sz), explode(col("_3")).as("shingle"))
+    }
+  }
+
+  private object ProbeTable {
+    def apply(hot: Set[String], probes: Array[(Long, Array[String])]): ProbeTable = {
+      val postings = new java.util.HashMap[String, Array[Int]]()
+      probes.indices.flatMap(i => probes(i)._2.map(_ -> i)).groupMap(_._1)(_._2)
+        .foreach { case (s, ps) => postings.put(s, ps.toArray) }
+      new ProbeTable(hot, probes.map(_._1), probes.map(_._2.length), postings)
+    }
   }
 
   /** (shingle, df): the number of `docs` rows holding each shingle. */

@@ -4,10 +4,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Levenshtein
-import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec, MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Dedup
@@ -15,7 +16,7 @@ import graft.operators.Dedup
 /** Plan shape and exactness of the dedup operators: one `minhashPairs`
   * call reads and signs its input once, `editVerify` runs one thresholded
   * Levenshtein DP per candidate pair, and `ngramJaccard` streams the corpus
-  * profiles past a probe index with no per-document aggregate.
+  * past a broadcast probe table in a map-only pass.
   */
 class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestBase.spark
@@ -153,6 +154,13 @@ class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     jaccardDocs.toDF("doc_id", "text", "kind")
   }
 
+  /** [[jaccardFrame]] read back from parquet, so every step reads a scan. */
+  private def jaccardParquet = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jaccard").resolve("docs").toString
+    jaccardFrame.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
   private def shingles(t: String): Set[String] = {
     val w = t.split(" ", -1)
     (0 until w.length - 1).map(i => w(i) + " " + w(i + 1)).toSet
@@ -195,24 +203,49 @@ class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("ngramJaccard tags its hot-set collect; caller's group and description kept") {
+    val docs = jaccardParquet
     var rows = Seq.empty[(Long, Long, Long, Long)]
     val jobs = SparkTestBase.jobDescriptions {
-      rows = jaccardRows(Dedup.ngramJaccard(spark, jaccardFrame, 2, col("kind") === "p"))
+      rows = jaccardRows(Dedup.ngramJaccard(spark, docs, 2, col("kind") === "p"))
     }
     assert(rows.size == 3)
+    // the hot pass, one probe collect, then only the caller's corpus pass
     val (hot, rest) = jobs.span(_ == "Dedup.ngramJaccard/hot")
-    assert(hot.nonEmpty && rest.nonEmpty && rest.forall(_ == "caller work"), jobs)
+    assert(hot.nonEmpty && rest.headOption.contains("Dedup.ngramJaccard/probes"), jobs)
+    assert(rest.tail.nonEmpty && rest.tail.forall(_ == "caller work"), jobs)
+  }
+
+  test("ngramJaccard cut into probe batches by a small table budget equals the reference") {
+    val docs = jaccardParquet
+    // a 1-byte budget puts each probe in a batch of its own: one corpus pass per probe
+    for ((probe, isProbe, cap) <- Seq[(org.apache.spark.sql.Column, ((Long, String, String)) => Boolean, Long)](
+           (col("kind") === "p", _._3 == "p", 2L), (lit(true), _ => true, Long.MaxValue))) {
+      val j = Dedup.ngramJaccard(spark, docs, cap, probe, tableBytes = 1)
+      assert(jaccardRows(j) == jaccardReference(cap, isProbe).sorted)
+      val passes = collect(j.queryExecution.executedPlan) { case m: MapPartitionsExec => m }.size
+      assert(passes == jaccardDocs.count(isProbe), j.queryExecution.executedPlan)
+    }
+    // a budget that holds every probe keeps one pass
+    val one = Dedup.ngramJaccard(spark, docs, Long.MaxValue, lit(true), tableBytes = 1L << 20)
+    assert(jaccardRows(one) == jaccardReference(Long.MaxValue, _ => true).sorted)
+    assert(collect(one.queryExecution.executedPlan) { case m: MapPartitionsExec => m }.size == 1)
   }
 
   test("ngramJaccard scans the corpus twice, broadcasts no corpus side, no per-document aggregate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jaccard").resolve("docs").toString
-    jaccardFrame.write.parquet(dir)
-    val docs = spark.read.parquet(dir)
+    val docs = jaccardParquet
     var rows = Seq.empty[(Long, Long, Long, Long)]
+    var result: org.apache.spark.sql.DataFrame = null
     val plans = executedPlans {
-      rows = jaccardRows(Dedup.ngramJaccard(spark, docs, 2, col("kind") === "p"))
+      result = Dedup.ngramJaccard(spark, docs, 2, col("kind") === "p")
+      rows = jaccardRows(result)
     }
     assert(rows == jaccardReference(2, _._3 == "p").sorted)
+    // the corpus pass is map-only: no exchange, join or aggregate
+    val pass = result.queryExecution.executedPlan
+    assert(collect(pass) {
+      case p @ (_: ShuffleExchangeExec | _: BroadcastExchangeExec | _: BaseJoinExec |
+                _: BaseAggregateExec) => p
+    }.isEmpty, pass)
     // the probe predicate reaches its scan as a data filter; corpus scans have none
     def corpusScans(p: SparkPlan) = collect(p) { case s: FileSourceScanExec if s.dataFilters.isEmpty => s }
     assert(count(plans) { case s: FileSourceScanExec if s.dataFilters.nonEmpty => 1 } == 1)

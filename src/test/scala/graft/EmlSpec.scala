@@ -274,6 +274,22 @@ class EmlSpec extends AnyFunSuite {
     assert(nodes2.exists(n => n.level == 3 && n.spans.exists(_.text == "msg two body")))
   }
 
+  test("a BOM-fronted mbox in a zip spawns its messages under one container node") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    val mbox = "\uFEFFFrom a@b Mon Jan  1 00:00:00 2024\nSubject: one\n\nmsg one body\n" +
+      "From b@y Tue Jan  2 00:00:00 2024\nSubject: two\n\nmsg two body\n"
+    val zip = graft.sources.Archive.zipBytes(Seq(("box.mbox", mbox.getBytes(UTF_8))))
+    val nodes = Extract.explode(DocIn(55L, Array(SpanIn("zip", new String(zip, ISO_8859_1), "", 0))))
+    assert(nodes.map(_.doc_id).distinct.length == nodes.length)
+    assert(nodes.count(_.level == 1) == 1)
+    assert(!nodes.exists(_.no_content_reason == Reason.ParseFailed))
+    assert(nodes.exists(n => n.level == 2 && n.spans.exists(_.text == "msg one body")))
+    assert(nodes.exists(n => n.level == 2 && n.spans.exists(_.text == "msg two body")))
+    // the same bytes as a top-level span spawn the same messages
+    val top = Extract.explode(DocIn(56L, Array(SpanIn("mbox", new String(mbox.getBytes(UTF_8), ISO_8859_1), "", 0))))
+    assert(top.count(_.level == 1) == 2)
+  }
+
   test("one encrypted message in an mbox fails ALONE; siblings still extract") {
     import graft.core.{DocIn, SpanIn}
     import graft.core.route.Extract

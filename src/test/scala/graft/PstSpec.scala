@@ -164,6 +164,27 @@ class PstSpec extends AnyFunSuite {
     assert(byLevel(4).exists(_.spans.exists(_.text == "deep att")))
   }
 
+  test("a pst span and a later container span number the root's children 0..n-1") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    import graft.core.{DocIn, Ids, SpanIn}
+    import graft.core.route.Extract
+    // root children: folder "f" and the [recovered] node (pst), then the
+    // zip's two entries, one ordinal run across both spans
+    val pst = Pst.build(Seq(Pst.BuildFolder("f", Seq(
+      Pst.BuildMsg("kept", "kept body"), Pst.BuildMsg("lost", "orphan", linked = false)))))
+    val zip = graft.sources.Archive.zipBytes(Seq(("a.txt", b("alpha")), ("b.txt", b("beta"))))
+    val d = DocIn(12L, Array(SpanIn("pst", new String(pst, ISO_8859_1), "", 0),
+      SpanIn("zip", new String(zip, ISO_8859_1), "", 1)))
+    val nodes = Extract.explode(d)
+    val rid = Ids.rootId(12L)
+    assert(nodes.filter(_.level == 1).map(_.doc_id).sorted == Seq(
+      Ids.embedId("f", rid, 0, resourceName = "f"),
+      Ids.embedId("[recovered]", rid, 1, resourceName = "[recovered]"),
+      Ids.embedId("alpha", rid, 2, resourceName = "a.txt"),
+      Ids.embedId("beta", rid, 3, resourceName = "b.txt")).sorted)
+    assert(nodes.map(_.doc_id).distinct.size == nodes.size)
+  }
+
   test("a pst nested in a zip explodes as a container child; junk pst isolates") {
     import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.core.{DocIn, SpanIn}
