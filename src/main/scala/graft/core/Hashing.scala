@@ -43,7 +43,15 @@ object Ids {
     * SQL-reproducible: `conv(substr(md5(x),1,8),16,10)`.
     */
   def code32(s: String): Long = {
-    val b = md5Md.get().digest(s.getBytes(StandardCharsets.UTF_8))
+    val b = s.getBytes(StandardCharsets.UTF_8)
+    code32(b, 0, b.length)
+  }
+
+  /** [[code32]] of the UTF-8 text in `bytes(off until off + len)`. */
+  def code32(bytes: Array[Byte], off: Int, len: Int): Long = {
+    val md = md5Md.get()
+    md.update(bytes, off, len)
+    val b = md.digest()
     ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) | ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
   }
 

@@ -520,15 +520,12 @@ object Extract {
             if (graft.core.office.Msg.isEncryptedOffice(entries)) {
               // the silent-open defaults may open it as an ordinary OOXML
               // package (body text already flowed via cfbText): spawn only
-              // its embedded parts, like the zip route; a real password
-              // throws DecryptFailure — never explode ciphertext children
+              // its embedded parts (an EPUB's manifest images), like the zip
+              // route; a real password throws DecryptFailure — never explode
+              // ciphertext children
               val zip = graft.core.office.OoxmlCrypt.decryptDefault(entries)
               val zipEntries = Zip.unpack(zip, cfg.maxSpanChars)
-              val spawnable =
-                if (graft.core.office.Ooxml.isPackageEntries(zipEntries))
-                  zipEntries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1))
-                else zipEntries
-              sp.entries(spawnable, rootId, ord, 1)
+              sp.entries(packageParts(zipEntries).getOrElse(zipEntries), rootId, ord, 1)
             }
             else if (graft.core.office.Msg.isMsg(entries))
               sp.each(graft.core.office.Msg.parse(entries).attachments, ord)(

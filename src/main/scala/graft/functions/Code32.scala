@@ -29,12 +29,9 @@ case class Code32(child: Expression) extends StringToLongExpr {
 
 /** Static implementation reachable from generated Java. */
 object Code32Impl {
-  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
-    java.security.MessageDigest.getInstance("MD5"))
-
   def compute(s: UTF8String): Long = {
-    val b = md5.get().digest(s.getBytes)
-    ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) | ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
+    val b = s.getBytes
+    graft.core.Ids.code32(b, 0, b.length)
   }
 }
 

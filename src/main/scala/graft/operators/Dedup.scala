@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.core.{HashParams, Ids, JobTags}
@@ -54,25 +54,40 @@ object Dedup {
 
   /** MinHash signature of one text: 3-word shingles -> md5-derived 32-bit
     * codes -> NumMinHash universal hashes, min over shingles.
+    *
+    * Words are the `string_split(text, ' ')` pieces and shingle i is
+    * `w(i) + " " + w(i+1) + " " + w(i+2)` (the whole text when there are
+    * fewer than 3 words). The text is encoded to UTF-8 once; a shingle's
+    * bytes are then the range from the start of word i to the end of word
+    * i+2, hashed in place with no string or array per shingle.
     */
   def minhashSig(text: String): Array[Long] = {
-    val w = text.split(" ", -1) // string_split semantics
+    val b = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val sig = Array.fill(HashParams.NumMinHash)(Long.MaxValue)
-    val nSh = math.max(1, w.length - 2)
-    var i = 0
-    while (i < nSh) {
-      val shingle =
-        if (w.length < 3) text
-        else w(i) + " " + w(i + 1) + " " + w(i + 2)
-      val x = Ids.code32(shingle)
+    def add(off: Int, len: Int): Unit = {
+      val x = Ids.code32(b, off, len)
       var h = 0
       while (h < HashParams.NumMinHash) {
         val v = HashParams.minhash(h, x)
         if (v < sig(h)) sig(h) = v
         h += 1
       }
-      i += 1
     }
+    // starts of words j-2, j-1 and j while word j is scanned
+    var w0 = 0
+    var w1 = 0
+    var w2 = 0
+    var j = 0
+    var p = 0
+    while (p <= b.length) {
+      if (p == b.length || b(p) == ' ') { // the end of word j
+        if (j >= 2) add(w0, p - w0)
+        w0 = w1; w1 = w2; w2 = p + 1
+        j += 1
+      }
+      p += 1
+    }
+    if (j < 3) add(0, b.length)
     sig
   }
 
@@ -195,32 +210,36 @@ object Dedup {
 
   /** Candidate-verification stage of the dedup pipeline: LSH candidates are
     * cheap but approximate; this re-joins each candidate pair to its texts
-    * and keeps pairs within `maxDist` edit distance.
+    * and keeps pairs within `maxDist` edit distance, as `(a, b, dist)`.
     *
     * Scale notes: the pair set is NOT broadcast-hinted — minhashPairs bounds
     * pairs per bucket at cap^2/2, so a single at-cap bucket can emit ~5e7
     * pairs, far past broadcast range; AQE broadcasts while it actually fits
-    * and shuffles when it doesn't. Before the O(n*m) DP runs, two cheap
-    * prefilters eliminate most pairs: `abs(len(ta)-len(tb)) <= maxDist`
-    * (a length gap is a lower bound on edit distance) and the THRESHOLDED
-    * levenshtein (Spark 3.5+ 3-arg form) that abandons the DP as soon as
-    * the running minimum exceeds maxDist — both return the exact distance
-    * for every surviving pair, so the stage stays oracle-checkable.
+    * and shuffles when it doesn't. Two bounds keep the per-pair DP cheap:
+    * `abs(len(ta)-len(tb)) <= maxDist` (a length gap is a lower bound on
+    * edit distance) drops pairs before any DP, and the survivors go through
+    * [[BandedLevenshtein]], which fills only the diagonal band of width
+    * 2 * maxDist + 1 over code-point arrays and abandons a pair as soon as a
+    * band row passes maxDist. Both return the exact distance for every kept
+    * pair, so the stage stays oracle-checkable.
     *
-    * The DP runs ONCE per pair that passes the length filter: the
-    * `dist >= 0` test (the thresholded form returns -1 past maxDist) is a
-    * typed filter over the projected `(a, b, dist)` rows. A column filter
-    * there would be pushed below the projection and into the join
-    * condition with `dist` inlined, and the plan would evaluate the DP
-    * twice per pair — once in the join, once in the projection.
+    * The DP runs ONCE per pair that passes the length filter, in one typed
+    * `flatMap` (one `MapPartitions` in the plan) over the joined
+    * `(a, b, ta, tb)` rows; a pair is dropped where the kernel returns -1.
     */
-  def editVerify(docs: DataFrame, candidates: DataFrame, maxDist: Int): DataFrame =
+  def editVerify(docs: DataFrame, candidates: DataFrame, maxDist: Int): DataFrame = {
+    import docs.sparkSession.implicits._
     docs.select(col("doc_id").as("a"), col("text").as("ta"))
       .join(candidates, "a")
       .join(docs.select(col("doc_id").as("b"), col("text").as("tb")), "b")
       .filter(abs(length(col("ta")) - length(col("tb"))) <= maxDist)
-      .select(col("a"), col("b"), levenshtein(col("ta"), col("tb"), maxDist).as("dist"))
-      .filter((r: Row) => !r.isNullAt(2) && r.getInt(2) >= 0)
+      .select("a", "b", "ta", "tb").as[(Long, Long, String, String)]
+      .flatMap { case (a, b, ta, tb) =>
+        val d = BandedLevenshtein.distance(ta, tb, maxDist)
+        if (d >= 0) Some((a, b, d)) else None
+      }
+      .toDF("a", "b", "dist")
+  }
 
   /** (bucket, doc_id) band-bucket membership rows. */
   def minhashBuckets(spark: SparkSession, docs: DataFrame): DataFrame = {

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{DocIn, ParseFailure, SpanIn}
-import graft.core.office.{Cfb, Docx, Msg, OoxmlCrypt}
+import graft.core.office.{Cfb, Docx, Epub, Msg, OoxmlCrypt}
 import graft.core.route.Extract
 import graft.sources.{Archive, Ingest}
 
@@ -558,5 +558,27 @@ class CfbSpec extends AnyFunSuite {
       Array(graft.core.SpanIn("zip", new String(zip, ISO_8859_1), "", 0))))
     val kids = out.filter(_.level == 1)
     assert(kids.length == 1 && kids.head.no_content_reason == graft.core.Reason.Encrypted)
+  }
+
+  test("an encrypted EPUB spawns its manifest images at the root and nested in a zip") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    val png = graft.multimodal.Media.encodePng(3, 3, 0x445566)
+    val epub = Epub.build("Sealed", Seq(
+      ("c.xhtml", "<html><body><p>sealed chapter</p></body></html>")),
+      images = Seq(("pic.png", png)))
+    val enc = OoxmlCrypt.buildEncrypted(epub, "VelvetSweatshop")
+    // children of `parent`, without the ids (they hash the parent's id)
+    def kids(out: Seq[graft.core.DocOut], parent: String) =
+      out.filter(_.parent_id == parent)
+        .map(o => (o.no_content_reason, o.spans.map(_.text).toSeq)).sortBy(_.toString)
+    val root = Extract.explode(DocIn(10L, Array(SpanIn("cfb", new String(enc, ISO_8859_1), "", 0))))
+    val atRoot = kids(root, root.head.doc_id)
+    val zip = Archive.zipBytes(Seq(("sealed.epub", enc)))
+    val nested = Extract.explode(DocIn(11L, Array(SpanIn("zip", new String(zip, ISO_8859_1), "", 0))))
+    val book = nested.filter(_.level == 1)
+    assert(book.size == 1)
+    val inZip = kids(nested, book.head.doc_id)
+    assert(inZip.size == 1) // the manifest image only
+    assert(atRoot == inZip)
   }
 }

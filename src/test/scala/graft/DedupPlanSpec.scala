@@ -11,12 +11,15 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleEx
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.operators.Dedup
+import graft.core.{HashParams, Ids}
+import graft.operators.{BandedLevenshtein, Dedup}
 
 /** Plan shape and exactness of the dedup operators: one `minhashPairs`
-  * call reads and signs its input once, `editVerify` runs one thresholded
-  * Levenshtein DP per candidate pair, and `ngramJaccard` streams the corpus
-  * past a broadcast probe table in a map-only pass.
+  * call reads and signs its input once (and `minhashSig` equals its plain
+  * string-shingle definition), `editVerify` runs the banded Levenshtein
+  * kernel once per candidate pair in one typed map over the join (and the
+  * kernel equals a plain thresholded DP), and `ngramJaccard` streams the
+  * corpus past a broadcast probe table in a map-only pass.
   */
 class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestBase.spark
@@ -125,14 +128,99 @@ class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rows.sorted.toSeq == want.sorted)
   }
 
-  test("editVerify's final plan evaluates Levenshtein once") {
-    val (docs, candidates) = editInputs
-    val ev = Dedup.editVerify(docs, candidates, maxDist)
+  test("editVerify's final plan: one typed map over the join, no Levenshtein") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-edit").resolve("docs").toString
+    texts.toSeq.toDF("doc_id", "text").write.parquet(dir)
+    val (_, candidates) = editInputs
+    val ev = Dedup.editVerify(spark.read.parquet(dir), candidates, maxDist)
     ev.collect() // finalize THIS query execution's adaptive plan
-    val evaluations = collect(ev.queryExecution.executedPlan) { case p =>
+    val plan = ev.queryExecution.executedPlan
+    val evaluations = collect(plan) { case p =>
       p.expressions.map(_.collect { case l: Levenshtein => l }.size).sum
     }.sum
-    assert(evaluations == 1, ev.queryExecution.executedPlan.toString)
+    assert(evaluations == 0, plan)
+    val maps = collect(plan) { case m @ (_: MapPartitionsExec | _: MapElementsExec) => m }
+    assert(maps.size == 1, plan)
+    assert(collect(maps.head) { case j: BaseJoinExec => j }.size == 2, plan)
+    assert(collect(plan) { case s: FileSourceScanExec => s }.size == 2, plan)
+  }
+
+  /** [[levenshtein]] with Spark's threshold semantics: -1 past `k`. */
+  private def thresholded(a: String, b: String, k: Int): Int = {
+    val d = levenshtein(a, b)
+    if (d <= k) d else -1
+  }
+
+  test("BandedLevenshtein equals the plain thresholded DP: surrogate pairs, empty, k = 0, gap k, k past both lengths") {
+    val alphabet = Array("a", "b", "c", " ", "é", "日", "😀", "𝄞")
+    val rnd = new scala.util.Random(42)
+    def word(n: Int) = Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    // an edited copy: a few code-point substitutions, insertions and deletions
+    def edit(s: String): String = {
+      var cps = s.codePoints().toArray.toSeq.map(c => new String(Character.toChars(c)))
+      for (_ <- 0 until rnd.nextInt(6)) {
+        val i = rnd.nextInt(cps.length + 1)
+        rnd.nextInt(3) match {
+          case 0 if i < cps.length => cps = cps.updated(i, word(1))
+          case 1 => cps = cps.patch(i, Seq(word(1)), 0)
+          case _ if i < cps.length => cps = cps.patch(i, Nil, 1)
+          case _ =>
+        }
+      }
+      cps.mkString
+    }
+    val randomCases = Seq.fill(4000) {
+      val s = word(rnd.nextInt(24))
+      (s, if (rnd.nextBoolean()) edit(s) else word(rnd.nextInt(24)), rnd.nextInt(12))
+    }
+    val fixed = Seq(
+      ("", "", 0), ("", "", 5), ("", "abc", 3), ("", "abc", 2), ("😀😀", "", 2), ("😀😀", "", 1),
+      ("abc", "abd", 0), ("abc", "abc", 0), ("日本語", "日本語", 0),
+      ("abcdef", "abc", 3), ("abc", "abcdef", 3), ("abc", "abcdef", 2), // gap exactly k, one a prefix
+      ("𝄞x𝄞", "x𝄞x𝄞x", 2), ("kitten", "sitting", 3), ("kitten", "sitting", 2),
+      ("kitten", "sitting", 7), ("kitten", "sitting", Int.MaxValue), ("ab😀", "😀ab", 100))
+    for ((s, t, k) <- fixed ++ randomCases) {
+      assert(BandedLevenshtein.distance(s, t, k) == thresholded(s, t, k), (s, t, k))
+      assert(BandedLevenshtein.distance(t, s, k) == thresholded(s, t, k), (t, s, k))
+    }
+    // texts past the kernel's kept scratch size: a^70000 against 3 'b'
+    // substitutions and a deletion is distance 4 (each non-'a' and the length gap cost 1)
+    val long = "a" * 70000
+    val edited = long.substring(1).updated(10, 'b').updated(30000, 'b').updated(69000, 'b')
+    assert(edited.length == long.length - 1 && edited.count(_ == 'b') == 3)
+    assert(BandedLevenshtein.distance(long, edited, 40) == 4)
+    assert(BandedLevenshtein.distance(edited, long, 3) == -1)
+    assert(BandedLevenshtein.distance("kitten", "sitting", 3) == 3)
+    // the random cases reach both sides of the threshold
+    assert(randomCases.count { case (s, t, k) => thresholded(s, t, k) >= 0 } > 400)
+    assert(randomCases.count { case (s, t, k) => thresholded(s, t, k) < 0 } > 400)
+  }
+
+  /** `minhashSig` from its definition: the `string_split(text, ' ')` words,
+    * 3-word shingles as strings (the whole text under 3 words), each coded
+    * by the first 8 hex chars of its md5.
+    */
+  private def minhashSigReference(text: String): Seq[Long] = {
+    val w = text.split(" ", -1)
+    val shingles =
+      if (w.length < 3) Seq(text)
+      else (0 until w.length - 2).map(i => w(i) + " " + w(i + 1) + " " + w(i + 2))
+    val codes = shingles.map(sh => java.lang.Long.parseLong(Ids.md5(sh).substring(0, 8), 16))
+    (0 until HashParams.NumMinHash).map(h => codes.map(HashParams.minhash(h, _)).min)
+  }
+
+  test("minhashSig equals its string-shingle definition: double, leading and trailing spaces, few words, non-ASCII") {
+    val vocab = Array("", "a", "the", "naïve", "café", "日本語", "😀", "x😀y", "𝄞", "word")
+    val rnd = new scala.util.Random(7101)
+    val randomTexts = Seq.fill(2000)(Seq.fill(rnd.nextInt(9))(vocab(rnd.nextInt(vocab.length))).mkString(" "))
+    val fixed = Seq("", " ", "  ", "one", "one two", "one  two", " one two", "one two ",
+      "one two three", "  one two three", "one two three  ", "one  two   three four",
+      "naïve café 日本語 😀", "😀 𝄞 😀 𝄞 😀")
+    for (t <- fixed ++ randomTexts)
+      assert(Dedup.minhashSig(t).toSeq == minhashSigReference(t), t)
+    assert(randomTexts.count(t => t.split(" ", -1).length < 3) > 100)
+    assert(randomTexts.count(_.contains("  ")) > 100)
   }
 
   /** Jaccard inputs: with dfCap 2, "hot x", "s1 s2" and "s3 s4" (df 3) are
