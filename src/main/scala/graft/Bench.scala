@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.catalog.SnapshotTable
 import graft.core.Corpus
 import graft.pipeline.ExtractJob
 
@@ -49,17 +50,12 @@ object Bench {
       Option(base.listFiles()).foreach(_.foreach { f =>
         if (f.getName.startsWith("corpus_") &&
           !f.getName.startsWith(s"corpus_v$CorpusSpecVersion"))
-          deleteRecursively(f)
+          SnapshotTable.deleteRecursively(f.toPath)
       })
       Corpus.spansReplicated(spark, sfDir, factor, parts)
         .write.mode("overwrite").parquet(path)
     }
     path
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 
   /** One timed pipeline run: scan the materialized corpus -> extract ->

@@ -1,6 +1,8 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, LinkOption, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
@@ -11,44 +13,40 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * matches so the real thing can slot in):
   *
   *  - DATA is immutable: every write lands in a fresh `data/<uuid>` dir;
-  *  - a SNAPSHOT is a numbered JSON file listing the data dirs visible at
-  *    that version; committing = atomically creating `snapshots/v<N+1>`
-  *    (Files.move without REPLACE — the filesystem's create-if-absent);
-  *  - OPTIMISTIC CONCURRENCY: two writers racing to v<N+1> — one rename
+  *  - a SNAPSHOT is a numbered manifest file listing, one per line, the
+  *    data dirs visible at that version; committing = atomically creating
+  *    `snapshots/v<N+1>` as a hard link ([[commitIf]]: create-if-absent);
+  *  - OPTIMISTIC CONCURRENCY: two writers racing to v<N+1> — one link
   *    wins, the loser re-reads the new current snapshot and retries on top
   *    of it (Iceberg's commit loop);
   *  - READERS resolve a snapshot once and see an immutable view: a reader
   *    pinned to v3 is untouched by later commits (snapshot isolation), and
   *    passing an old version is time travel;
-  *  - DELETE is copy-on-write: affected rows are filtered into a rewrite
-  *    dir and the new snapshot swaps it in; untouched dirs carry over
-  *    byte-identical.
+  *  - REWRITES (delete, replace, merge, compaction) are copy-on-write
+  *    ([[rewrite]]); each first sweeps what crashed writers left behind.
   */
 object SnapshotTable {
 
   private def snapDir(table: String): Path = Paths.get(table, "snapshots")
   private def dataDir(table: String): Path = Paths.get(table, "data")
 
-  /** Committed snapshot versions, ascending; empty for a fresh table. */
-  def snapshots(table: String): Seq[Long] = {
-    val d = snapDir(table)
-    if (!Files.isDirectory(d)) Seq.empty
+  /** How long an orphan must sit untouched before a sweep deletes it; a
+    * live writer touches its dir while it writes and publishes right after. */
+  private[graft] val OrphanGraceMs: Long = 24L * 60 * 60 * 1000
+
+  /** Entries of directory `d`; empty when it is absent or not a directory. */
+  private def list(d: Path): List[Path] =
+    if (!Files.isDirectory(d, LinkOption.NOFOLLOW_LINKS)) Nil
     else {
       val s = Files.list(d)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-        .toSeq.sorted
-      finally s.close()
+      try s.iterator().asScala.toList finally s.close()
     }
-  }
 
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
+  /** Committed snapshot versions, ascending; empty for a fresh table. */
+  def snapshots(table: String): Seq[Long] =
+    list(snapDir(table)).map(_.getFileName.toString)
+      .collect { case n if n.startsWith("v") => n.drop(1).toLong }
+      .sorted
 
   def currentVersion(table: String): Option[Long] = snapshots(table).lastOption
 
@@ -104,7 +102,7 @@ object SnapshotTable {
       // once the link is published this method MUST report success: a
       // throwing tmp cleanup would make callers believe the commit failed
       // and roll back data a live snapshot references. A leaked tmp file
-      // is benign; swept opportunistically, never at correctness cost.
+      // is benign; a later rewrite's orphan sweep removes it.
       try Files.deleteIfExists(tmp)
       catch { case _: java.io.IOException => () }
     }
@@ -142,7 +140,7 @@ object SnapshotTable {
   def append(spark: SparkSession, table: String, df: DataFrame,
              beforePublish: () => Unit = () => ()): Long = {
     val name = writeData(spark, table, df)
-    commit(table, dirs => dirs :+ name, beforePublish = beforePublish)
+    reclaimOnFailure(table, name)(commit(table, dirs => dirs :+ name, beforePublish = beforePublish))
   }
 
   /** [[append]] that publishes nothing when `df` has no rows: the fresh
@@ -154,7 +152,7 @@ object SnapshotTable {
   def appendNonEmpty(spark: SparkSession, table: String, df: DataFrame): Option[Long] = {
     val name = writeData(spark, table, df)
     val dir = dataDir(table).resolve(name)
-    if (hasRows(spark, dir)) Some(commit(table, dirs => dirs :+ name))
+    if (hasRows(spark, dir)) Some(reclaimOnFailure(table, name)(commit(table, dirs => dirs :+ name)))
     else { deleteRecursively(dir); None }
   }
 
@@ -165,14 +163,12 @@ object SnapshotTable {
     */
   private def hasRows(spark: SparkSession, dir: Path): Boolean = {
     val options = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
-    val s = Files.list(dir)
-    try s.iterator().asScala
+    list(dir)
       .filter { f => val n = f.getFileName.toString; n.endsWith(".parquet") && !n.startsWith(".") }
       .exists { f =>
         val r = new ParquetFileReader(new LocalInputFile(f), options)
         try r.getRecordCount > 0 finally r.close()
       }
-    finally s.close()
   }
 
   /** Overwrite: snapshot = just the new dir (old data stays readable via
@@ -182,52 +178,84 @@ object SnapshotTable {
     */
   def overwrite(spark: SparkSession, table: String, df: DataFrame): Long = {
     val name = writeData(spark, table, df)
-    commit(table, _ => Seq(name))
+    reclaimOnFailure(table, name)(commit(table, _ => Seq(name)))
   }
 
-  /** Copy-on-write DELETE WHERE: survivors are rewritten into one dir and
-    * the snapshot swaps to it. NOT commutative — survivors were computed
-    * from a specific snapshot, so the commit is compare-and-set on that
-    * version: a racing commit forces a full RECOMPUTE from the new current
-    * snapshot (Iceberg's conflict validation), never a silent lost update
-    * of the racer's rows. (File-level pruning — rewriting only dirs that
-    * contain matches — is the Iceberg refinement; semantics are identical.)
+  /** Runs `publish` for the data dir `name` just written. When it throws,
+    * no snapshot lists the dir ([[commitIf]] absorbs its post-publish
+    * cleanup errors, and a lost or exhausted race published nothing), so the
+    * dir is reclaimed before the error propagates; the reclaim itself never
+    * masks that error.
     */
-  def deleteWhere(spark: SparkSession, table: String, predicate: Column,
-                  maxRetries: Int = 10,
-                  beforePublish: () => Unit = () => ()): Long = {
+  private def reclaimOnFailure[A](table: String, name: String)(publish: => A): A =
+    try publish
+    catch {
+      case NonFatal(e) =>
+        try deleteRecursively(dataDir(table).resolve(name)) catch { case NonFatal(_) => () }
+        throw e
+    }
+
+  /** The copy-on-write loop under every rewrite: after an orphan sweep, `f`
+    * maps the rows of the current snapshot v to the table's new rows, which
+    * land in one fresh dir that v+1 alone lists. NOT commutative, so the
+    * commit is compare-and-set on v: a racing commit forces a full RECOMPUTE
+    * from the new current snapshot (Iceberg's conflict validation), never a
+    * lost update of the racer's rows. `beforePublish` is the race-test seam.
+    */
+  private[graft] def rewrite(spark: SparkSession, table: String, f: DataFrame => DataFrame,
+                             maxRetries: Int = 10,
+                             beforePublish: () => Unit = () => ()): Long = {
+    sweepOrphans(table)
     var attempt = 0
     while (attempt < maxRetries) {
       val base = currentVersion(table)
         .getOrElse(throw new IllegalStateException(s"no snapshots in $table"))
-      val survivors = read(spark, table, Some(base)).filter(!predicate)
-      val name = writeData(spark, table, survivors)
-      val committed =
-        try commitIf(table, base, Seq(name), beforePublish)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            // commitIf only throws when NOTHING was published (post-publish
-            // cleanup errors are absorbed there), so reclaiming the rewrite
-            // is safe; the cleanup itself must never mask the real error
-            try deleteRecursively(dataDir(table).resolve(name))
-            catch { case scala.util.control.NonFatal(_) => () }
-            throw e
-        }
-      if (committed) return base + 1
-      // lost the race: the rewrite computed from a stale snapshot is dead —
-      // reclaim it, then recompute survivors from the new current snapshot
+      val name = writeData(spark, table, f(read(spark, table, Some(base))))
+      if (reclaimOnFailure(table, name)(commitIf(table, base, Seq(name), beforePublish)))
+        return base + 1
       deleteRecursively(dataDir(table).resolve(name))
       attempt += 1
     }
     throw new IllegalStateException(s"commit contention: $maxRetries retries exhausted")
   }
 
-  /** Delete a file or a directory tree (no-op when absent). */
-  private[graft] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.iterator().asScala.foreach(deleteRecursively) finally s.close()
+  /** Copy-on-write DELETE WHERE: the survivors of the current snapshot are
+    * rewritten into one dir ([[rewrite]]). (File-level pruning — rewriting
+    * only dirs that contain matches — is the Iceberg refinement; semantics
+    * are identical.)
+    */
+  def deleteWhere(spark: SparkSession, table: String, predicate: Column,
+                  maxRetries: Int = 10,
+                  beforePublish: () => Unit = () => ()): Long =
+    rewrite(spark, table, _.filter(!predicate), maxRetries, beforePublish)
+
+  /** Iceberg's remove_orphan_files: deletes every `data/` entry that no
+    * snapshot lists and every `snapshots/.tmp-*` file once nothing in its
+    * tree changed for [[OrphanGraceMs]], so a concurrent writer's unpublished
+    * dir survives. Best effort: an entry that vanishes mid-sweep is skipped.
+    */
+  private def sweepOrphans(table: String): Unit = {
+    val cutoff = System.currentTimeMillis() - OrphanGraceMs
+    val listed = snapshots(table).flatMap(readManifest(table, _)).toSet
+    val candidates =
+      list(dataDir(table)).filterNot(p => listed(p.getFileName.toString)) ++
+        list(snapDir(table)).filter(_.getFileName.toString.startsWith(".tmp-"))
+    candidates.foreach { p =>
+      try if (newestMtime(p) < cutoff) deleteRecursively(p)
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
     }
+  }
+
+  /** Newest modification time anywhere in the tree at `p`, in ms. */
+  private def newestMtime(p: Path): Long =
+    list(p).foldLeft(Files.getLastModifiedTime(p, LinkOption.NOFOLLOW_LINKS).toMillis)(
+      (newest, c) => math.max(newest, newestMtime(c)))
+
+  /** Delete a file or a directory tree (no-op when absent); a symbolic link
+    * is removed, never followed.
+    */
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    list(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 }

@@ -1,76 +1,75 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import graft.catalog.SnapshotTable.deleteRecursively
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Paths}
+import graft.catalog.SnapshotTable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sink-side merge semantics on plain parquet — the Iceberg-less stand-in
-  * for the reference's index maintenance:
+/** Sink-side merge semantics on a [[graft.catalog.SnapshotTable]] — the
+  * Iceberg stand-in for the reference's index maintenance — plus the
+  * per-document artifact spewers:
   *
   *  - stale-children delete before rewrite (`SolrSpewer.java:134-142`:
   *    delete WHERE root_id = x AND level >= 1, then re-add) becomes
-  *    filter-out + union + atomic swap;
+  *    filter-out + union;
   *  - merge-on-write (`MergingSolrSpewer.java`: fetch existing doc, merge a
-  *    field, retry) becomes a full-outer merge on doc_id.
+  *    field, retry) becomes a full-outer merge on doc_id;
+  *  - small-file compaction becomes a coalesce.
   *
-  * On Iceberg these are `DELETE WHERE`/`MERGE INTO` with snapshot isolation;
-  * here atomicity comes from write-to-temp + directory swap, the same
-  * temp-then-atomic-rename discipline as the reference's artifact writes
-  * (`EmbeddedArtifactWriter.java:35-68`).
+  * Each table op is one copy-on-write rewrite of the current snapshot,
+  * published as the next snapshot by compare-and-set: a reader sees the
+  * version before or after, never a mix; a reader pinned to an older
+  * version keeps its files; and a racing commit forces a recompute on top
+  * of the winner, so its rows are never lost. On Iceberg these are
+  * `DELETE WHERE`/`MERGE INTO`/`rewrite_data_files`. Each op returns the
+  * committed snapshot version, except [[compact]].
   */
 object Sink {
 
-  /** Rewrite the trees rooted at `rootIds`: drop every existing row of
-    * those trees (root row AND children — the stale-children delete), then
-    * append `replacement`. All other rows are preserved byte-for-byte.
+  /** Rewrite the trees rooted at `rootIds` in `table`: drop every existing
+    * row of those trees (root row AND children — the stale-children
+    * delete), then append `replacement`. All other rows are preserved.
     */
-  def replaceTrees(spark: SparkSession, path: String, rootIds: Seq[String],
-                   replacement: DataFrame): Unit = {
-    val existing = spark.read.parquet(path)
-    // null-safe: !isInCollection is NULL for null roots and filter would
-    // silently drop them; null-rooted rows must be preserved
-    val kept = existing.filter(
-      col("root_id").isNull || !col("root_id").isInCollection(rootIds))
-    writeAtomic(spark, path, kept.unionByName(replacement))
-  }
+  def replaceTrees(spark: SparkSession, table: String, rootIds: Seq[String],
+                   replacement: DataFrame): Long =
+    SnapshotTable.rewrite(spark, table, existing =>
+      // null-safe: !isInCollection is NULL for null roots and filter would
+      // silently drop them; null-rooted rows must be preserved
+      existing.filter(col("root_id").isNull || !col("root_id").isInCollection(rootIds))
+        .unionByName(replacement))
 
   /** Merge-on-write for a multi-valued field: rows in `updates` merge their
     * `paths` array into the existing row's (distinct, order-preserving),
     * new doc_ids are inserted — MergingSolrSpewer's fetch+merge+retry loop
-    * as one deterministic join. Scope: operates on (doc_id, paths) tables;
-    * a wider-schema merge belongs to Iceberg MERGE INTO.
+    * as one deterministic join per commit attempt. Scope: operates on
+    * (doc_id, paths) tables; a wider-schema merge belongs to Iceberg MERGE
+    * INTO.
     */
-  def mergePaths(spark: SparkSession, path: String, updates: DataFrame): Unit = {
-    val existing = spark.read.parquet(path)
-    val merged = existing.alias("e")
-      .join(updates.alias("u"), Seq("doc_id"), "full_outer")
-      .select(
-        col("doc_id"),
-        array_distinct(concat(
-          coalesce(col("e.paths"), array()),
-          coalesce(col("u.paths"), array()))).as("paths"))
-    writeAtomic(spark, path, merged)
-  }
+  def mergePaths(spark: SparkSession, table: String, updates: DataFrame): Long =
+    SnapshotTable.rewrite(spark, table, existing =>
+      existing.alias("e")
+        .join(updates.alias("u"), Seq("doc_id"), "full_outer")
+        .select(
+          col("doc_id"),
+          array_distinct(concat(
+            coalesce(col("e.paths"), array()),
+            coalesce(col("u.paths"), array()))).as("paths")))
 
-  /** Small-file compaction for an append-heavy parquet dir (the incremental
-    * commit protocol appends run dirs; long-lived tables eventually want
-    * fewer, larger files — on Iceberg this is rewrite_data_files). Sizes
-    * the output file count from the actual on-disk bytes and rewrites
-    * atomically via [[writeAtomic]]; COALESCE (not repartition) merges
-    * splits map-side with no shuffle. Returns the output file count.
+  /** Small-file compaction for an append-heavy table (every append lands a
+    * dir, so a long-lived table eventually wants fewer, larger files — on
+    * Iceberg this is rewrite_data_files). Sizes the output file count from
+    * the bytes of the files the current snapshot lists — not of older
+    * snapshots' dirs — and COALESCEs (not repartition) to it, merging splits
+    * map-side with no shuffle. Returns the output file count.
     */
-  def compact(spark: SparkSession, path: String,
+  def compact(spark: SparkSession, table: String,
               targetBytesPerFile: Long = 128L << 20): Int = {
-    val totalBytes = {
-      def sizeOf(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-        else f.length()
-      sizeOf(new java.io.File(path))
-    }
-    val nFiles = math.max(1, ((totalBytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt)
-    val df = spark.read.parquet(path).coalesce(nFiles)
-    writeAtomic(spark, path, df)
+    var nFiles = 1
+    SnapshotTable.rewrite(spark, table, { current =>
+      val totalBytes = current.inputFiles.map(f => Files.size(Paths.get(new java.net.URI(f)))).sum
+      nFiles = math.max(1, ((totalBytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt)
+      current.coalesce(nFiles)
+    })
     nFiles
   }
 
@@ -82,8 +81,8 @@ object Sink {
     * reports SUCCESS. Returns (doc_id, status).
     *
     * This is the per-doc ARTIFACT sink; table output goes through the
-    * job-level atomic writes above (where a write failure is a job failure
-    * that Spark retries, not a per-doc status).
+    * snapshot commits above (where a write failure is a job failure that
+    * Spark retries, not a per-doc status).
     */
   def spewFiles(docs: org.apache.spark.sql.Dataset[graft.core.DocOut],
                 dir: String): DataFrame =
@@ -160,35 +159,4 @@ object Sink {
   def spewHtmlFiles(docs: org.apache.spark.sql.Dataset[graft.core.DocOut],
                     dir: String): DataFrame =
     spew(docs, dir, ".html", renderHtml)
-
-  /** Write df to a temp dir then swap it into place: the sink is never
-    * half-written (readers see the previous dataset, a brief missing-dir
-    * window during the swap, or the new dataset — never a mix), and a
-    * crash mid-swap is self-healing: a stale `.old` left by an interrupted
-    * swap is cleaned up at the start of the next write. On Iceberg this
-    * whole dance is a snapshot commit.
-    */
-  def writeAtomic(spark: SparkSession, path: String, df: DataFrame): Unit = {
-    val dest = Paths.get(path)
-    val old = Paths.get(path + ".old")
-    // recover from a crash between the two moves of a previous call
-    if (Files.exists(old)) {
-      if (!Files.exists(dest)) Files.move(old, dest, StandardCopyOption.ATOMIC_MOVE)
-      else deleteRecursively(old)
-    }
-    // sweep orphaned temp dirs from crashed earlier writes
-    val parent = dest.toAbsolutePath.getParent
-    val tmpPrefix = dest.getFileName.toString + ".tmp-"
-    if (parent != null && Files.isDirectory(parent)) {
-      val s = Files.list(parent)
-      try s.forEach { p =>
-        if (p.getFileName.toString.startsWith(tmpPrefix)) deleteRecursively(p)
-      } finally s.close()
-    }
-    val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    if (Files.exists(dest)) Files.move(dest, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), dest, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old)) deleteRecursively(old)
-  }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.catalog.SnapshotTable
 import graft.core._
-import graft.pipeline.ExtractJob
+import graft.pipeline.{ExtractJob, Sink}
 
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -82,10 +82,10 @@ class PipelineSpec extends AnyFunSuite {
     * snapshot lists: what a crash between the data write and the snapshot
     * publish leaves behind.
     */
-  private def writeOrphan(out: String, n: Int): Unit =
+  private def writeOrphan(out: String, n: Int, name: String = "orphan99"): Unit =
     ExtractJob.extractPartitions(corpus(n), ExtractJob.JobConfig())
       .toDF("doc", "lineage")
-      .write.mode("overwrite").parquet(s"$out/combined/data/orphan99")
+      .write.mode("overwrite").parquet(s"$out/combined/data/$name")
 
   test("crash-orphaned data dir (in no snapshot) is invisible to readers") {
     val out = tmpDir()
@@ -96,6 +96,40 @@ class PipelineSpec extends AnyFunSuite {
     assert(ExtractJob.readLineage(spark, out).get.count() == 5)
     assert(ExtractJob.readCheckpoints(spark, out).get
       .agg(sum("n_docs")).first().getLong(0) == 5)
+  }
+
+  test("compacting the pipeline's table keeps its views and sweeps stale orphans") {
+    val out = tmpDir()
+    val table = s"$out/combined"
+    ExtractJob.run(spark, corpus(10), None, out)
+    ExtractJob.run(spark, corpus(16), None, out)
+    def rows(df: Option[org.apache.spark.sql.DataFrame]) = df.get.collect().map(_.toString).sorted.toSeq
+    def docSums = ExtractJob.readCheckpoints(spark, out).get
+      .groupBy("partition_id").agg(sum("n_docs")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val (extracted, lineage, sums) =
+      (rows(ExtractJob.readExtracted(spark, out)), rows(ExtractJob.readLineage(spark, out)), docSums)
+    val listed = SnapshotTable.snapshots(table).flatMap(SnapshotTable.dataDirs(table, _))
+      .map(new java.io.File(_).getName).distinct
+    writeOrphan(out, 8)
+    SparkTestBase.backdate(java.nio.file.Paths.get(s"$table/data/orphan99"))
+    writeOrphan(out, 4, "fresh001")
+
+    assert(Sink.compact(spark, table) == 1)
+    val v = SnapshotTable.currentVersion(table).get
+    assert(v == 3L && SnapshotTable.dataDirs(table, v).size == 1)
+    assert(rows(ExtractJob.readExtracted(spark, out)) == extracted)
+    assert(rows(ExtractJob.readLineage(spark, out)) == lineage)
+    assert(docSums == sums)
+    val compacted = new java.io.File(SnapshotTable.dataDirs(table, v).head).getName
+    assert(ExtractJob.readCheckpoints(spark, out).get.select("run_id").distinct()
+      .collect().map(_.getString(0)).toSeq == Seq(compacted))
+    val after = dataDirs(out)
+    assert(!after.contains("orphan99") && after.contains("fresh001"))
+    assert((listed :+ compacted).forall(after.contains))
+    // an idle re-run over the compacted table still publishes nothing
+    ExtractJob.run(spark, corpus(16), None, out)
+    assert(SnapshotTable.snapshots(table) == Seq(1L, 2L, 3L) && dataDirs(out) == after)
   }
 
   test("run's totals equal the view counts, orphans and recurring docs included") {

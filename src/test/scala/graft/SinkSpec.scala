@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotTable
 import graft.pipeline.Sink
 
 class SinkSpec extends AnyFunSuite {
@@ -10,35 +11,52 @@ class SinkSpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-sink").resolve("t").toString
 
-  test("replaceTrees: stale children deleted, other trees untouched") {
+  /** A table holding two trees: r1 (two children) and r2 (one child). */
+  private def twoTrees(): String = {
     import spark.implicits._
-    val path = tmp()
-    Seq(
+    val table = tmp()
+    SnapshotTable.append(spark, table, Seq(
       ("r1", "", "r1", 0), ("c1a", "r1", "r1", 1), ("c1b", "r1", "r1", 1),
       ("r2", "", "r2", 0), ("c2a", "r2", "r2", 1)
-    ).toDF("doc_id", "parent_id", "root_id", "level")
-      .write.parquet(path)
+    ).toDF("doc_id", "parent_id", "root_id", "level"))
+    table
+  }
 
+  private def replaceR1(table: String): Long = {
+    import spark.implicits._
     val replacement = Seq(("r1", "", "r1", 0), ("c1new", "r1", "r1", 1))
       .toDF("doc_id", "parent_id", "root_id", "level")
-    Sink.replaceTrees(spark, path, Seq("r1"), replacement)
+    Sink.replaceTrees(spark, table, Seq("r1"), replacement)
+  }
 
-    val after = spark.read.parquet(path).collect()
-      .map(r => r.getString(0)).sorted.toSeq
+  private def docIds(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(r => r.getString(0)).sorted.toSeq
+
+  test("replaceTrees: stale children deleted, other trees untouched") {
+    val table = twoTrees()
+    assert(replaceR1(table) == 2L)
     // c1a/c1b gone (stale-children delete), r1 tree replaced, r2 intact
-    assert(after == Seq("c1new", "c2a", "r1", "r2"))
+    assert(docIds(SnapshotTable.read(spark, table)) == Seq("c1new", "c2a", "r1", "r2"))
+  }
+
+  test("replaceTrees: a reader resolved at v before the replace reads exactly v's rows") {
+    val table = twoTrees()
+    val pinned = SnapshotTable.read(spark, table) // resolves v1's dirs now
+    replaceR1(table)
+    assert(docIds(pinned) == Seq("c1a", "c1b", "c2a", "r1", "r2"))
+    assert(docIds(SnapshotTable.read(spark, table, Some(1))) == docIds(pinned))
   }
 
   test("mergePaths: existing paths merged distinct, new docs inserted") {
     import spark.implicits._
-    val path = tmp()
-    Seq(("d1", Seq("/a")), ("d2", Seq("/b")))
-      .toDF("doc_id", "paths").write.parquet(path)
+    val table = tmp()
+    SnapshotTable.append(spark, table,
+      Seq(("d1", Seq("/a")), ("d2", Seq("/b"))).toDF("doc_id", "paths"))
 
-    Sink.mergePaths(spark, path,
+    Sink.mergePaths(spark, table,
       Seq(("d1", Seq("/a", "/c")), ("d3", Seq("/z"))).toDF("doc_id", "paths"))
 
-    val after = spark.read.parquet(path).collect()
+    val after = SnapshotTable.read(spark, table).collect()
       .map(r => (r.getString(0), r.getSeq[String](1).toList)).toMap
     assert(after("d1") == List("/a", "/c")) // merged, distinct
     assert(after("d2") == List("/b"))       // untouched
@@ -88,23 +106,18 @@ class SinkSpec extends AnyFunSuite {
 
   test("compact merges a many-small-files dir losslessly") {
     import spark.implicits._
-    val path = tmp()
-    (1 to 3000).toDF("x").repartition(30).write.parquet(path)
-    def parquetFiles = new java.io.File(path).listFiles()
+    val table = tmp()
+    // three appends of ten files each: three dirs, thirty files
+    (0 until 3).foreach { k =>
+      SnapshotTable.append(spark, table, (k * 1000 + 1 to (k + 1) * 1000).toDF("x").repartition(10))
+    }
+    def parquetFiles(dir: String) = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles == 30)
-    val n = Sink.compact(spark, path) // tiny data -> 1 target file
-    assert(n == 1 && parquetFiles == 1)
-    assert(spark.read.parquet(path).agg(org.apache.spark.sql.functions.sum("x"))
+    def current = SnapshotTable.dataDirs(table, SnapshotTable.currentVersion(table).get)
+    assert(current.map(parquetFiles) == Seq(10, 10, 10))
+    val n = Sink.compact(spark, table) // tiny data -> 1 target file
+    assert(n == 1 && current.size == 1 && parquetFiles(current.head) == 1)
+    assert(SnapshotTable.read(spark, table).agg(sum("x"))
       .first().getLong(0) == 3000L * 3001 / 2)
-  }
-
-  test("writeAtomic: old data fully replaced, no mixed state") {
-    import spark.implicits._
-    val path = tmp()
-    Seq(1, 2, 3).toDF("x").write.parquet(path)
-    Sink.writeAtomic(spark, path, Seq(9, 10).toDF("x"))
-    assert(spark.read.parquet(path).collect().map(_.getInt(0)).sorted.toSeq == Seq(9, 10))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".old")))
   }
 }

@@ -59,4 +59,18 @@ object SparkTestBase {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Sets the modification time of every file and dir in the tree at `p`
+    * to past `SnapshotTable`'s orphan grace period, children first so a
+    * dir's own time is not bumped afterwards.
+    */
+  def backdate(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    if (java.nio.file.Files.isDirectory(p)) {
+      val s = java.nio.file.Files.list(p)
+      try s.iterator().asScala.toList.foreach(backdate) finally s.close()
+    }
+    val past = System.currentTimeMillis() - graft.catalog.SnapshotTable.OrphanGraceMs - 3600000L
+    java.nio.file.Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(past))
+  }
 }
