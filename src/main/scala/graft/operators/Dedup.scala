@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import graft.core.{HashParams, Ids, JobTags}
 
@@ -27,7 +28,11 @@ import graft.core.{HashParams, Ids, JobTags}
   *    explicit probe set (sampled ids), keeping the work |probes| x |docs|:
   *    only a table of the probe documents' rare shingles is broadcast
   *    (batched under a byte budget), and the corpus streams past it in one
-  *    map-only pass, with no explode, join or aggregate.
+  *    map-only pass, with no explode, join or aggregate; its hot set comes
+  *    from per-task bucket counters (summed in a tree on the executors when
+  *    the tasks are many) and an exact recount of the passing buckets'
+  *    shingles, with a shuffle of every distinct shingle only when that
+  *    recount would send the driver more than its budget.
   */
 object Dedup {
 
@@ -305,12 +310,31 @@ object Dedup {
       .toDF("doc_id", "simhash")
   }
 
+  /** Calls `f(start, end)` for each 2-word shingle of `t`, in order: the
+    * words are the `string_split(t, ' ')` pieces (`t.split(" ", -1)`), and
+    * shingle i, `w(i) + " " + w(i+1)`, is `t.substring(start, end)`. No
+    * string is built.
+    */
+  private[graft] def foreachShingle(t: String)(f: (Int, Int) => Unit): Unit = {
+    // starts of words j-1 and j while word j is scanned
+    var w0 = 0
+    var w1 = 0
+    var j = 0
+    var p = 0
+    while (p <= t.length) {
+      if (p == t.length || t.charAt(p) == ' ') { // the end of word j
+        if (j >= 1) f(w0, p)
+        w0 = w1; w1 = p + 1
+        j += 1
+      }
+      p += 1
+    }
+  }
+
   /** A document's distinct 2-word shingles, string_split semantics. */
   private def shingleSet(t: String): scala.collection.mutable.HashSet[String] = {
-    val w = t.split(" ", -1) // string_split semantics
     val set = scala.collection.mutable.HashSet.empty[String]
-    var i = 0
-    while (i < w.length - 1) { set += (w(i) + " " + w(i + 1)); i += 1 }
+    foreachShingle(t)((s, e) => set += t.substring(s, e))
     set
   }
 
@@ -331,35 +355,61 @@ object Dedup {
     * one ubiquitous shingle ("of the") would touch |probes_with_it| probes
     * for each of |docs_with_it| documents, near-cartesian at corpus scale.
     * Dropped shingles are REPORTED by [[hotShingles]] (no silent caps),
-    * from the same [[shingleDf]] aggregate.
+    * which counts the same exact document frequencies.
     *
     * `probe` is a doc-level predicate over the columns of `docs` (the
     * default samples every 50th doc_id): it selects the probe documents
-    * before they are shingled, so it cannot refer to a shingle. `doc_id`
-    * must be unique per row: each row's shingle set is its document's
-    * profile, so two rows with one id would be two documents.
+    * before they are shingled, so it cannot refer to a shingle; a null
+    * `probe` is false, as in `filter`. `doc_id` must be unique per row:
+    * each row's shingle set is its document's profile, so two rows with
+    * one id would be two documents.
     *
-    * Shape: a hot pass, a probe collect and one map-only corpus pass.
-    *  - Hot pass: the df aggregate, then ONE driver collect of the hot
-    *    shingles (tagged `Dedup.ngramJaccard/hot`). It holds at most
-    *    (shingle occurrences) / (dfCap + 1) strings.
-    *  - Probe collect: ONE collect of the probe documents (tagged
-    *    `Dedup.ngramJaccard/probes`). The driver builds a [[ProbeTable]]
-    *    from their rare shingles ([[shingleSet]] minus the hot set): each
-    *    shingle string maps to the indices of the probes holding it, so a
-    *    match is exact, never "up to hash collisions".
-    *  - Corpus pass: the table is broadcast once and one typed
-    *    `mapPartitions` streams the corpus past it. Each document counts
-    *    `inter` per probe it touches in a counter array reused by the task
-    *    and emits its pairs then and there: all matches of one document
-    *    meet in its own task, so the pass has no explode, join, exchange
-    *    or aggregate.
+    * Shape: a hot pass of one or two map-only jobs, then one map-only
+    * corpus pass. The hot set is an iceberg query (Fang et al., "Computing
+    * Iceberg Queries Efficiently", VLDB 1998), answered exactly by a coarse
+    * count and a recount of the candidates only:
+    *  - Bucket count (tagged `Dedup.ngramJaccard/hot`): one job over
+    *    (doc_id, text, probe). Each task adds every shingle occurrence to an
+    *    array of 2^16 long counters, the bucket a hash of the shingle's
+    *    character range in the text (no string is built), and keeps its
+    *    probe rows. The arrays are summed by Spark's `treeAggregate`: with
+    *    at most 64 tasks the driver adds each task's array into one sum as
+    *    the results arrive; with more, the executors sum them in a tree
+    *    first, so the driver receives at most 67 arrays (512 KB each)
+    *    whatever the task count. A bucket's count is never below the df of
+    *    a shingle in it: it counts occurrences, and colliding shingles add
+    *    up.
+    *  - Recount (tagged `Dedup.ngramJaccard/hot`), only when some bucket
+    *    passes `dfCap`: one job over the text that counts the exact
+    *    per-document df of the shingles in the passing buckets, each task
+    *    sending the driver its (string, partial df) pairs. The hot set is
+    *    those whose df passes `dfCap`. When no bucket passes, no shingle
+    *    can, and the job is not run. The occurrences in the passing buckets
+    *    bound the pairs sent; past 2^18 of them (a low cap, or shingles hot
+    *    enough to fill their buckets) the hot set comes instead from the df
+    *    aggregate, a shuffle that hands the driver the hot set only.
+    *  - Corpus pass: the driver builds a [[ProbeTable]] from the probes'
+    *    rare shingles ([[shingleSet]] minus the hot set): each shingle
+    *    string maps to the indices of the probes holding it, so a match is
+    *    exact, never "up to hash collisions". The table is broadcast once
+    *    and one typed `mapPartitions` streams the corpus past it. Each
+    *    document counts `inter` per probe it touches in a counter array
+    *    reused by the task and emits its pairs then and there: all matches
+    *    of one document meet in its own task.
+    * Up to 64 tasks and 2^18 occurrences in the passing buckets, no job of
+    * the call shuffles: no plan holds an exchange, a join or an aggregate.
+    * Memory of the hot pass: a task holds its counter array (512 KB), its
+    * probe rows and, in the recount, the strings of the passing buckets it
+    * meets with their counts; the driver holds the summed counters and one
+    * arriving array, the probe rows, and at most 2^18 recounted strings,
+    * or the hot set (at most occurrences / (dfCap + 1) strings) when the
+    * aggregate runs.
     * A table is bounded by a byte budget (64 MB, an upper-bound estimate
     * per probe, hot set included). Past it, the probes are cut into
     * consecutive batches that each fit, with one corpus pass per batch,
     * and the passes are unioned; there is no join fallback. On the
-    * 5,150-doc perfbench `dedup` corpus one call launches 4 Spark jobs
-    * (the hot pass 2, the probe collect 1, the corpus pass 1).
+    * 5,150-doc perfbench `dedup` corpus one call launches 3 Spark jobs
+    * (the hot pass 2, the corpus pass 1).
     *
     * Emits (a=probe, b, inter, uni) where 5*inter >= uni (Jaccard >= 0.2)
     * over the rare-shingle profile, a != b. Integer-only output.
@@ -367,19 +417,15 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, docs: DataFrame,
                    dfCap: Long = Long.MaxValue,
                    probe: org.apache.spark.sql.Column = col("doc_id") % 50 === 0): DataFrame =
-    ngramJaccard(spark, docs, dfCap, probe, ProbeTableBytes)
+    ngramJaccard(spark, docs, dfCap, probe, ProbeTableBytes, HotBuckets)
 
-  /** [[ngramJaccard]] with the probe-table budget `tableBytes`. */
+  /** [[ngramJaccard]] with the probe-table budget `tableBytes` and
+    * `buckets` hot-pass counters.
+    */
   private[graft] def ngramJaccard(spark: SparkSession, docs: DataFrame, dfCap: Long,
-                                  probe: Column, tableBytes: Long): DataFrame = {
+                                  probe: Column, tableBytes: Long, buckets: Int): DataFrame = {
     import spark.implicits._
-    val (hot, probes) = JobTags.tagged(spark.sparkContext, "Dedup.ngramJaccard") { tag =>
-      tag("hot")
-      val hot = shingleDf(spark, docs).filter(col("df") > dfCap).select("shingle").as[String]
-        .collect().toSet
-      tag("probes")
-      (hot, docs.filter(probe).select("doc_id", "text").as[(Long, String)].collect())
-    }
+    val HotPass(hot, probes, _) = hotAndProbes(docs, dfCap, probe, buckets)
     val profiles = probes.map { case (id, t) => (id, shingleSet(t).filterInPlace(!hot(_)).toArray) }
     val corpus = docs.select("doc_id", "text").as[(Long, String)]
     probeBatches(profiles, hot.iterator.map(entryBytes).sum, tableBytes)
@@ -392,8 +438,150 @@ object Dedup {
       .toDF("a", "b", "inter", "uni")
   }
 
+  /** The number of hot-pass counters of [[ngramJaccard]]. */
+  private[graft] val HotBuckets = 1 << 16
+
+  /** The most occurrences the passing buckets may hold for the hot pass
+    * to recount them; they bound the (string, partial df) pairs the
+    * recount sends the driver. Past it the df aggregate gives the hot set.
+    */
+  private[graft] val RecountBudget = 1L << 18
+
+  /** The fan-in of the bucket count's sum: with more tasks than this, the
+    * executors sum the counter arrays in a tree before the driver does.
+    */
+  private[graft] val DriverArrays = 64
+
+  /** What the hot pass of [[ngramJaccard]] found: the shingles held by
+    * more than `dfCap` rows of `docs`, the (doc_id, text) rows where
+    * `probe` holds, in partition order, and the number of (string,
+    * partial df) pairs the recount sent the driver (0 when it did not run).
+    */
+  private[graft] final case class HotPass(hot: Set[String], probes: Array[(Long, String)], recounted: Long)
+
+  /** The hot pass of [[ngramJaccard]] over `buckets` counters. The recount
+    * runs when the occurrences in the passing buckets, which bound the
+    * pairs it sends the driver, are at most `recountBudget`; past it the
+    * df aggregate runs. The bucket count hands the driver at most `fanIn`
+    * + 3 counter arrays (Spark's tree stops within 3 of its fan-in).
+    */
+  private[graft] def hotAndProbes(docs: DataFrame, dfCap: Long, probe: Column,
+                                  buckets: Int = HotBuckets, recountBudget: Long = RecountBudget,
+                                  fanIn: Int = DriverArrays): HotPass =
+    JobTags.tagged(docs.sparkSession.sparkContext, "Dedup.ngramJaccard") { tag =>
+      tag("hot")
+      val tally = sqlRun(docs.select(col("doc_id"), col("text"), coalesce(probe, lit(false)))) { rows =>
+        rows.mapPartitionsWithIndex { (i, it) =>
+          val c = new Array[Long](buckets)
+          val ps = Array.newBuilder[(Long, String)]
+          it.foreach { r =>
+            val t = r.getUTF8String(1).toString
+            foreachShingle(t)((s, e) => c(bucket(t, s, e, buckets)) += 1)
+            if (r.getBoolean(2)) ps += ((r.getLong(0), t))
+          }
+          Iterator(Tally(c, List(i -> ps.result())))
+        }.treeAggregate(Tally(null, Nil))(_ + _, _ + _, treeDepth(rows.getNumPartitions, fanIn))
+      }
+      val probes = tally.probes.sortBy(_._1).iterator.flatMap(_._2).toArray
+      val counts = Option(tally.counts).getOrElse(new Array[Long](buckets))
+      val candidates = counts.iterator.filter(_ > dfCap).sum
+      if (candidates == 0) HotPass(Set.empty, probes, 0)
+      else if (candidates <= recountBudget) {
+        val (hot, recounted) = recount(docs, counts.map(_ > dfCap), dfCap)
+        HotPass(hot, probes, recounted)
+      } else {
+        import docs.sparkSession.implicits._
+        val hot = shingleDf(docs.sparkSession, docs).filter(col("df") > dfCap).select("shingle").as[String]
+          .collect().toSet
+        HotPass(hot, probes, 0)
+      }
+    }
+
+  /** A share of the bucket count: occurrences per bucket (null in the
+    * empty share) and the probe rows of each partition it covers, by
+    * partition index.
+    */
+  private final case class Tally(counts: Array[Long], probes: List[(Int, Array[(Long, String)])]) {
+    /** This share and `o`, summed into this share's counters. */
+    def +(o: Tally): Tally =
+      if (counts == null) o
+      else if (o.counts == null) this
+      else {
+        var b = 0
+        while (b < counts.length) { counts(b) += o.counts(b); b += 1 }
+        Tally(counts, probes ++ o.probes)
+      }
+  }
+
+  /** The least depth at which Spark's `treeAggregate` of `n` partials
+    * hands the driver about `fanIn` of them (about n^(1/depth)); 1, a
+    * single job stage, while `n <= fanIn`.
+    */
+  private def treeDepth(n: Int, fanIn: Int): Int = {
+    require(fanIn >= 2, fanIn)
+    var d = 1
+    while (math.ceil(math.pow(n, 1.0 / d)) > fanIn) d += 1
+    d
+  }
+
+  /** The shingles of the `passing` buckets held by more than `dfCap` rows
+    * of `docs`, and the number of (string, partial df) pairs the driver
+    * merged: one job that counts each one's exact df.
+    */
+  private def recount(docs: DataFrame, passing: Array[Boolean], dfCap: Long): (Set[String], Long) = {
+    val df = scala.collection.mutable.HashMap.empty[String, Long]
+    var pairs = 0L
+    sqlRun(docs.select(col("text"))) { rows =>
+      val perTask = (it: Iterator[InternalRow]) => {
+        // each candidate's (df, the last row that counted it)
+        val seen = new java.util.HashMap[String, Array[Int]]()
+        var row = 0
+        it.foreach { r =>
+          val t = r.getUTF8String(0).toString
+          row += 1
+          foreachShingle(t) { (s, e) =>
+            if (passing(bucket(t, s, e, passing.length))) {
+              val c = seen.computeIfAbsent(t.substring(s, e), _ => new Array[Int](2))
+              if (c(1) != row) { c(0) += 1; c(1) = row }
+            }
+          }
+        }
+        val out = Array.newBuilder[(String, Int)]
+        seen.forEach((s, c) => out += ((s, c(0))))
+        out.result()
+      }
+      docs.sparkSession.sparkContext.runJob(rows, perTask, (_: Int, part: Array[(String, Int)]) => {
+        pairs += part.length
+        part.foreach { case (s, n) => df(s) = df.getOrElse(s, 0L) + n }
+      })
+    }
+    (df.iterator.collect { case (s, n) if n > dfCap => s }.toSet, pairs)
+  }
+
+  /** The hot-pass bucket of `t.substring(s, e)` among `buckets`, from the
+    * chars in place: String.hashCode's polynomial, spread by murmur3's
+    * 32-bit finalizer.
+    */
+  private def bucket(t: String, s: Int, e: Int, buckets: Int): Int = {
+    var h = 0
+    var i = s
+    while (i < e) { h = 31 * h + t.charAt(i); i += 1 }
+    h ^= h >>> 16; h *= 0x85ebca6b
+    h ^= h >>> 13; h *= 0xc2b2ae35
+    h ^= h >>> 16
+    Integer.remainderUnsigned(h, buckets)
+  }
+
+  /** `f` of `df`'s rows, run as a SQL execution of `df`'s plan, so query
+    * listeners see the jobs it launches.
+    */
+  private def sqlRun[T](df: DataFrame)(f: org.apache.spark.rdd.RDD[InternalRow] => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("runJob"))(f(qe.toRdd))
+  }
+
   /** The byte budget of one [[ProbeTable]]. */
-  private val ProbeTableBytes = 64L << 20
+  private[graft] val ProbeTableBytes = 64L << 20
 
   /** An upper bound on what one shingle adds to a table: the string (two
     * bytes a char), its map entry, its posting array and one posting.
@@ -603,6 +791,8 @@ object Dedup {
 
   /** The shingles [[ngramJaccard]] dropped at `dfCap` — the no-silent-caps
     * record: (n_dropped distinct shingles, max document frequency seen).
+    * Both count the exact df of a shingle, so `n_dropped` is the size of
+    * the hot set the Jaccard call drops.
     */
   def hotShingles(spark: SparkSession, docs: DataFrame, dfCap: Long): DataFrame =
     shingleDf(spark, docs)

@@ -210,14 +210,17 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("run tags each step's jobs and keeps the caller's job group and description") {
-    val seen = SparkTestBase.jobDescriptions {
+    val seen = SparkTestBase.launched {
       val out = tmpDir()
       ExtractJob.run(spark, corpus(10), None, out)
       ExtractJob.run(spark, corpus(12), None, out)
     }
     val steps = Seq("extract", "totals")
       .map("ExtractJob.run/" + _)
-    assert(seen.toSet == steps.toSet)
+    assert(seen.jobs.toSet == steps.toSet)
+    // every stage, the adaptive ones included, is named after its job's step
+    assert(seen.stages.map(_._1).toSet == steps.toSet, seen.stages)
+    assert(seen.stages.forall { case (job, stage) => stage == job }, seen.stages)
   }
 
   test("resume skips terminal statuses and retries the rest") {

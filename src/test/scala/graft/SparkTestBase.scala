@@ -22,43 +22,69 @@ object SparkTestBase {
     s
   }
 
-  /** Descriptions of the jobs `body` launches under a fresh job group whose
-    * caller description is "caller work"; checks that both survive `body`.
+  /** The jobs and stages a block launched: each job's description, each
+    * submitted stage's (job description, stage name), in order, and the
+    * bytes of task results the driver received, summed by job description.
     */
-  def jobDescriptions(body: => Unit): Seq[String] = {
+  final case class Launched(jobs: Seq[String], stages: Seq[(String, String)],
+                            resultBytes: Map[String, Long])
+
+  /** What `body` launches under a fresh job group whose caller description
+    * is "caller work" and whose call site (stage name) is "caller site";
+    * checks that all three survive `body`.
+    */
+  def launched(body: => Unit): Launched = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted,
+      SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val group = s"caller-${java.util.UUID.randomUUID}"
     val sentinel = s"sentinel-$group"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    // each stage's job description, and the result bytes of each description
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val bytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    def description(props: java.util.Properties): Option[String] =
+      Option(props).filter(_.getProperty("spark.jobGroup.id") == group)
+        .map(p => String.valueOf(p.getProperty("spark.job.description")))
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
-          val d = props.map(_.getProperty("spark.job.description")).orNull
-          if (d == sentinel) sentinelSeen.countDown() else seen.add(String.valueOf(d))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        description(e.properties).foreach { d =>
+          if (d == sentinel) sentinelSeen.countDown()
+          else { jobs.add(d); e.stageIds.foreach(stageJob.put(_, d)) }
         }
-      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        description(e.properties).filter(_ != sentinel).foreach(d => stages.add((d, e.stageInfo.name)))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (d <- Option(stageJob.get(e.stageId)); m <- Option(e.taskMetrics))
+          bytes.merge(d, m.resultSize, (a, b) => a + b)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "caller work", interruptOnCancel = false)
+      sc.setCallSite("caller site")
       body
       assert(sc.getLocalProperty("spark.jobGroup.id") == group)
       assert(sc.getLocalProperty("spark.job.description") == "caller work")
+      assert(sc.getLocalProperty("callSite.short") == "caller site")
+      assert(sc.getLocalProperty("callSite.long") == null)
       // listener events arrive in order: once the sentinel job is seen, so
-      // are all of body's jobs
+      // are all of body's jobs and stages
       sc.setJobDescription(sentinel)
       sc.parallelize(1 to 2).count()
       assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      seen.asScala.toSeq
+      Launched(jobs.asScala.toSeq, stages.asScala.toSeq, bytes.asScala.map { case (d, n) => d -> n.longValue }.toMap)
     } finally {
       sc.clearJobGroup()
+      sc.clearCallSite()
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Descriptions of the jobs `body` launches; see [[launched]]. */
+  def jobDescriptions(body: => Unit): Seq[String] = launched(body).jobs
 
   /** Sets the modification time of every file and dir in the tree at `p`
     * to past `SnapshotTable`'s orphan grace period, children first so a
