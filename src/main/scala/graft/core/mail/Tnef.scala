@@ -177,9 +177,6 @@ object Tnef {
       atts.iterator.map(a => Msg.FileAtt(a.name, a.data): Msg.Attachment).toVector)
   }
 
-  def parseLatin1(s: String): Msg.MsgDoc =
-    parse(s.getBytes(StandardCharsets.ISO_8859_1))
-
   // ---------------------------------------------------------------- writer
 
   private def putU16(b: ArrayBuffer[Byte], v: Int): Unit = {

@@ -265,30 +265,6 @@ object Cfb {
     entries(bytes, maxEntryBytes, maxEntries).filterNot(_.isStorage)
       .map(e => (e.path, e.bytes))
 
-  /** [[streamEntries]] memoized per thread on the latin1 payload's
-    * IDENTITY: the extraction router (own-text) and the container spawner
-    * (children) parse the SAME span string instance back-to-back, so a
-    * one-slot reference-keyed cache halves the per-document FAT/directory
-    * walk with no cross-document state and no effect on determinism.
-    */
-  def streamEntriesOf(latin1: String, maxEntryBytes: Int): Vector[(String, Option[Array[Byte]])] = {
-    val ref = lastParse.get()
-    val cached = if (ref == null) null else ref.get()
-    if (cached != null && (cached.key eq latin1) && cached.max == maxEntryBytes) cached.value
-    else {
-      val v = streamEntries(
-        latin1.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), maxEntryBytes)
-      lastParse.set(new java.lang.ref.SoftReference(new Memo(latin1, maxEntryBytes, v)))
-      v
-    }
-  }
-  private final class Memo(val key: String, val max: Int,
-                           val value: Vector[(String, Option[Array[Byte]])])
-  // SoftReference: the slot must not pin the LAST document's multi-MB
-  // payload + parsed entries on every executor thread through unrelated
-  // later stages — under heap pressure the GC reclaims it
-  private val lastParse = new ThreadLocal[java.lang.ref.SoftReference[Memo]]
-
   // ---------------------------------------------------------------- writer
 
   private final case class Node(name: String, var data: Array[Byte],

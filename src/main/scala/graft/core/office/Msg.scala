@@ -136,11 +136,6 @@ object Msg {
     graft.core.Ids.canonicalEntries(fields)
   }
 
-  /** Own text of a `cfb` span (the [[graft.core.route.Extract]] route):
-    * a message contributes its body, a legacy Word binary its piece-table
-    * text; a generic compound file is a pure container whose content
-    * lives in its stream children.
-    */
   /** Password-protected OOXML saved as a compound file (ECMA-376 Part 2
     * / MS-OFFCRYPTO): the EncryptionInfo + EncryptedPackage stream pair.
     * Must classify NOT_DECRYPTED — exploding the ciphertext package as
@@ -151,23 +146,10 @@ object Msg {
     entries.exists(_._1 == "EncryptionInfo") &&
       entries.exists(_._1 == "EncryptedPackage")
 
-  def cfbText(latin1: String, maxEntryBytes: Int): String = {
-    val entries = Cfb.streamEntriesOf(latin1, maxEntryBytes)
-    if (isEncryptedOffice(entries)) {
-      // try the silent-open defaults (VelvetSweatshop, empty) before
-      // classifying encrypted — POI/Tika parity; a successful open is an
-      // ordinary OOXML package whose body text flows as usual
-      val zip = OoxmlCrypt.decryptDefault(entries)
-      Ooxml.packageText(new String(zip, StandardCharsets.ISO_8859_1), maxEntryBytes)
-    }
-    else if (isMsg(entries)) parse(entries).body
-    else docText(entries).getOrElse("")
-  }
-
   /** Own text of a legacy Office DOCUMENT compound file (Some), or None
-    * for a generic/unrecognized container — the single dispatch point the
-    * router and both spawn paths share, so adding a legacy format can
-    * never diverge between them.
+    * for a generic/unrecognized container — the single dispatch point of
+    * the extractor's `cfb` container row, so adding a legacy format can
+    * never diverge between the root and a nested entry.
     */
   def docText(entries: Seq[(String, Option[Array[Byte]])]): Option[String] =
     if (WordDoc.isDoc(entries)) Some(WordDoc.text(entries))
@@ -176,13 +158,6 @@ object Msg {
     else if (Pub.isPub(entries)) Some(Pub.text(entries))
     else if (Hwp.isHwp(entries)) Some(Hwp.text(entries))
     else None
-
-  /** Cheap name-only predicate for [[docText]]'s Some case — for callers
-    * that only need to know whether stream children should be suppressed.
-    */
-  def isLegacyDoc(entries: Seq[(String, Option[Array[Byte]])]): Boolean =
-    WordDoc.isDoc(entries) || Xls.isXls(entries) || Ppt.isPpt(entries) ||
-      Pub.isPub(entries) || Hwp.isHwp(entries)
 
   // ---------------------------------------------------------------- writer
 

@@ -244,25 +244,6 @@ object OneNote {
   /** All RichEditTextUnicode paragraphs of a section, in walk order. */
   def text(bytes: Array[Byte]): String = parse(bytes)._1
 
-  /** [[parse]] memoized per thread on the latin1 payload's IDENTITY (the
-    * [[Cfb.streamEntriesOf]] pattern): the extraction router (own text)
-    * and the container spawner (embedded files) parse the SAME span
-    * string instance back-to-back — one walk serves both.
-    */
-  def parseLatin1(latin1: String): (String, Vector[Array[Byte]]) = {
-    val ref = lastParse.get()
-    val cached = if (ref == null) null else ref.get()
-    if (cached != null && (cached.key eq latin1)) cached.value
-    else {
-      val v = parse(latin1.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-      lastParse.set(new java.lang.ref.SoftReference(new Memo(latin1, v)))
-      v
-    }
-  }
-
-  private final class Memo(val key: String, val value: (String, Vector[Array[Byte]]))
-  private val lastParse = new ThreadLocal[java.lang.ref.SoftReference[Memo]]
-
   // ------------------------------------------------------ fixture writer
 
   private def w16(v: Int): Array[Byte] = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)

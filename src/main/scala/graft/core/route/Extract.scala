@@ -65,10 +65,17 @@ object Extract {
     * not an instruction to fail its parent document.
     */
   def extractSpan(kind: String, text: String, cfg: Config = DefaultConfig,
-                  markers: Boolean = true): (String, String) = {
+                  markers: Boolean = true): (String, String) =
+    routeSpan(kind, text, cfg, markers, null, 0)
+
+  /** [[extractSpan]]; a document row's children from the parse that got
+    * its own text are kept in slot `i` of `sp`, when given.
+    */
+  private def routeSpan(kind: String, text: String, cfg: Config, markers: Boolean,
+                        sp: Spawner, i: Int): (String, String) = {
     val t = if (text == null) "" else text
     if (t.length > cfg.maxSpanChars) ("", Reason.Unsupported)
-    else if (!markers) routeKind(kind, t, cfg)
+    else if (!markers) routeKind(kind, t, cfg, sp, i)
     else if (t.startsWith(EncryptedMarker)) ("", Reason.Encrypted)
     else if (t.startsWith(PoisonMarker)) throw new ParseFailure(s"parser crash on $kind span")
     else if (t.startsWith(MissingMarker)) throw new PayloadMissing(s"payload blob missing for $kind span")
@@ -81,10 +88,11 @@ object Extract {
       while (System.nanoTime() < until) {} // simulated hanging parse
       (t, "")
     }
-    else routeKind(kind, t, cfg)
+    else routeKind(kind, t, cfg, sp, i)
   }
 
-  private def routeKind(kind: String, t: String, cfg: Config): (String, String) =
+  private def routeKind(kind: String, t: String, cfg: Config, sp: Spawner,
+                        i: Int): (String, String) =
     kind match {
       case "html"      => (HtmlExtractor.mainText(t), "")
       case "pdf"       => (PdfLayout.text(t), "")
@@ -113,10 +121,6 @@ object Extract {
       // and an empty body — text would need OCR/transcription, so the
       // document classifies empty-file, NOT unsupported
       case "image" | "av" => ("", "")
-      case "pst"       => ("", "") // mailbox: no own text, the folder tree explodes to children
-      // cfb: an Outlook MESSAGE yields its body text; a generic compound
-      // file is a pure container (streams explode to children)
-      case "cfb"       => (graft.core.office.Msg.cfbText(t, cfg.maxSpanChars), "")
       case "rtf"       => (graft.core.text.Rtf.text(t), "")  // real RTF bytes (reference rtf fixture)
       case "csv"       => (graft.core.text.Csv.text(t), "")  // delimited table text (reference csv fixture)
       case "dbf"       => // dBase table: header + active rows, tab-joined
@@ -131,8 +135,15 @@ object Extract {
       // a container row's own text: a package or message body, or none —
       // its entries explode to children
       case _ => ContainerByKind.get(kind) match {
-        case Some(c) => (c.ownText(t, cfg), "")
-        case None    => ("", Reason.Unsupported)
+        case Some(p: Parses) =>
+          if (!p.document) ("", "")
+          else {
+            val n = topNode(p, t, cfg)
+            if (sp != null) sp.keep(i, n.kids)
+            (n.body, "")
+          }
+        case Some(u: Unpacks) => (u.ownText(t, cfg), "")
+        case None => ("", Reason.Unsupported)
       }
     }
 
@@ -157,8 +168,6 @@ object Extract {
       * entry's file-walk kind, computed at most once per entry.
       */
     def detect(data: Array[Byte], sniffed: => String): Boolean
-    /** What a top-level span of this kind reads as its own text. */
-    def ownText(t: String, cfg: Config): String
   }
 
   /** An archive or codec: the payload bytes unpack into named entries
@@ -171,56 +180,134 @@ object Extract {
                                    unpack: (Array[Byte], Int) => Entries,
                                    pkg: Boolean = false) extends Container {
     def detect(data: Array[Byte], sniffed: => String): Boolean = magic(data)
+    /** What a top-level span of this kind reads as its own text. */
     def ownText(t: String, cfg: Config): String =
       if (pkg) graft.core.office.Ooxml.packageText(t, cfg.maxSpanChars) else ""
   }
 
-  /** A parsed format: the payload text parses into the node's own body and
-    * its children; a nested entry is recognised by the file-walk sniff
-    * ([[graft.sources.Ingest.sniffKind]]). A `document` row's body is also a
-    * top-level span's own text (mail, page saves, sections, plists); the
-    * others are pure containers (mailboxes, dumps, databases) with an empty
-    * body, never parsed for text. `parse` runs before the node's first
+  /** A top-level span's entries, unpacked when its children spawn. */
+  private def unpacked(u: Unpacks, data: Array[Byte], cfg: Config): Kids =
+    (sp, pid, ord, lvl) => {
+      val entries = u.unpack(data, cfg.maxSpanChars)
+      sp.entries(if (u.pkg) packageParts(entries).getOrElse(entries) else entries, pid, ord, lvl)
+    }
+
+  /** A parsed format: the payload parses into a [[Node]]. A nested entry
+    * is recognised by `magic` when given, else by the file-walk sniff
+    * ([[graft.sources.Ingest.sniffKind]]). A `document` row's body is also
+    * a top-level span's own text (mail, page saves, sections, plists,
+    * compound files), parsed once in the routing pass; the others are pure
+    * containers (mailboxes, dumps, databases) with an empty body, parsed
+    * when their children spawn. `parse` runs before the node's first
     * emission, so a payload it rejects yields exactly one failure node; the
-    * returned [[Kids]] run after it.
+    * node's [[Kids]] run after it.
     */
   private final case class Parses(kind: String, document: Boolean,
-                                  parse: (Payload, Config) => (String, Kids))
+                                  parse: (Payload, Config) => Node,
+                                  magic: Array[Byte] => Boolean = null)
     extends Container {
-    def detect(data: Array[Byte], sniffed: => String): Boolean = sniffed == kind
-    def ownText(t: String, cfg: Config): String =
-      if (document) parse(new Payload(t, null), cfg)._1 else ""
+    def detect(data: Array[Byte], sniffed: => String): Boolean =
+      if (magic != null) magic(data) else sniffed == kind
   }
 
-  /** A parsed format's payload: its text (a span's text, or a nested
-    * entry's [[graft.sources.Ingest.decodePayload]]) and its raw bytes,
-    * taken from the byte-transparent text on first use when none came
-    * with it.
+  /** A parsed format's payload: a span's text, or a nested entry's raw
+    * bytes; each view is made from the other on first use (an entry's text
+    * is its [[graft.sources.Ingest.decodePayload]]).
     */
-  private final class Payload(val text: String, raw: Array[Byte]) {
-    lazy val bytes: Array[Byte] = if (raw != null) raw else text.getBytes(ISO_8859_1)
+  private final class Payload(kind: String, span: String, raw: Array[Byte]) {
+    lazy val text: String =
+      if (raw == null) span else graft.sources.Ingest.decodePayload(kind, raw)
+    lazy val bytes: Array[Byte] = if (raw != null) raw else span.getBytes(ISO_8859_1)
+  }
+
+  /** What a parsed payload spawns: the node's own body and its children.
+    * Nested, the node's id hashes `identity` (null: the raw bytes); a
+    * `guarded` identity is also the size the guards read, checked again
+    * before the node is emitted (a message's logical canonical fields).
+    * `as`: the payload is transport for these bytes (a decrypted package),
+    * which spawn in its place, at the root as a zip span and nested as the
+    * same entry.
+    */
+  private final class Node(val body: String, val kids: Kids, id: => String = null,
+                           val guarded: Boolean = false, val as: Array[Byte] = null) {
+    lazy val identity: String = id
+  }
+
+  /** A top-level span's node; a transport payload reads as its zip. */
+  private def topNode(p: Parses, t: String, cfg: Config): Node = {
+    val n = p.parse(new Payload(p.kind, t, null), cfg)
+    if (n.as == null) n
+    else new Node(Zip.ownText(new String(n.as, ISO_8859_1), cfg), unpacked(Zip, n.as, cfg))
   }
 
   private def member(f: (Array[Byte], Int) => Archive.UnzippedEntry)
   : (Array[Byte], Int) => Entries = (b, max) => Vector(f(b, max))
 
+  private def entryKids(es: Seq[Archive.UnzippedEntry]): Kids =
+    (sp, pid, ord, lvl) => sp.entries(es, pid, ord, lvl)
+
   private def files(es: Seq[(String, Array[Byte])]): Kids =
-    (sp, pid, ord, lvl) => sp.entries(es.map { case (n, b) => (n, Some(b)) }, pid, ord, lvl)
+    entryKids(es.map { case (n, b) => (n, Some(b)) })
+
+  private def attachments(as: Seq[graft.core.office.Msg.Attachment]): Kids =
+    (sp, pid, ord, lvl) => sp.each(as, ord)(sp.spawnAtt(_, pid, _, lvl))
+
+  /** An Outlook message (.msg, a .pst item, an attached message): its body,
+    * its attachments recursing; its id hashes its logical canonical fields
+    * ([[graft.core.office.Msg.canonical]]), so property-stream encoding
+    * never changes ids.
+    */
+  private def msgNode(m: graft.core.office.Msg.MsgDoc): Node =
+    new Node(m.body, attachments(m.attachments), graft.core.office.Msg.canonical(m),
+      guarded = true)
+
+  private def canonicalOf(entries: Entries): String =
+    Ids.canonicalEntries(entries.map { case (n, b) =>
+      (n, b.map(x => new String(x, ISO_8859_1)).getOrElse(""))
+    })
 
   // columnar dumps: one child per ROW (the jsonl contract); rows past the
   // breadth cap are read with headroom, then refused counted
   private def dumpRowCap(cfg: Config): Int = // overflow-safe headroom over the breadth guard
     if (cfg.maxSpans > Int.MaxValue - 64) Int.MaxValue else cfg.maxSpans + 64
-  private def dump(rows: (Vector[String], Long)): (String, Kids) =
-    ("", (sp, pid, ord, lvl) => sp.dumpRows(rows._1, rows._2, pid, ord, lvl))
+  private def dump(rows: (Vector[String], Long)): Node =
+    new Node("", (sp, pid, ord, lvl) => sp.dumpRows(rows._1, rows._2, pid, ord, lvl))
 
   private val Zip = Unpacks("zip", Archive.isZip, Archive.unzip(_, _), pkg = true)
 
-  /** Every container format, in nested detection order: the magic-byte
-    * rows first, then the sniffed ones. Adding a format takes one row here
-    * plus its [[graft.sources.Ingest.sniffKind]] arm.
+  /** Every container format, in nested detection order: the two Outlook
+    * and OLE2 rows first (by magic, ahead of any archive), then the
+    * magic-byte archive rows, then the sniffed ones. Adding a format takes
+    * one row here, detected by its magic or by its
+    * [[graft.sources.Ingest.sniffKind]] arm.
     */
   private val Containers: Vector[Container] = Vector(
+    // Outlook mailbox: folders, messages, attachments, recovered and failed
+    // entries hang below it (an encrypted pst reads encrypted)
+    Parses("pst", document = false, (t, cfg) => {
+      val pst = graft.core.office.Pst.parse(t.bytes,
+        graft.core.office.Pst.byteBudget(cfg.maxSpanChars))
+      new Node("", (sp, pid, ord, lvl) => sp.pstNodes(pst, pid, ord, lvl))
+    }, graft.core.office.Pst.isPst),
+    // OLE2 compound file: an Outlook message, a legacy Office document
+    // (.doc/.xls/.ppt: body, only its ObjectPool objects spawn) or a generic
+    // compound file (every stream spawns), the last two identified by their
+    // canonical streams. A password-protected OOXML package is transport for
+    // the package the silent-open defaults (VelvetSweatshop, empty) decrypt;
+    // a real password throws DecryptFailure, so ciphertext never explodes
+    Parses("cfb", document = true, (t, cfg) => {
+      import graft.core.office.Msg
+      val entries = graft.core.office.Cfb.streamEntries(t.bytes, cfg.maxSpanChars)
+      if (Msg.isEncryptedOffice(entries))
+        new Node("", null, as = graft.core.office.OoxmlCrypt.decryptDefault(entries))
+      else if (Msg.isMsg(entries)) msgNode(Msg.parse(entries))
+      else Msg.docText(entries) match {
+        case Some(body) =>
+          new Node(body, entryKids(entries.filter(_._1.startsWith("ObjectPool/"))),
+            canonicalOf(entries))
+        case None => new Node("", entryKids(entries), canonicalOf(entries))
+      }
+    }, graft.core.office.Cfb.isCfb),
     Zip,
     Unpacks("tar", Archive.isTar, Archive.untar(_, _)),
     Unpacks("7z", Archive.is7z, Archive.un7z(_, _)),
@@ -263,12 +350,12 @@ object Extract {
       Warc.records(new String(b, ISO_8859_1), max).map(r => (r.targetUri, r.body))),
     // one JSON object per line = one logical document per line
     Parses("jsonl", document = false, (t, _) =>
-      ("", (sp, pid, ord, lvl) => sp.jsonlLines(t.text, pid, ord, lvl))),
+      new Node("", (sp, pid, ord, lvl) => sp.jsonlLines(t.text, pid, ord, lvl))),
     // RFC-822: body text; attachments are entries of the message
     // (RFC822Parser semantics), filename as resource name
     Parses("eml", document = true, (t, _) => {
       val m = graft.core.mail.Eml.parse(t.text)
-      (m.body, files(m.attachments))
+      new Node(m.body, files(m.attachments))
     }),
     Parses("parquet", document = false, (t, cfg) => dump(graft.sources.ParquetDump.textRows(
       t.bytes, dumpRowCap(cfg), cfg.maxSpanChars))),
@@ -278,13 +365,13 @@ object Extract {
     // and recursing below
     Parses("sqlite", document = false, (t, cfg) => {
       val tabs = graft.core.db.Sqlite.tables(t.bytes, maxCells = dumpRowCap(cfg))
-      ("", (sp, pid, ord, lvl) => sp.sqliteTables(tabs, pid, ord, lvl))
+      new Node("", (sp, pid, ord, lvl) => sp.sqliteTables(tabs, pid, ord, lvl))
     }),
     // Apple binary plist: flat path:value rendering; NSData payloads
     // spawn as sniffed children, their dotted paths the resource names
     Parses("plist", document = true, (t, _) => {
       val v = graft.core.db.Plist.parse(t.bytes)
-      (graft.core.db.Plist.text(v), (sp, pid, ord, lvl) =>
+      new Node(graft.core.db.Plist.text(v), (sp, pid, ord, lvl) =>
         files(graft.core.db.Plist.dataBlobs(v))(sp, pid, ord, lvl))
     }),
     // each mailbox message is a document child carrying its parsed
@@ -293,12 +380,12 @@ object Extract {
     // (a UTF-8 BOM read as ISO-8859-1)
     Parses("mbox", document = false, (t, _) => {
       val messages = graft.core.mail.Mbox.split(t.text.stripPrefix("\u00ef\u00bb\u00bf"))
-      ("", (sp, pid, ord, lvl) => sp.each(messages, ord)(sp.mboxMessage(_, pid, _, lvl)))
+      new Node("", (sp, pid, ord, lvl) => sp.each(messages, ord)(sp.mboxMessage(_, pid, _, lvl)))
     }),
     // Apple Mail length-framed message: same shape as eml
     Parses("emlx", document = true, (t, _) => {
       val m = graft.core.mail.Eml.parseEmlx(t.text)
-      (m.body, files(m.attachments))
+      new Node(m.body, files(m.attachments))
     }),
     // RFC 2557 page save: root part through the HTML extractor (Tika
     // routes mhtml to HtmlParser); saved resources (images, stylesheets,
@@ -306,20 +393,20 @@ object Extract {
     // segment
     Parses("mhtml", document = true, (t, _) => {
       val m = graft.core.mail.Mhtml.parse(t.text)
-      (HtmlExtractor.mainText(m.html), files(m.parts))
+      new Node(HtmlExtractor.mainText(m.html), files(m.parts))
     }),
     // OneNote section: RichEditTextUnicode paragraphs; embedded
     // FileDataStoreObject payloads spawn as sniffed children named by
     // their ordinal
     Parses("one", document = true, (t, _) => {
-      val (txt, fs) = graft.core.office.OneNote.parseLatin1(t.text)
-      (txt, (sp, pid, ord, lvl) =>
+      val (txt, fs) = graft.core.office.OneNote.parse(t.bytes)
+      new Node(txt, (sp, pid, ord, lvl) =>
         sp.each(fs, ord)((b, o) => sp.spawnEntry(s"fileData_$o", Some(b), pid, o, lvl)))
     }),
     // winmail.dat: body text; attachments spawn like a message's
     Parses("tnef", document = true, (t, _) => {
-      val m = graft.core.mail.Tnef.parseLatin1(t.text)
-      (m.body, (sp, pid, ord, lvl) => sp.each(m.attachments, ord)(sp.spawnAtt(_, pid, _, lvl)))
+      val m = graft.core.mail.Tnef.parse(t.bytes)
+      new Node(m.body, attachments(m.attachments))
     })
   )
 
@@ -337,17 +424,11 @@ object Extract {
       Some(entries.filter(e => imgs(e._1)))
     } else Some(entries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1)))
 
-  /** Span kinds that spawn embedded children in [[explodeCounted]] /
-    * [[spawnContainers]]: the table's rows plus the top-level-only arms.
+  /** Span kinds that spawn embedded children in [[explodeCounted]]: the
+    * table's rows, plus `media` (the synthetic chain model) and `pdf_bytes`
+    * (page image XObjects), which spawn at the root only.
     */
-  private val ContainerKinds: Set[String] =
-    ContainerByKind.keySet ++ Set("media", "pdf_bytes", "cfb", "pst")
-
-  /** Null spans (a row written with spans=NULL) are treated as an empty
-    * span array — reason=empty-file, never a failure.
-    */
-  private def spansOrEmpty(doc: DocIn): Array[SpanIn] =
-    if (doc.spans == null) Array.empty[SpanIn] else doc.spans
+  private val ContainerKinds: Set[String] = ContainerByKind.keySet ++ Set("media", "pdf_bytes")
 
   /** Cooperative per-document deadline check (the reference's parse-timeout
     * watchdog, `Extractor.java:620-648`, re-expressed as boundary checks —
@@ -366,17 +447,32 @@ object Extract {
     * array order (stable sort), so the output is deterministic.
     */
   def extractDoc(doc: DocIn, cfg: Config = DefaultConfig,
-                 deadlineNanos: Long = Long.MaxValue): DocOut = {
-    val sorted = spansOrEmpty(doc).sortBy(_.offset).take(cfg.maxSpans)
+                 deadlineNanos: Long = Long.MaxValue): DocOut =
+    route(Ids.rootId(doc.doc_id), sortedSpans(doc), cfg, deadlineNanos, null)
+
+  /** A document's spans by offset. Null spans (a row written with
+    * spans=NULL) are treated as an empty span array — reason=empty-file,
+    * never a failure.
+    */
+  private def sortedSpans(doc: DocIn): Array[SpanIn] =
+    if (doc.spans == null) Array.empty[SpanIn] else doc.spans.sortBy(_.offset)
+
+  /** The routing pass of [[extractDoc]] over the offset-sorted spans, the
+    * first `maxSpans` of them; `sp`, when given, keeps the children of the
+    * document rows it parses.
+    */
+  private def route(rid: String, sorted: Array[SpanIn], cfg: Config, deadlineNanos: Long,
+                    sp: Spawner): DocOut = {
+    val n = if (cfg.maxSpans < sorted.length) math.max(cfg.maxSpans, 0) else sorted.length
     var anyContent = false
     var anyEncrypted = false
     var anyUnsupported = false
-    val out = new Array[SpanOut](sorted.length)
+    val out = new Array[SpanOut](n)
     var i = 0
-    while (i < sorted.length) {
+    while (i < n) {
       checkDeadline(deadlineNanos)
       val s = sorted(i)
-      val (txt, why) = extractSpan(s.kind, s.text, cfg)
+      val (txt, why) = routeSpan(s.kind, s.text, cfg, markers = true, sp, i)
       if (txt.nonEmpty) anyContent = true
       if (why == Reason.Encrypted) anyEncrypted = true
       // the size-guard refusal of a SUPPORTED kind also reads Unsupported
@@ -395,39 +491,40 @@ object Extract {
     val reason =
       if (!anyContent && anyEncrypted) Reason.Encrypted
       else if (!anyContent && anyUnsupported) Reason.Unsupported
-      else if (sorted.isEmpty || !anyContent) Reason.Empty
+      else if (n == 0 || !anyContent) Reason.Empty
       else ""
-    val rid = Ids.rootId(doc.doc_id)
     DocOut(rid, "", rid, 0, out, reason)
   }
 
   /** Embed explosion (the reference's flatMap, `EmbedSpawner.java:429-515`):
-    * the root row plus one child row per media span, RECURSIVELY — a media
-    * span whose text is `chain:a>b>c` models a nested container (msg-in-msg,
-    * archive-in-archive): it spawns child `a`, which spawns grandchild `b`,
-    * etc., depth-first, exactly like the reference's tikaDocumentStack DFS.
+    * the root row plus the children of its container spans
+    * ([[spawnContainers]]), RECURSIVELY and depth-first like the
+    * reference's tikaDocumentStack DFS (archive-in-archive, msg-in-msg,
+    * mail in a mailbox in a zip). A media span `chain:a>b>c` models such a
+    * nest: it spawns child `a`, which spawns grandchild `b`, etc.
     *
     * Child ids are recursive content hashes (`DigestIdentifier.java:26-68`
-    * via [[Ids.embedId]]); ordinal = index among the parent's media spans
-    * (per-parent ordinal naming, `EmbedSpawner.java:264-281`). A content-less
-    * media span still spawns a child with the hash component dropped and
-    * reason=empty-file. Children beyond `cfg.maxEmbedDepth` are REFUSED
-    * before recursion (`EmbedSpawner.java:55,389-392`) and counted on the
-    * skipping ancestor's lineage via the returned skip count.
+    * via [[Ids.embedId]]) under per-parent ordinals
+    * (`EmbedSpawner.java:264-281`); the root's ordinals run across its
+    * spans. A content-less child still spawns, with the hash component
+    * dropped and reason=empty-file. Children beyond `cfg.maxEmbedDepth`,
+    * over the size guard or past the breadth guard are REFUSED before
+    * recursion (`EmbedSpawner.java:55,389-402`) and counted on the root's
+    * lineage via the returned skip count.
     */
   def explode(doc: DocIn, cfg: Config = DefaultConfig): Seq[DocOut] =
     explodeCounted(doc, cfg)._1
 
-  /** As [[explode]], also returning the number of embeds skipped by the
-    * depth guard (the X-EXTRACT:embedsSkippedMaxDepth analog).
+  /** As [[explode]], also returning the number of embeds the guards
+    * skipped (the X-EXTRACT:embedsSkippedMaxDepth analog).
     */
   def explodeCounted(doc: DocIn, cfg: Config = DefaultConfig,
                      deadlineNanos: Long = Long.MaxValue): (Seq[DocOut], Int) = {
-    val root = extractDoc(doc, cfg, deadlineNanos)
-    val containers = spansOrEmpty(doc).filter(s => ContainerKinds(s.kind)).sortBy(_.offset)
-      .map(s => (s.kind, if (s.text == null) "" else s.text)).toSeq
-    val (children, skipped) = spawnContainers(containers, root.doc_id, cfg, deadlineNanos)
-    (root +: children, skipped)
+    val sorted = sortedSpans(doc)
+    val sp = new Spawner(Ids.rootId(doc.doc_id), cfg, deadlineNanos, sorted.length)
+    val root = route(sp.rootId, sorted, cfg, deadlineNanos, sp)
+    spawnContainers(sorted, sp)
+    (root +: sp.out.result(), sp.skipped)
   }
 
   /** XML-escape for entry names/text interpolated into the package markup —
@@ -477,64 +574,37 @@ object Extract {
     (sb.toString, failed)
   }
 
-  /** Spawn embedded child documents from the parent's container spans (in
-    * offset order) — the child half of [[explodeCounted]].
+  /** Spawn the root's embedded children from its container spans, in
+    * offset order: the spawn pass of [[explodeCounted]].
     *
     * Every kind of the [[Containers]] table unpacks through its row: the
     * children hang under the root at level 1, ordinals running across the
-    * spans. An entry that is itself a container becomes a container node
+    * spans. A document row's children come from the routing pass's parse
+    * of the span; the other rows, and spans the routing pass did not parse
+    * (oversized, past `maxSpans`, failure markers), parse here. An entry
+    * that is itself a container becomes a container or document node
     * (archives: id over its canonical entries, [[Ids.canonicalEntries]];
-    * parsed formats: id over the raw bytes) whose own children recurse
-    * depth-first through the same table, exactly like the reference's
-    * tikaDocumentStack. Four kinds keep a top-level arm of their own:
-    * `media` (the synthetic chain model, `chain:a>b` nests, ids from the
-    * raw content), `pdf_bytes` (page image XObjects), `cfb` and `pst`.
+    * parsed formats: id over the raw bytes or their canonical content)
+    * whose own children recurse depth-first through the same table. Two
+    * kinds spawn at the root only: `media` (the synthetic chain model,
+    * `chain:a>b` nests, ids from the raw content; nested, such bytes are
+    * plain text) and `pdf_bytes` (page image XObjects).
     *
     * Guards refuse BEFORE recursion (`EmbedSpawner.java:389-402`): depth,
     * declared/actual decompressed size, and breadth — refusals are counted,
     * never silent. A corrupt container throws ParseFailure, which the job
     * layer classifies to a lineage status (never a task failure).
     */
-  def spawnContainers(containers: Seq[(String, String)], rootId: String, cfg: Config,
-                      deadlineNanos: Long = Long.MaxValue)
-  : (Vector[DocOut], Int) = {
-    val sp = new Spawner(rootId, cfg, deadlineNanos)
+  private def spawnContainers(sorted: Array[SpanIn], sp: Spawner): Unit = {
     var ord = 0
-    containers.foreach { case (kind, content) =>
-      ord = ContainerByKind.get(kind) match {
-        case Some(u: Unpacks) =>
-          // the archive IS the parent document: entries are its children
-          val entries = u.unpack(content.getBytes(ISO_8859_1), cfg.maxSpanChars)
-          sp.entries(if (u.pkg) packageParts(entries).getOrElse(entries) else entries,
-            rootId, ord, 1)
-        case Some(p: Parses) => p.parse(new Payload(content, null), cfg)._2(sp, rootId, ord, 1)
-        case None => kind match {
+    var i = 0
+    while (i < sorted.length) {
+      val s = sorted(i)
+      if (ContainerKinds(s.kind)) {
+        val content = if (s.text == null) "" else s.text
+        ord = s.kind match {
           case "media" =>
-            sp.chain(content, rootId, ord, 1); ord + 1
-          case "cfb" =>
-            // the compound file IS the parent document: a message's
-            // attachments (file or nested message) become its children; a
-            // generic compound file spawns each stream sniffed like an
-            // archive entry
-            val entries = graft.core.office.Cfb.streamEntriesOf(content, cfg.maxSpanChars)
-            if (graft.core.office.Msg.isEncryptedOffice(entries)) {
-              // the silent-open defaults may open it as an ordinary OOXML
-              // package (body text already flowed via cfbText): spawn only
-              // its embedded parts (an EPUB's manifest images), like the zip
-              // route; a real password throws DecryptFailure — never explode
-              // ciphertext children
-              val zip = graft.core.office.OoxmlCrypt.decryptDefault(entries)
-              val zipEntries = Zip.unpack(zip, cfg.maxSpanChars)
-              sp.entries(packageParts(zipEntries).getOrElse(zipEntries), rootId, ord, 1)
-            }
-            else if (graft.core.office.Msg.isMsg(entries))
-              sp.each(graft.core.office.Msg.parse(entries).attachments, ord)(
-                sp.spawnAtt(_, rootId, _, 1))
-            else if (graft.core.office.Msg.isLegacyDoc(entries))
-              // legacy Office document: body text via routeKind; only
-              // embedded OLE objects (ObjectPool) spawn as children
-              sp.entries(entries.filter(_._1.startsWith("ObjectPool/")), rootId, ord, 1)
-            else sp.entries(entries, rootId, ord, 1)
+            sp.chain(content, sp.rootId, ord, 1); ord + 1
           case "pdf_bytes" =>
             // body text is the extractSpan route's; the page images (image
             // XObjects) spawn as media children — the reference's
@@ -545,29 +615,41 @@ object Extract {
               if (graft.core.pdf.PdfMini.isEncryptedLatin1(content))
                 graft.core.pdf.PdfCrypt.decryptEmptyUser(content)
               else Some(content)
-            clear.fold(ord)(c => files(graft.core.pdf.PdfMini.imageXObjects(c))(sp, rootId, ord, 1))
-          case "pst" =>
-            // the mailbox IS the parent document: folders, messages,
-            // attachments, recovered and failed entries hang below it.
-            // Top-level structural breakage (bad CRCs, truncation,
-            // encryption) classifies through the job layer like any other
-            // top-level parser failure
-            sp.pstNodes(graft.core.office.Pst.parse(content.getBytes(ISO_8859_1),
-              graft.core.office.Pst.byteBudget(cfg.maxSpanChars)), rootId, ord, 1)
-          case _ => ord // non-container kinds never reach here
+            clear.fold(ord)(c =>
+              files(graft.core.pdf.PdfMini.imageXObjects(c))(sp, sp.rootId, ord, 1))
+          case kind =>
+            // the container IS the parent document: its entries are the
+            // root's children
+            val kids = sp.kept(i) match {
+              case null => ContainerByKind(kind) match {
+                case u: Unpacks => unpacked(u, content.getBytes(ISO_8859_1), sp.cfg)
+                case p: Parses => topNode(p, content, sp.cfg).kids
+              }
+              case k => k
+            }
+            kids(sp, sp.rootId, ord, 1)
         }
       }
+      i += 1
     }
-    (sp.out.result(), sp.skipped)
   }
 
   /** The embed-spawning state of one document: the emitted nodes, the
-    * refusal count and the breadth counter its guards read.
+    * refusal count, the breadth counter its guards read, and the children
+    * the routing pass got for its `spans` sorted spans.
     */
-  private final class Spawner(rootId: String, cfg: Config, deadlineNanos: Long) {
+  private final class Spawner(val rootId: String, val cfg: Config, deadlineNanos: Long,
+                              spans: Int) {
     val out = Vector.newBuilder[DocOut]
     var skipped = 0
     private var spawned = 0
+    private var parsed: Array[Kids] = null
+
+    def keep(i: Int, k: Kids): Unit = {
+      if (parsed == null) parsed = new Array[Kids](spans)
+      parsed(i) = k
+    }
+    def kept(i: Int): Kids = if (parsed == null) null else parsed(i)
 
     private def guardsRefuse(level: Int, contentLen: Int): Boolean =
       level > cfg.maxEmbedDepth || contentLen > cfg.maxSpanChars ||
@@ -606,15 +688,10 @@ object Extract {
       nested.foreach(n => chain("chain:" + n, cid, 0, level + 1))
     }
 
-    private def canonicalOf(entries: Entries): String =
-      Ids.canonicalEntries(entries.map { case (n, b) =>
-        (n, b.map(x => new String(x, ISO_8859_1)).getOrElse(""))
-      })
-
     // emit one DOCUMENT node: the body as its single text span,
     // empty-file reason when bodyless — the shared emission shape for
-    // msg / legacy-Office / nested-mail / jsonl-line children and for
-    // container nodes (empty body)
+    // parsed-format / nested-mail / jsonl-line children and for container
+    // nodes (empty body)
     private def emitDoc(cid: String, parentId: String, level: Int, body: String): Unit = {
       val spans =
         if (body.isEmpty) Array.empty[SpanOut] else Array(SpanOut("text", body, "", 0))
@@ -708,21 +785,21 @@ object Extract {
       }
     }
 
-    // one parsed Outlook message -> one DOCUMENT child (body text), its
-    // attachments recursing: file attachments re-enter the sniffed entry
-    // path; an attached message (msg-in-msg, the reference's
-    // `3rd-level-bug-732.msg` shape) recurses as another message child.
-    // Identity hashes the message's LOGICAL canonical fields
-    // (Msg.canonical), so property-stream encoding never changes ids.
-    private def spawnMsg(m: graft.core.office.Msg.MsgDoc, resourceName: String,
-                         parentId: String, ord: Int, level: Int): Unit = {
+    /** A parsed node under `cid`: its body, then its children below. */
+    private def emitNode(n: Node, cid: String, parentId: String, level: Int): Unit = {
+      emitDoc(cid, parentId, level, n.body)
+      n.kids(this, cid, 0, level + 1): Unit
+    }
+
+    // a node whose guards read its identity: a message (an attached one
+    // recurses, the reference's `3rd-level-bug-732.msg` shape)
+    private def spawnNode(n: Node, resourceName: String, parentId: String, ord: Int,
+                          level: Int): Unit = {
       checkDeadline(deadlineNanos)
-      val canon = graft.core.office.Msg.canonical(m)
-      if (guardsRefuse(level, canon.length)) { skipped += 1; return }
+      if (guardsRefuse(level, n.identity.length)) { skipped += 1; return }
       spawned += 1
-      val cid = Ids.embedId(canon, parentId, ord, resourceName = resourceName)
-      emitDoc(cid, parentId, level, m.body)
-      m.attachments.zipWithIndex.foreach { case (a, i) => spawnAtt(a, cid, i, level + 1) }
+      emitNode(n, Ids.embedId(n.identity, parentId, ord, resourceName = resourceName),
+        parentId, level)
     }
 
     /** One attachment of any message-shaped parse (.msg, .pst, TNEF):
@@ -735,7 +812,7 @@ object Extract {
     def spawnAtt(a: graft.core.office.Msg.Attachment, pid: String, ord: Int,
                  lvl: Int): Unit = a match {
       case graft.core.office.Msg.FileAtt(n, b) => spawnEntry(n, Some(b), pid, ord, lvl)
-      case graft.core.office.Msg.MsgAtt(sub) => spawnMsg(sub, sub.subject, pid, ord, lvl)
+      case graft.core.office.Msg.MsgAtt(sub) => spawnNode(msgNode(sub), sub.subject, pid, ord, lvl)
       case graft.core.office.Msg.StubAtt(n, _) =>
         if (guardsRefuse(lvl, 0)) skipped += 1
         else {
@@ -747,7 +824,7 @@ object Extract {
 
     // one parsed PST mailbox -> its folder tree as container nodes
     // (subfolders first, then messages/failures in node-B-tree order),
-    // messages through the SHARED spawnMsg machinery so a message carries
+    // messages through the SHARED msgNode machinery so a message carries
     // the same logical-canonical id in a .pst as in a .msg; per-message
     // failures isolate as parse-failure children; messages unlinked from
     // every contents table land under a [recovered] node — the
@@ -773,8 +850,8 @@ object Extract {
       def emitMsgOrFail(item: Either[graft.core.office.Pst.Message, graft.core.office.Pst.MessageFailure],
                         pid: String, ord: Int, lvl: Int): Unit = item match {
         case Left(m) =>
-          spawnMsg(graft.core.office.Msg.MsgDoc(m.subject, m.from, m.body, m.attachments),
-            m.subject, pid, ord, lvl)
+          spawnNode(msgNode(graft.core.office.Msg.MsgDoc(m.subject, m.from, m.body,
+            m.attachments)), m.subject, pid, ord, lvl)
         case Right(_) =>
           // content-less failure child: same breadth/depth guards as every
           // other spawn path (a bomb of cheap corrupt messages must cap)
@@ -857,30 +934,6 @@ object Extract {
           return
         }
       }
-      if (graft.core.office.Pst.isPst(data)) {
-        // nested Outlook mailbox (pst-in-zip): a container child whose
-        // folder/message tree hangs below it; untrusted entry bytes must
-        // never fail the parent. Parse happens BEFORE any emission so a
-        // failure can never leave a duplicate/partial node behind; an
-        // encrypted pst classifies encrypted, a broken one parse-failure
-        val latin1 = new String(data, ISO_8859_1)
-        val cid = Ids.embedId(latin1, parentId, ord, resourceName = name)
-        val parsed =
-          try Right(graft.core.office.Pst.parse(data,
-            graft.core.office.Pst.byteBudget(cfg.maxSpanChars)))
-          catch {
-            case _: graft.core.DecryptFailure => Left(Reason.Encrypted)
-            case _: graft.core.ParseFailure => Left(Reason.ParseFailed)
-          }
-        parsed match {
-          case Right(pst) =>
-            emitDoc(cid, parentId, level, "")
-            pstNodes(pst, cid, 0, level + 1): Unit
-          case Left(reason) =>
-            out += DocOut(cid, parentId, rootId, level, Array.empty, reason)
-        }
-        return
-      }
       // per-entry isolation for every parse below (reference EmbedSpawner
       // catches per embed): a ParseFailure/DecryptFailure from THIS
       // entry's parse becomes a content-less failure child — never a
@@ -891,46 +944,6 @@ object Extract {
         out += DocOut(
           Ids.embedId(new String(data, ISO_8859_1), parentId, ord, resourceName = name),
           parentId, rootId, level, Array.empty, reason)
-      if (graft.core.office.Cfb.isCfb(data)) {
-        try {
-        // OLE2 compound file: a MESSAGE becomes a document child (undo the
-        // spawned count — spawnMsg re-applies its own guards); a generic
-        // compound file is a container node whose streams recurse
-        val entries = graft.core.office.Cfb.streamEntries(data, cfg.maxSpanChars)
-        if (graft.core.office.Msg.isEncryptedOffice(entries)) {
-          // nested password-protected Office doc: the silent-open
-          // defaults (VelvetSweatshop, empty) may open it as an ordinary
-          // package — then it re-enters as the decrypted ZIP; a real
-          // password classifies this child encrypted
-          val zip = graft.core.office.OoxmlCrypt.decryptDefault(entries)
-          spawned -= 1
-          spawnEntry(name, Some(zip), parentId, ord, level)
-          return
-        }
-        if (graft.core.office.Msg.isMsg(entries)) {
-          spawned -= 1
-          spawnMsg(graft.core.office.Msg.parse(entries), name, parentId, ord, level)
-        } else graft.core.office.Msg.docText(entries) match {
-          case Some(body) =>
-            // legacy Office binary (.doc/.xls/.ppt): a DOCUMENT child
-            // carrying its extracted text. Format-plumbing streams never
-            // spawn, but EMBEDDED OBJECTS (the ObjectPool storage POI
-            // walks for OLE attachments) do, each sniffed like an
-            // archive entry
-            val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, body)
-            this.entries(entries.filter(_._1.startsWith("ObjectPool/")), cid, 0, level + 1): Unit
-          case None =>
-            val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, "") // empty container node
-            this.entries(entries, cid, 0, level + 1): Unit
-        }
-        } catch {
-          case _: graft.core.DecryptFailure => entryFailure(Reason.Encrypted)
-          case _: graft.core.ParseFailure => entryFailure(Reason.ParseFailed)
-        }
-        return
-      }
       try {
         // the entry NAME rides into the sniff as the same tiebreaker the
         // real file walk uses (a data.csv zip entry routes as csv)
@@ -953,15 +966,24 @@ object Extract {
                 this.entries(entries, cid, 0, level + 1): Unit
             }
           case Some(p: Parses) =>
-            // a nested parsed format (eml-in-zip, mbox.gz, db-in-zip):
-            // parse BEFORE the first emission, then a document node (its
-            // body) or a pure container node, children one level down.
-            // Identity hashes the raw bytes like any other nested file
-            val (body, kids) =
-              p.parse(new Payload(graft.sources.Ingest.decodePayload(p.kind, data), data), cfg)
-            val cid = Ids.embedId(new String(data, ISO_8859_1), parentId, ord, resourceName = name)
-            emitDoc(cid, parentId, level, body)
-            kids(this, cid, 0, level + 1): Unit
+            // a nested parsed format (eml-in-zip, mbox.gz, msg-in-zip,
+            // db-in-zip): parse BEFORE the first emission, then a document
+            // node (its body) or a pure container node, children one level
+            // down. Identity hashes the raw bytes like any other nested
+            // file, unless the node names its own. A transport payload
+            // re-enters as the bytes it carries, and a guarded node re-runs
+            // the guards on its identity (both undo this entry's count)
+            val n = p.parse(new Payload(p.kind, null, data), cfg)
+            if (n.as != null) {
+              spawned -= 1
+              spawnEntry(name, Some(n.as), parentId, ord, level)
+            } else if (n.guarded) {
+              spawned -= 1
+              spawnNode(n, name, parentId, ord, level)
+            } else {
+              val id = if (n.identity != null) n.identity else new String(data, ISO_8859_1)
+              emitNode(n, Ids.embedId(id, parentId, ord, resourceName = name), parentId, level)
+            }
           case None =>
             // content IDENTITY hashes the raw bytes (byte-transparent
             // ISO-8859-1 mapping); a lossy UTF-8 id would collide two

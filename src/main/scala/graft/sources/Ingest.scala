@@ -29,7 +29,7 @@ object Ingest {
 
   /** Magic-byte MIME sniff (public magic numbers): %PDF -> pdf_bytes,
     * <!doctype/<html -> html, PK\x03\x04 -> zip container (exploded to
-    * children by Extract.spawnContainers), 1f 8b -> gzip,
+    * children by Extract.explode), 1f 8b -> gzip,
     * mostly-printable -> text, else bin.
     */
   def sniffKind(bytes: Array[Byte]): String = sniffKind(bytes, "")

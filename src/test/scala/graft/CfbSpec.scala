@@ -531,7 +531,7 @@ class CfbSpec extends AnyFunSuite {
     intercept[graft.core.DecryptFailure](
       Extract.extractSpan("cfb", new String(agileSealed, ISO_8859_1)))
     val agileOk = OoxmlCrypt.buildAgileEncrypted(docx, "VelvetSweatshop")
-    val streams = Cfb.streamEntriesOf(new String(agileOk, ISO_8859_1), Int.MaxValue)
+    val streams = Cfb.streamEntries(agileOk, Int.MaxValue)
       .map { case (n, b) =>
         val bytes = b.get.clone()
         if (n == "EncryptedPackage") bytes(100) = (bytes(100) ^ 1).toByte
