@@ -276,7 +276,7 @@ object Xlsx {
 
   /** Deterministic minimal xlsx: every string cell shared, the per-row
     * `nums` flags marking numeric `<v>` cells. Round-trips through
-    * [[Ooxml.packageText]].
+    * [[Ooxml.textFromEntries]].
     */
   def buildMinimal(rows: Seq[Seq[(String, Boolean)]]): Array[Byte] = { // (value, isNumber)
     val strings = rows.flatten.collect { case (v, false) => v }.distinct
@@ -387,17 +387,17 @@ object Vsdx {
   }
 }
 
-/** The OOXML package router: one streaming pass over a zip span reads only
-  * the text-bearing parts (word/document.xml, xl/sharedStrings + sheets,
-  * ppt/slides) and renders the package's body text; a plain archive
-  * yields "". Shared by the top-level zip route and nested-entry spawning.
+/** The OOXML package router: renders a zip's body text from its
+  * text-bearing parts (word/document.xml, xl/sharedStrings + sheets,
+  * ppt/slides, ...); a plain archive yields "". The zip row of
+  * [[graft.core.route.Extract]] reads it at the root and nested alike.
   */
 object Ooxml {
 
   /** Text-part name prefixes — deliberately TIGHT (`.../sheet`, not
     * `xl/worksheets/`), so the per-part _rels relationship files real
-    * Office writers emit under `xl/worksheets/_rels/` never parse (or
-    * inflate) as sheets/slides.
+    * Office writers emit under `xl/worksheets/_rels/` never parse as
+    * sheets/slides.
     */
   private val SheetPrefix = "xl/worksheets/sheet"
   private val SlidePrefix = "ppt/slides/slide"
@@ -427,17 +427,12 @@ object Ooxml {
       name.startsWith("ppt/media/") || name.startsWith("ppt/embeddings/") ||
       name.startsWith("Pictures/") // ODF images
 
-  private def wantedPart(n: String): Boolean =
-    n == Docx.DocumentEntry || n == "xl/sharedStrings.xml" ||
-      n == "xl/sharedStrings.bin" || // .xlsb BIFF12 SST
-      n.startsWith(SheetPrefix) || n.startsWith(SlidePrefix) ||
-      n == "content.xml" || n == "mimetype" || // mimetype VALUE gates the ODF/EPUB routes
-      n == "META-INF/container.xml" || n.endsWith(".opf") || // EPUB package docs
-      n.endsWith(".xhtml") || n.endsWith(".html") || n.endsWith(".htm") || // EPUB chapters
-      n.endsWith(".fpage") || // XPS fixed pages
-      Vsdx.isPage(n) || // Visio drawing pages
-      Iwork.wantedIndex(n) || // legacy iWork document index
-      (n.startsWith("Index/") && n.endsWith(".iwa")) // 2013-era iWork parts
+  /** The part that opens an OPC package (`[Content_Types].xml`: OOXML,
+    * XPS, Visio) or an ODF/EPUB one (`mimetype`): an archive walk cut off
+    * after it still reads as a package.
+    */
+  def isPackageMarker(name: String): Boolean =
+    name == "[Content_Types].xml" || name == "mimetype"
 
   /** Numeric suffix for sheetN/slideN ordering (archive order is not the
     * document order).
@@ -490,14 +485,6 @@ object Ooxml {
         .map(e => Vsdx.pageText(str(e._2)))
         .mkString("\n")
     else ""
-  }
-
-  /** Top-level zip-span text route (single streaming pass, text parts
-    * only inflated); corrupt bytes throw ParseFailure for the job layer.
-    */
-  def packageText(zipLatin1: String, maxEntryBytes: Int): String = {
-    val bytes = zipLatin1.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    textFromEntries(graft.sources.Archive.unzipWanted(bytes, wantedPart, maxEntryBytes))
   }
 }
 
@@ -849,8 +836,6 @@ object Iwork {
       head.contains("<sl:document") || head.contains("<key:presentation") ||
       head.contains("<ls:document")
   }
-
-  def wantedIndex(n: String): Boolean = IndexNames(n)
 
   /** One line per `<sf:p>` element; nested run markup stripped through
     * the shared XML text machinery.

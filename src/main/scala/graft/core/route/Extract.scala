@@ -96,19 +96,6 @@ object Extract {
     kind match {
       case "html"      => (HtmlExtractor.mainText(t), "")
       case "pdf"       => (PdfLayout.text(t), "")
-      // REAL PDF bytes, raw or filtered (Ingest). An /Encrypt trailer first
-      // tries the standard security handler with the EMPTY user password
-      // (owner-restricted files open silently, exactly as PDFBox does for
-      // the reference); only a real user password (or a non-RC4 handler)
-      // classifies encrypted — content streams are ciphertext then, so
-      // extraction must yield the reason, not garbage text
-      case "pdf_bytes" =>
-        if (graft.core.pdf.PdfMini.isEncryptedLatin1(t))
-          graft.core.pdf.PdfCrypt.decryptEmptyUser(t) match {
-            case Some(clear) => (graft.core.pdf.PdfMini.textFromLatin1(clear), "")
-            case None        => ("", Reason.Encrypted)
-          }
-        else (graft.core.pdf.PdfMini.textFromLatin1(t), "")
       case "text"      => (t, "")
       case "media"     => (t, "") // OCR/media passthrough (north rule): text + media_ref unchanged
       // CMS/PGP payloads (smime.p7m, PGP armor): key-gated ciphertext
@@ -132,17 +119,16 @@ object Extract {
       case "vcard"     => (graft.core.text.Contact.vcardText(t), "") // RFC 6350 contact card
       case "ics"       => (graft.core.text.Contact.icsText(t), "")   // RFC 5545 calendar
       case "xml"       => (graft.core.text.Xml.text(t), "") // standalone XML: markup stripped (Tika XMLParser)
-      // a container row's own text: a package or message body, or none —
-      // its entries explode to children
+      // a container row's own text: a package, PDF or message body, or
+      // none — its entries explode to children
       case _ => ContainerByKind.get(kind) match {
-        case Some(p: Parses) =>
-          if (!p.document) ("", "")
+        case Some(c) =>
+          if (!c.document) ("", "")
           else {
-            val n = topNode(p, t, cfg)
+            val n = topNode(c, t, cfg)
             if (sp != null) sp.keep(i, n.kids)
-            (n.body, "")
+            (n.body, n.reason)
           }
-        case Some(u: Unpacks) => (u.ownText(t, cfg), "")
         case None => ("", Reason.Unsupported)
       }
     }
@@ -156,63 +142,33 @@ object Extract {
     */
   private type Kids = (Spawner, String, Int, Int) => Int
 
-  /** One row of [[Containers]]: a span kind whose payload unpacks into
-    * embedded children. The same row serves a top-level span of the kind
-    * and a nested entry its `detect` recognises, so a format unpacks the
-    * same way at the root and inside another container (the reference's
-    * single `EmbedSpawner.parseEmbedded` dispatch).
+  /** One row of [[Containers]]: a span kind whose payload parses into one
+    * [[Node]], its body and its embedded children. The same row and the same
+    * node serve a top-level span of the kind and a nested entry its `detect`
+    * recognises, so a format unpacks the same way at the root and inside
+    * another container (the reference's single `EmbedSpawner.parseEmbedded`
+    * dispatch). A nested entry is recognised by `magic` when given, else by
+    * the file-walk sniff ([[graft.sources.Ingest.sniffKind]]). A `document`
+    * row's body is also a top-level span's own text (packages, PDFs, mail,
+    * page saves, sections, plists, compound files), parsed once in the
+    * routing pass; the others are pure containers (archives, mailboxes,
+    * dumps, databases) with an empty body, parsed when their children spawn.
+    * `parse` runs before the node's first emission, so a payload it rejects
+    * yields exactly one failure node; the node's [[Kids]] run after it.
     */
-  private sealed trait Container {
-    def kind: String
+  private final case class Container(kind: String, document: Boolean,
+                                     parse: (Payload, Config) => Node,
+                                     magic: Array[Byte] => Boolean = null) {
     /** Whether a nested entry's bytes are this format; `sniffed` is the
       * entry's file-walk kind, computed at most once per entry.
       */
-    def detect(data: Array[Byte], sniffed: => String): Boolean
-  }
-
-  /** An archive or codec: the payload bytes unpack into named entries
-    * (`None` = refused by the size guard), each spawned like a file; a
-    * nested entry is recognised by its magic bytes. `pkg`: the format may
-    * carry an OOXML/ODF/EPUB package, so a top-level span reads the package
-    * body as its own text and spawns only the package's embedded parts.
-    */
-  private final case class Unpacks(kind: String, magic: Array[Byte] => Boolean,
-                                   unpack: (Array[Byte], Int) => Entries,
-                                   pkg: Boolean = false) extends Container {
-    def detect(data: Array[Byte], sniffed: => String): Boolean = magic(data)
-    /** What a top-level span of this kind reads as its own text. */
-    def ownText(t: String, cfg: Config): String =
-      if (pkg) graft.core.office.Ooxml.packageText(t, cfg.maxSpanChars) else ""
-  }
-
-  /** A top-level span's entries, unpacked when its children spawn. */
-  private def unpacked(u: Unpacks, data: Array[Byte], cfg: Config): Kids =
-    (sp, pid, ord, lvl) => {
-      val entries = u.unpack(data, cfg.maxSpanChars)
-      sp.entries(if (u.pkg) packageParts(entries).getOrElse(entries) else entries, pid, ord, lvl)
-    }
-
-  /** A parsed format: the payload parses into a [[Node]]. A nested entry
-    * is recognised by `magic` when given, else by the file-walk sniff
-    * ([[graft.sources.Ingest.sniffKind]]). A `document` row's body is also
-    * a top-level span's own text (mail, page saves, sections, plists,
-    * compound files), parsed once in the routing pass; the others are pure
-    * containers (mailboxes, dumps, databases) with an empty body, parsed
-    * when their children spawn. `parse` runs before the node's first
-    * emission, so a payload it rejects yields exactly one failure node; the
-    * node's [[Kids]] run after it.
-    */
-  private final case class Parses(kind: String, document: Boolean,
-                                  parse: (Payload, Config) => Node,
-                                  magic: Array[Byte] => Boolean = null)
-    extends Container {
     def detect(data: Array[Byte], sniffed: => String): Boolean =
       if (magic != null) magic(data) else sniffed == kind
   }
 
-  /** A parsed format's payload: a span's text, or a nested entry's raw
-    * bytes; each view is made from the other on first use (an entry's text
-    * is its [[graft.sources.Ingest.decodePayload]]).
+  /** A row's payload: a span's text, or a nested entry's raw bytes; each
+    * view is made from the other on first use (an entry's text is its
+    * [[graft.sources.Ingest.decodePayload]]).
     */
   private final class Payload(kind: String, span: String, raw: Array[Byte]) {
     lazy val text: String =
@@ -220,25 +176,44 @@ object Extract {
     lazy val bytes: Array[Byte] = if (raw != null) raw else span.getBytes(ISO_8859_1)
   }
 
-  /** What a parsed payload spawns: the node's own body and its children.
-    * Nested, the node's id hashes `identity` (null: the raw bytes); a
-    * `guarded` identity is also the size the guards read, checked again
-    * before the node is emitted (a message's logical canonical fields).
-    * `as`: the payload is transport for these bytes (a decrypted package),
-    * which spawn in its place, at the root as a zip span and nested as the
-    * same entry.
+  /** What a parsed payload spawns: the node's own body (a `spanKind` span
+    * nested; `reason` when it has none) and its children. Nested, the
+    * node's id hashes `identity` (null: the raw bytes); a `guarded`
+    * identity is also the size the guards read, checked again before the
+    * node is emitted (a message's logical canonical fields). `as`: the
+    * payload is transport for these bytes (a decrypted package), which
+    * spawn in its place, at the root as a zip span and nested as the same
+    * entry.
     */
   private final class Node(val body: String, val kids: Kids, id: => String = null,
-                           val guarded: Boolean = false, val as: Array[Byte] = null) {
+                           val guarded: Boolean = false, val as: Array[Byte] = null,
+                           val reason: String = "", val spanKind: String = "text") {
     lazy val identity: String = id
   }
 
   /** A top-level span's node; a transport payload reads as its zip. */
-  private def topNode(p: Parses, t: String, cfg: Config): Node = {
-    val n = p.parse(new Payload(p.kind, t, null), cfg)
-    if (n.as == null) n
-    else new Node(Zip.ownText(new String(n.as, ISO_8859_1), cfg), unpacked(Zip, n.as, cfg))
+  private def topNode(c: Container, t: String, cfg: Config): Node = {
+    val n = c.parse(new Payload(c.kind, t, null), cfg)
+    if (n.as == null) n else Zip.parse(new Payload(Zip.kind, null, n.as), cfg)
   }
+
+  /** An archive or codec row: the payload unpacks into named entries
+    * (`None` = refused by a guard), each spawned like a file; the node's id
+    * hashes its canonical entries ([[Ids.canonicalEntries]]) and a nested
+    * entry is recognised by its magic bytes. `pkg`: the format may carry an
+    * OOXML/ODF/EPUB package, whose body is the node's own text and whose
+    * embedded parts alone spawn; the row is then a document row.
+    */
+  private def archive(kind: String, magic: Array[Byte] => Boolean,
+                      unpack: (Array[Byte], Int) => Entries, pkg: Boolean = false): Container =
+    Container(kind, document = pkg, (t, cfg) => {
+      val es = unpack(t.bytes, cfg.maxSpanChars)
+      (if (pkg) packageParts(es) else None) match {
+        case Some(parts) =>
+          new Node(graft.core.office.Ooxml.textFromEntries(es), entryKids(parts), canonicalOf(es))
+        case None => new Node("", entryKids(es), canonicalOf(es))
+      }
+    }, magic)
 
   private def member(f: (Array[Byte], Int) => Archive.UnzippedEntry)
   : (Array[Byte], Int) => Entries = (b, max) => Vector(f(b, max))
@@ -273,7 +248,7 @@ object Extract {
   private def dump(rows: (Vector[String], Long)): Node =
     new Node("", (sp, pid, ord, lvl) => sp.dumpRows(rows._1, rows._2, pid, ord, lvl))
 
-  private val Zip = Unpacks("zip", Archive.isZip, Archive.unzip(_, _), pkg = true)
+  private val Zip = archive("zip", Archive.isZip, Archive.unzip(_, _), pkg = true)
 
   /** Every container format, in nested detection order: the two Outlook
     * and OLE2 rows first (by magic, ahead of any archive), then the
@@ -284,7 +259,7 @@ object Extract {
   private val Containers: Vector[Container] = Vector(
     // Outlook mailbox: folders, messages, attachments, recovered and failed
     // entries hang below it (an encrypted pst reads encrypted)
-    Parses("pst", document = false, (t, cfg) => {
+    Container("pst", document = false, (t, cfg) => {
       val pst = graft.core.office.Pst.parse(t.bytes,
         graft.core.office.Pst.byteBudget(cfg.maxSpanChars))
       new Node("", (sp, pid, ord, lvl) => sp.pstNodes(pst, pid, ord, lvl))
@@ -295,7 +270,7 @@ object Extract {
     // canonical streams. A password-protected OOXML package is transport for
     // the package the silent-open defaults (VelvetSweatshop, empty) decrypt;
     // a real password throws DecryptFailure, so ciphertext never explodes
-    Parses("cfb", document = true, (t, cfg) => {
+    Container("cfb", document = true, (t, cfg) => {
       import graft.core.office.Msg
       val entries = graft.core.office.Cfb.streamEntries(t.bytes, cfg.maxSpanChars)
       if (Msg.isEncryptedOffice(entries))
@@ -309,67 +284,67 @@ object Extract {
       }
     }, graft.core.office.Cfb.isCfb),
     Zip,
-    Unpacks("tar", Archive.isTar, Archive.untar(_, _)),
-    Unpacks("7z", Archive.is7z, Archive.un7z(_, _)),
+    archive("tar", Archive.isTar, Archive.untar(_, _)),
+    archive("7z", Archive.is7z, Archive.un7z(_, _)),
     // stored members spawn; compressed ones are counted refusals
-    Unpacks("rar", Rar.isRar, Rar.entries(_, _)),
+    archive("rar", Rar.isRar, Rar.entries(_, _)),
     // unix archive (.deb): control.tar.gz/data.tar.xz chain through the
     // codec rows below
-    Unpacks("ar", Archive.isAr, Archive.unar(_, _)),
-    Unpacks("cpio", Archive.isCpio, Archive.uncpio(_, _)),
+    archive("ar", Archive.isAr, Archive.unar(_, _)),
+    archive("cpio", Archive.isCpio, Archive.uncpio(_, _)),
     // the package's FILES are its entries (rpm2cpio | cpio): the compressed
     // payload is transport framing, never a node — the same flattening
     // Tika's RpmParser applies
-    Unpacks("rpm", Archive.isRpm, Archive.rpmEntries(_, _)),
+    archive("rpm", Archive.isRpm, Archive.rpmEntries(_, _)),
     // disk image: its files are path-named entries (Joliet names when the
     // supplementary descriptor announces them)
-    Unpacks("iso", Iso.isIso, Iso.entries(_, _)),
+    archive("iso", Iso.isIso, Iso.entries(_, _)),
     // compiled help: topic files are path-named entries; the compressed
     // section LZX-decodes once for all of them
-    Unpacks("chm", Chm.isChm, Chm.entries(_, _)),
+    archive("chm", Chm.isChm, Chm.entries(_, _)),
     // cabinet: each MSZIP folder inflates once for all of its files
     // (history carried across blocks)
-    Unpacks("cab", Cab.isCab, Cab.entries(_, _)),
+    archive("cab", Cab.isCab, Cab.entries(_, _)),
     // single-member codecs: one entry (gzip names it from FNAME); a tar
     // payload then recurses below
-    Unpacks("gzip", Archive.isGzip, member(Archive.gunzip)),
-    Unpacks("zstd", Archive.isZstd, member(Archive.unzstd)),
-    Unpacks("bzip2", Archive.isBzip2, member(Archive.unbzip2)),
-    Unpacks("xz", Archive.isXz, member(Archive.unxz)),
-    Unpacks("compress", Archive.isCompressZ, member(Archive.uncompressZ)),
-    Unpacks("lzma", Archive.isLzma, member(Archive.unlzma)),
-    Unpacks("lz4", Archive.isLz4, member(Archive.unlz4)),
-    Unpacks("snappy", Archive.isSnappy, member(Archive.unsnappy)),
+    archive("gzip", Archive.isGzip, member(Archive.gunzip)),
+    archive("zstd", Archive.isZstd, member(Archive.unzstd)),
+    archive("bzip2", Archive.isBzip2, member(Archive.unbzip2)),
+    archive("xz", Archive.isXz, member(Archive.unxz)),
+    archive("compress", Archive.isCompressZ, member(Archive.uncompressZ)),
+    archive("lzma", Archive.isLzma, member(Archive.unlzma)),
+    archive("lz4", Archive.isLz4, member(Archive.unlz4)),
+    archive("snappy", Archive.isSnappy, member(Archive.unsnappy)),
     // the envelope is transport: the data fork IS the file, one entry under
     // the envelope's real name (RFC 1740 entry 3)
-    Unpacks("applesingle", Apple.isAppleSingle, member(Apple.unwrap)),
+    archive("applesingle", Apple.isAppleSingle, member(Apple.unwrap)),
     // each content-bearing web-archive record (response/resource) is an
     // entry: target URI as resource name, body sniffed like any ingested
     // file (html flows through the charset decode and boilerplate stripper)
-    Unpacks("warc", Warc.isWarc, (b, max) =>
+    archive("warc", Warc.isWarc, (b, max) =>
       Warc.records(new String(b, ISO_8859_1), max).map(r => (r.targetUri, r.body))),
     // one JSON object per line = one logical document per line
-    Parses("jsonl", document = false, (t, _) =>
+    Container("jsonl", document = false, (t, _) =>
       new Node("", (sp, pid, ord, lvl) => sp.jsonlLines(t.text, pid, ord, lvl))),
     // RFC-822: body text; attachments are entries of the message
     // (RFC822Parser semantics), filename as resource name
-    Parses("eml", document = true, (t, _) => {
+    Container("eml", document = true, (t, _) => {
       val m = graft.core.mail.Eml.parse(t.text)
       new Node(m.body, files(m.attachments))
     }),
-    Parses("parquet", document = false, (t, cfg) => dump(graft.sources.ParquetDump.textRows(
+    Container("parquet", document = false, (t, cfg) => dump(graft.sources.ParquetDump.textRows(
       t.bytes, dumpRowCap(cfg), cfg.maxSpanChars))),
-    Parses("avro", document = false, (t, cfg) => dump(graft.sources.AvroDump.textRows(
+    Container("avro", document = false, (t, cfg) => dump(graft.sources.AvroDump.textRows(
       t.bytes, dumpRowCap(cfg), cfg.maxSpanChars))),
     // the database: one tabular child per user table, blob cells sniffed
     // and recursing below
-    Parses("sqlite", document = false, (t, cfg) => {
+    Container("sqlite", document = false, (t, cfg) => {
       val tabs = graft.core.db.Sqlite.tables(t.bytes, maxCells = dumpRowCap(cfg))
       new Node("", (sp, pid, ord, lvl) => sp.sqliteTables(tabs, pid, ord, lvl))
     }),
     // Apple binary plist: flat path:value rendering; NSData payloads
     // spawn as sniffed children, their dotted paths the resource names
-    Parses("plist", document = true, (t, _) => {
+    Container("plist", document = true, (t, _) => {
       val v = graft.core.db.Plist.parse(t.bytes)
       new Node(graft.core.db.Plist.text(v), (sp, pid, ord, lvl) =>
         files(graft.core.db.Plist.dataBlobs(v))(sp, pid, ord, lvl))
@@ -378,12 +353,12 @@ object Extract {
     // RFC-822 body, attachments recursing; ids hash the raw message chunk.
     // The split reads the BOM-less view the sniff detected the mailbox on
     // (a UTF-8 BOM read as ISO-8859-1)
-    Parses("mbox", document = false, (t, _) => {
+    Container("mbox", document = false, (t, _) => {
       val messages = graft.core.mail.Mbox.split(t.text.stripPrefix("\u00ef\u00bb\u00bf"))
       new Node("", (sp, pid, ord, lvl) => sp.each(messages, ord)(sp.mboxMessage(_, pid, _, lvl)))
     }),
     // Apple Mail length-framed message: same shape as eml
-    Parses("emlx", document = true, (t, _) => {
+    Container("emlx", document = true, (t, _) => {
       val m = graft.core.mail.Eml.parseEmlx(t.text)
       new Node(m.body, files(m.attachments))
     }),
@@ -391,22 +366,41 @@ object Extract {
     // routes mhtml to HtmlParser); saved resources (images, stylesheets,
     // scripts) are its entries, named by their Content-Location's last
     // segment
-    Parses("mhtml", document = true, (t, _) => {
+    Container("mhtml", document = true, (t, _) => {
       val m = graft.core.mail.Mhtml.parse(t.text)
       new Node(HtmlExtractor.mainText(m.html), files(m.parts))
     }),
     // OneNote section: RichEditTextUnicode paragraphs; embedded
     // FileDataStoreObject payloads spawn as sniffed children named by
-    // their ordinal
-    Parses("one", document = true, (t, _) => {
+    // their index in the section
+    Container("one", document = true, (t, _) => {
       val (txt, fs) = graft.core.office.OneNote.parse(t.bytes)
       new Node(txt, (sp, pid, ord, lvl) =>
-        sp.each(fs, ord)((b, o) => sp.spawnEntry(s"fileData_$o", Some(b), pid, o, lvl)))
+        sp.each(fs, ord)((b, o) => sp.spawnEntry(s"fileData_${o - ord}", Some(b), pid, o, lvl)))
     }),
     // winmail.dat: body text; attachments spawn like a message's
-    Parses("tnef", document = true, (t, _) => {
+    Container("tnef", document = true, (t, _) => {
       val m = graft.core.mail.Tnef.parse(t.bytes)
       new Node(m.body, attachments(m.attachments))
+    }),
+    // REAL PDF bytes, raw or filtered (Ingest). An /Encrypt trailer first
+    // tries the standard security handler with the EMPTY user password
+    // (owner-restricted files open silently, exactly as PDFBox does for
+    // the reference); only a real user password (or a non-RC4 handler)
+    // reads encrypted — content streams are ciphertext then, so the node
+    // carries the reason, not garbage text, and spawns nothing. The page
+    // images (image XObjects) are its children, the reference's
+    // `embedded:imageN` HTML children
+    Container("pdf_bytes", document = true, (t, _) => {
+      import graft.core.pdf.{PdfCrypt, PdfMini}
+      val clear =
+        if (PdfMini.isEncryptedLatin1(t.text)) PdfCrypt.decryptEmptyUser(t.text) else Some(t.text)
+      clear match {
+        case Some(c) =>
+          new Node(PdfMini.textFromLatin1(c), files(PdfMini.imageXObjects(c)),
+            spanKind = "pdf_bytes")
+        case None => new Node("", files(Nil), reason = Reason.Encrypted, spanKind = "pdf_bytes")
+      }
     })
   )
 
@@ -416,19 +410,27 @@ object Extract {
   /** An OOXML/ODF/EPUB package's embedded parts — the entries that spawn
     * as children of the package document (EPUB: its OPF manifest's
     * image-typed items, not fixed path prefixes); None for a plain archive.
+    * A package cut off by an encrypted part is one encrypted document,
+    * never an empty one or a plain archive of its readable head.
     */
-  private def packageParts(entries: Entries): Option[Entries] =
-    if (!graft.core.office.Ooxml.isPackageEntries(entries)) None
-    else if (graft.core.office.Epub.isEpub(entries)) {
-      val imgs = graft.core.office.Epub.imageSet(entries)
+  private def packageParts(entries: Entries): Option[Entries] = {
+    import graft.core.office.{Epub, Ooxml}
+    val pkg = Ooxml.isPackageEntries(entries)
+    if (entries.lastOption.exists(_._1 == Archive.EncryptedRemainder) &&
+      (pkg || entries.exists(e => Ooxml.isPackageMarker(e._1))))
+      throw new DecryptFailure("package entries cut off by an encrypted part")
+    if (!pkg) None
+    else if (Epub.isEpub(entries)) {
+      val imgs = Epub.imageSet(entries)
       Some(entries.filter(e => imgs(e._1)))
-    } else Some(entries.filter(e => graft.core.office.Ooxml.isEmbeddedPart(e._1)))
+    } else Some(entries.filter(e => Ooxml.isEmbeddedPart(e._1)))
+  }
 
   /** Span kinds that spawn embedded children in [[explodeCounted]]: the
-    * table's rows, plus `media` (the synthetic chain model) and `pdf_bytes`
-    * (page image XObjects), which spawn at the root only.
+    * table's rows, plus `media` (the synthetic chain model), which spawns at
+    * the root only.
     */
-  private val ContainerKinds: Set[String] = ContainerByKind.keySet ++ Set("media", "pdf_bytes")
+  private val ContainerKinds: Set[String] = ContainerByKind.keySet + "media"
 
   /** Cooperative per-document deadline check (the reference's parse-timeout
     * watchdog, `Extractor.java:620-648`, re-expressed as boundary checks —
@@ -577,18 +579,17 @@ object Extract {
   /** Spawn the root's embedded children from its container spans, in
     * offset order: the spawn pass of [[explodeCounted]].
     *
-    * Every kind of the [[Containers]] table unpacks through its row: the
-    * children hang under the root at level 1, ordinals running across the
-    * spans. A document row's children come from the routing pass's parse
-    * of the span; the other rows, and spans the routing pass did not parse
-    * (oversized, past `maxSpans`, failure markers), parse here. An entry
-    * that is itself a container becomes a container or document node
-    * (archives: id over its canonical entries, [[Ids.canonicalEntries]];
-    * parsed formats: id over the raw bytes or their canonical content)
-    * whose own children recurse depth-first through the same table. Two
-    * kinds spawn at the root only: `media` (the synthetic chain model,
-    * `chain:a>b` nests, ids from the raw content; nested, such bytes are
-    * plain text) and `pdf_bytes` (page image XObjects).
+    * Every kind of the [[Containers]] table spawns its node's children: they
+    * hang under the root at level 1, ordinals running across the spans. A
+    * document row's node comes from the routing pass's parse of the span;
+    * the other rows, and spans the routing pass did not parse (oversized,
+    * past `maxSpans`, failure markers), parse here. An entry that is itself
+    * a container becomes the same row's node (archives: id over its
+    * canonical entries, [[Ids.canonicalEntries]]; parsed formats: id over
+    * the raw bytes or their canonical content) whose own children recurse
+    * depth-first through the same table. Only `media` (the synthetic chain
+    * model, `chain:a>b` nests, ids from the raw content) spawns at the root
+    * alone; nested, such bytes are plain text.
     *
     * Guards refuse BEFORE recursion (`EmbedSpawner.java:389-402`): depth,
     * declared/actual decompressed size, and breadth — refusals are counted,
@@ -602,33 +603,17 @@ object Extract {
       val s = sorted(i)
       if (ContainerKinds(s.kind)) {
         val content = if (s.text == null) "" else s.text
-        ord = s.kind match {
-          case "media" =>
-            sp.chain(content, sp.rootId, ord, 1); ord + 1
-          case "pdf_bytes" =>
-            // body text is the extractSpan route's; the page images (image
-            // XObjects) spawn as media children — the reference's
-            // `embedded:imageN` HTML children. Encrypted files spawn from
-            // the silently-opened cleartext; password-protected ones
-            // already classified and spawn nothing.
-            val clear =
-              if (graft.core.pdf.PdfMini.isEncryptedLatin1(content))
-                graft.core.pdf.PdfCrypt.decryptEmptyUser(content)
-              else Some(content)
-            clear.fold(ord)(c =>
-              files(graft.core.pdf.PdfMini.imageXObjects(c))(sp, sp.rootId, ord, 1))
-          case kind =>
+        ord =
+          if (s.kind == "media") { sp.chain(content, sp.rootId, ord, 1); ord + 1 }
+          else {
             // the container IS the parent document: its entries are the
             // root's children
             val kids = sp.kept(i) match {
-              case null => ContainerByKind(kind) match {
-                case u: Unpacks => unpacked(u, content.getBytes(ISO_8859_1), sp.cfg)
-                case p: Parses => topNode(p, content, sp.cfg).kids
-              }
+              case null => topNode(ContainerByKind(s.kind), content, sp.cfg).kids
               case k => k
             }
             kids(sp, sp.rootId, ord, 1)
-        }
+          }
       }
       i += 1
     }
@@ -688,15 +673,16 @@ object Extract {
       nested.foreach(n => chain("chain:" + n, cid, 0, level + 1))
     }
 
-    // emit one DOCUMENT node: the body as its single text span,
-    // empty-file reason when bodyless — the shared emission shape for
-    // parsed-format / nested-mail / jsonl-line children and for container
-    // nodes (empty body)
-    private def emitDoc(cid: String, parentId: String, level: Int, body: String): Unit = {
+    // emit one DOCUMENT node: the body as its single `kind` span, `why`
+    // or else empty-file as the reason when bodyless — the shared emission
+    // shape for parsed-format / nested-mail / jsonl-line / sniffed-file
+    // children and for container nodes (empty body)
+    private def emitDoc(cid: String, parentId: String, level: Int, body: String,
+                        kind: String = "text", why: String = ""): Unit = {
       val spans =
-        if (body.isEmpty) Array.empty[SpanOut] else Array(SpanOut("text", body, "", 0))
+        if (body.isEmpty) Array.empty[SpanOut] else Array(SpanOut(kind, body, "", 0))
       out += DocOut(cid, parentId, rootId, level, spans,
-        if (body.isEmpty) Reason.Empty else "")
+        if (body.nonEmpty) "" else if (why.nonEmpty) why else Reason.Empty)
     }
 
     // one JSONL line -> one child carrying its top-level "text" field; a
@@ -787,7 +773,7 @@ object Extract {
 
     /** A parsed node under `cid`: its body, then its children below. */
     private def emitNode(n: Node, cid: String, parentId: String, level: Int): Unit = {
-      emitDoc(cid, parentId, level, n.body)
+      emitDoc(cid, parentId, level, n.body, n.spanKind, n.reason)
       n.kids(this, cid, 0, level + 1): Unit
     }
 
@@ -901,10 +887,10 @@ object Extract {
     }
 
     // one REAL archive entry -> one child document: a container format
-    // (a row of the Containers table) becomes a container or document node
-    // whose children recurse; an OOXML package (docx) becomes a DOCUMENT
-    // child (body text + its embedded parts); anything else SNIFFS its
-    // kind and extracts like a top-level file (rtf/pdf/html/text/bin)
+    // (a row of the Containers table) becomes that row's node, a container
+    // or a document (a docx: body text + its embedded parts) whose children
+    // recurse; anything else SNIFFS its kind and extracts like a top-level
+    // file (rtf/html/text/bin)
     def spawnEntry(name: String, bytes: Option[Array[Byte]], parentId: String,
                    ord: Int, level: Int): Unit = {
       checkDeadline(deadlineNanos)
@@ -949,31 +935,15 @@ object Extract {
         // real file walk uses (a data.csv zip entry routes as csv)
         lazy val sniffed = graft.sources.Ingest.sniffKind(data, name)
         Containers.find(_.detect(data, sniffed)) match {
-          case Some(u: Unpacks) =>
-            // a nested archive (tar/7z/rar/... in a zip, a .tgz mail
-            // attachment): its id is computed over its canonical entries
-            val entries = u.unpack(data, cfg.maxSpanChars)
-            val cid = Ids.embedId(canonicalOf(entries), parentId, ord, resourceName = name)
-            packageParts(entries) match {
-              case Some(parts) =>
-                // embedded Office document (docx/xlsx/pptx/odt/epub): body
-                // text on the child, embedded media/object parts recurse
-                emitDoc(cid, parentId, level, graft.core.office.Ooxml.textFromEntries(entries))
-                this.entries(parts, cid, 0, level + 1): Unit
-              case None =>
-                // container node: no own text; its content lives in its children
-                emitDoc(cid, parentId, level, "")
-                this.entries(entries, cid, 0, level + 1): Unit
-            }
-          case Some(p: Parses) =>
-            // a nested parsed format (eml-in-zip, mbox.gz, msg-in-zip,
-            // db-in-zip): parse BEFORE the first emission, then a document
-            // node (its body) or a pure container node, children one level
-            // down. Identity hashes the raw bytes like any other nested
-            // file, unless the node names its own. A transport payload
-            // re-enters as the bytes it carries, and a guarded node re-runs
-            // the guards on its identity (both undo this entry's count)
-            val n = p.parse(new Payload(p.kind, null, data), cfg)
+          case Some(c) =>
+            // a nested container (tar/7z/... in a zip, eml-in-zip, mbox.gz,
+            // msg-in-zip, a PDF or docx attachment): parse BEFORE the first
+            // emission, then the row's node, children one level down.
+            // Identity hashes the raw bytes like any other nested file,
+            // unless the node names its own. A transport payload re-enters
+            // as the bytes it carries, and a guarded node re-runs the guards
+            // on its identity (both undo this entry's count)
+            val n = c.parse(new Payload(c.kind, null, data), cfg)
             if (n.as != null) {
               spawned -= 1
               spawnEntry(name, Some(n.as), parentId, ord, level)
@@ -996,12 +966,8 @@ object Extract {
             // markers=false: failure-injection markers are a top-level-span
             // contract; untrusted entry BYTES must never fail/hang the parent
             val (txt, why) = extractSpan(kind, payload, cfg, markers = false)
-            val cid = Ids.embedId(new String(data, ISO_8859_1), parentId, ord, resourceName = name)
-            val spans =
-              if (txt.isEmpty) Array.empty[SpanOut]
-              else Array(SpanOut(kind, txt, "", 0))
-            out += DocOut(cid, parentId, rootId, level, spans,
-              if (txt.nonEmpty) "" else if (why.nonEmpty) why else Reason.Empty)
+            emitDoc(Ids.embedId(new String(data, ISO_8859_1), parentId, ord, resourceName = name),
+              parentId, level, txt, kind, why)
         }
       } catch {
         case _: graft.core.DecryptFailure => entryFailure(Reason.Encrypted)

@@ -87,57 +87,26 @@ object Archive {
       throw new graft.core.DecryptFailure(s"password-protected zip entry: ${e.getMessage}")
     else throw new ParseFailure(s"corrupt zip: ${e.getMessage}")
 
+  /** Name of the one counted refusal that stands for the entries after a
+    * password-protected one (the stream cannot advance past it).
+    */
+  final val EncryptedRemainder = "<encrypted-remainder>"
+
   /** Decode ZIP entries in archive order. Malformed containers throw
     * [[ParseFailure]] (classified NOT_PARSED by the job layer, never a task
-    * failure). `maxEntries` bounds the walk (entries beyond it are refused
-    * as (name, None) and the walk stops reading payloads).
+    * failure). Entries past `maxEntries`, over `maxEntryBytes`, or read once
+    * `maxTotalBytes` have been inflated in all are refused as (name, None),
+    * counted: the zip-bomb guard applies to the sum as well as to each entry
+    * (a crafted archive of thousands of tiny-compressed entries must not
+    * accumulate unbounded memory).
     */
-  def unzip(bytes: Array[Byte], maxEntryBytes: Int,
-            maxEntries: Int = 10000): Vector[UnzippedEntry] = {
-    val out = Vector.newBuilder[UnzippedEntry]
-    val zis = new ZipInputStream(new ByteArrayInputStream(bytes))
-    try {
-      var n = 0
-      var entry: ZipEntry = zis.getNextEntry
-      if (entry == null && bytes.nonEmpty)
-        throw new ParseFailure("zip container with no readable entries")
-      while (entry != null) {
-        if (!entry.isDirectory) {
-          n += 1
-          if (n > maxEntries) out += ((entry.getName, None))
-          else if (entry.getSize > maxEntryBytes) out += ((entry.getName, None)) // declared-size guard
-          else {
-            val data = readCapped(zis, maxEntryBytes)
-            out += ((entry.getName, data))
-          }
-        }
-        entry = zis.getNextEntry
-      }
-      out.result()
-    } catch {
-      case e: java.util.zip.ZipException =>
-        // per-entry isolation (the reference extracts readable siblings
-        // of an encrypted entry): entries already streamed survive, the
-        // encrypted remainder becomes ONE counted refusal — the stream
-        // cannot advance past an entry the JDK refuses to inflate. A
-        // FULLY encrypted archive (nothing readable) still classifies
-        // NOT_DECRYPTED for the whole document.
-        val soFar = out.result()
-        if (String.valueOf(e.getMessage).contains("encrypted") && soFar.exists(_._2.nonEmpty))
-          soFar :+ (("<encrypted-remainder>", None: Option[Array[Byte]]))
-        else classifyZip(e)
-      case e: java.io.EOFException => throw new ParseFailure(s"truncated zip: ${e.getMessage}")
-      case e: java.io.IOException => throw new ParseFailure(s"unreadable zip: ${e.getMessage}")
-    } finally zis.close()
-  }
+  def unzip(bytes: Array[Byte], maxEntryBytes: Int, maxEntries: Int = 10000,
+            maxTotalBytes: Long = 256L << 20): Vector[UnzippedEntry] =
+    unzipWanted(bytes, _ => true, maxEntryBytes, maxEntries, maxTotalBytes)
 
-  /** Single streaming pass reading payloads for ONLY the entries `wanted`
-    * accepts (others listed with None payload, their bytes skipped by the
-    * stream) — the general package-format probe. Same malformed-input
-    * contract and entry-count cap as [[unzip]], plus an AGGREGATE inflated
-    * budget across all wanted payloads (a crafted package with thousands
-    * of tiny-compressed wanted parts must not accumulate unbounded memory
-    * — the zip-bomb guard applies to the sum, not just each part).
+  /** As [[unzip]], reading payloads for ONLY the entries `wanted` accepts
+    * (the others are listed with a None payload, their bytes skipped by the
+    * stream).
     */
   def unzipWanted(bytes: Array[Byte], wanted: String => Boolean,
                   maxEntryBytes: Int, maxEntries: Int = 10000,
@@ -164,11 +133,17 @@ object Archive {
       }
       out.result()
     } catch {
-      // NO partial recovery here, unlike unzip: this is the PACKAGE probe
-      // (OOXML and friends), where the parts form ONE document — an
-      // encrypted word/document.xml must classify the whole document as
-      // NOT_DECRYPTED, never silently read as an empty package
-      case e: java.util.zip.ZipException => classifyZip(e)
+      case e: java.util.zip.ZipException =>
+        // per-entry isolation (the reference extracts readable siblings
+        // of an encrypted entry): entries already streamed survive, the
+        // encrypted remainder becomes ONE counted refusal — the stream
+        // cannot advance past an entry the JDK refuses to inflate. A
+        // FULLY encrypted archive (nothing readable) still classifies
+        // NOT_DECRYPTED for the whole document.
+        val soFar = out.result()
+        if (String.valueOf(e.getMessage).contains("encrypted") && soFar.exists(_._2.nonEmpty))
+          soFar :+ ((EncryptedRemainder, None: Option[Array[Byte]]))
+        else classifyZip(e)
       case e: java.io.EOFException => throw new ParseFailure(s"truncated zip: ${e.getMessage}")
       case e: java.io.IOException => throw new ParseFailure(s"unreadable zip: ${e.getMessage}")
     } finally zis.close()

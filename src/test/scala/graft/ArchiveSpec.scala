@@ -410,6 +410,71 @@ class ArchiveSpec extends AnyFunSuite {
     assert(entries.exists { case (n, b) => n == "<encrypted-remainder>" && b.isEmpty })
   }
 
+  /** `zip` with GPBF bit 0 (encryption) set on its `nth` local file header. */
+  private def lockEntry(zip: Array[Byte], nth: Int): Array[Byte] = {
+    val c = zip.clone()
+    val at = (0 until c.length - 4).filter(i =>
+      c(i) == 'P' && c(i + 1) == 'K' && c(i + 2) == 3 && c(i + 3) == 4)(nth - 1)
+    c(at + 6) = (c(at + 6) | 1).toByte
+    c
+  }
+
+  test("encrypted SIBLING entries isolate at the root as nested: a plain zip keeps its readable entries") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    import graft.core.{DocIn, Ids, SpanIn}
+    import graft.core.route.Extract
+    import graft.sources.Archive
+    val c = lockEntry(Archive.zipBytes(Seq(
+      ("open.txt", "readable".getBytes("UTF-8")),
+      ("locked.txt", "secret".getBytes("UTF-8")))), 2)
+    val (root, skipped) = Extract.explodeCounted(DocIn(34L,
+      Array(SpanIn("zip", new String(c, ISO_8859_1), "", 0))))
+    val rid = Ids.rootId(34L)
+    assert(root.tail.map(d => (d.doc_id, d.spans.map(_.text).mkString)) ==
+      Seq((Ids.embedId("readable", rid, 0, resourceName = "open.txt"), "readable")))
+    assert(skipped == 1) // the encrypted remainder, counted
+    val outer = Archive.zipBytes(Seq(("in.zip", c)))
+    val (nested, nestedSkipped) = Extract.explodeCounted(DocIn(35L,
+      Array(SpanIn("zip", new String(outer, ISO_8859_1), "", 0))))
+    assert(nested.drop(2).map(d => (d.level, d.spans.map(_.text).mkString)) == Seq((2, "readable")))
+    assert(nestedSkipped == 1)
+  }
+
+  test("a package cut off by an encrypted part reads encrypted at the root and nested") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    import graft.core.{DecryptFailure, DocIn, Reason, SpanIn}
+    import graft.core.route.Extract
+    import graft.sources.Archive
+    val docx = graft.core.office.Docx.buildMinimal(Seq("sealed words"),
+      Seq(("word/media/pic.bin", "picture".getBytes("UTF-8"))))
+    // the body part locked (only the content-types part is readable), or
+    // only a media part locked after a readable body
+    for (nth <- Seq(2, 3)) {
+      val c = lockEntry(docx, nth)
+      intercept[DecryptFailure](Extract.extractSpan("zip", new String(c, ISO_8859_1)))
+      intercept[DecryptFailure](Extract.explode(DocIn(36L,
+        Array(SpanIn("zip", new String(c, ISO_8859_1), "", 0)))))
+      val outer = Archive.zipBytes(Seq(("sealed.docx", c)))
+      val nested = Extract.explode(DocIn(37L,
+        Array(SpanIn("zip", new String(outer, ISO_8859_1), "", 0))))
+      assert(nested.tail.map(d => (d.level, d.spans.length, d.no_content_reason)) ==
+        Seq((1, 0, Reason.Encrypted)))
+    }
+  }
+
+  test("unzip's aggregate inflated budget refuses the entries past it, counted") {
+    import graft.sources.Archive
+    val zip = Archive.zipBytes(Seq("a", "b", "c").map(n => (n, Array.fill[Byte](40)('x'))))
+    def sizes(max: Long) = Archive.unzip(zip, 1 << 20, maxTotalBytes = max)
+      .map { case (n, x) => (n, x.map(_.length)) }
+    assert(sizes(80) == Vector(("a", Some(40)), ("b", Some(40)), ("c", None)))
+    // an entry that starts under the budget is read whole
+    assert(sizes(50) == Vector(("a", Some(40)), ("b", Some(40)), ("c", None)))
+    assert(sizes(40) == Vector(("a", Some(40)), ("b", None), ("c", None)))
+    assert(sizes(0).forall(_._2.isEmpty))
+    assert(sizes(Long.MaxValue).forall(_._2.contains(40)))
+  }
+
   test("password-protected zip entries classify as encrypted, not corrupt") {
     import java.nio.charset.StandardCharsets.ISO_8859_1
     import graft.core.{DocIn, SpanIn}

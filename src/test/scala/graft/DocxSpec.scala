@@ -69,7 +69,7 @@ class DocxSpec extends AnyFunSuite {
   test("buildMinimal round-trips paragraphs (incl. XML-special chars)") {
     val paras = Seq("plain words", "with & < > \" specials", "third")
     val bytes = Docx.buildMinimal(paras)
-    val txt = graft.core.office.Ooxml.packageText(new String(bytes, ISO_8859_1), 1 << 20)
+    val txt = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))._1
     assert(txt == paras.mkString("\n"))
   }
 
@@ -88,11 +88,11 @@ class DocxSpec extends AnyFunSuite {
   }
 
   test("xlsx: shared strings resolve, numeric and inline cells read, sheets ordered") {
-    import graft.core.office.{Ooxml, Xlsx}
+    import graft.core.office.Xlsx
     val bytes = Xlsx.buildMinimal(Seq(
       Seq(("alpha", false), ("beta", false)),
       Seq(("alpha", false), ("42", true)))) // shared string reused + numeric cell
-    val txt = Ooxml.packageText(new String(bytes, ISO_8859_1), 1 << 20)
+    val txt = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))._1
     assert(txt == "alpha\tbeta\nalpha\t42")
     // inline strings + junk tolerance + entity unescape in shared strings
     assert(Xlsx.sheetText(
@@ -122,11 +122,11 @@ class DocxSpec extends AnyFunSuite {
   }
 
   test("pptx: slides extract in numeric order, one line per a:p paragraph") {
-    import graft.core.office.{Ooxml, Pptx}
+    import graft.core.office.Pptx
     val bytes = Pptx.buildMinimal(Seq(
       Seq("slide one line a", "slide one line b"),
       Seq("slide two line a")))
-    val txt = Ooxml.packageText(new String(bytes, ISO_8859_1), 1 << 20)
+    val txt = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))._1
     assert(txt == "slide one line a\nslide one line b\nslide two line a")
   }
 
@@ -279,7 +279,7 @@ class DocxSpec extends AnyFunSuite {
     import graft.core.office.Iwork
     val paras = Seq("alpha beta gamma", "delta & <epsilon>", "solo")
     val bytes = Iwork.buildPages(paras)
-    val txt = graft.core.office.Ooxml.packageText(new String(bytes, ISO_8859_1), 1 << 20)
+    val txt = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))._1
     assert(txt == paras.mkString("\n"))
     // routes as a PACKAGE, not a generic zip: body on the root, no children
     val out = Extract.explode(DocIn(25L,
@@ -378,7 +378,7 @@ class DocxSpec extends AnyFunSuite {
   test("odg: graphics pages route as ODF and flatten their text frames") {
     import graft.core.office.Odf
     val bytes = Odf.buildGraphics(Seq(Seq("drawing label one"), Seq("page two label")))
-    val txt = graft.core.office.Ooxml.packageText(new String(bytes, ISO_8859_1), 1 << 20)
+    val txt = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))._1
     assert(txt == "drawing label one\npage two label")
     val out = Extract.explode(DocIn(27L,
       Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0))))
@@ -388,7 +388,7 @@ class DocxSpec extends AnyFunSuite {
   test("vsdx: shape Text harvests in page order; lookalikes and the index skip") {
     import graft.core.office.Vsdx
     val bytes = Vsdx.buildMinimal(Seq(Seq("box one", "arrow & <label>"), Seq("page two box")))
-    val txt = graft.core.office.Ooxml.packageText(new String(bytes, ISO_8859_1), 1 << 20)
+    val txt = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))._1
     assert(txt == "box one\narrow & <label>\npage two box")
     // routes as a PACKAGE, not a generic zip: body on the root, no children
     val out = Extract.explode(DocIn(26L,
@@ -410,7 +410,7 @@ class DocxSpec extends AnyFunSuite {
       Seq(("-7", true), ("2.5", true)),          // negative RK, real
       Seq(("total", false), ("123456789", true)))
     val bytes = Xlsb.buildMinimal(rows)
-    val txt = graft.core.office.Ooxml.packageText(new String(bytes, ISO_8859_1), 1 << 20)
+    val txt = Extract.extractSpan("zip", new String(bytes, ISO_8859_1))._1
     assert(txt == "alpha\tbeta\nalpha\t42\n-7\t2.5\ntotal\t123456789")
     // routes as a PACKAGE through the zip span: body on the root document
     val d = DocIn(24L, Array(SpanIn("zip", new String(bytes, ISO_8859_1), "", 0)))
@@ -432,7 +432,7 @@ class DocxSpec extends AnyFunSuite {
       graft.sources.Archive.zipBytes(bad)
     }
     intercept[ParseFailure](
-      graft.core.office.Ooxml.packageText(new String(sheet, ISO_8859_1), 1 << 20))
+      Extract.extractSpan("zip", new String(sheet, ISO_8859_1)))
     // truncated record payload
     intercept[ParseFailure](Xlsb.sheetText(Array[Byte](7, 20, 1, 2), Vector.empty))
   }
