@@ -1,6 +1,6 @@
 package graft.core.compress
 
-import graft.core.ParseFailure
+import graft.core.{Bin, ParseFailure}
 
 /** LZX decompression — the codec inside CHM help files (and CAB), per the
   * published LZX/LZXD documentation (the cabinet-SDK block format also
@@ -66,12 +66,7 @@ object Lzx {
       buf = 0; nBits = 0
     }
     def bitsLeft: Int = nBits
-    def readRawBytes(n: Int): Array[Byte] = {
-      if (pos + n > data.length) throw new ParseFailure("lzx: raw bytes past end")
-      val out = java.util.Arrays.copyOfRange(data, pos, pos + n)
-      pos += n
-      out
-    }
+    def readRawBytes(n: Int): Array[Byte] = { val out = Bin.slice(data, pos, n); pos += n; out }
   }
 
   /** Canonical Huffman decoder: lengths (0 = absent) -> bit-by-bit walk
@@ -181,9 +176,7 @@ object Lzx {
         case 3 => // uncompressed
           br.alignToWord()
           val hdr = br.readRawBytes(12)
-          def u32(o: Int): Long = (hdr(o) & 0xffL) | ((hdr(o + 1) & 0xffL) << 8) |
-            ((hdr(o + 2) & 0xffL) << 16) | ((hdr(o + 3) & 0xffL) << 24)
-          r0 = u32(0); r1 = u32(4); r2 = u32(8)
+          r0 = Bin.u32(hdr, 0); r1 = Bin.u32(hdr, 4); r2 = Bin.u32(hdr, 8)
           if (r0 <= 0 || r1 <= 0 || r2 <= 0)
             throw new ParseFailure("lzx: non-positive repeat offset in uncompressed header")
           val raw = br.readRawBytes(blockSize)

@@ -2,6 +2,7 @@ package graft.core.db
 
 import java.nio.charset.StandardCharsets
 import graft.core.ParseFailure
+import graft.core.Bin.{latin1, u8, u16, u32}
 
 /** dBase .dbf tables (the xBase file format, published since dBASE III;
   * Tika's `DBFParser` surface) — the fixed-width record era's CSV, still
@@ -25,16 +26,6 @@ object Dbf {
 
   private val Versions = Set(0x02, 0x03, 0x04, 0x05, 0x30, 0x31, 0x83, 0x8b, 0xf5)
 
-  private def u16(b: Array[Byte], off: Int): Int = {
-    if (off + 2 > b.length) throw new ParseFailure(s"dbf: u16 past end at $off")
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  }
-  private def u32(b: Array[Byte], off: Int): Long = {
-    if (off + 4 > b.length) throw new ParseFailure(s"dbf: u32 past end at $off")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  }
-
   /** Structural sniff — strict enough that random binaries and the other
     * magic-less formats (tar, cpio) can't collide.
     */
@@ -50,7 +41,7 @@ object Dbf {
       // descriptor area: 32-byte slots between offset 32 and the 0x0D
       if (headerSize < 65 || headerSize > bytes.length) return false
       if ((headerSize - 33) % 32 != 0) return false
-      if (bytes(headerSize - 1) != 0x0d) return false
+      if (u8(bytes, headerSize - 1) != 0x0d) return false
       recordSize >= 1
     } catch { case _: ParseFailure => false }
 
@@ -69,11 +60,11 @@ object Dbf {
     val fields = (0 until nFields).map { i =>
       val o = 32 + i * 32
       var end = o
-      while (end < o + 11 && bytes(end) != 0) end += 1
-      val name = new String(bytes, o, end - o, StandardCharsets.ISO_8859_1)
+      while (end < o + 11 && u8(bytes, end) != 0) end += 1
+      val name = latin1(bytes, o, end - o)
       if (name.isEmpty) throw new ParseFailure(s"dbf: empty name for field $i")
-      val t = (bytes(o + 11) & 0xff).toChar
-      val len = bytes(o + 16) & 0xff
+      val t = u8(bytes, o + 11).toChar
+      val len = u8(bytes, o + 16)
       if (len < 1) throw new ParseFailure(s"dbf: zero-width field $name")
       Field(name, t, len)
     }.toVector
@@ -88,11 +79,10 @@ object Dbf {
     var r = 0L
     while (r < nRecords) {
       val off = headerSize + (r * recordSize).toInt
-      val flag = bytes(off) & 0xff
-      if (flag != 0x2a) { // deleted rows skipped
+      if (u8(bytes, off) != 0x2a) { // deleted rows skipped
         var p = off + 1
         rows += fields.map { f =>
-          val v = new String(bytes, p, f.length, StandardCharsets.ISO_8859_1).trim
+          val v = latin1(bytes, p, f.length).trim
           p += f.length
           v
         }

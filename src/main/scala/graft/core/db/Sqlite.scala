@@ -1,6 +1,7 @@
 package graft.core.db
 
 import graft.core.ParseFailure
+import graft.core.Bin.{be16, be32, slice, u8}
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8, UTF_16LE, UTF_16BE}
 import scala.collection.mutable.ArrayBuffer
 
@@ -54,27 +55,27 @@ object Sqlite {
   private final class Db(val bytes: Array[Byte]) {
     if (!isSqlite(bytes)) throw new ParseFailure("not a sqlite database")
     val pageSize: Int = {
-      val raw = u16(bytes, 16)
+      val raw = be16(bytes, 16)
       val ps = if (raw == 1) 65536 else raw
       if (ps < 512 || ps > 65536 || (ps & (ps - 1)) != 0)
         throw new ParseFailure(s"invalid page size $raw")
       ps
     }
-    val reserved: Int = bytes(20) & 0xff
+    val reserved: Int = u8(bytes, 20)
     val usable: Int = pageSize - reserved
     if (usable < 480) throw new ParseFailure("reserved bytes leave unusable page")
-    val encoding: Int = u32(bytes, 56).toInt match {
+    val encoding: Int = be32(bytes, 56).toInt match {
       case 0 | 1 => 1 // 0: legacy empty-schema files predate the field
       case e @ (2 | 3) => e
       case e => throw new ParseFailure(s"unknown text encoding $e")
     }
     val nPages: Int = {
-      val declared = u32(bytes, 28)
+      val declared = be32(bytes, 28)
       val byLen = bytes.length / pageSize
       // header page count is authoritative when valid-for matches the
       // change counter (spec §1.3.7); older writers leave it stale — fall
       // back to the file length
-      val n = if (declared > 0 && u32(bytes, 24) == u32(bytes, 92)) declared else byLen
+      val n = if (declared > 0 && be32(bytes, 24) == be32(bytes, 92)) declared else byLen
       if (n < 1 || n > byLen) throw new ParseFailure("page count exceeds file")
       n.toInt
     }
@@ -93,30 +94,18 @@ object Sqlite {
     def maxLeafIndex: Int = (usable - 12) * 64 / 255 - 23
   }
 
-  private def u16(b: Array[Byte], o: Int): Int = {
-    if (o + 2 > b.length) throw new ParseFailure("truncated u16")
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  }
-  private def u32(b: Array[Byte], o: Int): Long = {
-    if (o + 4 > b.length) throw new ParseFailure("truncated u32")
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  }
-
   /** (value, bytesConsumed) — SQLite varint: 1–9 bytes, big-endian 7-bit
     * groups, the 9th byte contributing all 8 bits.
     */
   private def varint(b: Array[Byte], off: Int): (Long, Int) = {
     var v = 0L; var i = 0
     while (i < 8) {
-      if (off + i >= b.length) throw new ParseFailure("truncated varint")
-      val x = b(off + i)
+      val x = u8(b, off + i)
       v = (v << 7) | (x & 0x7f)
       if ((x & 0x80) == 0) return (v, i + 1)
       i += 1
     }
-    if (off + 8 >= b.length) throw new ParseFailure("truncated varint")
-    ((v << 8) | (b(off + 8) & 0xff), 9)
+    ((v << 8) | u8(b, off + 8), 9)
   }
 
   /** Assembles a cell's full payload, following the overflow chain when
@@ -134,11 +123,11 @@ object Sqlite {
         if (k > maxLocalHint) m else k
       }
     if (cellOff + local > db.bytes.length) throw new ParseFailure("truncated cell payload")
-    if (local == total) java.util.Arrays.copyOfRange(db.bytes, cellOff, cellOff + total)
+    if (local == total) slice(db.bytes, cellOff, total)
     else {
       val out = new Array[Byte](total)
       System.arraycopy(db.bytes, cellOff, out, 0, local)
-      var next = u32(db.bytes, cellOff + local)
+      var next = be32(db.bytes, cellOff + local)
       var done = local
       var hops = 0
       while (done < total) {
@@ -150,7 +139,7 @@ object Sqlite {
         if (po + 4 + take > db.bytes.length) throw new ParseFailure("truncated overflow page")
         System.arraycopy(db.bytes, po + 4, out, done, take)
         done += take
-        next = u32(db.bytes, po)
+        next = be32(db.bytes, po)
       }
       out
     }
@@ -165,10 +154,10 @@ object Sqlite {
     while (o < hdrLen) { val (t, n) = varint(p, o); types += t; o += n }
     var body = hdrLen.toInt
     val cells = types.map { t =>
-      def take(n: Int): Int = {
+      def take(n: Long): Int = {
         val s = body
-        if (s + n > p.length) throw new ParseFailure("record body overrun")
-        body += n; s
+        if (n < 0 || n > p.length - s) throw new ParseFailure("record body overrun")
+        body += n.toInt; s
       }
       def intN(n: Int): Long = {
         var v = 0L; val s = take(n)
@@ -191,10 +180,10 @@ object Sqlite {
         case 9 => IntCell(1L)
         case 10 | 11 => throw new ParseFailure(s"reserved serial type $t")
         case n if n >= 13 && n % 2 == 1 =>
-          val len = ((n - 13) / 2).toInt; val s = take(len); TextCell(db.text(p, s, len))
+          val len = (n - 13) / 2; val s = take(len); TextCell(db.text(p, s, len.toInt))
         case n if n >= 12 =>
-          val len = ((n - 12) / 2).toInt; val s = take(len)
-          BlobCell(java.util.Arrays.copyOfRange(p, s, s + len))
+          val len = (n - 12) / 2; val s = take(len)
+          BlobCell(slice(p, s, len))
         case n => throw new ParseFailure(s"invalid serial type $n")
       }
     }
@@ -215,8 +204,8 @@ object Sqlite {
       val po = db.page(pageNo)
       val hdr = po + (if (pageNo == 1) 100 else 0)
       if (hdr + 8 > db.bytes.length) throw new ParseFailure("truncated page header")
-      val typ = db.bytes(hdr) & 0xff
-      val nCells = u16(db.bytes, hdr + 3)
+      val typ = u8(db.bytes, hdr)
+      val nCells = be16(db.bytes, hdr + 3)
       val interior = typ == 0x05 || typ == 0x02
       val leaf = typ == 0x0d || typ == 0x0a
       if (!interior && !leaf) throw new ParseFailure(f"unknown b-tree page type 0x$typ%02x")
@@ -227,17 +216,17 @@ object Sqlite {
       val ptrBase = hdr + (if (interior) 12 else 8)
       var i = 0
       while (i < nCells) {
-        val cellOff = po + u16(db.bytes, ptrBase + 2 * i)
+        val cellOff = po + be16(db.bytes, ptrBase + 2 * i)
         if (cellOff < po || cellOff >= po + db.pageSize) throw new ParseFailure("cell pointer out of page")
         typ match {
           case 0x05 => // interior table: child page + rowid key, no record
-            walk(u32(db.bytes, cellOff).toInt, depth + 1)
+            walk(be32(db.bytes, cellOff).toInt, depth + 1)
           case 0x0d => // leaf table: payloadLen, rowid, record
             val (plen, n1) = varint(db.bytes, cellOff)
             val (rowid, n2) = varint(db.bytes, cellOff + n1)
             emit(rowid, payload(db, cellOff + n1 + n2, plen, db.maxLeafTable))
           case 0x02 => // interior index: child page + record-bearing key
-            walk(u32(db.bytes, cellOff).toInt, depth + 1)
+            walk(be32(db.bytes, cellOff).toInt, depth + 1)
             val (plen, n1) = varint(db.bytes, cellOff + 4)
             emit(-1L, payload(db, cellOff + 4 + n1, plen, db.maxLeafIndex))
           case _ => // leaf index: payloadLen, record
@@ -246,7 +235,7 @@ object Sqlite {
         }
         i += 1
       }
-      if (interior) walk(u32(db.bytes, hdr + 8).toInt, depth + 1)
+      if (interior) walk(be32(db.bytes, hdr + 8).toInt, depth + 1)
     }
     walk(root, 0)
   }

@@ -2,7 +2,7 @@ package graft.core.mail
 
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
-import graft.core.ParseFailure
+import graft.core.{Bin, ParseFailure}
 import graft.core.office.{Biff, Msg}
 
 /** TNEF (`winmail.dat`) — the Transport Neutral Encapsulation Format
@@ -60,7 +60,7 @@ object Tnef {
   private val PidRtfCompressed = 0x1009
 
   def isTnef(bytes: Array[Byte]): Boolean =
-    bytes.length >= 6 && Biff.u32(bytes, 0) == Signature
+    bytes.length >= 6 && Bin.u32(bytes, 0) == Signature
 
   /** Strip the trailing NUL of a counted cp1252 string attribute. */
   private def cstr(data: Array[Byte]): String = {
@@ -82,7 +82,7 @@ object Tnef {
     */
   private def mapiProps(b: Array[Byte]): (String, Option[String]) = {
     if (b.length < 4) throw new ParseFailure("TNEF MAPI stream truncated")
-    val cProps = Biff.u32(b, 0)
+    val cProps = Bin.u32(b, 0)
     if (cProps < 0 || cProps > 4096) throw new ParseFailure("TNEF implausible MAPI count")
     var off = 4
     var sender = ""
@@ -90,7 +90,7 @@ object Tnef {
     var rtfBody: Option[String] = None
     var i = 0L
     while (i < cProps) {
-      val tag = Biff.u32(b, off)
+      val tag = Bin.u32(b, off)
       val ptype = (tag & 0xffff).toInt
       val pid = ((tag >> 16) & 0xffff).toInt
       off += 4
@@ -100,13 +100,11 @@ object Tnef {
         case PtLong | PtBoolean =>
           off += 4 // fixed scalar rides a padded dword
         case PtString8 | PtUnicode | PtBinary =>
-          val cValues = Biff.u32(b, off); off += 4
+          val cValues = Bin.u32(b, off); off += 4
           if (cValues != 1)
             throw new ParseFailure(s"TNEF multi-value MAPI property (count $cValues) unsupported")
-          val cb = Biff.u32(b, off); off += 4
-          if (cb < 0 || cb > b.length - off)
-            throw new ParseFailure("TNEF MAPI value past stream end")
-          val raw = java.util.Arrays.copyOfRange(b, off, off + cb.toInt)
+          val cb = Bin.u32(b, off); off += 4
+          val raw = Bin.slice(b, off, cb)
           off += cb.toInt
           off += (4 - (cb.toInt % 4)) % 4 // values pad to dword
           def uni16: String = new String(raw, 0,
@@ -142,17 +140,17 @@ object Tnef {
     val atts = ArrayBuffer.empty[Att]
     while (off < bytes.length) {
       if (off + 9 > bytes.length) throw new ParseFailure("TNEF attribute header truncated")
-      val level = bytes(off) & 0xff
-      val attr = Biff.u32(bytes, off + 1)
-      val len = Biff.u32(bytes, off + 5)
+      val level = Bin.u8(bytes, off)
+      val attr = Bin.u32(bytes, off + 1)
+      val len = Bin.u32(bytes, off + 5)
       off += 9
       if (level != LvlMessage && level != LvlAttachment)
         throw new ParseFailure(s"TNEF bad component level $level")
       if (len < 0 || len > bytes.length - off - 2)
         throw new ParseFailure("TNEF attribute data past stream end")
-      val data = java.util.Arrays.copyOfRange(bytes, off, off + len.toInt)
+      val data = Bin.slice(bytes, off, len)
       off += len.toInt
-      if (Biff.u16(bytes, off) != checksum(data))
+      if (Bin.u16(bytes, off) != checksum(data))
         throw new ParseFailure("TNEF attribute checksum mismatch")
       off += 2
       attr match {

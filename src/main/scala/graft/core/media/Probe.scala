@@ -3,6 +3,7 @@ package graft.core.media
 import java.nio.charset.StandardCharsets.ISO_8859_1
 
 import graft.core.ParseFailure
+import graft.core.Bin.{be16, be32, be64, latin1, slice, u8, u16, u32}
 
 /** Byte-level media metadata probing — the reference's Tika metadata
   * surface for images and audio/video containers (Tika's `ImageParser` /
@@ -31,17 +32,6 @@ object Probe {
 
   // ------------------------------------------------------------ helpers ----
 
-  private def u8(b: Array[Byte], p: Int): Int = b(p) & 0xff
-  private def be16(b: Array[Byte], p: Int): Int = (u8(b, p) << 8) | u8(b, p + 1)
-  private def le16(b: Array[Byte], p: Int): Int = (u8(b, p + 1) << 8) | u8(b, p)
-  private def be32(b: Array[Byte], p: Int): Int =
-    (u8(b, p) << 24) | (u8(b, p + 1) << 16) | (u8(b, p + 2) << 8) | u8(b, p + 3)
-  private def le32(b: Array[Byte], p: Int): Int =
-    (u8(b, p + 3) << 24) | (u8(b, p + 2) << 16) | (u8(b, p + 1) << 8) | u8(b, p)
-  private def be64(b: Array[Byte], p: Int): Long =
-    ((be32(b, p).toLong & 0xffffffffL) << 32) | (be32(b, p + 4).toLong & 0xffffffffL)
-  private def ascii(b: Array[Byte], p: Int, n: Int): String =
-    new String(b, p, n, ISO_8859_1)
   private def need(ok: Boolean, what: String): Unit =
     if (!ok) throw new ParseFailure(what)
   /** `[p, p + n)` lies inside `[lo, end)`. Compared in Long: offsets and
@@ -76,18 +66,18 @@ object Probe {
       need(pos + 8 <= b.length, "PNG chunk header past end")
       chunks += 1
       need(chunks <= 10000, "PNG chunk count > 10000")
-      val len = be32(b, pos)
+      val len = be32(b, pos).toInt
       need(len >= 0 && len <= b.length - pos - 12, "PNG chunk length out of bounds")
-      val typ = ascii(b, pos + 4, 4)
+      val typ = latin1(b, pos + 4, 4)
       need(info != null || typ == "IHDR", "PNG first chunk is not IHDR")
       typ match {
         case "IHDR" =>
           need(len >= 13, "IHDR too small")
-          val w = be32(b, pos + 8); val h = be32(b, pos + 12)
+          val w = be32(b, pos + 8).toInt; val h = be32(b, pos + 12).toInt
           need(w > 0 && h > 0, "IHDR non-positive dimensions")
           info = PngInfo(w, h, u8(b, pos + 16), u8(b, pos + 17), Vector.empty)
         case "tEXt" =>
-          val body = ascii(b, pos + 8, len)
+          val body = latin1(b, pos + 8, len)
           val i = body.indexOf('\u0000')
           need(i >= 0, "tEXt without keyword separator")
           texts += ((body.substring(0, i), body.substring(i + 1)))
@@ -109,9 +99,9 @@ object Probe {
     var iend = -1
     while (iend < 0) {
       need(pos + 8 <= base.length, "PNG without IEND")
-      val len = be32(base, pos)
+      val len = be32(base, pos).toInt
       need(len >= 0 && len <= base.length - pos - 12, "PNG chunk length out of bounds")
-      if (ascii(base, pos + 4, 4) == "IEND") iend = pos else pos += 12 + len
+      if (latin1(base, pos + 4, 4) == "IEND") iend = pos else pos += 12 + len
     }
     val extra = texts.map { case (k, v) =>
       val data = (k + "\u0000" + v).getBytes(ISO_8859_1)
@@ -168,7 +158,7 @@ object Probe {
           prec = u8(b, pos + 2); h = be16(b, pos + 3); w = be16(b, pos + 5)
           comp = u8(b, pos + 7)
           need(w > 0 && h > 0, "SOF non-positive dimensions")
-        } else if (m == 0xe1 && len >= 8 && ascii(b, pos + 2, 6) == "Exif\u0000\u0000") {
+        } else if (m == 0xe1 && len >= 8 && latin1(b, pos + 2, 6) == "Exif\u0000\u0000") {
           val (o, mk, md) = parseExifTiff(b, pos + 8, pos + len)
           orient = o; make = mk; model = md
         }
@@ -185,11 +175,11 @@ object Probe {
     */
   private def parseExifTiff(b: Array[Byte], off: Int, end: Int): (Int, String, String) = {
     need(end - off >= 8, "EXIF TIFF header too small")
-    val head = ascii(b, off, 2)
+    val head = latin1(b, off, 2)
     val le = head == "II"
     need(le || head == "MM", "EXIF TIFF byte order")
-    def r16(p: Int): Int = { need(within(p, 2, off, end), "EXIF read past segment"); if (le) le16(b, p) else be16(b, p) }
-    def r32(p: Int): Int = { need(within(p, 4, off, end), "EXIF read past segment"); if (le) le32(b, p) else be32(b, p) }
+    def r16(p: Int): Int = { need(within(p, 2, off, end), "EXIF read past segment"); if (le) u16(b, p) else be16(b, p) }
+    def r32(p: Int): Int = { need(within(p, 4, off, end), "EXIF read past segment"); if (le) u32(b, p).toInt else be32(b, p).toInt }
     need(r16(off + 2) == 42, "EXIF TIFF magic")
     val ifdOff = r32(off + 4)
     need(ifdOff >= 8 && ifdOff <= end - off - 2, "EXIF IFD0 offset out of segment")
@@ -199,11 +189,11 @@ object Probe {
     var orient = 0; var make = ""; var model = ""
     def asciiValue(e: Int, cnt: Int): String = {
       val raw =
-        if (cnt <= 4) { need(within(e + 8, cnt, off, end), "EXIF inline value past segment"); ascii(b, e + 8, cnt) }
+        if (cnt <= 4) { need(within(e + 8, cnt, off, end), "EXIF inline value past segment"); latin1(b, e + 8, cnt) }
         else {
           val vo = off + r32(e + 8)
           need(within(vo, cnt, off, end), "EXIF value offset out of segment")
-          ascii(b, vo, cnt)
+          latin1(b, vo, cnt)
         }
       raw.takeWhile(_ != '\u0000') // ASCII values are NUL-terminated
     }
@@ -261,7 +251,7 @@ object Probe {
   // ---------------------------------------------------------------- GIF ----
 
   def isGif(b: Array[Byte]): Boolean =
-    b.length >= 6 && (ascii(b, 0, 6) == "GIF87a" || ascii(b, 0, 6) == "GIF89a")
+    b.length >= 6 && (latin1(b, 0, 6) == "GIF87a" || latin1(b, 0, 6) == "GIF89a")
 
   final case class GifInfo(version: String, width: Int, height: Int, frames: Int)
 
@@ -272,8 +262,8 @@ object Probe {
   def probeGif(b: Array[Byte]): GifInfo = {
     need(isGif(b), "not a GIF signature")
     need(b.length >= 13, "GIF header too small")
-    val version = ascii(b, 3, 3)
-    val w = le16(b, 6); val h = le16(b, 8)
+    val version = latin1(b, 3, 3)
+    val w = u16(b, 6); val h = u16(b, 8)
     need(w > 0 && h > 0, "GIF non-positive dimensions")
     val packed = u8(b, 10)
     var pos = 13
@@ -320,7 +310,7 @@ object Probe {
   // ------------------------------------------------------------ MP4/BMFF ----
 
   def isMp4(b: Array[Byte]): Boolean =
-    b.length >= 12 && ascii(b, 4, 4) == "ftyp"
+    b.length >= 12 && latin1(b, 4, 4) == "ftyp"
 
   final case class Mp4Info(brand: String, timescale: Long,
                            durationMs: Long, nTracks: Int)
@@ -339,8 +329,8 @@ object Probe {
       while (pos < end) {
         boxes += 1; need(boxes <= 10000, "MP4 box count > 10000")
         need(pos + 8 <= end, "MP4 box header past end")
-        val size32 = be32(b, pos).toLong & 0xffffffffL
-        val typ = ascii(b, pos + 4, 4)
+        val size32 = be32(b, pos)
+        val typ = latin1(b, pos + 4, 4)
         var hdr = 8
         val size =
           if (size32 == 0) (end - pos).toLong
@@ -352,7 +342,7 @@ object Probe {
         typ match {
           case "ftyp" =>
             need(size >= hdr + 4, "ftyp too small")
-            brand = ascii(b, pos + hdr, 4)
+            brand = latin1(b, pos + hdr, 4)
           case "moov" => walk(pos + hdr, pos + size.toInt, depth + 1)
           case "trak" => tracks += 1
           case "mvhd" =>
@@ -361,12 +351,12 @@ object Probe {
             val ver = u8(b, p)
             if (ver == 1) {
               need(size >= hdr + 4 + 28, "mvhd v1 too small")
-              timescale = be32(b, p + 20).toLong & 0xffffffffL
+              timescale = be32(b, p + 20)
               duration = be64(b, p + 24)
             } else {
               need(size >= hdr + 4 + 16, "mvhd v0 too small")
-              timescale = be32(b, p + 12).toLong & 0xffffffffL
-              duration = be32(b, p + 16).toLong & 0xffffffffL
+              timescale = be32(b, p + 12)
+              duration = be32(b, p + 16)
             }
           case _ => ()
         }
@@ -422,7 +412,7 @@ object Probe {
     * misclassify arbitrary binary junk).
     */
   def isMp3(b: Array[Byte]): Boolean =
-    (b.length >= 10 && ascii(b, 0, 3) == "ID3") ||
+    (b.length >= 10 && latin1(b, 0, 3) == "ID3") ||
       (b.length >= 4 && u8(b, 0) == 0xff && (u8(b, 1) & 0xfe) == 0xfa &&
         (u8(b, 2) >> 4) != 0 && (u8(b, 2) >> 4) != 15 && ((u8(b, 2) >> 2) & 3) != 3)
 
@@ -447,16 +437,16 @@ object Probe {
     }
     var done = false
     while (!done && pos + 10 <= tagEnd) {
-      if (b(pos) == 0) done = true // padding
+      if (u8(b, pos) == 0) done = true // padding
       else {
-        val fid = ascii(b, pos, 4)
+        val fid = latin1(b, pos, 4)
         val size =
           if (major >= 4) (u8(b, pos + 4) << 21) | (u8(b, pos + 5) << 14) | (u8(b, pos + 6) << 7) | u8(b, pos + 7)
           else (u8(b, pos + 4) << 24) | (u8(b, pos + 5) << 16) | (u8(b, pos + 6) << 8) | u8(b, pos + 7)
         if (size <= 0 || pos + 10 + size > tagEnd) done = true
         else {
           if ((fid == "TIT2" || fid == "TPE1" || fid == "TALB") && size >= 2) {
-            val raw = java.util.Arrays.copyOfRange(b, pos + 11, pos + 10 + size)
+            val raw = slice(b, pos + 11, size - 1)
             val text = (u8(b, pos + 10) match {
               case 0 => new String(raw, ISO_8859_1)
               case 1 => new String(raw, java.nio.charset.StandardCharsets.UTF_16) // BOM'd
@@ -484,7 +474,7 @@ object Probe {
   def probeMp3(b: Array[Byte]): Mp3Info = {
     var pos = 0
     var tags = ("", "", "")
-    if (b.length >= 10 && ascii(b, 0, 3) == "ID3") {
+    if (b.length >= 10 && latin1(b, 0, 3) == "ID3") {
       val size = (u8(b, 6) << 21) | (u8(b, 7) << 14) | (u8(b, 8) << 7) | u8(b, 9)
       need((u8(b, 6) | u8(b, 7) | u8(b, 8) | u8(b, 9)) < 0x80, "ID3v2 size not syncsafe")
       pos = 10 + size
@@ -563,8 +553,8 @@ object Probe {
 
   /** RIFF container carrying audio or video — WAVE or 'AVI ' form type. */
   def isRiffAv(b: Array[Byte]): Boolean =
-    b.length >= 12 && ascii(b, 0, 4) == "RIFF" &&
-      (ascii(b, 8, 4) == "WAVE" || ascii(b, 8, 4) == "AVI ")
+    b.length >= 12 && latin1(b, 0, 4) == "RIFF" &&
+      (latin1(b, 8, 4) == "WAVE" || latin1(b, 8, 4) == "AVI ")
 
   final case class WavInfo(audioFormat: Int, channels: Int, sampleRate: Int,
                            bits: Int, dataBytes: Int, durationUs: Long)
@@ -574,7 +564,7 @@ object Probe {
     * exact duration. Chunk sizes are bounds-checked and even-padded.
     */
   def probeWav(b: Array[Byte]): WavInfo = {
-    need(b.length >= 12 && ascii(b, 0, 4) == "RIFF" && ascii(b, 8, 4) == "WAVE",
+    need(b.length >= 12 && latin1(b, 0, 4) == "RIFF" && latin1(b, 8, 4) == "WAVE",
       "not a RIFF/WAVE file")
     var pos = 12
     var fmt: (Int, Int, Int, Int) = null // format, channels, rate, bits
@@ -582,12 +572,12 @@ object Probe {
     var chunks = 0
     while (pos + 8 <= b.length) {
       chunks += 1; need(chunks <= 10000, "RIFF chunk count > 10000")
-      val id = ascii(b, pos, 4)
-      val size = le32(b, pos + 4)
+      val id = latin1(b, pos, 4)
+      val size = u32(b, pos + 4).toInt
       need(size >= 0 && size <= b.length - pos - 8, s"RIFF chunk '$id' size out of bounds")
       if (id == "fmt ") {
         need(size >= 16, "fmt chunk too small")
-        fmt = (le16(b, pos + 8), le16(b, pos + 10), le32(b, pos + 12), le16(b, pos + 22))
+        fmt = (u16(b, pos + 8), u16(b, pos + 10), u32(b, pos + 12).toInt, u16(b, pos + 22))
       } else if (id == "data") dataBytes = size
       pos += 8 + size + (size & 1)
     }
@@ -691,8 +681,8 @@ object Probe {
   def probeTiff(b: Array[Byte]): TiffInfo = {
     need(isTiff(b), "not a TIFF")
     val le = b(0) == 'I'
-    def r16(p: Int): Int = { need(within(p, 2, 0, b.length), "TIFF read past file"); if (le) le16(b, p) else be16(b, p) }
-    def r32(p: Int): Int = { need(within(p, 4, 0, b.length), "TIFF read past file"); if (le) le32(b, p) else be32(b, p) }
+    def r16(p: Int): Int = { need(within(p, 2, 0, b.length), "TIFF read past file"); if (le) u16(b, p) else be16(b, p) }
+    def r32(p: Int): Int = { need(within(p, 4, 0, b.length), "TIFF read past file"); if (le) u32(b, p).toInt else be32(b, p).toInt }
     val ifd = r32(4)
     need(within(ifd, 2, 8, b.length), "TIFF IFD0 offset out of file")
     val n = r16(ifd)
@@ -702,11 +692,11 @@ object Probe {
       if (typ == 3) r16(e + 8) else r32(e + 8) // SHORT inline vs LONG inline
     def asciiValue(e: Int, cnt: Int): String = {
       val raw =
-        if (cnt <= 4) { need(within(e + 8, cnt, 0, b.length), "TIFF inline value past file"); ascii(b, e + 8, cnt) }
+        if (cnt <= 4) { need(within(e + 8, cnt, 0, b.length), "TIFF inline value past file"); latin1(b, e + 8, cnt) }
         else {
           val vo = r32(e + 8)
           need(within(vo, cnt, 0, b.length), "TIFF value offset out of file")
-          ascii(b, vo, cnt)
+          latin1(b, vo, cnt)
         }
       raw.takeWhile(_ != '\u0000')
     }
@@ -783,7 +773,7 @@ object Probe {
 
   def isBmp(b: Array[Byte]): Boolean =
     b.length >= 26 && b(0) == 'B' && b(1) == 'M' && {
-      val dib = le32(b, 14)
+      val dib = u32(b, 14).toInt
       // plausible DIB header sizes (CORE/INFO/V2..V5): the two magic
       // letters alone are too weak a signature for text corpora
       dib == 12 || dib == 40 || dib == 52 || dib == 56 || dib == 108 || dib == 124
@@ -797,15 +787,15 @@ object Probe {
     */
   def probeBmp(b: Array[Byte]): BmpInfo = {
     need(isBmp(b), "not a BMP")
-    val dib = le32(b, 14)
+    val dib = u32(b, 14).toInt
     if (dib == 12) {
       need(b.length >= 26, "BMP core header truncated")
-      BmpInfo(le16(b, 18), le16(b, 20), le16(b, 24), topDown = false)
+      BmpInfo(u16(b, 18), u16(b, 20), u16(b, 24), topDown = false)
     } else {
       need(b.length >= 34, "BMP info header truncated")
-      val w = le32(b, 18); val h = le32(b, 22)
+      val w = u32(b, 18).toInt; val h = u32(b, 22).toInt
       need(w > 0 && h != 0, "BMP dimensions")
-      BmpInfo(w, math.abs(h), le16(b, 28), topDown = h < 0)
+      BmpInfo(w, math.abs(h), u16(b, 28), topDown = h < 0)
     }
   }
 
@@ -841,7 +831,7 @@ object Probe {
   // --------------------------------------------------------------- WebP ----
 
   def isWebp(b: Array[Byte]): Boolean =
-    b.length >= 16 && ascii(b, 0, 4) == "RIFF" && ascii(b, 8, 4) == "WEBP"
+    b.length >= 16 && latin1(b, 0, 4) == "RIFF" && latin1(b, 8, 4) == "WEBP"
 
   final case class WebpInfo(format: String, width: Int, height: Int)
 
@@ -855,8 +845,8 @@ object Probe {
     var guard = 0
     while (pos + 8 <= b.length) {
       guard += 1; need(guard <= 1024, "WebP chunk cap")
-      val id = ascii(b, pos, 4)
-      val size = le32(b, pos + 4)
+      val id = latin1(b, pos, 4)
+      val size = u32(b, pos + 4).toInt
       need(within(pos + 8, size, 0, b.length), "WebP chunk past file")
       val p = pos + 8
       id match {
@@ -868,13 +858,13 @@ object Probe {
           return WebpInfo("VP8X", w, h)
         case "VP8L" =>
           need(size >= 5 && u8(b, p) == 0x2f, "VP8L signature")
-          val bits = le32(b, p + 1)
+          val bits = u32(b, p + 1).toInt
           return WebpInfo("VP8L", 1 + (bits & 0x3fff), 1 + ((bits >>> 14) & 0x3fff))
         case "VP8 " =>
           need(size >= 10, "VP8 frame header too small")
           need(u8(b, p + 3) == 0x9d && u8(b, p + 4) == 0x01 && u8(b, p + 5) == 0x2a,
             "VP8 start code")
-          return WebpInfo("VP8", le16(b, p + 6) & 0x3fff, le16(b, p + 8) & 0x3fff)
+          return WebpInfo("VP8", u16(b, p + 6) & 0x3fff, u16(b, p + 8) & 0x3fff)
         case _ => ()
       }
       pos += 8 + size + (size & 1)
@@ -920,12 +910,12 @@ object Probe {
 
   def isIco(b: Array[Byte]): Boolean =
     b.length >= 22 && b(0) == 0 && b(1) == 0 && b(2) == 1 && b(3) == 0 && {
-      val count = le16(b, 4)
+      val count = u16(b, 4)
       // weak magic: require a sane entry count and the first entry's
       // payload to land inside the file
       count >= 1 && count <= 1024 &&
         b.length >= 6 + 16L * count &&
-        le32(b, 6 + 12).toLong + le32(b, 6 + 8).toLong <= b.length.toLong
+        u32(b, 6 + 12) + u32(b, 6 + 8) <= b.length
     }
 
   final case class IcoInfo(nImages: Int, width: Int, height: Int, pngPayload: Boolean)
@@ -936,12 +926,12 @@ object Probe {
     */
   def probeIco(b: Array[Byte]): IcoInfo = {
     need(isIco(b), "not an ICO")
-    val count = le16(b, 4)
+    val count = u16(b, 4)
     val w0 = u8(b, 6); val h0 = u8(b, 7)
-    val off = le32(b, 6 + 12)
-    val size = le32(b, 6 + 8)
+    val off = u32(b, 6 + 12).toInt
+    val size = u32(b, 6 + 8).toInt
     need(off >= 6 + 16 * count && size >= 0 && off.toLong + size <= b.length, "ICO entry out of file")
-    val png = size >= 8 && isPng(java.util.Arrays.copyOfRange(b, off, off + 8))
+    val png = size >= 8 && isPng(slice(b, off, 8))
     IcoInfo(count, if (w0 == 0) 256 else w0, if (h0 == 0) 256 else h0, png)
   }
 

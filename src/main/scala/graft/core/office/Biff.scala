@@ -29,26 +29,11 @@ object Biff {
 
   private[core] val Cp1252: Charset = Charset.forName("windows-1252")
   private[core] val Utf16Le: Charset = Charset.forName("UTF-16LE")
-
-  // shared little-endian bounds-checked reads for the whole legacy-Office
-  // package (WordDoc and Msg reuse these — one place for any bounds fix)
-  private[core] def u8(b: Array[Byte], off: Int): Int = {
-    if (off < 0 || off >= b.length) throw new ParseFailure(s"ole2: byte read past end at $off")
-    b(off) & 0xff
-  }
-  private[core] def u16(b: Array[Byte], off: Int): Int = {
-    if (off < 0 || off + 2 > b.length) throw new ParseFailure(s"ole2: u16 read past end at $off")
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  }
-  private[core] def u32(b: Array[Byte], off: Int): Long = {
-    if (off < 0 || off + 4 > b.length) throw new ParseFailure(s"ole2: u32 read past end at $off")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  }
 }
 
 object Xls {
   import Biff._
+  import graft.core.Bin.{slice, u8, u16, u32}
 
   def isXls(entries: Seq[(String, Option[Array[Byte]])]): Boolean =
     entries.exists(e => e._1 == "Workbook" || e._1 == "Book")
@@ -76,14 +61,10 @@ object Xls {
     var p = off + 3
     val cRun = if ((flags & 0x08) != 0) { val v = u16(b, p); p += 2; v } else 0
     val cbExt = if ((flags & 0x04) != 0) { val v = u32(b, p); p += 4; v } else 0L
-    val s =
-      if ((flags & 0x01) != 0) { // fHighByte: UTF-16LE
-        if (p + 2 * cch > b.length) throw new ParseFailure("xls: utf16 sst string past end")
-        val v = new String(b, p, 2 * cch, Utf16Le); p += 2 * cch; v
-      } else {
-        if (p + cch > b.length) throw new ParseFailure("xls: compressed sst string past end")
-        val v = new String(b, p, cch, Cp1252); p += cch; v
-      }
+    val wide = (flags & 0x01) != 0 // fHighByte: UTF-16LE, else compressed cp1252
+    val n = if (wide) 2 * cch else cch
+    val s = new String(slice(b, p, n), if (wide) Utf16Le else Cp1252)
+    p += n
     // LONG arithmetic: a crafted cbExt near 2^31 would wrap the Int offset
     // negative and slip past the bounds check
     val pL = p.toLong + cRun.toLong * 4 + cbExt
@@ -114,8 +95,7 @@ object Xls {
       val rt = u16(book, off)
       val len = u16(book, off + 2)
       val p = off + 4
-      if (p + len > book.length) throw new ParseFailure(f"xls: record 0x$rt%04x past stream end")
-      val payload = java.util.Arrays.copyOfRange(book, p, p + len)
+      val payload = slice(book, p, len)
       if (rt == RecContinue) {
         if (recs.isEmpty) throw new ParseFailure("xls: continue record with no predecessor")
         val prev = recs.last
@@ -236,6 +216,7 @@ object Xls {
 
 object Ppt {
   import Biff._
+  import graft.core.Bin.{u16, u32}
 
   def isPpt(entries: Seq[(String, Option[Array[Byte]])]): Boolean =
     entries.exists(_._1 == "PowerPoint Document")

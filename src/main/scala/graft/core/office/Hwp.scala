@@ -1,7 +1,8 @@
 package graft.core.office
 
 import java.nio.charset.StandardCharsets
-import graft.core.{DecryptFailure, ParseFailure}
+import graft.core.{Bin, DecryptFailure, ParseFailure}
+import graft.core.pdf.PdfMini
 
 /** HWP 5.x (Hangul word processor, the Korean legal/government staple) —
   * the reference's Tika `AutoDetectParser` routes these to HwpV5Parser
@@ -29,11 +30,10 @@ import graft.core.{DecryptFailure, ParseFailure}
   */
 object Hwp {
 
-  import Biff.{u16, u32}
+  import Bin.{u16, u32}
 
   private val Signature = "HWP Document File".getBytes(StandardCharsets.US_ASCII)
   private val TagParaText = 0x43 // HWPTAG_BEGIN (0x10) + 51
-  private val MaxInflate = 64 << 20
 
   def isHwp(entries: Seq[(String, Option[Array[Byte]])]): Boolean =
     entries.exists {
@@ -64,34 +64,10 @@ object Hwp {
     }.sortBy(_._1)
     val sb = new StringBuilder
     sections.foreach { case (_, raw) =>
-      val body = if (compressed) inflateRaw(raw) else raw
+      val body = if (compressed) Bin.inflate(raw, nowrap = true, PdfMini.MaxInflatedBytes) else raw
       sectionText(body, sb)
     }
     sb.toString
-  }
-
-  /** Raw-deflate (no zlib wrapper) decode with a zip-bomb cap. */
-  private def inflateRaw(data: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.min(data.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch {
-            case e: java.util.zip.DataFormatException =>
-              throw new ParseFailure(s"hwp: section inflate failed: ${e.getMessage}")
-          }
-        if (n == 0 && inf.needsInput())
-          throw new ParseFailure("hwp: section deflate stream truncated")
-        out.write(buf, 0, n)
-        if (out.size > MaxInflate)
-          throw new ParseFailure("hwp: section inflates past the 64 MiB cap")
-      }
-      out.toByteArray
-    } finally inf.end()
   }
 
   /** Walk one section's record stream, appending PARA_TEXT prose. */

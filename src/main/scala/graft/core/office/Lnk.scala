@@ -2,6 +2,7 @@ package graft.core.office
 
 import java.nio.charset.StandardCharsets
 import graft.core.ParseFailure
+import graft.core.Bin.{latin1, slice, u8, u16, u32}
 
 /** Windows shell links (`.lnk`, [MS-SHLLINK] — the published shortcut
   * format; a first-class forensic artifact: every document a user opens
@@ -30,20 +31,12 @@ object Lnk {
     bytes.length >= 76 && bytes(0) == 0x4c && bytes(1) == 0 && bytes(2) == 0 &&
       bytes(3) == 0 && (4 until 20).forall(i => bytes(i) == Clsid(i - 4))
 
-  private def u16(b: Array[Byte], off: Int): Int = {
-    if (off < 0 || off + 2 > b.length) throw new ParseFailure(s"lnk: u16 past end at $off")
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  }
-  private def u32(b: Array[Byte], off: Int): Long = {
-    if (off < 0 || off + 4 > b.length) throw new ParseFailure(s"lnk: u32 past end at $off")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  }
-  private def cstr(b: Array[Byte], off: Int, limit: Int): String = {
+  /** NUL-terminated ANSI string at `off`, ending before `limit`. */
+  private def cstr(b: Array[Byte], off: Long, limit: Int): String = {
     var end = off
-    while (end < limit && b(end) != 0) end += 1
+    while (end < limit && u8(b, end) != 0) end += 1
     if (end >= limit) throw new ParseFailure("lnk: unterminated path string")
-    new String(b, off, end - off, StandardCharsets.ISO_8859_1)
+    latin1(b, off, end - off)
   }
 
   final case class Link(target: String, name: String, relativePath: String,
@@ -62,29 +55,27 @@ object Lnk {
     var target = ""
     if ((flags & 0x02) != 0) { // HasLinkInfo
       val liStart = p
-      val liSize = u32(bytes, liStart).toInt
+      val liSize = u32(bytes, liStart)
       if (liSize < 0x1c || liStart + liSize > bytes.length)
         throw new ParseFailure("lnk: linkinfo size out of range")
       val liFlags = u32(bytes, liStart + 8)
       if ((liFlags & 0x01) != 0) { // VolumeIDAndLocalBasePath
-        val baseOff = u32(bytes, liStart + 16).toInt
-        val suffixOff = u32(bytes, liStart + 24).toInt
-        val limit = liStart + liSize
+        val baseOff = u32(bytes, liStart + 16)
+        val suffixOff = u32(bytes, liStart + 24)
+        val limit = liStart + liSize.toInt
         val base = cstr(bytes, liStart + baseOff, limit)
         val suffix = cstr(bytes, liStart + suffixOff, limit)
         target = base + suffix
       }
-      p = liStart + liSize
+      p = liStart + liSize.toInt
     }
     val unicode = (flags & 0x80) != 0
     def stringData(): String = {
       val n = u16(bytes, p)
       p += 2
       val byteLen = if (unicode) n * 2 else n
-      if (p + byteLen > bytes.length) throw new ParseFailure("lnk: string data past end")
-      val s =
-        if (unicode) new String(bytes, p, byteLen, StandardCharsets.UTF_16LE)
-        else new String(bytes, p, byteLen, StandardCharsets.ISO_8859_1)
+      val s = new String(slice(bytes, p, byteLen),
+        if (unicode) StandardCharsets.UTF_16LE else StandardCharsets.ISO_8859_1)
       p += byteLen
       s
     }

@@ -1,6 +1,7 @@
 package graft.core.office
 
-import java.nio.charset.StandardCharsets
+import graft.core.ParseFailure
+import graft.core.Bin.{latin1, slice, u16, u32}
 
 /** OLE packager streams (`Ole10Native`) — how legacy OLE embedding
   * wraps an arbitrary file inside a compound object (the reference hits
@@ -23,34 +24,23 @@ object Ole {
   def isOle10Name(name: String): Boolean = name.endsWith("Ole10Native")
 
   def tryUnwrap(b: Array[Byte]): Option[(String, Array[Byte])] = {
-    def u16(off: Int): Int =
-      if (off + 2 > b.length) -1
-      else (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long =
-      if (off + 4 > b.length) -1L
-      else (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-        ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
     def asciiz(off: Int): Option[(String, Int)] = {
       var i = off
       while (i < b.length && b(i) != 0) i += 1
-      if (i >= b.length) None
-      else Some((new String(b, off, i - off, StandardCharsets.ISO_8859_1), i + 1))
+      if (i >= b.length) None else Some((latin1(b, off, i - off), i + 1))
     }
-    if (b.length < 12) return None
-    if (u32(0) != b.length - 4L) return None // totalSize must frame the stream
-    if (u16(4) != 2) return None // only the labeled form carries a payload here
-    for {
-      (label, p1) <- asciiz(6)
-      (_, p2) <- asciiz(p1) // source path
-      p3 = p2 + 4 // flags2 + unknown
-      cmdLen = u32(p3)
-      if cmdLen >= 0 && p3 + 4 + cmdLen <= b.length
-      p4 = (p3 + 4 + cmdLen).toInt
-      dataSize = u32(p4)
-      if dataSize > 0 && p4 + 4 + dataSize <= b.length
-    } yield {
-      val name = if (label.nonEmpty) label else "package.bin"
-      (name, java.util.Arrays.copyOfRange(b, p4 + 4, (p4 + 4 + dataSize).toInt))
-    }
+    // totalSize must frame the stream, and only the labeled form carries
+    // a payload here; a read past the end is one more inconsistency
+    try {
+      if (b.length < 12 || u32(b, 0) != b.length - 4L || u16(b, 4) != 2) None
+      else for {
+        (label, p1) <- asciiz(6)
+        (_, p2) <- asciiz(p1) // source path
+        p3 = p2 + 4 // flags2 + unknown
+        p4 = p3 + 4 + u32(b, p3) // past the command
+        dataSize = u32(b, p4)
+        if dataSize > 0
+      } yield (if (label.nonEmpty) label else "package.bin", slice(b, p4 + 4, dataSize))
+    } catch { case _: ParseFailure => None }
   }
 }

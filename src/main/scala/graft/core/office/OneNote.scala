@@ -1,7 +1,8 @@
 package graft.core.office
 
 import java.nio.charset.StandardCharsets
-import graft.core.ParseFailure
+import graft.core.{Bin, ParseFailure}
+import graft.core.Bin.{u8, u16, u32, u64}
 
 /** OneNote `.one` sections per the published [MS-ONESTORE] revision
   * store (the Tika OneNoteParser surface):
@@ -61,17 +62,6 @@ object OneNote {
   def isOne(bytes: Array[Byte]): Boolean =
     bytes.length >= 1024 && (0 until 16).forall(i => bytes(48 + i) == FileFormatGuid(i))
 
-  private def u16(b: Array[Byte], off: Long): Int = {
-    if (off < 0 || off + 2 > b.length) throw new ParseFailure(s"one: u16 past end at $off")
-    (b(off.toInt) & 0xff) | ((b(off.toInt + 1) & 0xff) << 8)
-  }
-  private def u32(b: Array[Byte], off: Long): Long = {
-    if (off < 0 || off + 4 > b.length) throw new ParseFailure(s"one: u32 past end at $off")
-    val o = off.toInt
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) | ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-  }
-  private def u64(b: Array[Byte], off: Long): Long = u32(b, off) | (u32(b, off + 4) << 32)
-
   private final case class Chunk(stp: Long, cb: Long) {
     def nil: Boolean = stp == 0xffffffffL || stp == 0xffffffffffffffffL || cb == 0
   }
@@ -90,7 +80,7 @@ object OneNote {
     val (cbRaw, cbLen) = cbFormat match {
       case 0 => (u32(b, off + stpLen), 4)
       case 1 => (u64(b, off + stpLen), 8)
-      case 2 => ((b((off + stpLen).toInt) & 0xffL) * 8, 1)
+      case 2 => (u8(b, off + stpLen) * 8L, 1)
       case 3 => (u16(b, off + stpLen).toLong * 8, 2)
       case _ => throw new ParseFailure("one: bad cb format")
     }
@@ -98,9 +88,8 @@ object OneNote {
   }
 
   private def slice(b: Array[Byte], c: Chunk): Array[Byte] = {
-    if (c.stp < 0 || c.cb < 0 || c.cb > (64 << 20) || c.stp + c.cb > b.length)
-      throw new ParseFailure("one: chunk reference past file end")
-    java.util.Arrays.copyOfRange(b, c.stp.toInt, (c.stp + c.cb).toInt)
+    if (c.cb > (64 << 20)) throw new ParseFailure("one: chunk reference past the 64 MiB cap")
+    Bin.slice(b, c.stp, c.cb)
   }
 
   /** The text properties of one ObjectSpaceObjectPropSet blob, in
@@ -146,7 +135,7 @@ object OneNote {
             throw new ParseFailure("one: prtFourBytesOfLengthFollowedByData length lies")
           if (id == RichEditTextUnicode) {
             if (len % 2 != 0) throw new ParseFailure("one: unicode text property odd length")
-            val s = new String(blob, off.toInt, len.toInt, StandardCharsets.UTF_16LE)
+            val s = new String(Bin.slice(blob, off, len), StandardCharsets.UTF_16LE)
             out += s.stripSuffix("\u0000")
           }
           off += len
@@ -223,9 +212,9 @@ object OneNote {
     if (!(0 until 16).forall(i => blob(blob.length - 16 + i) == FileDataFooterGuid(i)))
       throw new ParseFailure("one: FileDataStoreObject footer GUID mismatch")
     val len = u64(blob, 16)
-    if (len < 0 || 36 + len > blob.length - 16)
+    if (len > blob.length - 16 - 36)
       throw new ParseFailure(s"one: FileData length $len past object end ${blob.length}")
-    java.util.Arrays.copyOfRange(blob, 36, 36 + len.toInt)
+    Bin.slice(blob, 36, len)
   }
 
   /** All RichEditTextUnicode paragraphs (newline-joined) plus every

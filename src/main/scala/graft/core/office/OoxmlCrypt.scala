@@ -2,6 +2,7 @@ package graft.core.office
 
 import java.nio.charset.StandardCharsets
 import graft.core.{DecryptFailure, ParseFailure}
+import graft.core.Bin.{slice, u16, u32, u64}
 
 /** ECMA-376 password-protected OOXML: an encrypted .docx/.xlsx/.pptx is
   * saved as a compound file holding `EncryptionInfo` (cipher parameters +
@@ -46,15 +47,6 @@ object OoxmlCrypt {
     else { val v = compute; spunCache.put(key, v); v }
   }
 
-  private def u16(b: Array[Byte], off: Int): Int = {
-    if (off < 0 || off + 2 > b.length) throw new ParseFailure(s"offcrypto: u16 past end at $off")
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  }
-  private def u32(b: Array[Byte], off: Int): Long = {
-    if (off < 0 || off + 4 > b.length) throw new ParseFailure(s"offcrypto: u32 past end at $off")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  }
   private def le32(v: Int): Array[Byte] =
     Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
       ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
@@ -87,13 +79,11 @@ object OoxmlCrypt {
     val v = h + headerSize.toInt // EncryptionVerifier
     val saltSize = u32(info, v).toInt
     if (saltSize != 16) throw new ParseFailure(s"offcrypto: salt size $saltSize")
-    if (v + 4 + 16 + 16 + 4 + 32 > info.length)
-      throw new ParseFailure("offcrypto: verifier struct past end")
-    val salt = java.util.Arrays.copyOfRange(info, v + 4, v + 20)
-    val encVerifier = java.util.Arrays.copyOfRange(info, v + 20, v + 36)
+    val salt = slice(info, v + 4, 16)
+    val encVerifier = slice(info, v + 20, 16)
     val verifierHashSize = u32(info, v + 36).toInt
     if (verifierHashSize != 20) throw new ParseFailure(s"offcrypto: verifier hash size $verifierHashSize")
-    val encVerifierHash = java.util.Arrays.copyOfRange(info, v + 40, v + 72)
+    val encVerifierHash = slice(info, v + 40, 32)
     StandardInfo(keyBytes, salt, encVerifier, encVerifierHash)
   }
 
@@ -148,7 +138,7 @@ object OoxmlCrypt {
     if (pkg.length < 8) throw new ParseFailure("offcrypto: EncryptedPackage too short")
     if (u16(info, 0) == 4 && u16(info, 2) == 4) return agileDecrypt(info, pkg)
     val si = parseStandard(info)
-    val plainLen = u32(pkg, 0) | (u32(pkg, 4) << 32)
+    val plainLen = u64(pkg, 0)
     val cipher = java.util.Arrays.copyOfRange(pkg, 8, pkg.length - (pkg.length - 8) % 16)
     if (plainLen < 0 || plainLen > cipher.length)
       throw new ParseFailure("offcrypto: declared package size past ciphertext")
@@ -222,7 +212,7 @@ object OoxmlCrypt {
     * IVs chain off the keyData salt, HMAC integrity verified when present.
     */
   private def agileDecrypt(info: Array[Byte], pkg: Array[Byte]): Array[Byte] = {
-    val xml = new String(info, 8, info.length - 8, StandardCharsets.UTF_8)
+    val xml = new String(slice(info, 8, info.length - 8), StandardCharsets.UTF_8)
     // keyData: the package cipher parameters
     val kdSalt = b64(attr(xml, "keyData", "saltValue"))
     val kdKeyBytes = intAttr(xml, "keyData", "keyBits") / 8
@@ -290,7 +280,7 @@ object OoxmlCrypt {
         throw new ParseFailure("offcrypto: agile package failed integrity check")
     }
 
-    val plainLen = u32(pkg, 0) | (u32(pkg, 4) << 32)
+    val plainLen = u64(pkg, 0)
     if (plainLen < 0 || plainLen > pkg.length - 8L)
       throw new ParseFailure("offcrypto: declared package size past ciphertext")
     val out = new java.io.ByteArrayOutputStream()

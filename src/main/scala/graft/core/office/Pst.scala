@@ -2,7 +2,8 @@ package graft.core.office
 
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
-import graft.core.ParseFailure
+import graft.core.{Bin, ParseFailure}
+import graft.core.Bin.{slice, u8, u16, u32, u64}
 
 /** Outlook PST/OST mailbox parsing, from scratch on the published MS-PST
   * specification — the reference's signature parser
@@ -150,13 +151,6 @@ object Pst {
     bytes.length >= HeaderSize && bytes(0) == '!' && bytes(1) == 'B' &&
       bytes(2) == 'D' && bytes(3) == 'N'
 
-  // bounds-checked little-endian readers shared with the other OLE-family
-  // parsers (out-of-range reads throw ParseFailure, never AIOOBE — the
-  // classified-never-a-task-failure contract)
-  private def u16(b: Array[Byte], off: Int): Int = Biff.u16(b, off)
-  private def u32(b: Array[Byte], off: Int): Long = Biff.u32(b, off)
-  private def u64(b: Array[Byte], off: Int): Long =
-    Biff.u32(b, off) | (Biff.u32(b, off + 4) << 32)
   private def putU16(b: Array[Byte], off: Int, v: Int): Unit = {
     b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
   }
@@ -255,38 +249,6 @@ object Pst {
     data.length >= 2 && (data(0) & 0x0f) == 8 &&
       (((data(0) & 0xff) << 8 | (data(1) & 0xff)) % 31) == 0
 
-  /** Bounded zlib inflation for 4K-OST internal compression: output
-    * capped (zip-bomb guard — a leaf's logical payload can never exceed
-    * the block format's own ceiling anyway), failure classified with the
-    * truncation reason the attachment stub surfaces.
-    */
-  private[office] def inflateCapped(data: Array[Byte], cap: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.min(data.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch { case _: java.util.zip.DataFormatException =>
-            throw new ParseFailure("ost: zlib leaf block failed to inflate (truncated data)") }
-        // n == 0 without progress covers ALL stall states: truncated
-        // input, preset-dictionary demands (FDICT — inflate() returns 0
-        // with needsDictionary(), which would otherwise spin forever on
-        // a crafted leaf), and any other non-finished zero-byte state
-        if (n == 0 && !inf.finished())
-          throw new ParseFailure(
-            if (inf.needsDictionary()) "ost: zlib leaf demands a preset dictionary (unsupported)"
-            else "ost: zlib leaf block ends mid-stream (truncated data)")
-        out.write(buf, 0, n)
-        if (out.size() > cap)
-          throw new ParseFailure(s"ost: inflated leaf exceeds cap $cap")
-      }
-      out.toByteArray
-    } finally inf.end()
-  }
-
   /** Writer-side deflate (zlib-wrapped, max compression for determinism
     * across JDKs at these sizes).
     */
@@ -354,7 +316,7 @@ object Pst {
         throw new ParseFailure(s"block $bid payload CRC mismatch")
       if ((tBid & ~1L) != bid)
         throw new ParseFailure(s"block $bid trailer bid mismatch")
-      java.util.Arrays.copyOfRange(bytes, ib.toInt, ib.toInt + cb)
+      slice(bytes, ib, cb)
     }
 
     /** End-user data payload: crypt applies ONLY to leaf data blocks, and
@@ -374,7 +336,7 @@ object Pst {
         case 1 => permuteDecode(payload(bid))
         case c => throw cryptRefusal(c)
       }
-      if (fmt.ost4k && looksZlib(decoded)) inflateCapped(decoded, maxEntryBytes)
+      if (fmt.ost4k && looksZlib(decoded)) Bin.inflate(decoded, nowrap = false, maxEntryBytes)
       else decoded
     }
 
@@ -483,7 +445,7 @@ object Pst {
       if (ibFileEof != bytes.length)
         throw new ParseFailure(s"ibFileEof $ibFileEof disagrees with file length ${bytes.length}")
       // ANSI BREFs are {bid(4), ib(4)}: NBT at 184, BBT at 192
-      (bytes(461) & 0xff, u32(bytes, 188), u32(bytes, 196), AnsiFmt)
+      (u8(bytes, 461), u32(bytes, 188), u32(bytes, 196), AnsiFmt)
     } else {
       // the 4K-page OST header keeps the Unicode 564-byte layout — only
       // wVer and the page geometry differ
@@ -493,7 +455,7 @@ object Pst {
       val ibFileEof = u64(bytes, 184)
       if (ibFileEof != bytes.length)
         throw new ParseFailure(s"ibFileEof $ibFileEof disagrees with file length ${bytes.length}")
-      (bytes(513) & 0xff, u64(bytes, 224), u64(bytes, 240),
+      (u8(bytes, 513), u64(bytes, 224), u64(bytes, 240),
         if (wVer == 36) Ost4kFmt else UniFmt)
     }
   }
@@ -515,11 +477,11 @@ object Pst {
       val o = ib.toInt
       val m = o + fmt.pageMetaOff
       // 4K pages carry u16 entry counts (cbEnt/cLevel shift to +4/+5)
-      val cEnt = if (fmt.cEnt16) u16(bytes, m) else bytes(m) & 0xff
-      val cbEnt = bytes(m + (if (fmt.cEnt16) 4 else 2)) & 0xff
-      val cLevel = bytes(m + (if (fmt.cEnt16) 5 else 3)) & 0xff
+      val cEnt = if (fmt.cEnt16) u16(bytes, m) else u8(bytes, m)
+      val cbEnt = u8(bytes, m + (if (fmt.cEnt16) 4 else 2))
+      val cLevel = u8(bytes, m + (if (fmt.cEnt16) 5 else 3))
       val t = o + fmt.pageTrailerOff
-      if ((bytes(t) & 0xff) != ptype || (bytes(t + 1) & 0xff) != ptype)
+      if (u8(bytes, t) != ptype || u8(bytes, t + 1) != ptype)
         throw new ParseFailure(s"B-tree page trailer type != 0x${ptype.toHexString}")
       // ANSI trailer: wSig(2) bid(4) dwCRC(4); Unicode: wSig(2) dwCRC(4) bid(8)
       val (bid, crcStored) =
@@ -532,7 +494,7 @@ object Pst {
         throw new ParseFailure("B-tree page entry overflow")
       var i = 0
       while (i < cEnt) {
-        val e = java.util.Arrays.copyOfRange(bytes, o + i * cbEnt, o + (i + 1) * cbEnt)
+        val e = slice(bytes, o + i * cbEnt, cbEnt)
         // BTENTRY: btkey then BREF{bid, ib} — ib is the last field
         if (cLevel > 0) page(if (fmt.ansi) u32(e, 8) else u64(e, 16), depth + 1)
         else out += e
@@ -588,7 +550,7 @@ object Pst {
       val o0 = u16(b, pm + 4 + 2 * (idx - 1))
       val o1 = u16(b, pm + 4 + 2 * idx)
       if (o0 > o1 || o1 > pm) throw new ParseFailure("heap allocation outside heap")
-      java.util.Arrays.copyOfRange(b, o0, o1)
+      slice(b, o0, o1 - o0)
     }
   }
 
@@ -610,7 +572,7 @@ object Pst {
         val sz = cbKey + cbEnt
         if (sz == 0 || rec.length % sz != 0) throw new ParseFailure("BTH record array misaligned")
         var i = 0
-        while (i < rec.length) { out += java.util.Arrays.copyOfRange(rec, i, i + sz); i += sz }
+        while (i < rec.length) { out += slice(rec, i, sz); i += sz }
       } else {
         val sz = cbKey + 4
         if (rec.length % sz != 0) throw new ParseFailure("BTH index array misaligned")

@@ -30,7 +30,7 @@ import graft.core.ParseFailure
   */
 object Pub {
 
-  import Biff.u32 // shared bounds-checked little-endian read
+  import graft.core.Bin.{latin1, slice, u32}
 
   private val QuillPath = "Quill/QuillSub/CONTENTS"
   private val Magic = "CHNKINK ".getBytes(StandardCharsets.US_ASCII)
@@ -63,7 +63,7 @@ object Pub {
     while (i < Slots) {
       val off = IndexOff + i * SlotLen
       if (data(off) == 0x18 && data(off + 1) == 0) { // occupied slot
-        val bitType = new String(data, off + 10, 4, StandardCharsets.US_ASCII)
+        val bitType = latin1(data, off + 10, 4)
         val from = u32(data, off + 14)
         val len = u32(data, off + 18)
         if (from + len > data.length)
@@ -71,7 +71,7 @@ object Pub {
         if (bitType == "TEXT") {
           if (len % 2 != 0)
             throw new ParseFailure(s"pub: TEXT bit $i has odd byte length $len")
-          texts += new String(data, from.toInt, len.toInt, StandardCharsets.UTF_16LE)
+          texts += new String(slice(data, from, len), StandardCharsets.UTF_16LE)
         }
       }
       i += 1

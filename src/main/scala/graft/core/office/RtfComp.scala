@@ -30,7 +30,7 @@ import graft.core.ParseFailure
   */
 object RtfComp {
 
-  import Biff.u32 // shared bounds-checked little-endian read
+  import graft.core.Bin.{slice, u32}
 
   /** The spec's initial dictionary content, exactly 207 bytes. */
   private val Preload: Array[Byte] =
@@ -76,7 +76,7 @@ object RtfComp {
       case Mela =>
         if (16 + rawSize > end)
           throw new ParseFailure(s"rtfcomp: stored RAWSIZE $rawSize past COMPSIZE end")
-        java.util.Arrays.copyOfRange(data, 16, 16 + rawSize.toInt)
+        slice(data, 16, rawSize)
       case Lzfu =>
         if (crc(data, 16, end) != stored.toInt)
           throw new ParseFailure("rtfcomp: payload CRC mismatch")

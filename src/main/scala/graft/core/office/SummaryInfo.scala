@@ -1,7 +1,7 @@
 package graft.core.office
 
 import java.nio.charset.StandardCharsets
-import graft.core.ParseFailure
+import graft.core.{Bin, ParseFailure}
 
 /** OLE property sets ([MS-OLEPS]) — the `SummaryInformation` stream
   * legacy Office files carry their author/title/comments metadata in, and
@@ -30,11 +30,10 @@ object SummaryInfo {
     0xe0, 0x85, 0x9f, 0xf2, 0xf9, 0x4f, 0x68, 0x10,
     0xab, 0x91, 0x08, 0x00, 0x2b, 0x27, 0xb3, 0xd9).map(_.toByte)
 
-  private def u16(b: Array[Byte], o: Int): Int = Biff.u16(b, o)
-  private def u32(b: Array[Byte], o: Int): Int = {
-    val v = Biff.u32(b, o)
-    if (v > Int.MaxValue) throw new ParseFailure("property set field overflows")
-    v.toInt
+  /** A u32 field as an Int; a value past Int.MaxValue is malformed. */
+  private def int32(b: Array[Byte], o: Int): Int = {
+    val v = Bin.u32(b, o)
+    if (v > Int.MaxValue) throw new ParseFailure("property set field overflows") else v.toInt
   }
 
   /** Deterministic stream bytes for string properties (VT_LPSTR). */
@@ -90,9 +89,9 @@ object SummaryInfo {
 
   private def sectionStart(b: Array[Byte]): Int = {
     if (b.length < 48) throw new ParseFailure("property set stream truncated")
-    if (u16(b, 0) != 0xfffe) throw new ParseFailure("property set bad byte order mark")
-    if (u32(b, 24) < 1) throw new ParseFailure("property set has no sections")
-    val off = u32(b, 44)
+    if (Bin.u16(b, 0) != 0xfffe) throw new ParseFailure("property set bad byte order mark")
+    if (int32(b, 24) < 1) throw new ParseFailure("property set has no sections")
+    val off = int32(b, 44)
     if (off < 0 || off > b.length - 8) throw new ParseFailure("section offset out of range")
     off
   }
@@ -100,22 +99,22 @@ object SummaryInfo {
   /** The string properties (pid -> value) of the first section. */
   def parse(b: Array[Byte]): Map[Int, String] = {
     val so = sectionStart(b)
-    val cProps = u32(b, so + 4)
+    val cProps = int32(b, so + 4)
     if (cProps < 0 || cProps > 4096) throw new ParseFailure("implausible property count")
     (0 until cProps).flatMap { i =>
-      val pid = u32(b, so + 8 + 8 * i)
+      val pid = int32(b, so + 8 + 8 * i)
       val po = propOffset(b, so, i)
-      val vt = u32(b, po)
+      val vt = int32(b, po)
       if (vt == VtLpstr) {
-        val cch = u32(b, po + 4)
+        val cch = int32(b, po + 4)
         // subtraction form: po + 8 + cch overflows Int for a crafted cch
         if (cch < 0 || cch > b.length - po - 8) throw new ParseFailure("LPSTR past stream end")
-        val raw = java.util.Arrays.copyOfRange(b, po + 8, po + 8 + math.max(0, cch - 1))
+        val raw = Bin.slice(b, po + 8, math.max(0, cch - 1))
         Some(pid -> new String(raw, Biff.Cp1252))
       } else if (vt == VtLpwstr) {
-        val cch = u32(b, po + 4)
+        val cch = int32(b, po + 4)
         if (cch < 0 || cch > (b.length - po - 8) / 2) throw new ParseFailure("LPWSTR past stream end")
-        val raw = java.util.Arrays.copyOfRange(b, po + 8, po + 8 + 2 * math.max(0, cch - 1))
+        val raw = Bin.slice(b, po + 8, 2 * math.max(0, cch - 1))
         Some(pid -> new String(raw, StandardCharsets.UTF_16LE))
       } else None
     }.toMap
@@ -123,7 +122,7 @@ object SummaryInfo {
 
   /** Property i's value offset, validated in range (overflow-safe). */
   private def propOffset(b: Array[Byte], so: Int, i: Int): Int = {
-    val rel = u32(b, so + 12 + 8 * i)
+    val rel = int32(b, so + 12 + 8 * i)
     if (rel < 0 || rel > b.length - so - 8)
       throw new ParseFailure("property value offset out of range")
     so + rel
@@ -141,14 +140,14 @@ object SummaryInfo {
     // still advertised the dropped sections — refuse instead (real
     // SummaryInformation streams are single-section; DocumentSummary's
     // two-section shape is a different stream this cleaner never touches)
-    if (u32(b, 24) != 1)
+    if (int32(b, 24) != 1)
       throw new ParseFailure("multi-section property set: blank() supports exactly one section")
-    val cProps = u32(b, so + 4)
+    val cProps = int32(b, so + 4)
     if (cProps < 0 || cProps > 4096) throw new ParseFailure("implausible property count")
     val entries = (0 until cProps).map { i =>
-      val pid = u32(b, so + 8 + 8 * i)
+      val pid = int32(b, so + 8 + 8 * i)
       val po = propOffset(b, so, i)
-      val vt = u32(b, po)
+      val vt = int32(b, po)
       val valueBytes: Array[Byte] =
         if (ids.contains(pid) && vt == VtLpstr)
           Array[Byte](VtLpstr.toByte, 0, 0, 0, 1, 0, 0, 0, 0, 0, 0, 0) // "" + pad
@@ -158,10 +157,10 @@ object SummaryInfo {
           // raw-preserve: value runs to the next property offset (or the
           // section end) in stream order
           val ends = (0 until cProps).map(j => propOffset(b, so, j))
-            .filter(_ > po) :+ (so + u32(b, so))
+            .filter(_ > po) :+ (so + int32(b, so))
           val end = math.min(ends.min, b.length)
           if (end < po) throw new ParseFailure("property offsets out of order")
-          java.util.Arrays.copyOfRange(b, po, end)
+          Bin.slice(b, po, end - po)
         }
       (pid, valueBytes)
     }

@@ -26,7 +26,7 @@ object WordDoc {
 
   private val Cp1252: Charset = Biff.Cp1252
   private val Utf16Le: Charset = Biff.Utf16Le
-  import Biff.{u16, u32} // shared bounds-checked little-endian reads
+  import graft.core.Bin.{slice, u8, u16, u32}
 
   def isDoc(entries: Seq[(String, Option[Array[Byte]])]): Boolean =
     entries.exists(_._1 == "WordDocument")
@@ -58,11 +58,11 @@ object WordDoc {
     // Clx: skip Prc entries (clxt=1, cbGrpprl-prefixed), expect Pcdt (2)
     var i = fcClx.toInt
     val clxEnd = (fcClx + lcbClx).toInt
-    while (i < clxEnd && table(i) == 0x01) {
+    while (i < clxEnd && u8(table, i) == 0x01) {
       val cb = u16(table, i + 1)
       i += 3 + cb
     }
-    if (i >= clxEnd || table(i) != 0x02) throw new ParseFailure("doc: Pcdt marker missing in Clx")
+    if (i >= clxEnd || u8(table, i) != 0x02) throw new ParseFailure("doc: Pcdt marker missing in Clx")
     val lcb = u32(table, i + 1)
     val plc = i + 5
     if (plc + lcb > clxEnd + 0L) throw new ParseFailure("doc: PlcPcd past Clx end")
@@ -75,25 +75,13 @@ object WordDoc {
       val cpStart = u32(table, plc + 4 * k)
       val cpEnd = u32(table, plc + 4 * (k + 1))
       if (cpEnd < cpStart) throw new ParseFailure("doc: piece CPs not monotone")
-      // LONG length guarded BEFORE the Int narrowing: a crafted
-      // cpEnd-cpStart of 2^31 would wrap negative, slip past the bounds
-      // checks, and surface as the wrong exception type
-      val cpLenL = cpEnd - cpStart
-      if (cpLenL > word.length) throw new ParseFailure("doc: piece longer than stream")
-      val cpLen = cpLenL.toInt
+      val cpLen = cpEnd - cpStart
       val pcdOff = plc + 4 * (n + 1) + 8 * k
       val fcRaw = u32(table, pcdOff + 2)
-      val compressed = (fcRaw & 0x40000000L) != 0
+      val fc = fcRaw & 0x3fffffffL
       val piece =
-        if (compressed) {
-          val fc = ((fcRaw & 0x3fffffffL) / 2).toInt
-          if (fc + cpLenL > word.length) throw new ParseFailure("doc: cp1252 piece past stream end")
-          new String(word, fc, cpLen, Cp1252)
-        } else {
-          val fc = (fcRaw & 0x3fffffffL).toInt
-          if (fc + 2 * cpLenL > word.length) throw new ParseFailure("doc: utf16 piece past stream end")
-          new String(word, fc, 2 * cpLen, Utf16Le)
-        }
+        if ((fcRaw & 0x40000000L) != 0) new String(slice(word, fc / 2, cpLen), Cp1252)
+        else new String(slice(word, fc, 2 * cpLen), Utf16Le)
       sb.append(piece)
       k += 1
     }

@@ -1,6 +1,7 @@
 package graft.core.office
 
 import graft.core.{DecryptFailure, ParseFailure}
+import graft.core.Bin.{u8, u16, u32}
 
 /** WordPerfect documents (`.wpd` — the pre-Word era's word processor,
   * still alive in legal/government archives; Tika routes it via a
@@ -33,16 +34,6 @@ object Wpd {
     bytes.length >= 16 && (bytes(0) & 0xff) == 0xff &&
       bytes(1) == 'W' && bytes(2) == 'P' && bytes(3) == 'C'
 
-  private def u16(b: Array[Byte], off: Int): Int = {
-    if (off + 2 > b.length) throw new ParseFailure(s"wpd: u16 past end at $off")
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  }
-  private def u32(b: Array[Byte], off: Int): Long = {
-    if (off + 4 > b.length) throw new ParseFailure(s"wpd: u32 past end at $off")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  }
-
   def text(bytes: Array[Byte]): String = {
     if (!isWpd(bytes)) throw new ParseFailure("not a wordperfect document")
     val docStart = u32(bytes, 4)
@@ -53,22 +44,21 @@ object Wpd {
     val sb = new StringBuilder
     var p = docStart.toInt
     while (p < bytes.length) {
-      val b = bytes(p) & 0xff
+      val b = u8(bytes, p)
       if (b >= 0x20 && b <= 0x7e) { sb.append(b.toChar); p += 1 }
       else if (b == 0x0a) { sb.append('\n'); p += 1 }
       else if (b == 0x0d) { sb.append(' '); p += 1 }
       else if (b == 0xc0) {
-        if (p + 4 > bytes.length) throw new ParseFailure("wpd: extended char past end")
-        if ((bytes(p + 3) & 0xff) != 0xc0)
+        if (u8(bytes, p + 3) != 0xc0)
           throw new ParseFailure("wpd: extended char lacks closing mirror")
-        if (bytes(p + 2) == 0) sb.append((bytes(p + 1) & 0xff).toChar)
+        if (u8(bytes, p + 2) == 0) sb.append(u8(bytes, p + 1).toChar)
         p += 4
       } else if (b >= 0xd0) {
         // variable-length function: size spans code..closing mirror
         val size = u16(bytes, p + 2)
         if (size < 5 || p + size > bytes.length)
           throw new ParseFailure(s"wpd: variable function size $size out of range")
-        if ((bytes(p + size - 1) & 0xff) != b)
+        if (u8(bytes, p + size - 1) != b)
           throw new ParseFailure("wpd: variable function mirror mismatch")
         p += size
       } else p += 1 // single-byte functions / control bytes: skipped

@@ -42,7 +42,7 @@ import graft.core.{DecryptFailure, ParseFailure}
   * [[DecryptFailure]] — never a task failure.
   */
 object XlsCrypt {
-  import Biff.{u16, u32}
+  import graft.core.Bin.{slice, u16, u32}
 
   final val RecFilePass = 0x002f
   private final val RecBof = 0x0809
@@ -244,8 +244,7 @@ object XlsCrypt {
       val len = u16(book, off + 2)
       if (off + 4 + len > book.length)
         throw new ParseFailure(f"xls: record 0x$rt%04x past stream end")
-      if (rt == RecFilePass)
-        fpPayload = java.util.Arrays.copyOfRange(book, off + 4, off + 4 + len)
+      if (rt == RecFilePass) fpPayload = slice(book, off + 4, len)
       off += 4 + len
       seen += 1
     }

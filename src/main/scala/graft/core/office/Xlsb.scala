@@ -1,7 +1,8 @@
 package graft.core.office
 
 import java.nio.charset.StandardCharsets
-import graft.core.ParseFailure
+import graft.core.{Bin, ParseFailure}
+import graft.core.Bin.{slice, u32, u64}
 
 /** Binary Excel (`.xlsb`, [MS-XLSB] — the POI XSSFB surface Tika routes
   * through its package detector): an OOXML zip whose parts are BIFF12
@@ -33,10 +34,7 @@ object Xlsb {
   private final class Reader(b: Array[Byte]) {
     var pos = 0
     def hasMore: Boolean = pos < b.length
-    def u8(): Int = {
-      if (pos >= b.length) throw new ParseFailure("xlsb: record stream exhausted")
-      val v = b(pos) & 0xff; pos += 1; v
-    }
+    def u8(): Int = { val v = Bin.u8(b, pos); pos += 1; v }
     def recordId(): Int = {
       val a = u8()
       if ((a & 0x80) == 0) a else (a & 0x7f) | (u8() << 7)
@@ -51,16 +49,7 @@ object Xlsb {
       }
       throw new ParseFailure("xlsb: record length varint too long")
     }
-    def bytes(n: Int): Array[Byte] = {
-      if (n < 0 || pos + n > b.length) throw new ParseFailure("xlsb: record payload past end")
-      val out = java.util.Arrays.copyOfRange(b, pos, pos + n); pos += n; out
-    }
-  }
-
-  private def u32(b: Array[Byte], off: Int): Long = {
-    if (off < 0 || off + 4 > b.length) throw new ParseFailure("xlsb: u32 past record end")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+    def bytes(n: Int): Array[Byte] = { val out = slice(b, pos, n); pos += n; out }
   }
 
   /** XLWideString / RichStr text: cch u32 + UTF-16LE, at `off` (RichStr
@@ -68,9 +57,8 @@ object Xlsb {
     */
   private def wideString(b: Array[Byte], off: Int): String = {
     val cch = u32(b, off)
-    if (cch > (1 << 20) || off + 4 + cch * 2 > b.length)
-      throw new ParseFailure("xlsb: string length lies")
-    new String(b, off + 4, cch.toInt * 2, StandardCharsets.UTF_16LE)
+    if (cch > (1 << 20)) throw new ParseFailure("xlsb: string length lies")
+    new String(slice(b, off + 4, cch * 2), StandardCharsets.UTF_16LE)
   }
 
   /** RK-packed number rendered the way the sibling readers render cell
@@ -144,13 +132,10 @@ object Xlsb {
         case BrtCellRk =>
           row += ((u32(payload, 0), rkText(u32(payload, 8))))
         case BrtCellReal =>
-          if (payload.length < 16) throw new ParseFailure("xlsb: real cell too short")
-          val bits = u32(payload, 8) | (u32(payload, 12) << 32)
-          val d = java.lang.Double.longBitsToDouble(bits)
+          val d = java.lang.Double.longBitsToDouble(u64(payload, 8))
           row += ((u32(payload, 0), if (d == d.floor && math.abs(d) < 1e15) d.toLong.toString else d.toString))
         case BrtCellBool =>
-          if (payload.length < 9) throw new ParseFailure("xlsb: bool cell too short")
-          row += ((u32(payload, 0), if (payload(8) != 0) "TRUE" else "FALSE"))
+          row += ((u32(payload, 0), if (Bin.u8(payload, 8) != 0) "TRUE" else "FALSE"))
         case _ => // blanks, errors, formatting, begin/end markers: no text
       }
     }

@@ -25,9 +25,10 @@ object PdfMini {
 
   private final case class Chunk(y: Double, x: Double, text: String)
 
-  /** Zip-bomb guard: a Flate stream may not inflate past this (the
-    * reference's declared-size guard, `EmbedSpawner.java:393-402`, applied
-    * to the decode itself). 64 MB, matching Extract.Config.maxSpanChars.
+  /** Zip-bomb guard: a Flate stream (and an HWP body section) may not
+    * inflate past this (the reference's declared-size guard,
+    * `EmbedSpawner.java:393-402`, applied to the decode itself). 64 MB,
+    * matching Extract.Config.maxSpanChars.
     */
   val MaxInflatedBytes: Int = 64 << 20
 
@@ -35,24 +36,9 @@ object PdfMini {
     * the output would exceed [[MaxInflatedBytes]] (never throws — malformed
     * real-world input must degrade, not fail the task).
     */
-  def inflate(data: Array[Byte]): Option[Array[Byte]] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.min(data.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      var bad = false
-      while (!bad && !inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n > 0) out.write(buf, 0, n)
-        else if (inf.needsInput() || inf.needsDictionary()) bad = true // truncated / preset-dict
-        if (out.size() > MaxInflatedBytes) bad = true
-      }
-      if (bad) None else Some(out.toByteArray)
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.end()
-  }
+  def inflate(data: Array[Byte]): Option[Array[Byte]] =
+    try Some(graft.core.Bin.inflate(data, nowrap = false, MaxInflatedBytes))
+    catch { case _: graft.core.ParseFailure => None }
 
   /** ASCIIHexDecode (PDF 7.4.2): hex pairs, whitespace ignored, `>` ends
     * the stream, an odd trailing digit is padded with 0. None on any
@@ -620,6 +606,31 @@ object PdfMini {
     }
   }
 
+  private val DirectLength = """/Length\s+(\d+)(\s+\d+\s+R)?""".r
+
+  /** Where a stream's data ends: the end-of-line marker ahead of
+    * `endstream` (at `e`) is not data (ISO 32000 §7.3.8.1). The dict's
+    * `/Length`, when a direct integer that lands on that marker, decides
+    * (the data may itself end in a CR or LF); otherwise one trailing
+    * CRLF, LF or CR is dropped.
+    */
+  private def streamDataEnd(pdf: String, dict: String, payloadStart: Int, e: Int): Int = {
+    def eolAt(from: Int): Boolean = e - from match {
+      case 0 => true
+      case 1 => pdf.charAt(from) == '\n' || pdf.charAt(from) == '\r'
+      case 2 => pdf.startsWith("\r\n", from)
+      case _ => false
+    }
+    val trailing =
+      if (e - 2 >= payloadStart && pdf.startsWith("\r\n", e - 2)) 2
+      else if (e > payloadStart && (pdf.charAt(e - 1) == '\n' || pdf.charAt(e - 1) == '\r')) 1
+      else 0
+    DirectLength.findFirstMatchIn(dict).filter(_.group(2) == null)
+      .flatMap(_.group(1).toIntOption)
+      .filter(n => n <= e - payloadStart && eolAt(payloadStart + n))
+      .fold(e - trailing)(payloadStart + _)
+  }
+
   /** Embedded image XObjects (ISO 32000 §8.9.5) in document order, as
     * (fileName, fileBytes) the embed machinery spawns like any archive
     * entry — the reference's `embedded:imageN` children (Tika renders
@@ -651,7 +662,7 @@ object PdfMini {
             val n = objNumBefore(pdf, dictStart)
             n < 0 || lastByNum(n) == payloadStart
           }) {
-            val raw = pdf.substring(payloadStart, e)
+            val raw = pdf.substring(payloadStart, streamDataEnd(pdf, dict, payloadStart, e))
               .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
             val filters = filtersOf(dict)
             // abbreviated inline names (§7.4) accepted exactly like

@@ -583,7 +583,9 @@ object Extract {
     * hang under the root at level 1, ordinals running across the spans. A
     * document row's node comes from the routing pass's parse of the span;
     * the other rows, and spans the routing pass did not parse (oversized,
-    * past `maxSpans`, failure markers), parse here. An entry that is itself
+    * past `maxSpans`), parse here. A span the routing pass classified by
+    * its `ENCRYPTED:` marker is no container payload and spawns nothing,
+    * so both routes give the document the same status. An entry that is itself
     * a container becomes the same row's node (archives: id over its
     * canonical entries, [[Ids.canonicalEntries]]; parsed formats: id over
     * the raw bytes or their canonical content) whose own children recurse
@@ -601,8 +603,8 @@ object Extract {
     var i = 0
     while (i < sorted.length) {
       val s = sorted(i)
-      if (ContainerKinds(s.kind)) {
-        val content = if (s.text == null) "" else s.text
+      val content = if (s.text == null) "" else s.text
+      if (ContainerKinds(s.kind) && !content.startsWith(EncryptedMarker)) {
         ord =
           if (s.kind == "media") { sp.chain(content, sp.rootId, ord, 1); ord + 1 }
           else {

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import graft.core.ParseFailure
+import graft.core.Bin.{slice, u8, u16, u32}
 
 /** Microsoft Cabinet (`.cab`) archives per the published [MS-CAB] layout
   * (the installer/driver-package shape; Tika routes these through its
@@ -41,16 +42,6 @@ object Cab {
       // file can open with
       bytes(4) == 0 && bytes(5) == 0 && bytes(6) == 0 && bytes(7) == 0 &&
       bytes(24) == 3 && bytes(25) == 1
-
-  private def u16(b: Array[Byte], off: Int): Int = {
-    if (off < 0 || off + 2 > b.length) throw new ParseFailure(s"cab: u16 past end at $off")
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  }
-  private def u32(b: Array[Byte], off: Int): Long = {
-    if (off < 0 || off + 4 > b.length) throw new ParseFailure(s"cab: u32 past end at $off")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  }
 
   /** [MS-CAB] CSUMCompute: XOR of little-endian u32 words, the 1-3 byte
     * remainder folded high-to-low. CFDATA's csum covers cbData, cbUncomp,
@@ -100,18 +91,16 @@ object Cab {
     var totalUncomp = 0L
     val payloads = Vector.newBuilder[(Array[Byte], Int)]
     while (blk < f.nBlocks) {
-      val declaredSum = u32(bytes, p.toInt).toInt
-      val cbData = u16(bytes, p.toInt + 4)
-      val cbUncomp = u16(bytes, p.toInt + 6)
+      val declaredSum = u32(bytes, p).toInt
+      val cbData = u16(bytes, p + 4)
+      val cbUncomp = u16(bytes, p + 6)
       val payloadOff = p + 8 + cbReserveData
-      if (payloadOff < 0 || payloadOff + cbData > bytes.length)
-        throw new ParseFailure("cab: CFDATA payload past end")
       if (cbUncomp > MszipBlock)
         throw new ParseFailure(s"cab: CFDATA uncompressed size $cbUncomp exceeds the 32 KiB spec cap")
       totalUncomp += cbUncomp
       if (totalUncomp > maxOut)
         throw new ParseFailure("cab: folder output exceeds cap")
-      val payload = java.util.Arrays.copyOfRange(bytes, payloadOff.toInt, (payloadOff + cbData).toInt)
+      val payload = slice(bytes, payloadOff, cbData)
       if (declaredSum != 0) {
         val hdr = Array[Byte]((cbData & 0xff).toByte, ((cbData >> 8) & 0xff).toByte,
           (cbUncomp & 0xff).toByte, ((cbUncomp >> 8) & 0xff).toByte)
@@ -209,8 +198,8 @@ object Cab {
     var cbReserveData = 0
     if ((flags & 4) != 0) {
       val cbReserveHeader = u16(bytes, p)
-      cbReserveFolder = bytes(p + 2) & 0xff
-      cbReserveData = bytes(p + 3) & 0xff
+      cbReserveFolder = u8(bytes, p + 2)
+      cbReserveData = u8(bytes, p + 3)
       p += 4 + cbReserveHeader
     }
     def skipString(): Unit = {
@@ -260,7 +249,7 @@ object Cab {
       }
       if (ne >= bytes.length) throw new ParseFailure("cab: file name past end")
       val cs = if ((attribs & 0x80) != 0) StandardCharsets.UTF_8 else StandardCharsets.ISO_8859_1
-      val name = new String(bytes, nameStart, ne - nameStart, cs).replace('\\', '/')
+      val name = new String(slice(bytes, nameStart, ne - nameStart), cs).replace('\\', '/')
       q = ne + 1
 
       if (iFolder >= 0xfffd) out += ((name, None)) // continued across cabinets
@@ -268,10 +257,7 @@ object Cab {
       else if (cbFile > maxEntryBytes) out += ((name, None)) // declared-size guard before decode
       else stream(iFolder) match {
         case Left(_) => out += ((name, None))
-        case Right(s) =>
-          if (uoff < 0 || cbFile < 0 || uoff + cbFile > s.length)
-            throw new ParseFailure("cab: file slice past folder stream")
-          out += ((name, Some(java.util.Arrays.copyOfRange(s, uoff.toInt, (uoff + cbFile).toInt))))
+        case Right(s) => out += ((name, Some(slice(s, uoff, cbFile))))
       }
       i += 1
     }

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import graft.core.ParseFailure
+import graft.core.Bin.{latin1, slice, u8, u32, u64}
 import graft.core.compress.Lzx
 
 /** Microsoft Compiled HTML Help (`.chm`) — the ITSS container per the
@@ -32,21 +33,13 @@ object Chm {
     bytes.length >= 96 && bytes(0) == 'I' && bytes(1) == 'T' &&
       bytes(2) == 'S' && bytes(3) == 'F'
 
-  private def u32(b: Array[Byte], off: Int): Long = {
-    if (off < 0 || off + 4 > b.length) throw new ParseFailure(s"chm: u32 past end at $off")
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  }
-  private def u64(b: Array[Byte], off: Int): Long = u32(b, off) | (u32(b, off + 4) << 32)
-
   /** Big-endian 7-bit varint; returns (value, nextOffset). */
   private def encint(b: Array[Byte], off: Int): (Long, Int) = {
     var v = 0L
     var p = off
     var n = 0
     while (true) {
-      if (p >= b.length) throw new ParseFailure("chm: encint past end")
-      val c = b(p) & 0xff
+      val c = u8(b, p)
       v = (v << 7) | (c & 0x7f)
       p += 1
       n += 1
@@ -74,23 +67,23 @@ object Chm {
         dirLen > bytes.length || dirOff + dirLen > bytes.length)
       throw new ParseFailure("chm: directory section past file end or too small")
     val d = dirOff.toInt
-    if (bytes(d) != 'I' || bytes(d + 1) != 'T' || bytes(d + 2) != 'S' || bytes(d + 3) != 'P')
+    if (latin1(bytes, d, 4) != "ITSP")
       throw new ParseFailure("chm: ITSP signature missing")
     val chunkSize = u32(bytes, d + 0x10)
     val nChunks = u32(bytes, d + 0x28)
     if (chunkSize != 0x1000) throw new ParseFailure(s"chm: unexpected chunk size $chunkSize")
     if (nChunks < 1 || nChunks > 4096) throw new ParseFailure("chm: chunk count out of range")
-    val headerLen = u32(bytes, d + 8).toInt
+    val headerLen = u32(bytes, d + 8)
     val out = Vector.newBuilder[RawEntry]
     var c = 0
     while (c < nChunks) {
-      val base = d + headerLen + c * chunkSize.toInt
+      // in Long: a header length near 2^32 must not wrap the chunk base
+      val base = d + headerLen + c * chunkSize
       if (base + chunkSize > bytes.length) throw new ParseFailure("chm: chunk past end")
-      val tag = new String(bytes, base, 4, StandardCharsets.ISO_8859_1)
-      if (tag == "PMGL") {
+      if (latin1(bytes, base, 4) == "PMGL") {
         val quickRefLen = u32(bytes, base + 4)
-        var p = base + 0x14
-        val end = base + chunkSize.toInt - quickRefLen.toInt
+        var p = (base + 0x14).toInt
+        val end = (base + chunkSize - quickRefLen).toInt
         if (end < p || end > bytes.length) throw new ParseFailure("chm: quickref length lies")
         var guard = 0
         while (p < end) {
@@ -101,7 +94,7 @@ object Chm {
           else {
             if (nameLen > 4096 || p1 + nameLen > end)
               throw new ParseFailure("chm: entry name past chunk")
-            val name = new String(bytes, p1, nameLen.toInt, StandardCharsets.UTF_8)
+            val name = new String(slice(bytes, p1, nameLen), StandardCharsets.UTF_8)
             val (section, p2) = encint(bytes, p1 + nameLen.toInt)
             val (off, p3) = encint(bytes, p2)
             val (len, p4) = encint(bytes, p3)
@@ -134,22 +127,16 @@ object Chm {
     // directory would mis-slice every entry under the v2 fallback below.
     val headerLen = u32(bytes, 8)
     val contentOff =
-      (if (u32(bytes, 4) == 3 && headerLen >= 0x60) u64(bytes, 0x58)
-       else u64(bytes, 0x48) + u64(bytes, 0x50)).toInt
-    def sect0(off: Long, len: Long): Array[Byte] = {
-      val s = contentOff + off
-      if (off < 0 || off > bytes.length || len < 0 || len > bytes.length ||
-          s < 0 || s + len > bytes.length)
-        throw new ParseFailure("chm: section-0 read past end")
-      java.util.Arrays.copyOfRange(bytes, s.toInt, (s + len).toInt)
-    }
+      if (u32(bytes, 4) == 3 && headerLen >= 0x60) u64(bytes, 0x58)
+      else u64(bytes, 0x48) + u64(bytes, 0x50)
+    def sect0(off: Long, len: Long): Array[Byte] = slice(bytes, contentOff + off, len)
     def find(name: String): Option[RawEntry] = dir.find(_.name == name)
 
     // decode the compressed section lazily, once, if any entry needs it
     lazy val compressed: Array[Byte] = {
       val cd = find(ControlDataName).map(e => sect0(e.offset, e.length))
         .getOrElse(throw new ParseFailure("chm: compressed entry without ControlData"))
-      if (cd.length < 0x18 || new String(cd, 4, 4, StandardCharsets.ISO_8859_1) != "LZXC")
+      if (cd.length < 0x18 || latin1(cd, 4, 4) != "LZXC")
         throw new ParseFailure("chm: ControlData is not LZXC")
       val lzxcVer = u32(cd, 8)
       val mul = if (lzxcVer == 2) 0x8000L else 1L
@@ -185,9 +172,7 @@ object Chm {
           throw new ParseFailure("chm: reset segment offsets lie")
         val segOut = math.min(resetIntervalBytes, uncompressedLen - produced)
         if (segOut <= 0) throw new ParseFailure("chm: more reset segments than output")
-        val decoded = Lzx.decodeSegment(
-          java.util.Arrays.copyOfRange(content, cOff.toInt, cEnd.toInt),
-          windowBits, segOut.toInt)
+        val decoded = Lzx.decodeSegment(slice(content, cOff, cEnd - cOff), windowBits, segOut.toInt)
         System.arraycopy(decoded, 0, out, produced.toInt, segOut.toInt)
         produced += segOut
         seg += 1
@@ -202,13 +187,8 @@ object Chm {
         val path = e.name.stripPrefix("/")
         if (e.length > maxEntryBytes) (path, None)
         else if (e.section == 0L) (path, Some(sect0(e.offset, e.length)))
-        else if (e.section == 1L) {
-          if (e.offset < 0 || e.length < 0 || e.offset > compressed.length ||
-              e.length > compressed.length || e.offset + e.length > compressed.length)
-            throw new ParseFailure("chm: compressed entry past decoded section")
-          (path, Some(java.util.Arrays.copyOfRange(
-            compressed, e.offset.toInt, (e.offset + e.length).toInt)))
-        } else throw new ParseFailure(s"chm: unknown content section ${e.section}")
+        else if (e.section == 1L) (path, Some(slice(compressed, e.offset, e.length)))
+        else throw new ParseFailure(s"chm: unknown content section ${e.section}")
       }
   }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.core.ParseFailure
+import graft.core.Bin.{latin1, slice, u8, u16, u32}
 
 /** RAR archives, from scratch per the published rarlab technotes: the 4.x
   * block chain (CRC16'd headers, fixed file-header layout) and the 5.x
@@ -31,12 +32,6 @@ object Rar {
     c.getValue
   }
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  private def u32(b: Array[Byte], i: Int): Long =
-    (u16(b, i).toLong) | (u16(b, i + 2).toLong << 16)
-
   /** Decode entries; stored payloads verified against FILE_CRC, compressed
     * or over-cap entries refused as (name, None). Malformed framing throws
     * [[ParseFailure]].
@@ -57,7 +52,7 @@ object Rar {
     var done = false
     while (!done && i + 7 <= b.length) {
       val headCrc = u16(b, i)
-      val headType = b(i + 2) & 0xff
+      val headType = u8(b, i + 2)
       val flags = u16(b, i + 3)
       val headSize = u16(b, i + 5)
       if (headSize < 7 || i + headSize > b.length)
@@ -71,13 +66,12 @@ object Rar {
           val packSize = u32(b, i + 7)
           val unpSize = u32(b, i + 11)
           val fileCrc = u32(b, i + 16)
-          val method = b(i + 25) & 0xff
+          val method = u8(b, i + 25)
           val nameSize = u16(b, i + 26)
           if ((flags & 0x100) != 0) throw new ParseFailure("rar4 >4GB entries unsupported")
           if (32 + nameSize > headSize) throw new ParseFailure("rar4 name overruns header")
-          val rawName = new String(b, i + 32, nameSize,
-            java.nio.charset.StandardCharsets.ISO_8859_1)
-          val name = rawName.takeWhile(_ != '\u0000') // unicode-flag (0x200) names: ascii half
+          // unicode-flag (0x200) names: the ascii half
+          val name = latin1(b, i + 32, nameSize).takeWhile(_ != '\u0000')
           val dataAt = i + headSize
           if (dataAt + packSize > b.length) throw new ParseFailure("rar4 data overruns")
           n += 1
@@ -85,7 +79,7 @@ object Rar {
           else if (method != 0x30) out += ((name, None)) // compressed: refuse, keep walking
           else if (unpSize > maxEntryBytes || packSize != unpSize) out += ((name, None))
           else {
-            val data = java.util.Arrays.copyOfRange(b, dataAt, dataAt + packSize.toInt)
+            val data = slice(b, dataAt, packSize)
             if (crc32(data, 0, data.length) != fileCrc)
               throw new ParseFailure(s"rar4 file crc mismatch: $name")
             out += ((name, Some(data)))
@@ -111,7 +105,7 @@ object Rar {
     var shift = 0
     var i = at
     while (i < b.length && shift < 64) {
-      val c = b(i) & 0xff
+      val c = u8(b, i)
       v |= (c & 0x7fL) << shift
       i += 1
       if ((c & 0x80) == 0) return (v, i)
@@ -140,7 +134,9 @@ object Rar {
       var p = p2
       if ((hflags & 0x1) != 0) p = vint(b, p)._2 // extra area size
       val dataSize = if ((hflags & 0x2) != 0) { val (d, np) = vint(b, p); p = np; d } else 0L
-      if (hEnd + dataSize > b.length) throw new ParseFailure("rar5 data overruns")
+      // a 10-byte vint reaches the sign bit: a negative size would step the
+      // walk back onto a header it already read
+      if (dataSize < 0 || hEnd + dataSize > b.length) throw new ParseFailure("rar5 data overruns")
       htype match {
         case 2 => // file header
           val (fflags, q1) = vint(b, p)
@@ -152,15 +148,14 @@ object Rar {
           val (_, q4) = vint(b, q3) // host os
           val (nameLen, q5) = vint(b, q4)
           if (q5 + nameLen > hEnd) throw new ParseFailure("rar5 name overruns header")
-          val name = new String(b, q5, nameLen.toInt,
-            java.nio.charset.StandardCharsets.UTF_8)
+          val name = new String(slice(b, q5, nameLen), java.nio.charset.StandardCharsets.UTF_8)
           val method = ((compInfo >> 7) & 0x7).toInt
           n += 1
           if (n > maxEntries) out += ((name, None))
           else if (method != 0) out += ((name, None)) // compressed: refuse
           else if (unpSize > maxEntryBytes || dataSize != unpSize) out += ((name, None))
           else {
-            val data = java.util.Arrays.copyOfRange(b, hEnd, hEnd + dataSize.toInt)
+            val data = slice(b, hEnd, dataSize)
             if (dataCrc.exists(_ != crc32(data, 0, data.length)))
               throw new ParseFailure(s"rar5 file crc mismatch: $name")
             out += ((name, Some(data)))

@@ -10,6 +10,11 @@ import graft.core.ParseFailure
   * "classified, never a task failure" contract the job layer depends on:
   * an AIOOBE or NPE escaping one of these parsers fails a whole Spark
   * task instead of one document's lineage row.
+  *
+  * Junk after a magic rarely forms a header valid up to the field it
+  * breaks, so the reads behind that field seldom run here; the
+  * deterministic mutation sweep over each writer's well-formed output,
+  * [[BinarySweepSpec]], covers those.
   */
 object BinaryFuzzProps extends Properties("BinaryFuzz") {
 

@@ -43,6 +43,13 @@ class CabSpec extends AnyFunSuite {
     intercept[ParseFailure] { Cab.entries(bad, Int.MaxValue) }
     // truncation classifies too
     intercept[ParseFailure] { Cab.entries(cab.take(cab.length - 6), Int.MaxValue) }
+    // a 38-byte cabinet whose reserve flag points the reserve sizes past
+    // its end: classified at the root, and nested it fails only itself
+    val reserve = cab.take(38)
+    reserve(8) = 38; reserve(9) = 0; reserve(10) = 0; reserve(11) = 0 // cbCabinet
+    reserve(30) = 4 // flags: cfhdrRESERVE_PRESENT
+    intercept[ParseFailure] { Cab.entries(reserve, Int.MaxValue) }
+    BinarySweepSpec.assertFailsAlone("bad.cab", reserve)
   }
 
   test("LZX folders decode through the continuous-bitstream route") {

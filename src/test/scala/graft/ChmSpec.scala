@@ -167,6 +167,12 @@ class ChmSpec extends AnyFunSuite {
     intercept[ParseFailure] { Chm.entries(bad, Int.MaxValue) }
     // truncate mid-content
     intercept[ParseFailure] { Chm.entries(chm.take(chm.length - 4), Int.MaxValue) }
+    // a directory header length past 2^31 (byte 107, its top byte) puts
+    // the first listing chunk at a negative offset: classified at the
+    // root, and nested it fails only itself
+    val far = Chm.build(Seq(("a.txt", "x".getBytes(UTF_8)))); far(107) = 0xff.toByte
+    intercept[ParseFailure] { Chm.entries(far, Int.MaxValue) }
+    BinarySweepSpec.assertFailsAlone("bad.chm", far)
   }
 
   test("explodes through the container route, nested chm-in-zip recurses") {

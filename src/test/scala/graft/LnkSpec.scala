@@ -40,6 +40,12 @@ class LnkSpec extends AnyFunSuite {
     // string data declaring more chars than remain
     val b3 = Lnk.build("C:\\c.txt", name = "name").dropRight(4)
     intercept[ParseFailure] { Lnk.parse(b3) }
+    // a LocalBasePathOffset past 2^31 (byte 95, its top byte) points the
+    // base path before the file: classified at the root, and nested it
+    // fails only itself
+    val far = Lnk.build("C:\\d.txt"); far(95) = 0xff.toByte
+    intercept[ParseFailure] { Lnk.parse(far) }
+    BinarySweepSpec.assertFailsAlone("bad.lnk", far)
   }
 
   test("sniffs and routes; nested lnk-in-zip extracts as metadata text") {

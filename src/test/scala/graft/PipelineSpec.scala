@@ -254,11 +254,13 @@ class PipelineSpec extends AnyFunSuite {
       DocIn(5, Array(SpanIn("media", "MISSING:blobref", "", 0))),
       DocIn(6, Array(SpanIn("pdf", "UNREADABLE:truncated", "", 0))),
       // a good span before the failing one: the doc still fails as a whole
-      DocIn(7, Array(SpanIn("text", "ok", "", 0), SpanIn("html", "POISON:x", "", 1)))
+      DocIn(7, Array(SpanIn("text", "ok", "", 0), SpanIn("html", "POISON:x", "", 1))),
+      // a container span carrying the marker: classified, never parsed
+      DocIn(8, Array(SpanIn("zip", "ENCRYPTED:blob", "", 0)))
     ))
     val res = ExtractJob.extractPartitions(poisoned, ExtractJob.JobConfig()).collect()
     val lineages = res.flatMap(_._2)
-    assert(lineages.length == 7) // one lineage row per input doc
+    assert(lineages.length == 8) // one lineage row per input doc
     def st(id: Long) = lineages.find(_.doc_id == id).get.status
     assert(st(1) == Status.Success)
     assert(st(2) == Status.Success) // graceful empty, not a failure
@@ -267,6 +269,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(st(5) == Status.NotFound)
     assert(st(6) == Status.Unreadable)
     assert(st(7) == Status.NotParsed)
+    assert(st(8) == Status.NotDecrypted)
     // failed docs emit no doc rows
     val docIds = res.flatMap(_._1).map(_.doc_id).toSet
     assert((4L to 7L).forall(id => !docIds.contains(graft.core.Ids.rootId(id))))

@@ -75,5 +75,16 @@ class RarSpec extends AnyFunSuite {
       Array[Byte](0x52, 0x61, 0x72, 0x21, 0x1a, 0x07, 0x00), 1 << 20))
     val rar = Rar.buildRar4(files)
     intercept[graft.core.ParseFailure](Rar.entries(rar.take(20), 1 << 20))
+    // a rar5 service block whose data size is minus its own length: the
+    // 10-byte vint EF FF..FF 01 sets the sign bit, so an unchecked walk
+    // would step back onto this block forever
+    val header = Array[Byte](3, 2, 0xef.toByte) ++ Array.fill(8)(0xff.toByte) :+ 1.toByte
+    val framed = header.length.toByte +: header // type 3, data area, size -17
+    val crc = new java.util.zip.CRC32(); crc.update(framed)
+    val loop = java.nio.ByteBuffer.allocate(4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(crc.getValue.toInt).array() ++ framed
+    assert(loop.length == 17)
+    val rar5 = Rar.buildRar5(files)
+    intercept[graft.core.ParseFailure](Rar.entries(rar5.take(8) ++ loop ++ rar5.drop(8), 1 << 20))
   }
 }

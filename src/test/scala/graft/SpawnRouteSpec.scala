@@ -188,14 +188,14 @@ class SpawnRouteSpec extends AnyFunSuite {
 
   private val jpeg = Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte) ++ b("jpeg body")
   private def pdf: Fixture = {
-    // one DCTDecode image XObject: its stream bytes (up to `endstream`, the
-    // EOL ahead of it included) are the JPEG child; one text stream
+    // one DCTDecode image XObject: its stream bytes (up to the EOL ahead of
+    // `endstream`, which is not data) are the JPEG child; one text stream
     val pdf = "%PDF-1.4\n1 0 obj\n<< /Type /XObject /Subtype /Image /Width 1 /Height 1 " +
       s"/BitsPerComponent 8 /Filter /DCTDecode /Length ${jpeg.length} >>\nstream\n" +
       latin1(jpeg) + "\nendstream\nendobj\n2 0 obj\n<< /Length 26 >>\nstream\n" +
       "BT (pdf page words) Tj ET\nendstream\nendobj\ntrailer\n<< >>\n%%EOF\n"
     Fixture("pdf_bytes", "pdf_bytes", "page.pdf", pdf.getBytes(ISO_8859_1), pdf,
-      Seq(T("image0.jpg", latin1(jpeg) + "\n")))
+      Seq(T("image0.jpg", latin1(jpeg))))
   }
 
   // nested, chain bytes are one plain text leaf
@@ -308,7 +308,30 @@ class SpawnRouteSpec extends AnyFunSuite {
     val node = nested(1)
     assert(node.spans.map(s => (s.kind, s.text)).toSeq == Seq(("pdf_bytes", "pdf page words")))
     assert(nested.drop(2).map(d => (d.doc_id, d.level)) ==
-      Seq((Ids.embedId(latin1(jpeg) + "\n", node.doc_id, 0, resourceName = "image0.jpg"), 2)))
+      Seq((Ids.embedId(latin1(jpeg), node.doc_id, 0, resourceName = "image0.jpg"), 2)))
+  }
+
+  test("an image stream's data ends before the end-of-line marker ahead of endstream") {
+    def image(length: String, data: String, eol: String): String = {
+      val pdf = "%PDF-1.4\n1 0 obj\n<< /Subtype /Image /Filter /DCTDecode" + length +
+        " >>\nstream\r\n" + data + eol + "endstream\nendobj\n"
+      val imgs = graft.core.pdf.PdfMini.imageXObjects(pdf)
+      assert(imgs.map(_._1) == Seq("image0.jpg"))
+      latin1(imgs.head._2)
+    }
+    val jpg = latin1(jpeg)
+    val direct = s" /Length ${jpeg.length}"
+    for (eol <- Seq("\r\n", "\n", "\r", ""); length <- Seq(direct, " /Length 9 0 R", ""))
+      assert(image(length, jpg, eol) == jpg, (length, eol))
+    // data that itself ends in CR or LF: a direct /Length on the marker keeps
+    // it, and without one only the marker goes
+    assert(image(s" /Length ${jpeg.length + 1}", jpg + "\r", "\n") == jpg + "\r")
+    assert(image(s" /Length ${jpeg.length + 1}", jpg + "\n", "\r\n") == jpg + "\n")
+    assert(image(" /Length 9 0 R", jpg + "\n", "\r\n") == jpg + "\n")
+    assert(image("", jpg + "\r", "\r\n") == jpg + "\r")
+    // a /Length that does not land on the marker is not trusted
+    assert(image(" /Length 3", jpg, "\r\n") == jpg)
+    assert(image(s" /Length ${Int.MaxValue}", jpg, "\n") == jpg)
   }
 
   test("media chains spawn at the root only: a nested chain:a>b entry is a plain text leaf") {

@@ -1,12 +1,13 @@
 package graft.core.office
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.ParseFailure
+import graft.core.{Bin, ParseFailure}
 
 /** Package-private surfaces of the 4K-OST internal-compression path:
-  * the zlib stall states that must CLASSIFY (a preset-dictionary demand
-  * would otherwise spin inflate() forever on a crafted leaf), and the
-  * sniff arithmetic.
+  * the zlib stall states of the capped inflate ([[Bin.inflate]], which
+  * every leaf goes through) that must CLASSIFY (a preset-dictionary
+  * demand would otherwise spin inflate() forever on a crafted leaf), and
+  * the sniff arithmetic.
   */
 class OstCryptSpec extends AnyFunSuite {
 
@@ -15,11 +16,11 @@ class OstCryptSpec extends AnyFunSuite {
     assert((0x7820 % 31) == 0)
     val fdict = Array[Byte](0x78, 0x20, 1, 2, 3, 4, 5) // dict id + "data"
     assert(Pst.looksZlib(fdict))
-    val e = intercept[ParseFailure](Pst.inflateCapped(fdict, 1 << 20))
+    val e = intercept[ParseFailure](Bin.inflate(fdict, nowrap = false, 1 << 20))
     assert(e.getMessage.contains("preset dictionary"))
     // truncated-but-valid-header stream still classifies as truncated
     val trunc = Array[Byte](0x78, 0x9c.toByte, 0x01) // header + 1 byte
-    intercept[ParseFailure](Pst.inflateCapped(trunc, 1 << 20))
+    intercept[ParseFailure](Bin.inflate(trunc, nowrap = false, 1 << 20))
     // and a real stream still round-trips under the cap
     val data = Array.tabulate[Byte](5000)(i => (i % 97).toByte)
     val d = new java.util.zip.Deflater()
@@ -28,7 +29,7 @@ class OstCryptSpec extends AnyFunSuite {
     val buf = new Array[Byte](4096)
     while (!d.finished()) out.write(buf, 0, d.deflate(buf))
     d.end()
-    assert(java.util.Arrays.equals(Pst.inflateCapped(out.toByteArray, 1 << 20), data))
-    intercept[ParseFailure](Pst.inflateCapped(out.toByteArray, 100)) // cap
+    assert(java.util.Arrays.equals(Bin.inflate(out.toByteArray, nowrap = false, 1 << 20), data))
+    intercept[ParseFailure](Bin.inflate(out.toByteArray, nowrap = false, 100)) // cap
   }
 }
