@@ -127,9 +127,11 @@ object SnapshotTable {
     throw new IllegalStateException(s"commit contention: $maxRetries retries exhausted")
   }
 
-  private def writeData(spark: SparkSession, table: String, df: DataFrame): String = {
+  private def writeData(spark: SparkSession, table: String, df: DataFrame,
+                        options: Map[String, String] = Map.empty): String = {
     val name = java.util.UUID.randomUUID.toString.take(8)
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir(table).resolve(name).toString)
+    df.write.mode(SaveMode.ErrorIfExists).options(options)
+      .parquet(dataDir(table).resolve(name).toString)
     name
   }
 
@@ -147,10 +149,12 @@ object SnapshotTable {
     * data dir is deleted and None returned, so an idle writer adds neither
     * a snapshot nor a dir that every later read must list. Emptiness comes
     * from the parquet footers of the files just written, on the driver —
-    * no Spark job.
+    * no Spark job. `options` are the parquet writer's (per-column
+    * encodings and the like); they do not change the rows.
     */
-  def appendNonEmpty(spark: SparkSession, table: String, df: DataFrame): Option[Long] = {
-    val name = writeData(spark, table, df)
+  def appendNonEmpty(spark: SparkSession, table: String, df: DataFrame,
+                     options: Map[String, String] = Map.empty): Option[Long] = {
+    val name = writeData(spark, table, df, options)
     val dir = dataDir(table).resolve(name)
     if (hasRows(spark, dir)) Some(reclaimOnFailure(table, name)(commit(table, dirs => dirs :+ name)))
     else { deleteRecursively(dir); None }

@@ -45,7 +45,9 @@ object GraftFunctions {
     unary("graft_code32", classOf[Code32], Code32),
     unary("graft_simhash32", classOf[Simhash32], Simhash32),
     unary("graft_fingerprint", classOf[Fingerprint], Fingerprint),
-    unary("graft_nfc", classOf[Nfc], Nfc))
+    unary("graft_nfc", classOf[Nfc], Nfc),
+    (FunctionIdentifier("graft_min_ids"),
+      new ExpressionInfo(classOf[BoundedMinIds].getName, "graft_min_ids"), BoundedMinIds.build))
 
   /** Registers every native function on `spark`'s session (idempotent). */
   def ensureRegistered(spark: SparkSession): Unit =

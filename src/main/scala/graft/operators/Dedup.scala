@@ -19,9 +19,10 @@ import graft.core.{HashParams, Ids, JobTags}
   *  - exact dedup is a single hash-shuffle on the content hash — the hash is
   *    computed BEFORE the shuffle so only (hash, id) moves, never the text;
   *  - MinHash+LSH shuffles (48-byte signature key, doc_id) rows, then
-  *    (bucket_key, representative id) rows only: candidate generation is
-  *    a self-equi-join on the bucket key, which AQE skew-splits if a
-  *    bucket is hot;
+  *    (bucket_key, representative id) rows only: each band bucket's capped
+  *    representative array yields its candidate pairs in a map, with no
+  *    join on the bucket key, so a hot bucket costs at most C(cap,2) pairs
+  *    and never a skewed join partition;
   *  - SimHash emits one 64-bit signature per doc (map-only), pairs via a
   *    banded equi-join, never an all-pairs product;
   *  - n-gram Jaccard is the only quadratic-ish op and is gated on an
@@ -136,26 +137,30 @@ object Dedup {
     * and retry-stable) are dropped and observable via [[hotBuckets]],
     * never silently.
     *
-    * Round-6 shape (guide §2.3/§2.4 — shuffle fewer bytes, dedup before
-    * the quadratic stage): documents collapse to DISTINCT signatures
-    * before banding. Exact signature duplicates — the dominant web-corpus
-    * case — previously entered every one of the nBands band buckets and
-    * generated the same member-quadratic pair set nBands times, all of it
-    * shuffled through the bucket join and then discarded by `distinct()`.
-    * Now one representative (min doc_id) per distinct signature is banded
-    * and bucket-joined (pair volume O(distinct sigs^2) per bucket), rep
-    * pairs are deduplicated at rep level (each doc pair derives from
+    * Shape (shuffle fewer bytes, dedup before the quadratic stage):
+    * documents collapse to DISTINCT signatures before banding. Exact
+    * signature duplicates — the dominant web-corpus case — would otherwise
+    * enter every one of the nBands band buckets and generate the same
+    * member-quadratic pair set nBands times. One representative (min
+    * doc_id) per distinct signature is banded, and each band bucket's
+    * capped, ascending representative array yields its own rep pairs in a
+    * typed `flatMap` — no join on the bucket key; one `distinct` removes
+    * the rep pairs that several buckets share (each doc pair derives from
     * exactly one rep pair, so the member expansion needs NO quadratic
-    * distinct), and within-group pairs expand directly from the bounded
-    * membership array. The emitted pair SET in the uncapped regime is
-    * IDENTICAL to the member-level banding (oracle-checked).
+    * distinct). Within-group pairs stream from each group's ascending
+    * `kept` array the same way: no pair array is built as a row value, so
+    * an at-cap group never holds its C(cap,2) pairs at once. The member
+    * expansion left-joins the rep pairs to the groups with at least 2 kept
+    * members only; a singleton group's member is its rep. The emitted
+    * pair SET in the uncapped regime is IDENTICAL to the member-level
+    * banding (oracle-checked).
     *
-    * The cap (still the [[graft.functions.BoundedMinIds]] bounded-heap
-    * aggregate — no Window, no full-bucket sort on one task) now binds at
-    * two places: members per signature group (bounding the within-group
+    * The cap (the [[graft.functions.BoundedMinIds]] bounded-heap
+    * aggregate — no Window, no full-bucket sort on one task) binds at two
+    * places: members per signature group (bounding the within-group
     * expansion at C(cap,2)) and representatives per band bucket (bounding
-    * the bucket join). When no group and no bucket reaches the cap this
-    * is exactly the old per-bucket-members semantics.
+    * the bucket's rep pairs at C(cap,2)). When no group and no bucket
+    * reaches the cap this is exactly the per-bucket-members semantics.
     *
     * The corpus is read and signed ONCE per call: the signature groups are
     * one aggregate keyed by the exact 48-byte [[sigKey]], materialized by
@@ -169,31 +174,32 @@ object Dedup {
     */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
                    bucketCap: Int = 10000): DataFrame = {
+    import spark.implicits._
     val groups = signatureGroups(spark, docs, bucketCap).localCheckpoint(false)
-    // within-group pairs: all pairs among the (ascending) kept members
-    val within = groups.filter(size(col("kept")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(kept, (x, i) -> " +
-          "transform(slice(kept, i + 2, size(kept) - i - 1), " +
-          "y -> struct(x AS a, y AS b))))")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+    val multi = groups.filter(size(col("kept")) >= 2)
+    val within = multi.select("kept").as[Array[Long]].flatMap(ascendingPairs).toDF("a", "b")
     // cross-group candidates at REPRESENTATIVE level only
-    val capped = groups.select(col("rep"), explode(col("bands")).as("bucket"))
+    val repPairs = groups.select(col("rep"), explode(col("bands")).as("bucket"))
       .groupBy("bucket")
       .agg(graft.functions.BoundedMinIds.minIds(bucketCap)(col("rep")).as("reps"))
-      .select(col("bucket"), explode(col("reps")).as("rep"))
-    val repPairs = capped.as("l").join(capped.as("r"),
-        col("l.bucket") === col("r.bucket") && col("l.rep") < col("r.rep"))
-      .select(col("l.rep").as("ra"), col("r.rep").as("rb"))
+      .select("reps").as[Array[Long]]
+      .flatMap(ascendingPairs).toDF("ra", "rb")
       .distinct()
-    val members = groups.select(col("rep"), explode(col("kept")).as("m"))
+    val members = multi.select(col("rep"), explode(col("kept")).as("m"))
     val cross = repPairs
-      .join(members.select(col("rep").as("ra"), col("m").as("ma")), "ra")
-      .join(members.select(col("rep").as("rb"), col("m").as("mb")), "rb")
-      .select(least(col("ma"), col("mb")).as("a"),
-        greatest(col("ma"), col("mb")).as("b"))
+      .join(members.select(col("rep").as("ra"), col("m").as("ma")), Seq("ra"), "left")
+      .join(members.select(col("rep").as("rb"), col("m").as("mb")), Seq("rb"), "left")
+      .select(coalesce(col("ma"), col("ra")).as("ma"), coalesce(col("mb"), col("rb")).as("mb"))
+      .select(least(col("ma"), col("mb")).as("a"), greatest(col("ma"), col("mb")).as("b"))
     within.unionByName(cross)
   }
+
+  /** Every pair (xs(i), xs(j)), i < j, of an ascending array, in order —
+    * produced one at a time, never held as a collection.
+    */
+  private def ascendingPairs(xs: Array[Long]): Iterator[(Long, Long)] =
+    Iterator.range(0, xs.length).flatMap(i =>
+      Iterator.range(i + 1, xs.length).map(j => (xs(i), xs(j))))
 
   /** The distinct signatures of `docs`, the unit [[minhashPairs]] caps
     * in: one row per signature with its min-id representative `rep`, its

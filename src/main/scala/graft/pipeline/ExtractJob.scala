@@ -206,6 +206,17 @@ object ExtractJob {
   //     parquet schema inference (which costs one Spark job per read); a
   //     test pins it against what Spark infers.
 
+  /** Parquet writer options of a `combined` data dir: no dictionary for
+    * the columns whose values are (nearly) all distinct — doc ids, span
+    * texts and each row's running partition rates. parquet-mr would build a
+    * dictionary for each, find it too large and fall back to PLAIN
+    * anyway; skipping it writes the same encodings, at less CPU.
+    */
+  private val WriteOptions: Map[String, String] =
+    Seq("doc.doc_id", "doc.spans.list.element.text", "lineage.doc_id",
+      "lineage.docs_per_sec", "lineage.bytes_per_sec")
+      .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
+
   /** Schema of a `combined` data dir: the `(Option[DocOut], Option[LineageRow])`
     * encoder with its fields named `doc` and `lineage`, all nullable as
     * parquet reads them back.
@@ -293,7 +304,7 @@ object ExtractJob {
       tag("extract")
       // a run that lands no rows (nothing pending) commits nothing
       val rows = extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
-      val version = SnapshotTable.appendNonEmpty(spark, tableOf(outDir), rows)
+      val version = SnapshotTable.appendNonEmpty(spark, tableOf(outDir), rows, WriteOptions)
         .orElse(SnapshotTable.currentVersion(tableOf(outDir)))
       version.fold((0L, 0L)) { v => tag("totals"); totals(readVersion(spark, outDir, v)) }
     }

@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.Levenshtein
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Flatten, Levenshtein}
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec, MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
@@ -75,6 +75,22 @@ class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(count(plans) { case _: FileSourceScanExec => 1 } == 1)
     assert(count(plans) { case _: MapElementsExec => 1 } == 1)
     assert(count(plans) { case _: SortAggregateExec => 1 } == 0)
+    // the pairs stream from the capped arrays: the only joins are the two
+    // of the member expansion, none keyed on the bucket, and no pair array
+    // is built with flatten/transform
+    val joins = plans.flatMap(p => collect(p) { case j: BaseJoinExec => j })
+    assert(joins.size == 2, plans.mkString("\n"))
+    assert(joins.flatMap(j => (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))).toSet ==
+      Set("ra", "rb"), joins)
+    assert(count(plans) { case p => p.expressions.count(_.exists {
+      case _: Flatten | _: ArrayTransform => true
+      case _ => false
+    }) } == 0)
+  }
+
+  test("an at-cap group of 2,000 members yields its 1,999,000 within-group pairs") {
+    val docs = spark.range(2000).select(col("id").as("doc_id"), lit("the same template text here").as("text"))
+    assert(Dedup.minhashPairs(spark, docs, 2000).count() == 2000L * 1999 / 2)
   }
 
   /** Plain two-row Levenshtein over code points (Spark's character unit). */

@@ -132,6 +132,44 @@ class PipelineSpec extends AnyFunSuite {
     assert(SnapshotTable.snapshots(table) == Seq(1L, 2L, 3L) && dataDirs(out) == after)
   }
 
+  /** Column path -> the encodings of its chunks, over every parquet file
+    * of the data dirs of `table`'s current snapshot.
+    */
+  private def encodings(table: String): Map[String, Set[String]] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = SnapshotTable.dataDirs(table, SnapshotTable.currentVersion(table).get)
+      .flatMap(d => new java.io.File(d).listFiles().filter(_.getName.endsWith(".parquet")))
+    val chunks = files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq finally r.close()
+    }
+    chunks.groupBy(_.getPath.toDotString).map { case (p, cs) =>
+      p -> cs.flatMap(_.getEncodings.asScala.map(_.name)).toSet }
+  }
+
+  test("the write skips the dictionary of its near-unique columns only; the views read the same rows") {
+    val out = tmpDir()
+    ExtractJob.run(spark, corpus(30), None, out)
+    // the same rows, written again with the writer's default options
+    val plain = tmpDir()
+    SnapshotTable.appendNonEmpty(spark, s"$plain/combined", ExtractJob.readCombined(spark, out).get)
+    val dict = (e: Set[String]) => e.exists(_.endsWith("_DICTIONARY"))
+    val (got, default) = (encodings(s"$out/combined"), encodings(s"$plain/combined"))
+    val skipped = Seq("doc.doc_id", "doc.spans.list.element.text", "lineage.doc_id",
+      "lineage.docs_per_sec", "lineage.bytes_per_sec")
+    val kept = Seq("doc.root_id", "lineage.status", "doc.spans.list.element.kind")
+    // the default writer keeps a dictionary wherever it pays off
+    assert(kept.forall(c => dict(default(c))) && skipped.exists(c => dict(default(c))), default)
+    assert(skipped.forall(c => !dict(got(c))), got)
+    assert(kept.forall(c => dict(got(c))), got)
+    def rows(df: Option[org.apache.spark.sql.DataFrame]) = df.get.collect().map(_.toString).sorted.toSeq
+    assert(rows(ExtractJob.readExtracted(spark, out)) == rows(ExtractJob.readExtracted(spark, plain)))
+    assert(rows(ExtractJob.readLineage(spark, out)) == rows(ExtractJob.readLineage(spark, plain)))
+  }
+
   test("run's totals equal the view counts, orphans and recurring docs included") {
     import spark.implicits._
     val out = tmpDir()

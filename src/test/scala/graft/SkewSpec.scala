@@ -106,6 +106,60 @@ class SkewSpec extends AnyFunSuite {
     assert(got.count { case (a, b) => a < 12 && b < 12 } === 12 * 11 / 2)
   }
 
+  /** The documented cap semantics of `minhashPairs`, in memory: each
+    * signature group keeps its `cap` lowest ids, each band bucket its `cap`
+    * lowest representatives (a group's min id), and a rep pair sharing a
+    * bucket expands to every pair of the two groups' kept members.
+    */
+  private def cappedPairs(rows: Seq[(Long, String)], cap: Int): Set[(Long, Long)] = {
+    import graft.operators.Dedup
+    val groups = rows.groupBy { case (_, t) => Dedup.minhashSig(t).toSeq }
+      .map { case (sig, rs) => sig -> rs.map(_._1).sorted }
+    val kept = groups.values.map(ids => ids.head -> ids.take(cap)).toMap
+    def pairs(xs: Seq[Long]) = for (i <- xs.indices; j <- (i + 1) until xs.length) yield (xs(i), xs(j))
+    val within = kept.values.flatMap(pairs)
+    val repPairs = groups.toSeq
+      .flatMap { case (sig, ids) => Dedup.bandKeys(sig.toArray).map(_ -> ids.head) }
+      .groupBy(_._1).values
+      .flatMap(reps => pairs(reps.map(_._2).sorted.take(cap)))
+      .toSet
+    val cross = repPairs.flatMap { case (ra, rb) =>
+      for (a <- kept(ra); b <- kept(rb)) yield (math.min(a, b), math.max(a, b))
+    }
+    within.toSet ++ cross
+  }
+
+  test("minhashPairs at and past the caps equals the in-memory cap semantics") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // band neighbours: the base text and the one-word variants sharing its
+    // most shared band bucket
+    val base = "alpha beta gamma delta epsilon zeta eta theta"
+    val variants = Seq("upsilon", "phi", "chi", "psi", "omega", "iota", "kappa", "lambda", "mu", "nu")
+      .map(w => s"$base $w")
+    val bucketOf = (t: String) => Dedup.bandKeys(Dedup.minhashSig(t)).toSet
+    val hot = bucketOf(base).maxBy(k => variants.count(v => bucketOf(v)(k)))
+    val neighbours = base +: variants.filter(v => bucketOf(v)(hot)).take(3)
+    assert(neighbours.size == 4 && neighbours.map(Dedup.minhashSig(_).toSeq).distinct.size == 4,
+      "fixture: four distinct signatures sharing one band bucket")
+    // four exact-dup groups of 20, 25, 25 and 30 members, their ids
+    // scrambled so the lowest ids are a real selection; then near-dups of
+    // another text, and uniques
+    val dupTexts = neighbours.zip(Seq(20, 25, 25, 30)).flatMap { case (t, n) => Seq.fill(n)(t) }
+    val near = (0 until 12).map(i => s"one two three four five six seven w${i % 4}")
+    val uniques = (0 until 20).map(i => s"unique text number $i with words w${i * 7} x${i * 13}")
+    val texts = dupTexts ++ near ++ uniques
+    val rows = texts.indices.map(i => ((i * 37L) % 1009L, texts(i)))
+    assert(rows.map(_._1).distinct.size == rows.size)
+    val docs = rows.toDF("doc_id", "text")
+    for (cap <- Seq(1, 2, 3, 20, 10000)) {
+      val got = (if (cap == 10000) Dedup.minhashPairs(spark, docs) else Dedup.minhashPairs(spark, docs, cap))
+        .as[(Long, Long)].collect()
+      assert(got.length == got.toSet.size, s"cap $cap: duplicate pair rows")
+      assert(got.toSet == cappedPairs(rows, cap), s"cap $cap")
+    }
+  }
+
   test("bounded-heap cap == row_number cap semantics, with NO window sort in the plan") {
     import spark.implicits._
     // adversarial: one hot group (7) with 50k members, plus sparse groups
