@@ -2183,7 +2183,7 @@ object Queries {
   }
 
   /** SimHash via the native codegen'd expression (Scala twin:
-    * Dedup.simhash / TextStats.simhash32).
+    * TextStats.simhash32).
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)

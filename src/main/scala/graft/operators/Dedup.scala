@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.core.{HashParams, Ids, JobTags}
 
 /** Deduplication operators for the training-data pipeline.
@@ -32,8 +33,8 @@ import graft.core.{HashParams, Ids, JobTags}
   *    map-only pass, with no explode, join or aggregate; its hot set comes
   *    from per-task bucket counters (summed in a tree on the executors when
   *    the tasks are many) and an exact recount of the passing buckets'
-  *    shingles, with a shuffle of every distinct shingle only when that
-  *    recount would send the driver more than its budget.
+  *    shingles, which [[hotShingles]] reads too; past its driver budget
+  *    the recount shuffles only the shingles of those buckets.
   */
 object Dedup {
 
@@ -308,18 +309,11 @@ object Dedup {
       .withColumn("n_kept", least(col("n_members"), cap))
   }
 
-  /** SimHash signatures (map-only; one row per doc). */
-  def simhash(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select("doc_id", "text").as[(Long, String)]
-      .map { case (id, t) => (id, graft.core.text.TextStats.simhash32(t)) }
-      .toDF("doc_id", "simhash")
-  }
-
   /** Calls `f(start, end)` for each 2-word shingle of `t`, in order: the
     * words are the `string_split(t, ' ')` pieces (`t.split(" ", -1)`), and
     * shingle i, `w(i) + " " + w(i+1)`, is `t.substring(start, end)`. No
-    * string is built.
+    * string is built. A null `t` has no shingles, as `string_split(NULL)`
+    * has no words.
     */
   private[graft] def foreachShingle(t: String)(f: (Int, Int) => Unit): Unit = {
     // starts of words j-1 and j while word j is scanned
@@ -327,7 +321,7 @@ object Dedup {
     var w1 = 0
     var j = 0
     var p = 0
-    while (p <= t.length) {
+    while (t != null && p <= t.length) {
       if (p == t.length || t.charAt(p) == ' ') { // the end of word j
         if (j >= 1) f(w0, p)
         w0 = w1; w1 = p + 1
@@ -361,7 +355,7 @@ object Dedup {
     * one ubiquitous shingle ("of the") would touch |probes_with_it| probes
     * for each of |docs_with_it| documents, near-cartesian at corpus scale.
     * Dropped shingles are REPORTED by [[hotShingles]] (no silent caps),
-    * which counts the same exact document frequencies.
+    * which reads them from the same hot pass.
     *
     * `probe` is a doc-level predicate over the columns of `docs` (the
     * default samples every 50th doc_id): it selects the probe documents
@@ -386,14 +380,16 @@ object Dedup {
     *    a shingle in it: it counts occurrences, and colliding shingles add
     *    up.
     *  - Recount (tagged `Dedup.ngramJaccard/hot`), only when some bucket
-    *    passes `dfCap`: one job over the text that counts the exact
-    *    per-document df of the shingles in the passing buckets, each task
-    *    sending the driver its (string, partial df) pairs. The hot set is
-    *    those whose df passes `dfCap`. When no bucket passes, no shingle
-    *    can, and the job is not run. The occurrences in the passing buckets
-    *    bound the pairs sent; past 2^18 of them (a low cap, or shingles hot
-    *    enough to fill their buckets) the hot set comes instead from the df
-    *    aggregate, a shuffle that hands the driver the hot set only.
+    *    passes `dfCap`: one job over the bucket count's rows (an input
+    *    shuffle is not run again), where each document yields its distinct
+    *    shingles of the passing buckets and each task sends the driver their
+    *    (string, partial df) pairs. The hot set is the shingles whose exact
+    *    df passes `dfCap`; no shingle can when no bucket does, and the job
+    *    is not run. The occurrences in the passing buckets bound the pairs
+    *    sent; past 2^18 of them (a low cap, or shingles hot enough to fill
+    *    their buckets) the same per-document shingles go through one
+    *    spillable `groupBy` count instead, a shuffle of at most that many
+    *    records, and the driver collects only the shingles past `dfCap`.
     *  - Corpus pass: the driver builds a [[ProbeTable]] from the probes'
     *    rare shingles ([[shingleSet]] minus the hot set): each shingle
     *    string maps to the indices of the probes holding it, so a match is
@@ -408,8 +404,8 @@ object Dedup {
     * probe rows and, in the recount, the strings of the passing buckets it
     * meets with their counts; the driver holds the summed counters and one
     * arriving array, the probe rows, and at most 2^18 recounted strings,
-    * or the hot set (at most occurrences / (dfCap + 1) strings) when the
-    * aggregate runs.
+    * or, past that budget, the hot set with its dfs only (at most
+    * occurrences / (dfCap + 1) strings).
     * A table is bounded by a byte budget (64 MB, an upper-bound estimate
     * per probe, hot set included). Past it, the probes are cut into
     * consecutive batches that each fit, with one corpus pass per batch,
@@ -431,8 +427,9 @@ object Dedup {
   private[graft] def ngramJaccard(spark: SparkSession, docs: DataFrame, dfCap: Long,
                                   probe: Column, tableBytes: Long, buckets: Int): DataFrame = {
     import spark.implicits._
-    val HotPass(hot, probes, _) = hotAndProbes(docs, dfCap, probe, buckets)
-    val profiles = probes.map { case (id, t) => (id, shingleSet(t).filterInPlace(!hot(_)).toArray) }
+    val pass = hotAndProbes(docs, dfCap, probe, buckets)
+    val hot = pass.hot
+    val profiles = pass.probes.map { case (id, t) => (id, shingleSet(t).filterInPlace(!hot(_)).toArray) }
     val corpus = docs.select("doc_id", "text").as[(Long, String)]
     probeBatches(profiles, hot.iterator.map(entryBytes).sum, tableBytes)
       .map { batch =>
@@ -447,9 +444,9 @@ object Dedup {
   /** The number of hot-pass counters of [[ngramJaccard]]. */
   private[graft] val HotBuckets = 1 << 16
 
-  /** The most occurrences the passing buckets may hold for the hot pass
-    * to recount them; they bound the (string, partial df) pairs the
-    * recount sends the driver. Past it the df aggregate gives the hot set.
+  /** The most occurrences the passing buckets may hold for the recount to
+    * send the driver its (string, partial df) pairs, which they bound.
+    * Past it the recount goes through one `groupBy` count.
     */
   private[graft] val RecountBudget = 1L << 18
 
@@ -458,49 +455,46 @@ object Dedup {
     */
   private[graft] val DriverArrays = 64
 
-  /** What the hot pass of [[ngramJaccard]] found: the shingles held by
-    * more than `dfCap` rows of `docs`, the (doc_id, text) rows where
-    * `probe` holds, in partition order, and the number of (string,
-    * partial df) pairs the recount sent the driver (0 when it did not run).
+  /** What the hot pass of [[ngramJaccard]] found: the exact df of each
+    * shingle held by more than `dfCap` rows of `docs`, the summed bucket
+    * counters, the (doc_id, text) rows where `probe` holds, in partition
+    * order, the (string, partial df) pairs the recount sent the driver (0
+    * if none), and the (doc_id, text, probe) input every recount reads.
     */
-  private[graft] final case class HotPass(hot: Set[String], probes: Array[(Long, String)], recounted: Long)
+  private[graft] final case class HotPass(dfs: Map[String, Long], counts: Array[Long],
+                                          probes: Array[(Long, String)], recounted: Long,
+                                          input: QueryExecution) {
+    def hot: Set[String] = dfs.keySet
+  }
 
-  /** The hot pass of [[ngramJaccard]] over `buckets` counters. The recount
-    * runs when the occurrences in the passing buckets, which bound the
-    * pairs it sends the driver, are at most `recountBudget`; past it the
-    * df aggregate runs. The bucket count hands the driver at most `fanIn`
-    * + 3 counter arrays (Spark's tree stops within 3 of its fan-in).
+  /** The hot pass of [[ngramJaccard]] over `buckets` counters: the bucket
+    * count, then the [[recount]] of the buckets past `dfCap` under
+    * `recountBudget`. The bucket count hands the driver at most `fanIn` + 3
+    * counter arrays (Spark's tree stops within 3 of its fan-in).
     */
   private[graft] def hotAndProbes(docs: DataFrame, dfCap: Long, probe: Column,
                                   buckets: Int = HotBuckets, recountBudget: Long = RecountBudget,
                                   fanIn: Int = DriverArrays): HotPass =
     JobTags.tagged(docs.sparkSession.sparkContext, "Dedup.ngramJaccard") { tag =>
       tag("hot")
-      val tally = sqlRun(docs.select(col("doc_id"), col("text"), coalesce(probe, lit(false)))) { rows =>
-        rows.mapPartitionsWithIndex { (i, it) =>
+      // a SQL execution, seen by query listeners; the recounts reuse its rows
+      val qe = docs.select(col("doc_id"), col("text"), coalesce(probe, lit(false))).queryExecution
+      val tally = SQLExecution.withNewExecutionId(qe, Some("runJob")) {
+        qe.toRdd.mapPartitionsWithIndex { (i, it) =>
           val c = new Array[Long](buckets)
           val ps = Array.newBuilder[(Long, String)]
           it.foreach { r =>
-            val t = r.getUTF8String(1).toString
+            val t = if (r.isNullAt(1)) null else r.getUTF8String(1).toString
             foreachShingle(t)((s, e) => c(bucket(t, s, e, buckets)) += 1)
             if (r.getBoolean(2)) ps += ((r.getLong(0), t))
           }
           Iterator(Tally(c, List(i -> ps.result())))
-        }.treeAggregate(Tally(null, Nil))(_ + _, _ + _, treeDepth(rows.getNumPartitions, fanIn))
+        }.treeAggregate(Tally(null, Nil))(_ + _, _ + _, treeDepth(qe.toRdd.getNumPartitions, fanIn))
       }
       val probes = tally.probes.sortBy(_._1).iterator.flatMap(_._2).toArray
       val counts = Option(tally.counts).getOrElse(new Array[Long](buckets))
-      val candidates = counts.iterator.filter(_ > dfCap).sum
-      if (candidates == 0) HotPass(Set.empty, probes, 0)
-      else if (candidates <= recountBudget) {
-        val (hot, recounted) = recount(docs, counts.map(_ > dfCap), dfCap)
-        HotPass(hot, probes, recounted)
-      } else {
-        import docs.sparkSession.implicits._
-        val hot = shingleDf(docs.sparkSession, docs).filter(col("df") > dfCap).select("shingle").as[String]
-          .collect().toSet
-        HotPass(hot, probes, 0)
-      }
+      val (dfs, recounted) = recount(qe, counts, dfCap, recountBudget)
+      HotPass(dfs, counts, probes, recounted, qe)
     }
 
   /** A share of the bucket count: occurrences per bucket (null in the
@@ -530,38 +524,37 @@ object Dedup {
     d
   }
 
-  /** The shingles of the `passing` buckets held by more than `dfCap` rows
-    * of `docs`, and the number of (string, partial df) pairs the driver
-    * merged: one job that counts each one's exact df.
+  /** The exact df of each shingle held by more than `cap` rows of the hot
+    * pass's `input`, and the (string, partial df) pairs sent the driver.
+    * Each row yields its distinct shingles of the buckets whose counter
+    * passes `cap` (no job runs when none does). Up to `budget` occurrences
+    * in those buckets, which bound the pairs, each task counts its rows'
+    * shingles for the driver to merge; past it one spillable `groupBy`
+    * count hands the driver only the shingles over `cap`.
     */
-  private def recount(docs: DataFrame, passing: Array[Boolean], dfCap: Long): (Set[String], Long) = {
-    val df = scala.collection.mutable.HashMap.empty[String, Long]
-    var pairs = 0L
-    sqlRun(docs.select(col("text"))) { rows =>
-      val perTask = (it: Iterator[InternalRow]) => {
-        // each candidate's (df, the last row that counted it)
-        val seen = new java.util.HashMap[String, Array[Int]]()
-        var row = 0
-        it.foreach { r =>
-          val t = r.getUTF8String(0).toString
-          row += 1
-          foreachShingle(t) { (s, e) =>
-            if (passing(bucket(t, s, e, passing.length))) {
-              val c = seen.computeIfAbsent(t.substring(s, e), _ => new Array[Int](2))
-              if (c(1) != row) { c(0) += 1; c(1) = row }
-            }
-          }
-        }
-        val out = Array.newBuilder[(String, Int)]
-        seen.forEach((s, c) => out += ((s, c(0))))
-        out.result()
-      }
-      docs.sparkSession.sparkContext.runJob(rows, perTask, (_: Int, part: Array[(String, Int)]) => {
-        pairs += part.length
-        part.foreach { case (s, n) => df(s) = df.getOrElse(s, 0L) + n }
-      })
+  private def recount(input: QueryExecution, counts: Array[Long], cap: Long,
+                      budget: Long): (Map[String, Long], Long) = {
+    val spark = input.sparkSession
+    val passing = counts.map(_ > cap)
+    val occurrences = counts.iterator.filter(_ > cap).sum
+    val shingles = input.toRdd.flatMap { r =>
+      val t = if (r.isNullAt(1)) null else r.getUTF8String(1).toString
+      val set = scala.collection.mutable.HashSet.empty[String]
+      foreachShingle(t)((s, e) => if (passing(bucket(t, s, e, passing.length))) set += t.substring(s, e))
+      set
     }
-    (df.iterator.collect { case (s, n) if n > dfCap => s }.toSet, pairs)
+    if (occurrences == 0) (Map.empty, 0L)
+    else if (occurrences > budget)
+      (spark.createDataset(shingles)(Encoders.STRING).groupBy("value").count().filter(col("count") > cap)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap, 0L)
+    else {
+      val pairs = SQLExecution.withNewExecutionId(input, Some("runJob"))(shingles.mapPartitions { it =>
+        val n = new java.util.HashMap[String, java.lang.Long]()
+        it.foreach(n.merge(_, 1L, _ + _))
+        n.asScala.iterator.map { case (s, k) => (s, k.longValue) }
+      }.collect())
+      (pairs.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > cap), pairs.length.toLong)
+    }
   }
 
   /** The hot-pass bucket of `t.substring(s, e)` among `buckets`, from the
@@ -576,14 +569,6 @@ object Dedup {
     h ^= h >>> 13; h *= 0xc2b2ae35
     h ^= h >>> 16
     Integer.remainderUnsigned(h, buckets)
-  }
-
-  /** `f` of `df`'s rows, run as a SQL execution of `df`'s plan, so query
-    * listeners see the jobs it launches.
-    */
-  private def sqlRun[T](df: DataFrame)(f: org.apache.spark.rdd.RDD[InternalRow] => T): T = {
-    val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("runJob"))(f(qe.toRdd))
   }
 
   /** The byte budget of one [[ProbeTable]]. */
@@ -665,10 +650,6 @@ object Dedup {
       new ProbeTable(hot, probes.map(_._1), probes.map(_._2.length), postings)
     }
   }
-
-  /** (shingle, df): the number of `docs` rows holding each shingle. */
-  private def shingleDf(spark: SparkSession, docs: DataFrame): DataFrame =
-    shingled(spark, docs).groupBy("shingle").agg(count(lit(1)).as("df"))
 
   /** Benchmark decontamination (standard training-data hygiene, GPT-3-style
     * n-gram overlap): flag corpus docs sharing at least `minShared` distinct
@@ -796,15 +777,33 @@ object Dedup {
       .bitwiseAND(call_function("shiftleft", lit(1L), (p % 64).cast("int"))) =!= 0L
 
   /** The shingles [[ngramJaccard]] dropped at `dfCap` — the no-silent-caps
-    * record: (n_dropped distinct shingles, max document frequency seen).
-    * Both count the exact df of a shingle, so `n_dropped` is the size of
-    * the hot set the Jaccard call drops.
+    * record: one row (n_dropped distinct shingles, max document frequency),
+    * both null when `docs` holds no shingle, as `sum`/`max` over no rows.
+    * Both come from [[ngramJaccard]]'s own hot pass, run with no probe and
+    * as the plan is built: `n_dropped` is the size of its hot set, `max_df`
+    * the largest df in it. When nothing is dropped, `max_df` comes from a
+    * recount of the fullest buckets, then of the buckets whose counter
+    * passes the best df found there (tagged `Dedup.hotShingles/max_df`):
+    * exact, as a counter is never below the df of a shingle in its bucket.
     */
   def hotShingles(spark: SparkSession, docs: DataFrame, dfCap: Long): DataFrame =
-    shingleDf(spark, docs)
-      .agg(
-        sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("n_dropped"),
-        max("df").as("max_df"))
+    hotShingles(spark, docs, dfCap, HotBuckets, RecountBudget)
+
+  /** [[hotShingles]] over `buckets` counters and the recount budget `recountBudget`. */
+  private[graft] def hotShingles(spark: SparkSession, docs: DataFrame, dfCap: Long, buckets: Int,
+                                 recountBudget: Long): DataFrame = {
+    import spark.implicits._
+    val HotPass(dfs, c, _, _, input) = hotAndProbes(docs, dfCap, lit(false), buckets, recountBudget)
+    val maxDf =
+      if (dfs.nonEmpty) Some(dfs.values.max)
+      else JobTags.tagged(spark.sparkContext, "Dedup.hotShingles") { tag =>
+        tag("max_df")
+        val top = c.max // 0, and no job, when docs hold no shingle
+        recount(input, c.map(n => if (n == top) n else 0L), 0L, recountBudget)._1.values.maxOption
+          .map(best => (best +: recount(input, c, best, recountBudget)._1.values.toSeq).max)
+      }
+    Seq((maxDf.map(_ => dfs.size.toLong), maxDf)).toDF("n_dropped", "max_df")
+  }
 
   /** Duplicate-CLUSTER assignment — the finishing step a web-scale dedup
     * pipeline needs after pair generation: keep one document per

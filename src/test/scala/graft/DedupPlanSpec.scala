@@ -20,7 +20,8 @@ import graft.operators.{BandedLevenshtein, Dedup}
   * kernel once per candidate pair in one typed map over the join (and the
   * kernel equals a plain thresholded DP), and `ngramJaccard` finds its
   * exact hot set from bucket counters and a recount, then streams the corpus
-  * past a broadcast probe table, with no exchange in any of its passes.
+  * past a broadcast probe table, with no exchange in any of its passes;
+  * `hotShingles` reads its record from that same hot pass.
   */
 class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestBase.spark
@@ -278,7 +279,7 @@ class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def jaccardParquet = parquet(jaccardDocs)
 
-  private def shingles(t: String): Set[String] = {
+  private def shingles(t: String): Set[String] = if (t == null) Set.empty else {
     val w = t.split(" ", -1)
     (0 until w.length - 1).map(i => w(i) + " " + w(i + 1)).toSet
   }
@@ -449,6 +450,105 @@ class DedupPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(dropped == hot.size, (cap, buckets))
     }
     assert(Dedup.hotShingles(spark, parquet(repeatDocs), Long.MaxValue).head().getLong(0) == 0)
+  }
+
+  /** 300 docs of 12 words from 60: thousands of distinct shingles, a few
+    * hundred held by more than one doc.
+    */
+  private lazy val randomDocs = {
+    val rnd = new scala.util.Random(1998)
+    (0L until 300L).map(i => (i, Seq.fill(12)(s"w${rnd.nextInt(60)}").mkString(" "), "n"))
+  }
+
+  /** (n_dropped, max_df) of a plain df count: both None with no shingle. */
+  private def droppedReference(docs: Seq[(Long, String, String)], cap: Long): (Option[Long], Option[Long]) = {
+    val df = docFreq(docs)
+    if (df.isEmpty) (None, None) else (Some(df.count(_._2 > cap).toLong), Some(df.values.max.toLong))
+  }
+
+  private def droppedRow(df: org.apache.spark.sql.DataFrame): (Option[Long], Option[Long]) = {
+    val rows = df.collect()
+    assert(rows.length == 1 && df.columns.toSeq == Seq("n_dropped", "max_df"))
+    def at(i: Int) = if (rows(0).isNullAt(i)) None else Some(rows(0).getLong(i))
+    (at(0), at(1))
+  }
+
+  test("hotShingles equals a plain df count: caps, one bucket and all, both sides of the recount budget") {
+    // in repeatDocs the fullest bucket, "r1 r2" (5 occurrences, df 2), is
+    // not the one of the largest df, 3
+    assert(docFreq(randomDocs).values.max >= 4 && docFreq(repeatDocs).values.max == 3)
+    val recounted = Seq.newBuilder[(Long, Int)]
+    for (fixture <- Seq(randomDocs, repeatDocs)) {
+      val docs = parquet(fixture)
+      val maxDf = docFreq(fixture).values.max.toLong
+      for (cap <- Seq(0L, 1L, 3L, maxDf, maxDf + 1, Long.MaxValue); buckets <- Seq(1, Dedup.HotBuckets)) {
+        val want = droppedReference(fixture, cap)
+        val pass = Dedup.hotAndProbes(docs, cap, lit(false), buckets)
+        assert(pass.dfs == docFreq(fixture).collect { case (s, n) if n > cap => s -> n.toLong }, (cap, buckets))
+        val passing = pass.counts.iterator.filter(_ > cap).sum
+        if (passing > 0) recounted += ((cap, buckets))
+        assert(droppedRow(Dedup.hotShingles(spark, docs, cap)) == want, (cap, buckets))
+        // a budget of the passing occurrences recounts through the driver, one below through the aggregate
+        for (budget <- Seq(passing, passing - 1, Dedup.RecountBudget))
+          assert(droppedRow(Dedup.hotShingles(spark, docs, cap, buckets, budget)) == want, (cap, buckets, budget))
+      }
+    }
+    assert(recounted.result().map(_._2).toSet == Set(1, Dedup.HotBuckets), recounted.result())
+    // no shingle at all: null, as sum and max over no rows
+    val oneWord = Seq((1L, "alpha", "n"), (2L, "beta", "n"), (3L, "alpha", "n"), (4L, "", "n"))
+    assert(droppedReference(oneWord, 0) == (None, None))
+    for (cap <- Seq(0L, Long.MaxValue); buckets <- Seq(1, Dedup.HotBuckets))
+      assert(droppedRow(Dedup.hotShingles(spark, parquet(oneWord), cap, buckets, Dedup.RecountBudget)) == (None, None))
+  }
+
+  test("a null text has no shingles: ngramJaccard and hotShingles equal the reference") {
+    val docs = repeatDocs ++ Seq((10L, null, "p"), (11L, null, "n"))
+    for (in <- Seq(frame(docs), parquet(docs))) {
+      assert(in.filter(col("text").isNull).count() == 2)
+      for ((cap, probe, isProbe) <- Seq[(Long, org.apache.spark.sql.Column, ((Long, String, String)) => Boolean)](
+             (2L, col("kind") === "p", _._3 == "p"), (Long.MaxValue, lit(true), _ => true))) {
+        assert(jaccardRows(Dedup.ngramJaccard(spark, in, cap, probe)) == jaccardReference(cap, isProbe, docs).sorted, cap)
+        assert(droppedRow(Dedup.hotShingles(spark, in, cap)) == droppedReference(docs, cap), cap)
+        // the recount through the aggregate reads the null rows too
+        assert(droppedRow(Dedup.hotShingles(spark, in, cap, 1, 0)) == droppedReference(docs, cap), cap)
+      }
+      assert(Dedup.shingled(spark, in).filter(col("doc_id") >= 10L).count() == 0)
+    }
+  }
+
+  test("hotShingles and ngramJaccard shuffle nothing under the recount budget; past it one aggregate of the passing shingles") {
+    val docs = parquet(randomDocs)
+    val distinct = docFreq(randomDocs).size
+    val plans = executedPlans {
+      for (cap <- Seq(1L, 3L, Long.MaxValue)) {
+        droppedRow(Dedup.hotShingles(spark, docs, cap))
+        jaccardRows(Dedup.ngramJaccard(spark, docs, cap, col("doc_id") % 7 === 0))
+      }
+    }
+    // the bucket counts and the recounts (the max_df ones included) and the corpus passes
+    assert(plans.size >= 12, plans.size)
+    assert(count(plans) { case _: Exchange => 1 } == 0, plans)
+    for (cap <- Seq(1L, 3L)) {
+      val passing = Dedup.hotAndProbes(docs, cap, lit(false)).counts.iterator.filter(_ > cap).sum
+      assert(passing > 0 && passing < randomDocs.size * 11L, (cap, passing))
+      var got = (Option.empty[Long], Option.empty[Long])
+      var aggregatePlans = Seq.empty[SparkPlan]
+      val seen = SparkTestBase.launched {
+        aggregatePlans = executedPlans {
+          got = droppedRow(Dedup.hotShingles(spark, docs, cap, Dedup.HotBuckets, passing - 1))
+        }
+      }
+      assert(got == droppedReference(randomDocs, cap), cap)
+      assert(count(aggregatePlans) { case _: Exchange => 1 } == 1, aggregatePlans)
+      val records = seen.shuffleRecords.getOrElse("Dedup.ngramJaccard/hot", 0L)
+      assert(records > 0 && records <= passing && records < distinct, (cap, records, passing, distinct))
+    }
+    // the recount reads the bucket count's rows: an input shuffle runs once a hot pass
+    val shuffled = docs.repartition(4, col("doc_id"))
+    var pass: Dedup.HotPass = null
+    val once = SparkTestBase.launched { pass = Dedup.hotAndProbes(shuffled, 1L, lit(false)) }
+    assert(pass.dfs.nonEmpty && pass.recounted > 0)
+    assert(once.shuffleRecords.get("Dedup.ngramJaccard/hot").contains(randomDocs.size.toLong), once)
   }
 
   test("ngramJaccard tags its hot-set collect; caller's group and description kept") {

@@ -24,10 +24,11 @@ object SparkTestBase {
 
   /** The jobs and stages a block launched: each job's description, each
     * submitted stage's (job description, stage name), in order, and the
-    * bytes of task results the driver received, summed by job description.
+    * bytes of task results the driver received and the shuffle records the
+    * tasks wrote, each summed by job description.
     */
   final case class Launched(jobs: Seq[String], stages: Seq[(String, String)],
-                            resultBytes: Map[String, Long])
+                            resultBytes: Map[String, Long], shuffleRecords: Map[String, Long])
 
   /** What `body` launches under a fresh job group whose caller description
     * is "caller work" and whose call site (stage name) is "caller site";
@@ -42,9 +43,11 @@ object SparkTestBase {
     val sentinel = s"sentinel-$group"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    // each stage's job description, and the result bytes of each description
+    // each stage's job description, and the result bytes and shuffle
+    // records written of each description
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val bytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val records = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
     def description(props: java.util.Properties): Option[String] =
       Option(props).filter(_.getProperty("spark.jobGroup.id") == group)
@@ -58,8 +61,10 @@ object SparkTestBase {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         description(e.properties).filter(_ != sentinel).foreach(d => stages.add((d, e.stageInfo.name)))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        for (d <- Option(stageJob.get(e.stageId)); m <- Option(e.taskMetrics))
+        for (d <- Option(stageJob.get(e.stageId)); m <- Option(e.taskMetrics)) {
           bytes.merge(d, m.resultSize, (a, b) => a + b)
+          records.merge(d, m.shuffleWriteMetrics.recordsWritten, (a, b) => a + b)
+        }
     }
     sc.addSparkListener(listener)
     try {
@@ -75,7 +80,9 @@ object SparkTestBase {
       sc.setJobDescription(sentinel)
       sc.parallelize(1 to 2).count()
       assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      Launched(jobs.asScala.toSeq, stages.asScala.toSeq, bytes.asScala.map { case (d, n) => d -> n.longValue }.toMap)
+      def sums(m: java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]) =
+        m.asScala.map { case (d, n) => d -> n.longValue }.toMap
+      Launched(jobs.asScala.toSeq, stages.asScala.toSeq, sums(bytes), sums(records))
     } finally {
       sc.clearJobGroup()
       sc.clearCallSite()
